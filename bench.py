@@ -74,10 +74,13 @@ def detail_filename(cpus: int | str) -> str:
     the surviving 32-core evidence (VERDICT r12 #3/#7). A non-default-
     cpus run writes BENCH_DETAIL_c{cpus}.json instead, so BOTH runs'
     detail survives a driver round. scripts/bench_reference.py takes
-    explicit file paths and is unaffected."""
-    return (
-        "BENCH_DETAIL.json" if str(cpus) == "32" else f"BENCH_DETAIL_c{cpus}.json"
-    )
+    explicit file paths and is unaffected. A non-integer cpus value
+    is sanitized ("*" → "star", any other non-alphanumeric → "_") so the
+    name never holds a shell glob character."""
+    if str(cpus) == "32":
+        return "BENCH_DETAIL.json"
+    tag = re.sub(r"[^0-9A-Za-z]", "_", str(cpus).replace("*", "star"))
+    return f"BENCH_DETAIL_c{tag}.json"
 
 
 # mirrors session.get_spark's master default: the run's parallelism is
@@ -691,21 +694,17 @@ def main() -> None:
     rec.checkpoint("post_cold", min(_calibrate_once(), _calibrate_once()))
 
     # Steady-state ingest: folding a batch into the live LSH index.
-    # Three grades, all reported (not added to ``value``):
+    # Two paths, both reported (not added to ``value``):
     #   append  — merge-on-read: sign the batch, append its files, done.
-    #             O(batch) writes; probes resolve max-seq per vid.
-    #   upsert  — read-merge-overwrite of every touched bucket: exact
-    #             single-version index after every batch, but under the
-    #             coarse directory layout a random batch touches most
-    #             buckets, so its cost trends toward the rebuild's.
+    #             O(batch) writes; probes resolve max-seq per vid, and
+    #             compaction folds the log on its own cadence.
     #   rebuild — sign + write the whole corpus from scratch.
-    # At 100 TB the ingest cadence runs append, with upsert/compact on
-    # the amortization cadence; rebuild is the quantizer-retrain path.
+    # At 100 TB the ingest cadence runs append, with compaction on the
+    # amortization cadence; rebuild is the quantizer-retrain path.
     from pyspark.sql import functions as _F
 
     from hours_api_clickup_spark.datapipe.similarity import (
         lsh_index_append,
-        lsh_index_upsert,
         lsh_index_write,
     )
     from hours_api_clickup_spark.plans.registry import load_table
@@ -744,21 +743,9 @@ def main() -> None:
     ap_path = _index_tmp("bench_lsh_ap_", SF_DIR, "idx")
     lsh_index_write(base, "embedding", "vec_id", ap_path, dim=64)
 
-    # These ingest rows were single-shot through r5 and bounced 2-4×
-    # between same-code runs (r6 measured upsert at 6.4s and 15.6s in
-    # two back-to-back suites) — the write paths are GEMM + multi-file
-    # commit, the noisiest work in the suite. Median of N_RUNS like the
-    # queries. Run-over-run state: re-upserting the batch measures the
-    # RE-INGEST workload (ids already present → their old buckets join
-    # the touched set) — steady-state upsert's actual shape; re-append
-    # bumps seq, the log's actual shape.
-    def _upsert_once() -> float:
-        t0 = time.perf_counter()
-        lsh_index_upsert(emb_batch, "embedding", "vec_id", ap_path, dim=64)
-        return time.perf_counter() - t0
-
-    t_upsert = statistics.median(_upsert_once() for _ in range(INGEST_RUNS))
-
+    # The write paths are GEMM + multi-file commit, the noisiest work in
+    # the suite: median of N_RUNS like the queries. Run-over-run state:
+    # re-append bumps seq, the log's actual shape.
     def _append_once(seq: int) -> float:
         t0 = time.perf_counter()
         lsh_index_append(emb_batch, "embedding", "vec_id", ap_path, dim=64, seq=seq)
@@ -776,12 +763,11 @@ def main() -> None:
     t_rebuild = statistics.median(_rebuild_once() for _ in range(INGEST_RUNS))
 
     rec.record("lsh_index_append_batch", t_append, trials=INGEST_RUNS)
-    rec.record("lsh_index_upsert_batch", t_upsert, trials=INGEST_RUNS)
     rec.record("lsh_index_full_rebuild_200k", t_rebuild, trials=INGEST_RUNS)
     rec.checkpoint("post_lsh_ingest", min(_calibrate_once(), _calibrate_once()))
     print(
         f"# lsh index ingest (200k corpus, 100-vector batch): append "
-        f"{t_append:.3f}s, upsert {t_upsert:.3f}s, full rebuild "
+        f"{t_append:.3f}s, full rebuild "
         f"{t_rebuild:.3f}s",
         file=sys.stderr,
     )
@@ -1110,9 +1096,6 @@ def main() -> None:
     # times the identical one-file-commit workload
     rerun_fns["lsh_index_append_batch"] = lambda: statistics.median(
         _append_once(2 + i) for i in range(INGEST_RUNS)
-    )
-    rerun_fns["lsh_index_upsert_batch"] = lambda: statistics.median(
-        _upsert_once() for _ in range(INGEST_RUNS)
     )
     rerun_fns["lsh_index_full_rebuild_200k"] = lambda: statistics.median(
         _rebuild_once() for _ in range(INGEST_RUNS)

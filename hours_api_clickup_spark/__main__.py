@@ -89,7 +89,7 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument(
         "--lease-ttl-s", type=int, default=None,
         help="staleness ttl for the table lock (seconds); default "
-        "similarity.LEASE_TTL_SEC (3600). A holder past the ttl with no "
+        "storage.LEASE_TTL_SEC (3600). A holder past the ttl with no "
         "heartbeat is presumed crashed and taken over",
     )
     p.add_argument(

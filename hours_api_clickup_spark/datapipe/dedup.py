@@ -32,11 +32,14 @@ stay in whole-stage codegen.
 
 from __future__ import annotations
 
+import functools
 import math
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from hours_api_clickup_spark import storage
+from hours_api_clickup_spark.datapipe import tiered
 from hours_api_clickup_spark.functions.hashing import md5_hash32, md5_hash32_sql
 
 DEFAULT_SHINGLE_K = 5
@@ -1248,100 +1251,11 @@ def duplicated_spans_oracle_sql(
 # ---------------------------------------------------------------------------
 
 
-_REBUILD_MARKER = "__rebuild_commit"
-
-
-def _doc_index_recover(spark, path: str) -> None:
-    """Joint crash recovery for the sig+bands tier PAIR — every doc-index
-    entry point calls this before touching either tier (ADVICE r8).
-
-    First the per-tier mid-swap rollback (``_fs_recover_swap``), then:
-    if a rebuild's commit marker survives, roll the rebuild FORWARD.
-    The marker is created only after BOTH staged tiers are completely
-    written, so finishing whichever swaps remain (idempotent, same
-    bands-then-sig order as the write) can never publish a partial
-    tier — and the mixed-generation window the two sequential swaps
-    used to leave (new bands, old sig: a crash there made a
-    doc-removing rebuild violate "did in sig ⇒ complete index entry")
-    is closed: readers now see either the old generation or the new,
-    never a mix. A staged dir WITHOUT the marker is an abandoned write
-    (crash before commit) — left alone; the next rebuild/compact
-    overwrites it.
-
-    Recovery is itself MAINTENANCE and runs under the maintenance
-    lease (ADVICE r9 high, the ivfpq twin): the commit marker exists
-    during every LIVE rebuild's commit window, not only after a crash,
-    so an unleased append/probe rolling it forward would interleave
-    destructive renames with the live holder's own commit sequence. A
-    thread already holding the lease recovers directly; otherwise,
-    when recovery work is actually pending, claim the lease
-    non-blocking and SKIP on refusal."""
-    from hours_api_clickup_spark.datapipe.similarity import (
-        MaintenanceLeaseHeld,
-        _fs_exists,
-        _lease_held_by_this_thread,
-        _maintenance_lease,
-        _recovery_gen,
-        _recovery_mark_clean,
-        _recovery_verdict_cached,
-    )
-
-    if _lease_held_by_this_thread(path):
-        _doc_index_recover_unlocked(spark, path)
-        return
-    if _recovery_verdict_cached(spark, path):
-        return  # proven clean this session, no lease claim since
-    gen = _recovery_gen(path)  # snapshot BEFORE the probes (TOCTOU)
-    if not (
-        _fs_exists(spark, f"{path}/sig__old")
-        or _fs_exists(spark, f"{path}/bands__old")
-        or _fs_exists(spark, f"{path}/{_REBUILD_MARKER}")
-    ):
-        # clean: cache the verdict so the session's next probe skips
-        # the three exists() rounds (VERDICT r10 #3); any lease claim
-        # on this path invalidates it — including one that landed
-        # DURING the probes (the gen snapshot refuses the stale mark)
-        _recovery_mark_clean(spark, path, gen)
-        return
-    # the full leased section (not a bare claim): heartbeat + token-
-    # fenced release, same as the ivfpq twin (review r10)
-    try:
-        with _maintenance_lease(spark, path, "doc_index_recover"):
-            _doc_index_recover_unlocked(spark, path)
-    except MaintenanceLeaseHeld:
-        return  # a live maintainer owns this path's commit/recovery
-
-
-def _read_doc_tier(spark, path: str, tier: str) -> DataFrame:
-    """Doc-index live-tier read with the cached-recovery fallback —
-    ``similarity._read_tier_with_recovery`` bound to this family's
-    joint recovery (rationale there, review r11)."""
-    from hours_api_clickup_spark.datapipe.similarity import (
-        _read_tier_with_recovery,
-    )
-
-    return _read_tier_with_recovery(spark, path, tier, _doc_index_recover)
-
-
-def _doc_index_recover_unlocked(spark, path: str) -> None:
-    """``_doc_index_recover`` body for the thread that owns maintenance
-    on ``path`` (holds the lease, or just claimed it for recovery)."""
-    from hours_api_clickup_spark.datapipe.similarity import (
-        _fs_delete,
-        _fs_exists,
-        _fs_recover_swap,
-        _fs_swap_dir,
-    )
-
-    _fs_recover_swap(spark, f"{path}/sig")
-    _fs_recover_swap(spark, f"{path}/bands")
-    if not _fs_exists(spark, f"{path}/{_REBUILD_MARKER}"):
-        return
-    for tier in ("bands", "sig"):
-        staged = f"{path}/{tier}__staged"
-        if _fs_exists(spark, staged):
-            _fs_swap_dir(spark, f"{path}/{tier}", staged)
-    _fs_delete(spark, f"{path}/{_REBUILD_MARKER}")
+#: the signature tiers in commit order: bands before sig, so "did in
+#: sig" implies a complete index entry (the streaming redelivery guard
+#: keys on sig dids)
+_DOC_TIERS = ("bands", "sig")
+doc_neardup_index_recover = functools.partial(tiered.recover_joint, tier_names=_DOC_TIERS)
 
 
 def doc_neardup_index_write(
@@ -1367,16 +1281,8 @@ def doc_neardup_index_write(
     tombstones are did-keyed takedown markers that DELIBERATELY
     survive rebuilds (takedown-wins until a compact consumes them; a
     post-compact re-ingest is the intentional resurrect path)."""
-    from hours_api_clickup_spark.datapipe.similarity import (
-        _maintenance_lease,
-    )
-
-    with _maintenance_lease(
-        df.sparkSession, path, "doc_neardup_index_write"
-    ):
-        _doc_neardup_index_write_unlocked(
-            df, id_col, text_col, path, k, num_hashes, bands
-        )
+    with storage.maintenance_lease(df.sparkSession, path, "doc_neardup_index_write"):
+        _doc_neardup_index_write_unlocked(df, id_col, text_col, path, k, num_hashes, bands)
 
 
 def _doc_neardup_index_write_unlocked(
@@ -1388,44 +1294,30 @@ def _doc_neardup_index_write_unlocked(
     num_hashes: int = DEFAULT_NUM_HASHES,
     bands: int = DEFAULT_BANDS,
 ) -> None:
-    """``doc_neardup_index_write`` body for callers already inside a
-    leased maintenance section (the streaming ingest's bootstrap)."""
-    from hours_api_clickup_spark.datapipe.similarity import (
-        _fs_delete,
-        _fs_swap_dir,
-        _fs_touch,
-    )
-
+    """``doc_neardup_index_write`` body for callers already holding the
+    lease (the streaming ingest's bootstrap)."""
     spark = df.sparkSession
-    _doc_index_recover(spark, path)
+    doc_neardup_index_recover(spark, path)
     sig = _sig_frame(df, id_col, text_col, k, num_hashes).localCheckpoint()
-    # staged + swapped, BANDS COMMITTED BEFORE SIG (review r8): the old
-    # in-place overwrite destroyed the live index at job start (a
-    # mid-rebuild crash left markers pointing at nothing), and writing
-    # sig first inverted the module's commit ordering — "did present in
-    # sig" must imply a COMPLETE index entry (the streaming bootstrap
-    # probes sig existence, and append/pairs_for_ids read bands), so a
-    # crash between the writes wedged the ingest stream permanently.
-    # The commit marker (ADVICE r8) makes the two swaps ONE transaction:
-    # created only after both staged tiers are complete, deleted after
-    # both swaps — a crash between the swaps used to leave mixed
-    # generations (new bands, old sig); now _doc_index_recover rolls the
-    # rebuild forward from the marker.
-    sig_staged, bands_staged = f"{path}/sig__staged", f"{path}/bands__staged"
-    sig.select(
+    sig_arr = sig.select(
         "did",
         F.array(*[F.col(f"m{s}") for s in range(num_hashes)]).alias("sa"),
         "gset",
-    ).repartitionByRange(8, "did").sortWithinPartitions("did").write.mode(
+    )
+    _commit_doc_tiers(spark, path, sig_arr, _band_frame(sig, num_hashes, bands), {})
+
+
+def _commit_doc_tiers(spark, path: str, sig: DataFrame, bands: DataFrame, consumed: dict) -> None:
+    """Stage both tiers, then publish them as one transaction
+    (``storage.commit_tiers``): readers see the old generation or the
+    new one, never new bands over an old sig."""
+    sig.repartitionByRange(8, "did").sortWithinPartitions("did").write.mode(
         "overwrite"
-    ).parquet(sig_staged)
-    _band_frame(sig, num_hashes, bands).sortWithinPartitions(
-        "band", "bucket"
-    ).write.mode("overwrite").parquet(bands_staged)
-    _fs_touch(spark, f"{path}/{_REBUILD_MARKER}")
-    _fs_swap_dir(spark, f"{path}/bands", bands_staged)
-    _fs_swap_dir(spark, f"{path}/sig", sig_staged)
-    _fs_delete(spark, f"{path}/{_REBUILD_MARKER}")
+    ).parquet(f"{path}/sig__staged")
+    bands.sortWithinPartitions("band", "bucket").write.mode("overwrite").parquet(
+        f"{path}/bands__staged"
+    )
+    storage.commit_tiers(spark, path, tiered.REBUILD_MARKER, _DOC_TIERS, consumed)
 
 
 def doc_neardup_index_append(
@@ -1454,11 +1346,9 @@ def doc_neardup_index_append(
     through a rebuild, as with the vector-index compaction cadence).
     """
     spark = batch.sparkSession
-    # roll back a crashed compact's half-finished swap — and roll a
-    # crashed rebuild's joint publish forward — before reading (the
-    # _fs_swap_dir contract: every reader/writer entry point recovers
-    # first — review r7, ADVICE r8)
-    _doc_index_recover(spark, path)
+    # every entry point recovers first: mid-swap rollback, and a
+    # crashed rebuild or compact rolled forward
+    doc_neardup_index_recover(spark, path)
     min_matches = _min_matches(threshold, num_hashes)
 
     bsig = _sig_frame(batch, id_col, text_col, k, num_hashes).localCheckpoint()
@@ -1474,8 +1364,8 @@ def doc_neardup_index_append(
         "gset",
     )
 
-    old_bands = _read_doc_tier(spark, path, "bands")
-    tomb = _doc_tombstones(spark, path)
+    old_bands = tiered.read_tier(spark, path, "bands", doc_neardup_index_recover)
+    tomb = doc_neardup_tombstones(spark, path)
     if tomb is not None:
         # tombstoned documents stop producing candidates — the delete
         # path's read-side contract (their band rows are still on disk
@@ -1546,7 +1436,7 @@ def _verify_candidate_pairs(
     candidate id is already indexed. Returns the verified pairs,
     localCheckpointed (so the caller may grow the index files without
     the plan re-reading them)."""
-    old_sig = _read_doc_tier(spark, path, "sig")
+    old_sig = tiered.read_tier(spark, path, "sig", doc_neardup_index_recover)
     all_sa = old_sig.select("did", "sa")
     if extra is not None:
         all_sa = all_sa.unionByName(extra.select("did", "sa"))
@@ -1582,7 +1472,9 @@ def _verify_candidate_pairs(
         survivors.select(F.explode(F.array("id_a", "id_b")).alias("did"))
         .dropDuplicates()
     )
-    gsets = _read_doc_tier(spark, path, "sig").select("did", "gset")
+    gsets = tiered.read_tier(spark, path, "sig", doc_neardup_index_recover).select(
+        "did", "gset"
+    )
     # one bounded collect instead of count-then-collect (two jobs →
     # one, r13): limit(cap+1) returns every row when under the cap, and
     # the overflow fallback recomputes the id set from the survivors
@@ -1630,10 +1522,10 @@ def doc_neardup_index_pairs_for_ids(
     not (review r6); see streaming/ann_ingest.py."""
     # roll back a crashed compact's swap / forward a crashed rebuild's
     # joint publish first (review r7, ADVICE r8)
-    _doc_index_recover(spark, path)
+    doc_neardup_index_recover(spark, path)
     min_matches = _min_matches(threshold, num_hashes)
-    bands = _read_doc_tier(spark, path, "bands")
-    tomb = _doc_tombstones(spark, path)
+    bands = tiered.read_tier(spark, path, "bands", doc_neardup_index_recover)
+    tomb = doc_neardup_tombstones(spark, path)
     if tomb is not None:
         bands = bands.join(F.broadcast(tomb), "did", "left_anti")
     mine = bands.join(
@@ -1653,14 +1545,12 @@ def doc_neardup_index_pairs_for_ids(
     )
 
 
-def _doc_tombstones(spark, path: str):
+def doc_neardup_tombstones(spark, path: str):
     """(did) rows tombstoned out of this index, or None when the marker
     dir is absent (the fast path — zero extra work for indexes that
     never saw a delete)."""
-    from hours_api_clickup_spark.datapipe.similarity import _fs_exists
-
     tomb_path = f"{path}/tombstones"
-    if not _fs_exists(spark, tomb_path):
+    if not storage.exists(spark, tomb_path):
         return None
     return spark.read.parquet(tomb_path).select("did").dropDuplicates()
 
@@ -1673,92 +1563,50 @@ def doc_neardup_index_delete(spark, path: str, doc_ids) -> None:
     Every read path (``doc_neardup_index_append`` candidate generation,
     ``doc_neardup_index_pairs_for_ids``) applies the broadcast
     anti-filter; ``doc_neardup_index_compact`` folds the deletes in
-    physically and drops the marker dir. Completes the delete story
-    across all five persisted index families (LSH / IVF / IVFPQ /
-    inverted text / near-dup signatures).
+    physically and drops the marker dir.
 
     Unlike the seq-versioned vector/text tombstones, sig rows carry no
     version: re-ingest of a deleted id goes through a rebuild — the
     index's standing re-ingest contract (``doc_neardup_index_append``
-    precondition) — so markers are plain did keys, no LSM resurrection
-    semantics. ``doc_ids`` is a list/iterable or a DataFrame of ids
-    (distributed marker write, no driver collect)."""
-    from hours_api_clickup_spark.datapipe.similarity import _write_tombstones
-
-    if not isinstance(doc_ids, DataFrame):
-        doc_ids = list(doc_ids)
-        if not doc_ids:
-            return
-    _write_tombstones(spark, f"{path}/tombstones", "did", doc_ids, 0)
+    precondition) — so markers are plain did keys at seq 0, no LSM
+    resurrection semantics. ``doc_ids`` is a list/iterable or a
+    DataFrame of ids (distributed marker write, no driver collect)."""
+    tiered.delete(spark, path, "did", doc_ids, seq=0)
 
 
 def doc_neardup_index_compact(spark, path: str) -> None:
     """Fold tombstones physically: rewrite ``sig`` and ``bands`` minus
-    the tombstoned dids — staged + swapped like every compactor here
-    (an in-place overwrite deletes the live dir at job start, so a
-    mid-compact crash would destroy the index) — then drop exactly the
-    marker FILES the rewrite consumed: a delete landing while the
-    O(corpus) rewrite runs appends a new marker file the end-of-compact
-    drop must not erase (review r7), so the drop is bounded to the
-    snapshot listing and the dir survives if new markers arrived.
-    O(corpus), run on the compaction cadence. No tombstones (or an
-    index that was never written): no-op. After a compact, re-ingesting
-    a previously deleted id resurrects it — BEFORE a compact, markers
-    persist across rebuilds, so a takedown survives index maintenance.
+    the tombstoned dids and publish both through the same joint commit
+    as a rebuild, which also drops exactly the marker FILES the rewrite
+    consumed — a delete landing while the O(corpus) rewrite runs
+    survives into the next compact. No tombstones (or an index that was
+    never written): no-op. After a compact, re-ingesting a previously
+    deleted id resurrects it — BEFORE a compact, markers persist across
+    rebuilds, so a takedown survives index maintenance.
 
-    Maintenance contract (shared with every index compactor here):
-    single writer — lease-enforced (VERDICT r8 #2): a compact racing an
-    ingest batch that crashed between its sig write and its done-marker
-    could fold the batch's dids out of sig and make the redelivery
-    guard re-classify them as fresh; the lease turns that race into a
-    loud ``MaintenanceLeaseHeld``."""
-    from hours_api_clickup_spark.datapipe.similarity import (
-        _fs_drop_consumed,
-        _fs_exists,
-        _fs_snapshot_files,
-        _fs_swap_dir,
-        _maintenance_lease,
-    )
-
-    with _maintenance_lease(spark, path, "doc_neardup_index_compact"):
-        _doc_index_recover(spark, path)
-        if not _fs_exists(spark, f"{path}/sig"):
+    Single writer, lease-enforced: a compact racing an ingest batch that
+    crashed between its sig write and its done-marker could fold the
+    batch's dids out of sig and make the redelivery guard re-classify
+    them as fresh; the lease turns that race into a loud
+    ``MaintenanceLeaseHeld``."""
+    with storage.maintenance_lease(spark, path, "doc_neardup_index_compact"):
+        doc_neardup_index_recover(spark, path)
+        if not storage.exists(spark, f"{path}/sig"):
             return  # delete-before-build: markers stay until an index exists
-        if not _fs_exists(spark, f"{path}/tombstones"):
-            return
-        # snapshot the marker FILES first and fold EXACTLY those: a
-        # marker landing after this listing is neither folded nor
-        # deleted — it simply survives into the next compact
-        fs, tomb_dir, consumed = _fs_snapshot_files(
-            spark, f"{path}/tombstones"
-        )
+        consumed = storage.snapshot_files(spark, f"{path}/tombstones")
         if not consumed:
             return
         tomb = (
-            spark.read.parquet(*[str(p) for p in consumed])
+            spark.read.parquet(*consumed)
             .select("did")
             .dropDuplicates()
             .localCheckpoint(eager=True)  # read once, reused twice
         )
-        live_sig = _read_doc_tier(spark, path, "sig").join(
-            F.broadcast(tomb), "did", "left_anti"
+        def live(tier: str) -> DataFrame:
+            return tiered.read_tier(spark, path, tier, doc_neardup_index_recover).join(
+                F.broadcast(tomb), "did", "left_anti"
+            )
+
+        _commit_doc_tiers(
+            spark, path, live("sig"), live("bands"), {f"{path}/tombstones": consumed}
         )
-        staged = f"{path}/sig__staged"
-        live_sig.repartitionByRange(8, "did").sortWithinPartitions(
-            "did"
-        ).write.mode("overwrite").parquet(staged)
-        _fs_swap_dir(spark, f"{path}/sig", staged)
-        live_bands = _read_doc_tier(spark, path, "bands").join(
-            F.broadcast(tomb), "did", "left_anti"
-        )
-        staged = f"{path}/bands__staged"
-        live_bands.sortWithinPartitions("band", "bucket").write.mode(
-            "overwrite"
-        ).parquet(staged)
-        _fs_swap_dir(spark, f"{path}/bands", staged)
-        # delete exactly the consumed markers, then a NON-recursive dir
-        # drop that refuses a non-empty dir — a marker committed at ANY
-        # point after the snapshot survives for the next compact. The
-        # list-then-recursive-delete form this replaces had a TOCTOU
-        # window that erased such a marker: a lost takedown (ADVICE r7).
-        _fs_drop_consumed(fs, tomb_dir, consumed)

@@ -22,13 +22,17 @@ Vector math is higher-order Catalyst (zip_with + aggregate over doubles)
 
 from __future__ import annotations
 
-from contextlib import contextmanager
+import dataclasses
+import functools
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
+
+from hours_api_clickup_spark import storage
+from hours_api_clickup_spark.datapipe import tiered
 
 DEFAULT_PLANES = 8  # bits per signature table
 DEFAULT_TABLES = 6  # signature tables (OR across tables)
@@ -37,80 +41,6 @@ DEFAULT_PROBE_RADIUS = 1  # accept buckets within this hamming of the query
 
 def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
-
-
-def _mmh3_int(x: int, seed: int = 42) -> int:
-    """Spark's Murmur3_x86_32 hash of an IntegerType value — the hash
-    HashPartitioning evaluates (seed 42, 4-byte finalization), exactly
-    ``F.hash(int32)``. Reimplemented on the driver so an exact
-    key→partition mapping can be planned with no data pass
-    (pinned against the JVM by test_plan_shapes)."""
-
-    def rotl(v: int, r: int) -> int:
-        return ((v << r) | (v >> (32 - r))) & 0xFFFFFFFF
-
-    k1 = (x & 0xFFFFFFFF) * 0xCC9E2D51 & 0xFFFFFFFF
-    k1 = (rotl(k1, 15) * 0x1B873593) & 0xFFFFFFFF
-    h1 = (seed & 0xFFFFFFFF) ^ k1
-    h1 = (rotl(h1, 13) * 5 + 0xE6546B64) & 0xFFFFFFFF
-    h1 ^= 4  # length in bytes
-    h1 ^= h1 >> 16
-    h1 = (h1 * 0x85EBCA6B) & 0xFFFFFFFF
-    h1 ^= h1 >> 13
-    h1 = (h1 * 0xC2B2AE35) & 0xFFFFFFFF
-    h1 ^= h1 >> 16
-    return h1 - (1 << 32) if h1 >= (1 << 31) else h1
-
-
-#: pid→salt arrays are pure functions of the partition count: computed
-#: once per count, reused by every write (driver-side planning state,
-#: not data).
-_SALT_CACHE: dict[int, list[int]] = {}
-
-
-def _exact_partition_salts(n: int) -> list[int]:
-    """For each target partition p∈[0,n) find an int salt with
-    ``pmod(murmur3(salt), n) == p`` — an injective key→partition
-    assignment for ``repartition(n, salt_col)``. Expected search cost is
-    n·H(n) ≈ n·ln n murmur evaluations on the driver (~400 for n=96),
-    done once per n."""
-    cached = _SALT_CACHE.get(n)
-    if cached is not None:
-        return cached
-    salts: list[int | None] = [None] * n
-    remaining = n
-    x = 0
-    while remaining:
-        p = _mmh3_int(x) % n  # Python % is pmod for signed ints
-        if salts[p] is None:
-            salts[p] = x
-            remaining -= 1
-        x += 1
-    _SALT_CACHE[n] = salts  # type: ignore[assignment]
-    return salts  # type: ignore[return-value]
-
-
-def _balanced_dir_repartition(df: DataFrame, pid: Column, n_dirs: int) -> DataFrame:
-    """Exactly one shuffle partition per output directory (guide §2.5:
-    synthetic partitioning keys with too few distinct values).
-
-    The partitioned index writes repartition by their low-cardinality
-    directory key — 96 (t, sb) pairs or 16 cluster_ids hashed into 32
-    shuffle partitions. That collides ~1/e of the keys and AQE then
-    coalesces the remainder onto ~30 uneven tasks, so a handful of
-    straggler tasks each write several directories serially while most
-    cores idle (the measured residual of the LSH/IVF write reduce
-    stage, VERDICT r12 #1).
-
-    The dense directory id pid∈[0,n_dirs) is instead mapped through a
-    driver-computed salt array chosen so that
-    ``pmod(murmur3(salt[pid]), n_dirs) == pid``: the write exchange gets
-    exactly ``n_dirs`` tasks, each holding exactly one directory's rows
-    (signature bits are uniform, so directories are even), and still
-    one file per directory. Row placement is deterministic (guide
-    §2.5's retry-safety requirement)."""
-    salts = _exact_partition_salts(n_dirs)
-    return df.repartition(n_dirs, F.element_at(F.lit(salts), pid.cast("int") + 1))
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -405,13 +335,21 @@ def lsh_bucketed_topk(
 # additional pruning power.
 LSH_COARSE = 16
 
-# Exact-grade index upsert degrades from touched-bucket dynamic
-# overwrite to ONE read-merge-swap pass once a batch touches this
-# fraction of the partition layout: past it, the pruned read + merged
-# localCheckpoint + per-directory commits of the in-place path cost
-# more than rewriting the base once (measured on the bench "lsh index
-# ingest" row — in-place at near-full touch ran ~3x the swap).
-UPSERT_DEGRADE_FRACTION = 0.2
+# Signatures are the ``sig`` data column; ``(t, sb)`` the directories.
+LSH_LAYOUT = tiered.Layout(
+    key="vid",
+    parts=("t", "sb"),
+    sort=("sig",),
+    fold=("t",),  # one row per (vid, table) of the newest version
+    norm=lambda df: df.select(
+        "vid",
+        "v",
+        F.col("t").cast("int").alias("t"),
+        F.col("sig").cast("long").alias("sig"),
+        F.col("sb").cast("long").alias("sb"),
+        F.col("seq").cast("long").alias("seq"),
+    ),
+)
 
 
 def _signature_rows(
@@ -462,28 +400,20 @@ def lsh_index_write(
     the exact ``sig`` kept as a data column, sorted within each file —
     the persisted-signature form of ``lsh_bucketed_topk``.
 
-    This is the 100 TB shape: signatures are computed ONCE when the
-    corpus lands (one mapInPandas GEMM pass), and every later query is a
-    partition-pruned read of a handful of directories plus a row-group-
-    pruned sig filter inside them — never a full-corpus scan-and-sign.
-    The vector is stored alongside the signature so the exact re-rank
-    needs no join back to the corpus (a deliberate ×tables storage
-    trade; store only ids to trade back).
+    Signatures are computed ONCE when the corpus lands (one mapInPandas
+    GEMM pass), and every later query is a partition-pruned read of a
+    handful of directories plus a row-group-pruned sig filter inside
+    them — never a full-corpus scan-and-sign. The vector is stored
+    alongside the signature so the exact re-rank needs no join back to
+    the corpus (a deliberate ×tables storage trade).
 
-    On-disk layout is LSM-shaped: ``{path}/base`` holds the (t, sb)-
-    partitioned bulk; ``{path}/log`` (written by ``lsh_index_append``)
-    holds small unpartitioned batch files merged at read time
-    (``lsh_index_read``) and folded in by ``lsh_index_compact``.
-
-    A rebuild is maintenance: it runs under the single-maintainer
-    LEASE (a rebuild racing a compact or streaming ingest refuses
-    loudly) and refuses while a log/tombstone tier exists — the fresh
-    seq=0 base would be outranked by stale log rows and silently
-    killed by old tombstones (``_refuse_stale_mor_tiers``)."""
-    with _maintenance_lease(df.sparkSession, path, "lsh_index_write"):
-        _lsh_index_write_unlocked(
-            df, vec_col, id_col, path, planes, tables, dim
-        )
+    The index is a ``datapipe.tiered`` index: ``base`` written here,
+    ``log`` by ``lsh_index_append``, ``tombstones`` by
+    ``lsh_index_delete``, all folded by ``lsh_index_compact``. A rebuild
+    runs under the maintenance lease and refuses while a log or
+    tombstone tier exists (``tiered.refuse_stale_tiers``)."""
+    with storage.maintenance_lease(df.sparkSession, path, "lsh_index_write"):
+        _lsh_index_write_unlocked(df, vec_col, id_col, path, planes, tables, dim)
 
 
 def _lsh_index_write_unlocked(
@@ -495,1049 +425,33 @@ def _lsh_index_write_unlocked(
     tables: int = DEFAULT_TABLES,
     dim: int | None = None,
 ) -> None:
-    """``lsh_index_write`` body for callers already inside a leased
-    maintenance section (an append/upsert's bootstrap fallback under a
-    streaming batch's lease). Still refuses stale MOR tiers."""
-    _refuse_stale_mor_tiers(df.sparkSession, path, "lsh_index_write")
-    union = _signature_rows(df, vec_col, id_col, planes, tables, dim).withColumn(
-        # ingest sequence for merge-on-read: probes and compaction keep
-        # the max-seq row per vid (lsh_index_append)
-        "seq",
-        F.lit(0).cast("long"),
+    """``lsh_index_write`` body for callers already holding the lease
+    (an append's bootstrap under a streaming batch's lease)."""
+    tiered.refuse_stale_tiers(df.sparkSession, path, "lsh_index_write")
+    rows = _signature_rows(df, vec_col, id_col, planes, tables, dim).withColumn(
+        "seq", F.lit(0).cast("long")
     )
-    # cluster each (t, sb) directory into its OWN task (one file per
-    # dir, no small-files blowup) and sort by sig inside it so row-group
-    # min/max stats make the probe's sig filter skip whole row groups.
-    # The task↔directory assignment is exact (_balanced_dir_repartition,
-    # VERDICT r12 #1): hashing the 96 (t, sb) keys into 32 shuffle
-    # partitions collided keys and let AQE coalesce the write onto ~30
-    # skewed tasks, serializing several directories per straggler.
-    # Staged + swapped (not in-place overwrite): a mid-write crash must
-    # never leave a half-written dir where the live base was (the
-    # textindex build's crash-safety protocol; review r6).
-    spark = df.sparkSession
-    _fs_recover_swap(spark, f"{path}/base")
-    staged = f"{path}/base__staged"
     n_sb = max(1, -(-(1 << planes) // LSH_COARSE))
-    pid = F.col("t").cast("int") * n_sb + F.col("sb").cast("int")
-    _balanced_dir_repartition(union, pid, tables * n_sb).sortWithinPartitions(
-        "sig"
-    ).write.mode("overwrite").partitionBy("t", "sb").parquet(staged)
-    _fs_swap_dir(spark, f"{path}/base", staged)
-
-
-_INDEX_COLS = ("vid", "v", "t", "sig", "sb", "seq")
+    tiered.write_base(rows, path, LSH_LAYOUT, (tables, n_sb))
 
 
 def lsh_index_read(spark, path: str) -> DataFrame:
-    """The live index view: partitioned ``base`` ∪ unpartitioned append
-    ``log`` (absent → base alone), minus tombstoned vids. Column types
-    are normalized so the union is stable (partition-value inference
-    types base's t/sb as int32). Probes filter this view: the base side
-    keeps (t, sb) partition pruning — the tombstone join is a BROADCAST
-    of the tiny delete set applied above the pruned scan, so pruning
-    survives (plan-gated); the log side is a bounded full scan — its
-    size is capped by the compaction cadence, the LSM contract."""
-
-    def _norm(df: DataFrame) -> DataFrame:
-        return df.select(
-            "vid",
-            "v",
-            F.col("t").cast("int").alias("t"),
-            F.col("sig").cast("long").alias("sig"),
-            F.col("sb").cast("long").alias("sb"),
-            F.col("seq").cast("long").alias("seq"),
-        )
-
-    _fs_recover_swap(spark, f"{path}/base")
-    base = _norm(spark.read.parquet(f"{path}/base"))
-    view = base
-    if _fs_exists(spark, f"{path}/log"):
-        view = base.unionByName(_norm(spark.read.parquet(f"{path}/log")))
-    return _apply_tombstones(spark, view, f"{path}/tombstones")
-
-
-def _apply_tombstones(spark, view: DataFrame, tomb_path: str) -> DataFrame:
-    """Row-versioned delete semantics shared by both persisted indexes:
-    a row survives iff its ``seq`` is newer than its key's newest
-    tombstone — so a delete kills every current version, and a LATER
-    re-ingest (higher seq) resurrects the key, the standard LSM
-    ordering. The tombstone set is bounded by the compaction cadence
-    and broadcast; filters on the view's other columns still push below
-    this join to the partitioned scan."""
-    if not _fs_exists(spark, tomb_path):
-        return view
-    raw = spark.read.parquet(tomb_path)
-    # the marker file names its own key column (vid / doc_id / vec_id)
-    key = next(c for c in raw.columns if c != "seq")
-    tomb = raw.groupBy(key).agg(F.max("seq").alias("__tseq"))
-    return (
-        view.join(F.broadcast(tomb), key, "left")
-        .filter(F.col("__tseq").isNull() | (F.col("seq") > F.col("__tseq")))
-        .drop("__tseq")
-    )
-
-
-def _next_seq(spark, path: str, reader) -> int:
-    """max(live rows' seq, tombstones' seq) + 1 — the tombstone side
-    matters: after a delete at seq N the surviving rows all have
-    seq < N, and a re-ingest reusing N would tie the tombstone instead
-    of out-ranking it (survival is seq > tombstone seq)."""
-    max_seq = reader(spark, path).agg(F.max("seq")).head()[0]
-    hi = max_seq if max_seq is not None else -1
-    tomb_path = f"{path}/tombstones"
-    if _fs_exists(spark, tomb_path):
-        t = spark.read.parquet(tomb_path).agg(F.max("seq")).head()[0]
-        if t is not None:
-            hi = max(hi, t)
-    return hi + 1
-
-
-def _delete_seq(spark, path: str, reader) -> int:
-    """Tombstone seq for a DELETE: the max LIVE seq — high enough to
-    kill every visible version (all have seq ≤ it), and never a number
-    a FUTURE ingest could use. The previous max(live, tomb)+1 form
-    claimed an unused seq, and in a stream-fed index (seq = batch_id)
-    that is exactly the NEXT micro-batch's number: a delete issued
-    between batches N and N+1 got seq N+1, so a vector legitimately
-    re-ingested in batch N+1 tied the tombstone, stayed invisible, and
-    was physically dropped at compaction — a silent lost re-ingest
-    (review r8). Appends keep ``_next_seq``'s max(live, tomb)+1: a
-    re-ingest must OUT-RANK the newest tombstone, and the +1 it claims
-    is immediately consumed by its own rows."""
-    max_seq = reader(spark, path).agg(F.max("seq")).head()[0]
-    return int(max_seq) if max_seq is not None else -1
+    """The live index view, base ∪ log minus tombstoned vids
+    (``tiered.read``). Probes filter it: the base side keeps its
+    (t, sb) partition pruning under the broadcast tombstone join
+    (plan-gated)."""
+    return tiered.read(spark, path, LSH_LAYOUT)
 
 
 def lsh_index_delete(
     spark, path: str, vids: "list | DataFrame", seq: int | None = None
 ) -> None:
-    """Tombstone delete (VERDICT r5 #7): drop vectors from the persisted
-    index WITHOUT touching it — one tiny (vid, seq) file appended under
-    ``{path}/tombstones``, the LSM delete marker. No base partition is
-    read or rewritten (plan-gated: the base's files are bit-identical
-    after a delete); probes apply the broadcast tombstone filter at
-    read time and ``lsh_index_compact`` folds deletes in physically,
-    after which the marker dir is dropped. Cost: O(deletes), zero
-    corpus I/O — the delete path a 100 TB index needs.
-
-    ``vids`` is an explicit id list OR a DataFrame of ids (verdict r6
-    #3) — the DataFrame form writes the markers distributed, so
-    "delete every vector matching this predicate" never collects the
-    doomed set to the driver."""
-    if not isinstance(vids, DataFrame):
-        vids = list(vids)  # any iterable; empty → no-op (review r7)
-        if not vids:
-            return
-    if seq is None:
-        seq = _delete_seq(spark, path, lsh_index_read)
-    _write_tombstones(spark, f"{path}/tombstones", "vid", vids, int(seq))
-
-
-def _write_tombstones(spark, tomb_path: str, key: str, keys, seq: int) -> None:
-    """One small appended marker batch. Two input shapes (verdict r6 #3):
-
-    - a Python list/iterable — the explicit-id-batch form; goes through
-      Arrow-path createDataFrame (a pandas frame), not a row list — the
-      pickle row path costs ~6 s of per-row serialization for even a
-      1k-key batch; Arrow is one hop.
-    - a DataFrame of keys — the "delete every doc matching this
-      predicate" form a 100 TB index needs; the marker rows are written
-      DISTRIBUTED, straight from the executors, with no
-      candidate-dependent driver collect (plan-gated).
-    """
-    if isinstance(keys, DataFrame):
-        if key in keys.columns:
-            col = key
-        elif len(keys.columns) == 1:
-            col = keys.columns[0]
-        else:
-            raise ValueError(
-                f"tombstone DataFrame must have a {key!r} column or a "
-                f"single column; got {keys.columns}"
-            )
-        tomb = (
-            keys.select(F.col(col).alias(key))
-            .dropDuplicates()
-            .withColumn("seq", F.lit(int(seq)).cast("long"))
-        )
-        # materialize ONCE: without the checkpoint the emptiness probe
-        # and the write each evaluate the doomed-set predicate as a
-        # separate job — double I/O, and over changing data the two
-        # could see different snapshots (review r7)
-        tomb = tomb.localCheckpoint(eager=True)
-        if not tomb.head(1):
-            return  # empty delete set: don't create the marker dir —
-            # its bare existence would defeat the no-tombstone fast path
-        tomb.write.mode("append").parquet(tomb_path)
-        return
-    pdf = pd.DataFrame({key: list(keys)})
-    pdf["seq"] = np.int64(seq)
-    tomb = spark.createDataFrame(pdf)
-    tomb.coalesce(1).write.mode("append").parquet(tomb_path)
-
-
-def _fs_exists(spark, path: str) -> bool:
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p)
-
-
-def _fs_touch(spark, path: str) -> None:
-    """Create (or truncate) an empty marker file — the commit-point
-    primitive for joint multi-directory publishes and leases."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    fs.create(p, True).close()
-
-
-def _fs_delete(spark, path: str) -> None:
-    """Delete a single file/empty-dir marker; absent path is a no-op."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(p):
-        fs.delete(p, False)
-
-
-def _fs_write_file_atomic(spark, path: str, content: str) -> None:
-    """Write a small marker file ATOMICALLY (create ``.tmp`` + rename):
-    the file is either absent or complete, never truncated — required
-    when the content is load-bearing for crash recovery (the IVFPQ
-    rebuild marker lists the consumed tier files)."""
-    jvm = spark._jvm
-    tmp = jvm.org.apache.hadoop.fs.Path(path + ".tmp")
-    dst = jvm.org.apache.hadoop.fs.Path(path)
-    fs = tmp.getFileSystem(spark._jsc.hadoopConfiguration())
-    out = fs.create(tmp, True)
-    out.write(bytearray(content.encode()))
-    out.close()
-    if fs.exists(dst):
-        fs.delete(dst, False)
-    # Hadoop rename reports failure by RETURNING FALSE (this module's
-    # checked-rename rule, review r6). A silently failed rename here
-    # leaves no rebuild marker, so a crash between the codes and base
-    # swaps would publish mixed generations — exactly what the marker
-    # exists to prevent (ADVICE r9).
-    if not fs.rename(tmp, dst):
-        raise IOError(f"atomic marker rename {path}.tmp -> {path} failed")
-
-
-def _fs_read_file(spark, path: str) -> str:
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    stream = fs.open(p)
-    try:
-        return jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
-
-
-def _fs_drop_listed(spark, dir_path: str, file_strs: list) -> None:
-    """``_fs_drop_consumed`` from persisted path STRINGS — the recovery
-    side of a consumed-tier snapshot: delete exactly the listed files
-    (missing ones are already-done work of the crashed run), then the
-    underscore debris + a NON-recursive dir delete that refuses a
-    non-empty directory, so files landed after the snapshot survive."""
-    jvm = spark._jvm
-    dp = jvm.org.apache.hadoop.fs.Path(dir_path)
-    fs = dp.getFileSystem(spark._jsc.hadoopConfiguration())
-    for s in file_strs:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(s), False)
-    if not fs.exists(dp):
-        return
-    for st in fs.listStatus(dp):
-        if st.isFile() and st.getPath().getName().startswith("_"):
-            fs.delete(st.getPath(), False)
-    try:
-        fs.delete(dp, False)
-    except Exception:
-        pass  # a new file landed after the snapshot — keep it
-
-
-class MaintenanceLeaseHeld(RuntimeError):
-    """Another maintainer holds this index's maintenance lease — the
-    loud-refusal form of the single-writer contract (VERDICT r8 #2)."""
-
-
-class MaintenanceLeaseLost(RuntimeError):
-    """This maintainer's lease was taken over mid-run (a >ttl stall let
-    a successor claim it) and the loss was detected at a commit point —
-    the swap is REFUSED so the paused-then-resumed holder can never
-    clobber the successor's published state (VERDICT r9 #2). The work
-    is lost; the index is whatever the new holder publishes."""
-
-
-_LEASE_FILE = "__maintenance_lease"
-LEASE_TTL_SEC = 3600
-
-# Per-thread {lease_path: claim_token} for leases held via
-# ``_maintenance_lease``. Thread-local is the right scope: a lease is
-# acquired, used, and released on ONE thread (a streaming foreachBatch
-# body, a scheduler job, a CLI sweep), and the registry exists so the
-# commit primitives (``_fs_swap_dir``) can re-verify ownership at the
-# moment that matters without threading a token through every
-# ``*_unlocked`` core's signature.
-import threading as _threading
-
-_HELD_LEASES = _threading.local()
-
-
-def _held_leases() -> dict:
-    d = getattr(_HELD_LEASES, "by_path", None)
-    if d is None:
-        d = {}
-        _HELD_LEASES.by_path = d
-    return d
-
-
-def _lease_held_by_this_thread(path: str) -> bool:
-    return path in _held_leases()
-
-
-# "No recovery pending" verdicts proven THIS session, keyed per live
-# SparkSession → set of index paths whose marker/__old probe came back
-# clean (VERDICT r10 #3): the joint-recovery preamble on every probe/
-# append costs three fs exists() rounds, pure overhead once an index is
-# known clean. The verdict is invalidated on EVERY lease claim in this
-# session (``_acquire_lease`` is the chokepoint for all maintenance:
-# rebuilds, compacts, leased bootstraps, recovery itself), so the full
-# check re-runs on first touch and after any lease section. Stated
-# trade: a FOREIGN process crashing mid-maintenance on the same path is
-# not seen by the cached preamble — but a mid-swap crash surfaces as a
-# missing live dir, and ``_read_tier_with_recovery`` voids the verdict
-# and self-heals on that read failure, so the only deferred case is the
-# consistent-but-stale one (committed marker, old generation still
-# readable), already bounded by the lease ttl.
-import weakref as _weakref
-
-_RECOVERY_CLEAN: "_weakref.WeakKeyDictionary" = _weakref.WeakKeyDictionary()
-_RECOVERY_CLEAN_LOCK = _threading.Lock()
-#: Per-path invalidation generation (ADVICE r11 TOCTOU): a concurrent
-#: thread's lease claim can land BETWEEN this thread's clean exists()
-#: probes and its mark_clean — snapshotting the generation before the
-#: probes and refusing the mark when any invalidation bumped it since
-#: closes the window where a stale 'clean' verdict is re-cached while
-#: maintenance is mutating the path.
-_RECOVERY_GEN: dict = {}
-
-
-def _recovery_gen(path: str) -> int:
-    with _RECOVERY_CLEAN_LOCK:
-        return _RECOVERY_GEN.get(path, 0)
-
-
-def _recovery_verdict_cached(spark, path: str) -> bool:
-    paths = _RECOVERY_CLEAN.get(spark)
-    return paths is not None and path in paths
-
-
-def _recovery_mark_clean(spark, path: str, gen: int | None = None) -> None:
-    with _RECOVERY_CLEAN_LOCK:
-        if gen is not None and _RECOVERY_GEN.get(path, 0) != gen:
-            return  # invalidated since the caller's probes: stale verdict
-        paths = _RECOVERY_CLEAN.get(spark)
-        if paths is None:
-            paths = set()
-            _RECOVERY_CLEAN[spark] = paths
-        paths.add(path)
-
-
-def _recovery_invalidate(path: str) -> None:
-    # every session's verdict for this path drops — cheaper than
-    # plumbing spark through, and claims are rare next to probes
-    with _RECOVERY_CLEAN_LOCK:
-        _RECOVERY_GEN[path] = _RECOVERY_GEN.get(path, 0) + 1
-        for paths in _RECOVERY_CLEAN.values():
-            paths.discard(path)
-
-
-def _read_view_with_recovery(spark, index_path: str, read_fn, recover):
-    """Run ``read_fn`` (an eager index read) with the cached-verdict
-    fallback (review r11): the per-session "no recovery pending"
-    verdict is OPTIMISTIC — a foreign maintainer crashing mid-swap
-    after this session cached clean leaves the live dir missing. The
-    eager parquet read throws path-not-found; voiding the verdict,
-    running the family's full recovery, and retrying once restores the
-    self-healing guarantee every reader had before the cache
-    (review r8) at zero cost on the clean path."""
-    try:
-        return read_fn()
-    except Exception:
-        _recovery_invalidate(index_path)
-        recover(spark, index_path)
-        return read_fn()
-
-
-def _read_tier_with_recovery(spark, index_path: str, tier: str, recover):
-    """``spark.read.parquet`` on a swap-managed live tier via
-    ``_read_view_with_recovery`` (rationale there)."""
-    return _read_view_with_recovery(
-        spark,
-        index_path,
-        lambda: spark.read.parquet(f"{index_path}/{tier}"),
-        recover,
-    )
-
-
-def _covering_held_lease(target: str):
-    """The (lease_path, token) this thread holds that covers ``target``
-    — the lease root itself, any path under it, or the sibling
-    ``{target}__lock`` form ``operators.compaction`` uses (a lease
-    INSIDE the swapped dir would ride out with the swap). None when the
-    thread holds no covering lease (unleased callers are not fenced —
-    the lease is opt-in by design)."""
-    for lease_path, token in _held_leases().items():
-        root = (
-            lease_path[: -len("__lock")]
-            if lease_path.endswith("__lock")
-            else lease_path
-        )
-        if target == root or target.startswith(root.rstrip("/") + "/"):
-            return lease_path, token
-    return None
-
-
-def _parse_lease_fields(content: str) -> dict:
-    """``k=v`` fields of a lease file body — the ONE parser for the
-    lease wire format (shared with sinks/versioned.py's publish lease)."""
-    return dict(kv.split("=", 1) for kv in content.split() if "=" in kv)
-
-
-#: Sentinel returned when a lease file EXISTS but cannot be read. It
-#: never equals a real token, so a commit-point ownership check refuses
-#: (the safe direction) and a fenced release skips its delete — the
-#: stopped heartbeat then lets the ttl expire the orphan, bounding the
-#: damage of a persistently unreadable lease to one ttl.
-LEASE_UNREADABLE = "__unreadable__"
-
-
-def _read_lease_token(spark, path: str) -> str | None:
-    """The ``token=`` field of the live lease file; None when the lease
-    is ABSENT; ``LEASE_UNREADABLE`` when it exists but cannot be read.
-    A transient I/O hiccup is retried before concluding — without the
-    retry, one failed read at a commit point discarded a whole
-    multi-hour maintenance pass as a phantom takeover (review r10)."""
-    import time as _time
-
-    lease = f"{path}/{_LEASE_FILE}"
-    content = None
-    for attempt in range(3):
-        try:
-            content = _fs_read_file(spark, lease)
-            break
-        except Exception:
-            try:
-                if not _fs_exists(spark, lease):
-                    return None  # genuinely absent (released/taken)
-            except Exception:
-                pass  # even the probe failed: retry, then give up
-            if attempt == 2:
-                return LEASE_UNREADABLE
-            _time.sleep(0.1)
-    return _parse_lease_fields(content).get("token")
-
-
-def _acquire_lease(
-    spark, path: str, owner: str, ttl_sec: int = LEASE_TTL_SEC
-) -> str:
-    """Best-effort single-maintainer lease on an index root (VERDICT
-    r8 #2): a marker FILE at ``{path}/__maintenance_lease`` stamped
-    with owner/pid. Compacts and the streaming ingests' foreachBatch
-    bodies acquire it, so the documented failure — a compact racing an
-    ingest batch that crashed between its data write and done-marker
-    re-classifies the batch's ids as fresh — becomes a loud
-    ``MaintenanceLeaseHeld`` instead of a silent wrong answer.
-
-    Staleness is two-tier: a holder on THIS host whose pid is gone is
-    presumed crashed immediately (a killed ingest must not block its
-    own restart for the whole ttl — the streaming foreachBatch bodies
-    re-acquire per batch), anything else waits out ``ttl_sec`` by
-    mtime (pid liveness means nothing across hosts; a recycled pid
-    just falls back to the ttl). Takeover is delete + re-claim; the
-    claim itself is ``fs.create(overwrite=False)``, so two racing
-    takers resolve to one winner and one refusal. Best-effort by
-    design: local/HDFS create is atomic, object stores may be
-    read-after-write-lazy — the lease turns an operator mistake into
-    an error, it is not a distributed lock service.
-
-    Returns the CLAIM TOKEN stamped into the lease file (VERDICT r9
-    #2): release and the commit-point ownership checks compare against
-    it, so a holder whose lease was taken over after a >ttl stall
-    refuses its swap and never deletes the successor's lease —
-    shrinking the split-brain window from the whole maintenance
-    duration to the re-read-before-swap gap."""
-    import os as _os
-    import socket as _socket
-    import time as _time
-    import uuid as _uuid
-
-    jvm = spark._jvm
-    lease = jvm.org.apache.hadoop.fs.Path(f"{path}/{_LEASE_FILE}")
-    fs = lease.getFileSystem(spark._jsc.hadoopConfiguration())
-    host = _socket.gethostname()
-    if fs.exists(lease):
-        try:
-            mtime = fs.getFileStatus(lease).getModificationTime() / 1000.0
-            age = _time.time() - mtime
-        except Exception:
-            age = 0.0  # raced a concurrent claim: treat as live
-        if age <= ttl_sec and not _lease_holder_known_dead(
-            jvm, fs, lease, host
-        ):
-            raise MaintenanceLeaseHeld(
-                f"maintenance lease at {path}/{_LEASE_FILE} is live "
-                f"(age {age:.0f}s <= ttl {ttl_sec}s) — another compact "
-                f"or ingest is running; {owner!r} must wait or the "
-                f"holder must release/crash past the ttl"
-            )
-        fs.delete(lease, False)  # stale: holder presumed crashed
-    try:
-        out = fs.create(lease, False)  # overwrite=False → atomic claim
-    except Exception as exc:
-        raise MaintenanceLeaseHeld(
-            f"lost the lease race at {path}/{_LEASE_FILE}: {exc}"
-        ) from None
-    token = _uuid.uuid4().hex
-    out.write(bytearray(
-        f"{owner} host={host} pid={_os.getpid()} "
-        f"t={int(_time.time())} token={token}".encode()
-    ))
-    out.close()
-    # a claimed lease means maintenance is about to mutate this path:
-    # cached "no recovery pending" verdicts are void until the next
-    # full probe proves clean again (VERDICT r10 #3)
-    _recovery_invalidate(path)
-    return token
-
-
-def _lease_holder_known_dead(jvm, fs, lease, host: str) -> bool:
-    """True only when the lease names THIS host and its pid no longer
-    exists — the one case staleness is provable without waiting out
-    the ttl. Any read/parse failure, foreign host, or live/recycled
-    pid returns False (fall back to the mtime ttl)."""
-    import os as _os
-
-    try:
-        stream = fs.open(lease)
-        try:
-            content = jvm.org.apache.commons.io.IOUtils.toString(
-                stream, "UTF-8"
-            )
-        finally:
-            stream.close()
-        fields = _parse_lease_fields(content)
-        if fields.get("host") != host:
-            return False
-        pid = int(fields["pid"])
-    except Exception:
-        return False
-    try:
-        _os.kill(pid, 0)
-    except ProcessLookupError:
-        return True
-    except PermissionError:
-        return False  # alive under another uid
-    return False
-
-
-def _release_lease(spark, path: str, token: str | None = None) -> None:
-    """Delete the lease — but with a ``token``, only when the live
-    lease still carries it. An unconditional delete after a >ttl stall
-    and takeover would erase the NEW holder's lease mid-run (VERDICT
-    r9 #2a); a token mismatch means this holder already lost, and the
-    right move is to leave the successor's claim alone."""
-    if token is not None and _read_lease_token(spark, path) != token:
-        return  # taken over: the lease on disk belongs to a successor
-    _fs_delete(spark, f"{path}/{_LEASE_FILE}")
-
-
-def _acquire_lease_with_retry(
-    spark,
-    path: str,
-    owner: str,
-    ttl_sec: int = LEASE_TTL_SEC,
-    wait_s: float = 0.0,
-    poll_s: float = 5.0,
-) -> str:
-    """``_acquire_lease`` with a bounded wait: retry a held lease every
-    ``poll_s`` until ``wait_s`` elapses, then re-raise. The streaming
-    ingests use this so a batch colliding with a scheduled compact or
-    batch refresh stalls briefly instead of killing the whole streaming
-    query (the deployment RUNS them side by side by design); a hold
-    outlasting the deadline still fails loudly — a stall that long is
-    the operator mistake the lease exists to surface."""
-    import time as _time
-
-    deadline = _time.monotonic() + max(wait_s, 0.0)
-    while True:
-        try:
-            return _acquire_lease(spark, path, owner, ttl_sec)
-        except MaintenanceLeaseHeld:
-            remaining = deadline - _time.monotonic()
-            if remaining <= 0:
-                raise
-            _time.sleep(min(poll_s, remaining))
-
-
-@contextmanager
-def _maintenance_lease(
-    spark,
-    path: str,
-    owner: str,
-    ttl_sec: int = LEASE_TTL_SEC,
-    wait_s: float = 0.0,
-):
-    """``with _maintenance_lease(spark, path, "lsh_index_compact"): ...``
-    — acquire around every mutating maintenance section; released on
-    any exit so a failed compact never wedges the index.
-
-    Deliberately NOT re-entrant: a compact fired from a scheduler
-    thread while a streaming batch holds the lease in the SAME driver
-    process is exactly the race this exists to refuse
-    (tests/test_scale_techniques.py::test_streaming_ingest_vs_compact_
-    race_fails_loudly). Maintenance sections that legitimately nest —
-    an ingest's bootstrap falling back to a full build, an upsert
-    folding the log first — call the ``*_unlocked`` cores instead.
-
-    A heartbeat thread re-touches the lease every ttl/4 while the
-    section runs: staleness is mtime-based, and without the refresh a
-    LEGITIMATE maintenance pass outlasting the ttl (an O(corpus)
-    compact at real scale easily exceeds an hour) would have its lease
-    silently stolen mid-run by the next maintainer — the exact
-    two-writers state the lease exists to prevent. A heartbeat that
-    finds the lease file gone stops quietly (released, or a >ttl host
-    PAUSE let a taker claim it — at which point this holder has
-    already lost; best-effort, as documented on ``_acquire_lease``)."""
-    import threading
-    import time as _time
-
-    token = _acquire_lease_with_retry(
-        spark, path, owner, ttl_sec, wait_s=wait_s
-    )
-    _held_leases()[path] = token
-    stop = threading.Event()
-
-    def _heartbeat() -> None:
-        jvm = spark._jvm
-        lease = jvm.org.apache.hadoop.fs.Path(f"{path}/{_LEASE_FILE}")
-        fs = lease.getFileSystem(spark._jsc.hadoopConfiguration())
-        while not stop.wait(max(ttl_sec / 4.0, 0.05)):
-            try:
-                fs.setTimes(lease, int(_time.time() * 1000), -1)
-            except Exception:
-                return  # lease gone: stop quietly
-
-    hb = threading.Thread(
-        target=_heartbeat, daemon=True, name=f"lease-heartbeat {owner}"
-    )
-    hb.start()
-    try:
-        yield
-    finally:
-        stop.set()
-        _held_leases().pop(path, None)
-        _release_lease(spark, path, token)
-
-
-def _refuse_stale_mor_tiers(
-    spark, path: str, owner: str, tiers: tuple = ("log", "tombstones")
-) -> None:
-    """A full REBUILD writes its corpus at ``seq=0``, so any surviving
-    merge-on-read tier OUTRANKS it: a stale log row (seq ≥ 0, the old
-    value) wins the max-seq fold over the fresh base row, and an old
-    tombstone (survival requires ``seq > tombstone seq``) silently
-    kills every re-ingested key — data loss, not a merge. Rebuild
-    writers therefore refuse while a MOR tier exists. Compact first
-    (folds the log, consumes the tombstones) or build into a fresh
-    path and flip a pointer. The IVFADC family is the exception: its
-    compaction IS the rebuild, so ``ivfpq_index_write`` CONSUMES the
-    tiers transactionally instead of refusing."""
-    stale = [t for t in tiers if _fs_exists(spark, f"{path}/{t}")]
-    if stale:
-        raise ValueError(
-            f"{owner}: refusing to rebuild {path} while merge-on-read "
-            f"tier(s) {stale} exist — the rebuild's seq=0 rows would be "
-            f"outranked by stale log entries and killed by old "
-            f"tombstones (silent data loss). Run the family's compact "
-            f"first, or build into a fresh path and swap pointers."
-        )
-
-
-def _verify_swap_ownership(spark, target: str) -> None:
-    """The commit-point ownership fence (VERDICT r9 #2b): when the
-    calling thread holds a maintenance lease covering ``target``,
-    re-read the lease and raise ``MaintenanceLeaseLost`` on a claim-
-    token mismatch — a successor took over after a >ttl stall and this
-    holder must not publish over its work. Called by ``_fs_swap_dir``
-    before the destructive rename, and by the in-place table overwrites
-    (``pipelines._overwrite_via_checkpoint``, the dim snapshot loads)
-    whose commit never goes through a swap (review r10). Unleased
-    callers are not fenced — the lease is opt-in by design."""
-    held = _covering_held_lease(target)
-    if held is None:
-        return
-    lease_path, token = held
-    if _read_lease_token(spark, lease_path) != token:
-        _held_leases().pop(lease_path, None)  # lost: stop fencing it
-        raise MaintenanceLeaseLost(
-            f"maintenance lease at {lease_path}/{_LEASE_FILE} no "
-            f"longer carries this holder's claim token — a "
-            f"successor took over after a >ttl stall; refusing to "
-            f"publish {target} over its work"
-        )
-
-
-def _fs_swap_dir(spark, live: str, staged: str) -> None:
-    """Replace directory ``live`` with ``staged`` via two renames (the
-    closest a filesystem sink gets to an atomic pointer flip; the
-    versioned snapshot store in sinks/snapshots.py is the true-atomic
-    alternative when readers must never observe the gap).
-
-    Crash window: between the two renames the live directory is absent
-    and only ``live__old`` exists. Every reader/writer entry point
-    calls ``_fs_recover_swap`` first, which rolls the old directory
-    back in — so the worst case of a mid-swap crash is the UPDATE being
-    lost (retryable), never the index.
-
-    Ownership fence (VERDICT r9 #2b): when the calling thread holds a
-    maintenance lease covering ``live``, the lease file is re-read HERE
-    — immediately before the destructive rename — and a claim-token
-    mismatch (a successor took over after a >ttl stall) raises
-    ``MaintenanceLeaseLost`` instead of clobbering the successor's
-    commit. This shrinks the paused-holder split-brain window from the
-    whole maintenance duration to the read→rename gap (milliseconds)."""
-    _verify_swap_ownership(spark, live)
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    live_p = jvm.org.apache.hadoop.fs.Path(live)
-    staged_p = jvm.org.apache.hadoop.fs.Path(staged)
-    fs = live_p.getFileSystem(hconf)
-    old_p = jvm.org.apache.hadoop.fs.Path(live + "__old")
-    if fs.exists(old_p):
-        fs.delete(old_p, True)
-    # Hadoop FileSystem.rename reports failure by RETURNING FALSE, not
-    # throwing — each return must be checked, or a failed forward
-    # rename would fall through to the delete below and destroy the
-    # only remaining copy (review r6).
-    if fs.exists(live_p) and not fs.rename(live_p, old_p):
-        raise IOError(f"rename {live} -> {live}__old failed")
-    if not fs.rename(staged_p, live_p):
-        # roll the old dir back in so the pre-swap state stays live
-        if fs.exists(old_p):
-            fs.rename(old_p, live_p)
-        raise IOError(f"rename {staged} -> {live} failed")
-    fs.delete(old_p, True)
-
-
-def _base_committed(spark, path: str) -> bool:
-    """True only when ``{path}/base`` holds a COMMITTED write — the
-    ``_SUCCESS`` marker the Hadoop committer writes after job commit.
-    Gating bootstrap on bare directory existence would take the append
-    path against an interrupted build's partial base and silently serve
-    an index missing the corpus (the textindex family fixed this in
-    ADVICE r3; propagated here in review r6)."""
-    _fs_recover_swap(spark, f"{path}/base")
-    return _fs_exists(spark, f"{path}/base/_SUCCESS")
-
-
-def _fs_snapshot_files(spark, dir_path: str):
-    """Snapshot the non-underscore files of a merge-on-read tier
-    directory — the ``consumed`` set of a compact. Fold-then-delete
-    EXACTLY these, so a file committed during the O(corpus) rewrite is
-    never erased unfolded (ADVICE r7: the doc-neardup compact lost a
-    takedown this way; the log/tombstone tiers of every family had the
-    same window). Returns ``(fs, dir Path, [file Path])``; a missing
-    dir yields ``[]``."""
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(dir_path)
-    fs = p.getFileSystem(hconf)
-    if not fs.exists(p):
-        return fs, p, []
-    files = [
-        st.getPath()
-        for st in fs.listStatus(p)
-        if st.isFile() and not st.getPath().getName().startswith("_")
-    ]
-    return fs, p, files
-
-
-def _fs_drop_consumed(fs, dir_path, consumed) -> None:
-    """Delete exactly a compact's consumed snapshot plus commit debris
-    (underscore files — never data), then attempt a NON-recursive dir
-    delete: it refuses a non-empty directory, so a file committed at
-    ANY point after the snapshot survives for the next compact. The
-    recursive-delete form this replaces had a TOCTOU window that
-    silently erased such files — for a tombstone tier, a lost takedown
-    (ADVICE r7). Entries the fold read but the snapshot missed stay in
-    the tier as same-seq duplicates, which the max-seq read resolution
-    already tolerates (the crash-between-swap-and-delete case)."""
-    for f in consumed:
-        fs.delete(f, False)
-    if not fs.exists(dir_path):
-        return
-    for st in fs.listStatus(dir_path):
-        if st.isFile() and st.getPath().getName().startswith("_"):
-            fs.delete(st.getPath(), False)
-    try:
-        fs.delete(dir_path, False)
-    except Exception:
-        pass  # a new file landed during the fold — keep it
-
-
-def _fs_recover_swap(spark, live: str) -> None:
-    """Roll back a crashed ``_fs_swap_dir``: if ``live`` is missing but
-    ``live__old`` survives, rename it back (the pre-swap index state).
-    A leftover ``live__old`` NEXT TO a live dir means the crash hit
-    after the forward rename — the old copy is garbage and the next
-    swap deletes it; only the missing-live case needs action here."""
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    live_p = jvm.org.apache.hadoop.fs.Path(live)
-    old_p = jvm.org.apache.hadoop.fs.Path(live + "__old")
-    fs = live_p.getFileSystem(hconf)
-    if not fs.exists(live_p) and fs.exists(old_p):
-        fs.rename(old_p, live_p)
-
-
-def _delete_partition_dirs(spark, path: str, rel_dirs: list[str]) -> None:
-    """Drop partition directories whose every row was removed by an
-    upsert: dynamic partition overwrite only rewrites partitions PRESENT
-    in the output, so a partition that ends up empty would keep its old
-    file (stale rows) unless deleted explicitly. Bounded driver-side
-    work — the list is at most the touched-partition set of one batch."""
-    if not rel_dirs:
-        return
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    fs = jvm.org.apache.hadoop.fs.Path(path).getFileSystem(hconf)
-    for rel in rel_dirs:
-        p = jvm.org.apache.hadoop.fs.Path(f"{path}/{rel}")
-        if fs.exists(p):
-            fs.delete(p, True)
-
-
-def lsh_index_upsert(
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    path: str,
-    planes: int = DEFAULT_PLANES,
-    tables: int = DEFAULT_TABLES,
-    dim: int | None = None,
-) -> None:
-    """Incrementally fold a batch of vectors into a persisted LSH index
-    (``lsh_index_write``) — the steady-state ingest path once the corpus
-    is live: sign only the arriving batch, then dynamic-partition-
-    overwrite exactly the (t, sb) directories the batch touches, with
-    each touched bucket rewritten as existing-rows ∪ new-rows
-    (id-deduplicated, new wins — re-ingesting a vector replaces it,
-    INCLUDING when its new value moves it to a different bucket: the old
-    bucket is located, added to the touched set, and rewritten without
-    the stale row).
-
-    Scale shape: the arriving batch is signed with one mapInPandas GEMM
-    pass (O(batch), not O(corpus)); the read-back of current bucket
-    contents is partition-pruned to the touched buckets only (same
-    pruning the probes use); untouched directories are never rewritten
-    (spark.sql.sources.partitionOverwriteMode=dynamic). Locating the old
-    buckets of re-ingested ids is a column-pruned scan of (vid, t, sb)
-    only — the vector column dominates index bytes, so this narrow scan
-    is a small fraction of a full read; a hash-sharded id→bucket sidecar
-    catalog (maintained by the same dynamic overwrite) would remove even
-    that and is the documented next step for true 100 TB indexes.
-    Atomicity is per-partition-directory — the same contract as any
-    dynamic-overwrite sink (operators/merge.py discusses the trade).
-
-    Cost model: touched-bucket overwrite wins while the batch hits a
-    small fraction of the layout; past the threshold (a random batch
-    under the coarse layout) it degrades to a REBUILD of the merged
-    vector set — read one table's worth of (vid, v), anti-join the
-    batch, re-sign with the one-pass GEMM, write ``base__staged``,
-    swap. Measured at the bench's 200k corpus this lands ~2× a plain
-    rebuild (the extra being the parquet vector read + merge the
-    rebuild's in-memory input skips), vs ~2.5-3× for the earlier
-    row-copy degrade that moved all tables×n index rows. The branch
-    is automatic; steady-state ingest should still be the append log
-    (5-10× cheaper than either, exactness restored at compaction).
-
-    If no index exists at ``path`` yet, bootstraps via
-    ``lsh_index_write`` (first batch = the index). If an append log
-    exists it is compacted first — upsert's touched-bucket overwrite is
-    defined on the partitioned base layout only.
-
-    Runs under the single-maintainer LEASE: the upsert rewrites base
-    partition directories in place, so one racing a compact's base
-    swap silently loses whichever finishes first."""
-    spark = df.sparkSession
-    with _maintenance_lease(spark, path, "lsh_index_upsert"):
-        _lsh_index_upsert_unlocked(
-            df, vec_col, id_col, path, planes, tables, dim
-        )
-
-
-def _lsh_index_upsert_unlocked(
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    path: str,
-    planes: int = DEFAULT_PLANES,
-    tables: int = DEFAULT_TABLES,
-    dim: int | None = None,
-) -> None:
-    spark = df.sparkSession
-    _fs_recover_swap(spark, f"{path}/base")
-    # A batch may carry the same id more than once; bucket rewrite logic
-    # assumes one row per id, so collapse first (arbitrary survivor — an
-    # unordered batch defines no "latest").
-    df = df.dropDuplicates([id_col])
-    if not df.head(1):
-        return  # empty batch: nothing to sign/assign, nothing to commit
-    # committed-base gate, not bare existence: an interrupted build
-    # leaves the directory present but uncommitted, and appending
-    # against it would silently serve an index missing the corpus
-    # (review r6; textindex protocol)
-    if not _base_committed(spark, path):
-        _lsh_index_write_unlocked(
-            df, vec_col, id_col, path, planes, tables, dim=dim
-        )
-        return
-    if _fs_exists(spark, f"{path}/log") or _fs_exists(
-        spark, f"{path}/tombstones"
-    ):
-        # fold both MOR tiers (append log + delete markers) first —
-        # upsert's overwrite and seq bookkeeping are defined on the
-        # partitioned base alone
-        _lsh_index_compact_unlocked(spark, path)
-    index = spark.read.parquet(f"{path}/base")
-
-    new_rows = _signature_rows(
-        df, vec_col, id_col, planes, tables, dim
-    ).localCheckpoint()
-    batch_ids = new_rows.select("vid").dropDuplicates()
-
-    # Cost crossover (measured, bench "lsh index ingest" row): the
-    # touched-bucket path pays a pruned read + a full localCheckpoint of
-    # the merged buckets + per-directory dynamic-overwrite commits. When
-    # a batch touches MOST of the coarse layout (a random batch hits
-    # nearly all tables×(2^planes/LSH_COARSE) directories), that costs
-    # ~3× a plain read-merge-rewrite. So degrade to one pass: merged
-    # plan reads base and writes base__staged directly (different path →
-    # no checkpoint needed), then swap directories. Same semantics —
-    # stale rows of re-ingested ids are anti-joined away globally.
-    #
-    # The branch is decided in two steps so the heavy-touch regime never
-    # pays index scans it won't use: the batch's OWN bucket fan-out
-    # (O(batch), on the checkpointed signatures) is a lower bound on the
-    # touched set, so if it alone crosses the threshold we degrade
-    # without ever locating old buckets; only below it do we pay the
-    # column-pruned (vid, t, sb) scan for re-ingested ids' old homes.
-    n_dirs_possible = tables * max(1, (1 << planes) // LSH_COARSE)
-    threshold = UPSERT_DEGRADE_FRACTION * n_dirs_possible
-
-    def _degrade_swap() -> None:
-        # The heavy-touch regime IS a rebuild of the merged vector set,
-        # so take exactly the rebuild's cost shape: read ONE table's
-        # worth of rows (every vector appears in every table with the
-        # same v), anti-join the batch, re-sign everything with the
-        # one-pass GEMM, write staged, swap. The earlier form copied
-        # all tables×n index rows through the anti-join — `tables`×
-        # the vector bytes on the read side — and measured ~2.5× a
-        # plain rebuild at the bench's 200k corpus; this form is the
-        # rebuild, plus one bounded swap.
-        vecs = (
-            index.filter(F.col("t") == 0)
-            .select("vid", "v")
-            .join(F.broadcast(batch_ids), "vid", "left_anti")
-            .unionByName(new_rows.filter(F.col("t") == 0).select("vid", "v"))
-        )
-        signed = _signature_rows(vecs, "v", "vid", planes, tables, dim).withColumn(
-            # a full snapshot: uniform seq is correct for max-seq
-            # merge-on-read because vids are unique after the merge
-            "seq",
-            F.lit(0).cast("long"),
-        )
-        staged = f"{path}/base__staged"
-        n_sb = max(1, -(-(1 << planes) // LSH_COARSE))
-        pid = F.col("t").cast("int") * n_sb + F.col("sb").cast("int")
-        _balanced_dir_repartition(
-            signed, pid, tables * n_sb
-        ).sortWithinPartitions(
-            "sig"
-        ).write.mode("overwrite").partitionBy("t", "sb").parquet(staged)
-        _fs_swap_dir(spark, f"{path}/base", staged)
-
-    new_dirs = new_rows.select("t", "sb").dropDuplicates()
-    if new_dirs.count() >= threshold:
-        _degrade_swap()
-        return
-
-    # Buckets the new rows land in, PLUS the buckets currently holding
-    # any re-ingested id (its value may have changed its signature — the
-    # stale row must be rewritten away, ADVICE r2).
-    old_locs = (
-        index.select("vid", "t", "sb")
-        .join(F.broadcast(batch_ids), "vid")
-        .select("t", "sb")
-    )
-    touched = (
-        new_dirs.unionByName(old_locs)
-        .dropDuplicates()
-        .localCheckpoint()  # pin: re-evaluating after the write would re-read the overwritten path
-    )
-    if touched.count() >= threshold:
-        _degrade_swap()
-        return
-    # broadcast join on the partition columns → dynamic partition
-    # pruning: only touched (t, sb) directories are scanned
-    pruned = index.join(F.broadcast(touched), ["t", "sb"])
-    # every earlier row of a re-ingested vid lives in a touched bucket
-    # (old_locs found them all), so the touched-bucket max is a valid
-    # per-vid monotonic seq source — no full-index stats read needed
-    max_seq = pruned.agg(F.max("seq")).head()[0]
-    new_seq = (max_seq if max_seq is not None else -1) + 1
-    existing = (
-        pruned
-        # re-ingested ids: new wins; broadcast — the batch id set is
-        # small by construction, a shuffled anti-join would move every
-        # touched bucket's vector bytes twice
-        .join(F.broadcast(batch_ids), "vid", "left_anti")
-        .select("vid", "v", "t", "sig", "sb", "seq")
-    )
-    # materialize before the write: the merged plan reads the same path
-    # the dynamic overwrite rewrites (bounded — touched buckets only)
-    merged = existing.unionByName(
-        new_rows.select("vid", "v", "t", "sig", "sb").withColumn(
-            "seq", F.lit(new_seq).cast("long")
-        )
-    ).localCheckpoint()
-    # touched buckets with no surviving rows (every row was a stale copy)
-    # never appear in merged; collect the bounded list for FS cleanup
-    emptied = [
-        f"t={r['t']}/sb={r['sb']}"
-        for r in touched.join(
-            merged.select("t", "sb").dropDuplicates(), ["t", "sb"], "left_anti"
-        ).collect()
-    ]
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        # exact task↔directory assignment, same as the rebuild write:
-        # untouched pids simply produce empty tasks (cheap), touched
-        # dirs each get their own writer (VERDICT r12 #1)
-        n_sb = max(1, -(-(1 << planes) // LSH_COARSE))
-        pid = F.col("t").cast("int") * n_sb + F.col("sb").cast("int")
-        _balanced_dir_repartition(
-            merged, pid, tables * n_sb
-        ).sortWithinPartitions(
-            "sig"
-        ).write.mode("overwrite").partitionBy("t", "sb").parquet(f"{path}/base")
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
-    _delete_partition_dirs(spark, f"{path}/base", emptied)
+    """Tombstone delete: one tiny (vid, seq) file under
+    ``{path}/tombstones``; no base partition is read or rewritten
+    (plan-gated). Probes filter at read time, ``lsh_index_compact``
+    makes it physical. ``vids`` is an id list or a DataFrame of ids
+    (distributed marker write, no driver collect)."""
+    tiered.delete(spark, path, "vid", vids, seq, lsh_index_read)
 
 
 def lsh_index_append(
@@ -1550,134 +464,45 @@ def lsh_index_append(
     dim: int | None = None,
     seq: int | None = None,
 ) -> None:
-    """Append-only (merge-on-read) ingest into a persisted LSH index —
-    the steady-state 100 TB path: sign the batch (one mapInPandas GEMM,
-    O(batch)) and write it as ONE sorted file under ``{path}/log`` with
-    a monotonically increasing ``seq`` — the L0 of an LSM tree. Nothing
-    is read back, rewritten, or deleted, and the commit is a single
-    file, not one per touched bucket (a random batch touches O(batch)
-    (t, sb) directories; per-file commit overhead made the
-    partition-targeted append cost MORE than a rebuild at bench scale).
-    Write cost is O(batch), full stop — vs ``lsh_index_upsert``'s
-    read-merge-overwrite of every touched bucket.
+    """Append-only (merge-on-read) ingest — the incremental path: sign
+    the batch (one mapInPandas GEMM, O(batch)) and commit it as ONE
+    sorted file under ``{path}/log`` at a monotonically increasing
+    ``seq``. Nothing is read back or rewritten; the commit is a single
+    file, not one per touched bucket. Bootstraps the index when no base
+    is committed (``tiered.append``).
 
-    Read side: probes resolve duplicates by keeping the max-``seq`` row
-    per vid among candidates (``lsh_probe_topk``), the standard
-    merge-on-read contract (LSM memtables / lakehouse MOR tables).
-    Consistency bound, stated honestly: if a RE-INGESTED vector's new
-    value changes a signature, the stale row in the old bucket can still
-    surface for probes that hit only the old bucket, until
-    ``lsh_index_compact`` folds the log — append-only ingest trades that
-    bounded staleness window for O(batch) writes. Append-only of NEW ids
-    (the common corpus-growth case) is exact immediately.
-
-    ``seq`` defaults to max(existing seq)+1 via a column-pruned stats
-    read; a production deployment tracks it in a manifest instead and
-    passes it in."""
-    spark = df.sparkSession
-    _fs_recover_swap(spark, f"{path}/base")
-    _fs_recover_swap(spark, f"{path}/codes")  # both tiers (review r8)
-    df = df.dropDuplicates([id_col])
-    if not df.head(1):
-        return  # empty batch: nothing to sign/assign, nothing to commit
-    # committed-base gate, not bare existence: an interrupted build
-    # leaves the directory present but uncommitted, and appending
-    # against it would silently serve an index missing the corpus
-    # (review r6; textindex protocol). The bootstrap rebuild is
-    # MAINTENANCE: a streaming ingest wrapping this append already
-    # holds the lease, but a bare caller does not — take it for them
-    # and re-check the gate under it (ADVICE r9, ivfpq twin).
-    if not _base_committed(spark, path):
-        if _lease_held_by_this_thread(path):
-            _lsh_index_write_unlocked(
-                df, vec_col, id_col, path, planes, tables, dim=dim
-            )
-            return
-        with _maintenance_lease(spark, path, "lsh_index_append bootstrap"):
-            if not _base_committed(spark, path):
-                _lsh_index_write_unlocked(
-                    df, vec_col, id_col, path, planes, tables, dim=dim
-                )
-                return
-        # lost the bootstrap race: base is committed now — append below
-    if seq is None:
-        # stats-read fallback; a production deployment passes ``seq``
-        # from its ingest manifest and skips this corpus-column scan
-        seq = _next_seq(spark, path, lsh_index_read)
-
-    new_rows = _signature_rows(df, vec_col, id_col, planes, tables, dim).withColumn(
-        "seq", F.lit(int(seq)).cast("long")
+    Probes keep the max-``seq`` row per vid among candidates.
+    Consistency bound: if a RE-INGESTED vector's new value changes a
+    signature, the stale row in its old bucket can surface for probes
+    that hit only that bucket until ``lsh_index_compact`` folds the log.
+    Appending NEW ids is exact immediately."""
+    tiered.append(
+        df,
+        path,
+        "lsh_index_append",
+        bootstrap=lambda b: _lsh_index_write_unlocked(
+            b, vec_col, id_col, path, planes, tables, dim
+        ),
+        write_log=lambda b, s: tiered.write_log_file(
+            _signature_rows(b, vec_col, id_col, planes, tables, dim).withColumn(
+                "seq", F.lit(s).cast("long")
+            ),
+            path,
+            LSH_LAYOUT,
+        ),
+        reader=lsh_index_read,
+        seq=seq,
+        key=id_col,
     )
-    # One file per batch (sorted so (t, sb, sig) predicates can still
-    # use row-group stats); probes merge it at read time. repartition(1),
-    # NOT coalesce(1): coalesce folds the 32 upstream GEMM partitions
-    # into one task that pays 32 serial Python-worker round-trips
-    # (measured 0.8 s → 5.4 s); the shuffle moves only the signed batch.
-    new_rows.repartition(1).sortWithinPartitions("t", "sb", "sig").write.mode(
-        "append"
-    ).parquet(f"{path}/log")
 
 
 def lsh_index_compact(spark, path: str) -> None:
-    """Fold the merge-on-read log into the base: keep only each vid's
-    newest version (max ``seq`` — all ``tables`` rows of that version,
-    across whatever buckets it hashed to), rewrite ``{path}/base``, and
-    drop ``{path}/log`` and ``{path}/tombstones`` (the read view has
-    already applied the deletes, so the rewrite makes them physical).
-    O(corpus), run on the compaction cadence; restores exact
-    single-version reads after re-ingest-with-changed-signature appends
-    (see ``lsh_index_append``).
-
-    Maintenance contract (shared with every index compactor here):
-    ONE maintainer — enforced by the maintenance LEASE (VERDICT r8 #2):
-    a racing compact/ingest gets a loud ``MaintenanceLeaseHeld``. The
-    consumed-snapshot protocol below additionally makes a racing
-    append's DATA safe (its log file is neither folded nor deleted —
-    next compact picks it up), but an append that lands inside the
-    base swap's rename gap can roll the swap back via its
-    ``_fs_recover_swap``, failing THIS compact loudly (IOError,
-    retryable; the pre-swap index stays live, nothing is lost —
-    review r8)."""
-    with _maintenance_lease(spark, path, "lsh_index_compact"):
-        _lsh_index_compact_unlocked(spark, path)
-
-
-def _lsh_index_compact_unlocked(spark, path: str) -> None:
-    """``lsh_index_compact`` body for callers already inside a leased
-    maintenance section (``lsh_index_upsert`` folding the log first)."""
-    from pyspark.sql import Window
-
-    # snapshot the MOR tiers' files BEFORE the read view lists
-    # them: the fold sees a superset (benign same-seq duplicates,
-    # resolved by the read path), and only the snapshot is deleted
-    # afterwards — an entry committed during the O(corpus) rewrite
-    # is never erased unfolded (ADVICE r7)
-    fs, log_p, consumed_log = _fs_snapshot_files(spark, f"{path}/log")
-    _, tomb_p, consumed_tomb = _fs_snapshot_files(
-        spark, f"{path}/tombstones"
-    )
-    index = lsh_index_read(spark, path)
-    w = Window.partitionBy("vid")
-    latest = (
-        index.withColumn("_mx", F.max("seq").over(w))
-        .filter(F.col("seq") == F.col("_mx"))
-        .select(*_INDEX_COLS)
-        # same (vid, t) appended twice at the same seq: keep one
-        .dropDuplicates(["vid", "t"])
-        .localCheckpoint()  # the rewrite overwrites its own input
-    )
-    # staged + swapped: an in-place overwrite deletes the live base
-    # at job start, so a mid-compact crash would destroy the index
-    # with only the small log surviving (review r6 — the textindex
-    # compactor had this protocol from ADVICE r3; propagated here).
-    # The MOR tiers are deleted only AFTER the swap commits.
-    staged = f"{path}/base__staged"
-    latest.repartition(F.col("t"), F.col("sb")).sortWithinPartitions(
-        "sig"
-    ).write.mode("overwrite").partitionBy("t", "sb").parquet(staged)
-    _fs_swap_dir(spark, f"{path}/base", staged)
-    _fs_drop_consumed(fs, log_p, consumed_log)
-    _fs_drop_consumed(fs, tomb_p, consumed_tomb)
+    """Fold log and tombstones into the base: each vid's newest version
+    (all ``tables`` rows of it, wherever they hashed) is rewritten through
+    the balanced writer, stale bucket rows and deleted vids drop out
+    (``tiered.compact``). O(corpus), run on the compaction cadence; the
+    maintenance lease makes a racing compact or ingest fail loudly."""
+    tiered.compact(spark, path, LSH_LAYOUT, "lsh_index_compact")
 
 
 def lsh_probe_topk(
@@ -2405,6 +1230,19 @@ def ivf_topk(
     )
 
 
+#: IVF tiers: rows carry every input column plus ``cluster_id`` (the
+#: directory) and ``seq``; the row key is the caller's id column.
+IVF_LAYOUT = tiered.Layout(
+    key="vec_id",
+    parts=("cluster_id",),
+    norm=lambda df: df.select(
+        *[c for c in df.columns if c not in ("cluster_id", "seq")],
+        F.col("cluster_id").cast("int").alias("cluster_id"),
+        F.col("seq").cast("long").alias("seq"),
+    ),
+)
+
+
 def ivf_index_write(
     df: DataFrame,
     vec_col: str,
@@ -2413,21 +1251,12 @@ def ivf_index_write(
     centroids: np.ndarray,
 ) -> None:
     """Materialize the IVF index at ingest: cluster assignment once
-    (mapInPandas GEMM), written ``partitionBy(cluster_id)``. Probes then
-    read only the nprobe matching partitions — the persisted form of
-    ``ivf_topk``, scan cost nprobe/n_clusters of the corpus.
-
-    The pre-write repartition clusters each cluster_id into one task so
-    every partition directory holds one file (no small-files blowup);
-    at 100 TB swap it for repartitionByRange(cluster_id, id) to split
-    giant clusters across several bounded files.
-
-    Same LSM layout as the LSH index: ``{path}/base`` holds the
-    cluster-partitioned bulk, ``{path}/log`` (``ivf_index_append``)
-    holds per-batch files folded in by ``ivf_index_compact``.
-
-    Lease + stale-tier contract: see ``lsh_index_write``."""
-    with _maintenance_lease(df.sparkSession, path, "ivf_index_write"):
+    (mapInPandas GEMM), written ``partitionBy(cluster_id)`` one file per
+    cluster. Probes then read only the nprobe matching partitions — the
+    persisted form of ``ivf_topk``, scan cost nprobe/n_clusters of the
+    corpus. Same tiered layout and lease/stale-tier contract as
+    ``lsh_index_write``."""
+    with storage.maintenance_lease(df.sparkSession, path, "ivf_index_write"):
         _ivf_index_write_unlocked(df, vec_col, id_col, path, centroids)
 
 
@@ -2438,61 +1267,26 @@ def _ivf_index_write_unlocked(
     path: str,
     centroids: np.ndarray,
 ) -> None:
-    """``ivf_index_write`` body for callers already inside a leased
-    maintenance section. Still refuses stale MOR tiers."""
-    _refuse_stale_mor_tiers(df.sparkSession, path, "ivf_index_write")
+    """``ivf_index_write`` body for callers already holding the lease."""
+    tiered.refuse_stale_tiers(df.sparkSession, path, "ivf_index_write")
     assigned = ivf_assign(df, vec_col, centroids).withColumn(
         "seq", F.lit(0).cast("long")
     )
-    # staged + swapped, same crash-safety protocol as lsh_index_write;
-    # exact task↔cluster-directory assignment (VERDICT r12 #1, see
-    # _balanced_dir_repartition)
-    spark = df.sparkSession
-    _fs_recover_swap(spark, f"{path}/base")
-    staged = f"{path}/base__staged"
-    _balanced_dir_repartition(
-        assigned, F.col("cluster_id"), len(centroids)
-    ).write.mode(
-        "overwrite"
-    ).partitionBy("cluster_id").parquet(staged)
-    _fs_swap_dir(spark, f"{path}/base", staged)
+    tiered.write_base(assigned, path, IVF_LAYOUT, (len(centroids),))
 
 
 def ivf_index_read(spark, path: str) -> DataFrame:
-    """Live IVF index view: ``base`` ∪ append ``log``, minus
-    tombstoned ids (see ``lsh_index_read`` — same contract: base keeps
-    cluster_id partition pruning, the tombstone filter is a broadcast
-    above it, the log is a bounded full scan)."""
-    _fs_recover_swap(spark, f"{path}/base")
-    base = spark.read.parquet(f"{path}/base")
-    base = base.select(
-        *[c for c in base.columns if c not in ("cluster_id", "seq")],
-        F.col("cluster_id").cast("int").alias("cluster_id"),
-        F.col("seq").cast("long").alias("seq"),
-    )
-    view = base
-    if _fs_exists(spark, f"{path}/log"):
-        view = base.unionByName(
-            spark.read.parquet(f"{path}/log").select(*base.columns)
-        )
-    return _apply_tombstones(spark, view, f"{path}/tombstones")
+    """Live IVF index view: base ∪ log minus tombstoned ids
+    (``tiered.read``; base keeps cluster_id partition pruning)."""
+    return tiered.read(spark, path, IVF_LAYOUT)
 
 
 def ivf_index_delete(
     spark, path: str, id_col: str, ids: "list | DataFrame", seq: int | None = None
 ) -> None:
     """Tombstone delete for the persisted IVF index — same contract as
-    ``lsh_index_delete``: one (id, seq) marker file, no cluster
-    partition touched; probes exclude at read, compaction folds.
-    ``ids`` is an id list or a DataFrame of ids (distributed marker
-    write, no driver collect)."""
-    if not isinstance(ids, DataFrame):
-        ids = list(ids)  # any iterable; empty → no-op (review r7)
-        if not ids:
-            return
-    if seq is None:
-        seq = _delete_seq(spark, path, ivf_index_read)
-    _write_tombstones(spark, f"{path}/tombstones", id_col, ids, int(seq))
+    ``lsh_index_delete``."""
+    tiered.delete(spark, path, id_col, ids, seq, ivf_index_read)
 
 
 def ivf_index_append(
@@ -2503,227 +1297,34 @@ def ivf_index_append(
     centroids: np.ndarray,
     seq: int | None = None,
 ) -> None:
-    """Append-only (merge-on-read) IVF ingest: assign the batch against
-    the FROZEN quantizer (one mapInPandas GEMM, O(batch)) and commit ONE
-    file under ``{path}/log`` with a monotonic ``seq``. Probes resolve
-    max-seq per id; ``ivf_index_compact`` folds the log. Same staleness
-    contract as ``lsh_index_append`` (a re-ingested vector whose new
-    value moves clusters can serve stale from its old cluster until
-    compaction); append of NEW ids is exact immediately."""
-    spark = df.sparkSession
-    _fs_recover_swap(spark, f"{path}/base")
-    _fs_recover_swap(spark, f"{path}/codes")  # both tiers (review r8)
-    df = df.dropDuplicates([id_col])
-    if not df.head(1):
-        return  # empty batch: nothing to sign/assign, nothing to commit
-    # committed-base gate, not bare existence: an interrupted build
-    # leaves the directory present but uncommitted, and appending
-    # against it would silently serve an index missing the corpus
-    # (review r6; textindex protocol). The bootstrap rebuild is
-    # MAINTENANCE: a streaming ingest wrapping this append already
-    # holds the lease, but a bare caller does not — take it for them
-    # and re-check the gate under it (ADVICE r9, ivfpq twin).
-    if not _base_committed(spark, path):
-        if _lease_held_by_this_thread(path):
-            _ivf_index_write_unlocked(df, vec_col, id_col, path, centroids)
-            return
-        with _maintenance_lease(spark, path, "ivf_index_append bootstrap"):
-            if not _base_committed(spark, path):
-                _ivf_index_write_unlocked(
-                    df, vec_col, id_col, path, centroids
-                )
-                return
-        # lost the bootstrap race: base is committed now — append below
-    if seq is None:
-        # _next_seq, NOT max(live seq): the read view is already
-        # tombstone-filtered, so after a delete at seq N every live row
-        # has seq < N and max-live+1 would TIE the tombstone — and
-        # survival is seq > tombstone seq, so the re-ingest would stay
-        # invisible and compaction would drop it (the LSH append had the
-        # identical bug class; review r6)
-        seq = _next_seq(spark, path, ivf_index_read)
-    new_rows = ivf_assign(df, vec_col, centroids).withColumn(
-        "seq", F.lit(int(seq)).cast("long")
+    """Append-only IVF ingest: assign the batch against the FROZEN
+    quantizer (one mapInPandas GEMM, O(batch)) and commit ONE file under
+    ``{path}/log``. Same contract as ``lsh_index_append`` (a re-ingested
+    vector that moves clusters can serve stale from its old cluster
+    until compaction); appending NEW ids is exact immediately."""
+    tiered.append(
+        df,
+        path,
+        "ivf_index_append",
+        bootstrap=lambda b: _ivf_index_write_unlocked(b, vec_col, id_col, path, centroids),
+        write_log=lambda b, s: tiered.write_log_file(
+            ivf_assign(b, vec_col, centroids).withColumn("seq", F.lit(s).cast("long")),
+            path,
+            IVF_LAYOUT,
+        ),
+        reader=ivf_index_read,
+        seq=seq,
+        key=id_col,
     )
-    # repartition(1), not coalesce(1) — see lsh_index_append
-    new_rows.repartition(1).sortWithinPartitions("cluster_id").write.mode(
-        "append"
-    ).parquet(f"{path}/log")
 
 
 def ivf_index_compact(spark, path: str, id_col: str) -> None:
-    """Fold the IVF append log: newest version per id wins (its single
-    assigned cluster row), stale rows in old clusters drop; rewrite
-    ``{path}/base`` and delete the log. O(corpus), compaction cadence;
-    single-maintainer contract lease-enforced — see
-    ``lsh_index_compact``."""
-    with _maintenance_lease(spark, path, "ivf_index_compact"):
-        _ivf_index_compact_unlocked(spark, path, id_col)
-
-
-def _ivf_index_compact_unlocked(spark, path: str, id_col: str) -> None:
-    """``ivf_index_compact`` body for callers already inside a leased
-    maintenance section (``ivf_index_upsert`` folding the log first)."""
-    from pyspark.sql import Window
-
-    # consumed-snapshot protocol — see lsh_index_compact (ADVICE r7)
-    fs, log_p, consumed_log = _fs_snapshot_files(spark, f"{path}/log")
-    _, tomb_p, consumed_tomb = _fs_snapshot_files(
-        spark, f"{path}/tombstones"
+    """Fold the IVF log and tombstones: the newest version per id wins
+    (its single assigned cluster row), stale rows in old clusters drop
+    (``tiered.compact``, see ``lsh_index_compact``)."""
+    tiered.compact(
+        spark, path, dataclasses.replace(IVF_LAYOUT, key=id_col), "ivf_index_compact"
     )
-    index = ivf_index_read(spark, path)
-    w = Window.partitionBy(id_col)
-    latest = (
-        index.withColumn("_mx", F.max("seq").over(w))
-        .filter(F.col("seq") == F.col("_mx"))
-        .drop("_mx")
-        .dropDuplicates([id_col])
-        .localCheckpoint()
-    )
-    # staged + swapped (see lsh_index_compact); MOR tiers deleted
-    # only after the swap commits
-    staged = f"{path}/base__staged"
-    latest.repartition(F.col("cluster_id")).write.mode(
-        "overwrite"
-    ).partitionBy("cluster_id").parquet(staged)
-    _fs_swap_dir(spark, f"{path}/base", staged)
-    _fs_drop_consumed(fs, log_p, consumed_log)
-    _fs_drop_consumed(fs, tomb_p, consumed_tomb)
-
-
-def ivf_index_upsert(
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    path: str,
-    centroids: np.ndarray,
-) -> None:
-    """Incrementally fold NEW vectors into a persisted IVF index
-    (``ivf_index_write``) — assign only the arriving batch against the
-    FROZEN quantizer (standard IVF practice: retrain/rebalance is an
-    explicit offline rebuild, not an ingest concern), then
-    dynamic-partition-overwrite exactly the cluster directories the
-    batch touches, each rewritten as existing ∪ new with new-wins id
-    dedup — including when a re-ingested vector's new value moves it to
-    a DIFFERENT cluster: its old cluster is located (column-pruned
-    (id, cluster_id) scan + broadcast semi-join), added to the touched
-    set, and rewritten without the stale row (ADVICE r2). Untouched
-    clusters are never rewritten; the read-back of current contents is
-    pruned to touched clusters via a broadcast join on the partition
-    column (dynamic partition pruning). Bootstraps via
-    ``ivf_index_write`` when no index exists at ``path``; an existing
-    append log is compacted first (the overwrite is defined on the
-    partitioned base only).
-
-    Runs under the single-maintainer LEASE — see ``lsh_index_upsert``."""
-    spark = df.sparkSession
-    with _maintenance_lease(spark, path, "ivf_index_upsert"):
-        _ivf_index_upsert_unlocked(df, vec_col, id_col, path, centroids)
-
-
-def _ivf_index_upsert_unlocked(
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    path: str,
-    centroids: np.ndarray,
-) -> None:
-    spark = df.sparkSession
-    _fs_recover_swap(spark, f"{path}/base")
-    _fs_recover_swap(spark, f"{path}/codes")  # both tiers (review r8)
-    df = df.dropDuplicates([id_col])
-    if not df.head(1):
-        return  # empty batch: nothing to sign/assign, nothing to commit  # one row per id in the batch
-    # committed-base gate, not bare existence: an interrupted build
-    # leaves the directory present but uncommitted, and appending
-    # against it would silently serve an index missing the corpus
-    # (review r6; textindex protocol)
-    if not _base_committed(spark, path):
-        _ivf_index_write_unlocked(df, vec_col, id_col, path, centroids)
-        return
-    if _fs_exists(spark, f"{path}/log") or _fs_exists(
-        spark, f"{path}/tombstones"
-    ):
-        # fold both MOR tiers first: the overwrite below is defined on
-        # the partitioned base only, and the upsert's seq bookkeeping
-        # must not have to out-rank live tombstones
-        _ivf_index_compact_unlocked(spark, path, id_col)
-    index = spark.read.parquet(f"{path}/base")
-    new_rows = ivf_assign(df, vec_col, centroids).localCheckpoint()
-    batch_ids = new_rows.select(_c(id_col).alias("__nid")).dropDuplicates()
-    # Same cost crossover as lsh_index_upsert: a batch that touches most
-    # of the n_clusters directories pays more in pruned-read +
-    # checkpoint + per-directory commits than one straight
-    # read-merge-swap pass (measured on the LSH twin, bench "lsh index
-    # ingest" row). Two-step decision, same rationale as the LSH twin:
-    # the batch's own cluster fan-out is a lower bound on the touched
-    # set, so the heavy-touch regime degrades without any index scan.
-    cols_all = new_rows.columns
-    threshold = UPSERT_DEGRADE_FRACTION * len(centroids)
-
-    def _degrade_swap() -> None:
-        max_seq = index.agg(F.max("seq")).head()[0]
-        new_seq = (max_seq if max_seq is not None else -1) + 1
-        merged = index.join(
-            F.broadcast(batch_ids), F.col(id_col) == F.col("__nid"), "left_anti"
-        ).select(*cols_all, "seq").unionByName(
-            new_rows.withColumn("seq", F.lit(new_seq).cast("long"))
-        )
-        staged = f"{path}/base__staged"
-        _balanced_dir_repartition(
-            merged, F.col("cluster_id"), len(centroids)
-        ).write.mode(
-            "overwrite"
-        ).partitionBy("cluster_id").parquet(staged)
-        _fs_swap_dir(spark, f"{path}/base", staged)
-
-    new_dirs = new_rows.select("cluster_id").dropDuplicates()
-    if new_dirs.count() >= threshold:
-        _degrade_swap()
-        return
-    old_locs = (
-        index.select(_c(id_col).alias("__nid"), "cluster_id")
-        .join(F.broadcast(batch_ids), "__nid")
-        .select("cluster_id")
-    )
-    touched = (
-        new_dirs.unionByName(old_locs)
-        .dropDuplicates()
-        .localCheckpoint()  # pin: must not re-read the path post-write
-    )
-    if touched.count() >= threshold:
-        _degrade_swap()
-        return
-    pruned = index.join(F.broadcast(touched), ["cluster_id"])
-    max_seq = pruned.agg(F.max("seq")).head()[0]
-    new_seq = (max_seq if max_seq is not None else -1) + 1
-    cols = new_rows.columns
-    existing = (
-        pruned.join(
-            F.broadcast(batch_ids), F.col(id_col) == F.col("__nid"), "left_anti"
-        )
-        .select(*cols, "seq")
-    )
-    merged = existing.unionByName(
-        new_rows.withColumn("seq", F.lit(new_seq).cast("long"))
-    ).localCheckpoint()
-    emptied = [
-        f"cluster_id={r['cluster_id']}"
-        for r in touched.join(
-            merged.select("cluster_id").dropDuplicates(), ["cluster_id"], "left_anti"
-        ).collect()
-    ]
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        _balanced_dir_repartition(
-            merged, F.col("cluster_id"), len(centroids)
-        ).write.mode(
-            "overwrite"
-        ).partitionBy("cluster_id").parquet(f"{path}/base")
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
-    _delete_partition_dirs(spark, f"{path}/base", emptied)
 
 
 def ivf_probe_topk(
@@ -3576,6 +2177,29 @@ def ivfpq_oracle_sql(
 # ---------------------------------------------------------------------------
 
 
+#: the IVFADC tiers in commit order: codes first — a crash between the
+#: swaps leaves new codes over the old base, whose unresolvable
+#: candidates simply drop out, never old codes ranking new geometry
+_IVFPQ_TIERS = ("codes", "base")
+_CODES_LAYOUT = tiered.Layout(
+    key="vid",
+    parts=("cluster_id",),
+    norm=lambda df: df.select(
+        "vid",
+        "codes",
+        F.col("cluster_id").cast("int").alias("cluster_id"),
+        F.col("seq").cast("long").alias("seq"),
+    ),
+)
+ivfpq_index_recover = functools.partial(tiered.recover_joint, tier_names=_IVFPQ_TIERS)
+
+
+def _codes_rows(assigned: DataFrame, id_col: str) -> DataFrame:
+    return assigned.select(
+        _c(id_col).cast("long").alias("vid"), "codes", "cluster_id", "seq"
+    )
+
+
 def ivfpq_index_write(
     df: DataFrame,
     vec_col: str,
@@ -3584,33 +2208,22 @@ def ivfpq_index_write(
     centroids: np.ndarray,
     codebooks: np.ndarray,
 ) -> None:
-    """Materialize the IVFADC index: one assignment pass + one encode
-    pass at ingest; ``{path}/base`` holds the vectors partitioned by
-    cluster_id (identical layout to ``ivf_index_write`` — all its
-    append/compact maintenance applies), ``{path}/codes`` holds
-    (vid, codes) partitioned the same way. The sidecar is what probes
-    scan; the base is what the re-rank fetches C rows from.
+    """Materialize the IVFADC index: one fused assign+encode pass;
+    ``{path}/base`` holds the vectors partitioned by cluster_id (the
+    ``ivf_index_write`` layout), ``{path}/codes`` holds (vid, codes)
+    partitioned the same way. Probes scan the codes; the re-rank fetches
+    C rows from the base.
 
-    This rebuild IS the family's compaction (the codes tier cannot
-    fold incrementally), so unlike the other families' rebuild writers
-    it does not refuse existing merge-on-read tiers — it CONSUMES them
-    transactionally: the tier files present at rebuild start are
-    obsolete (``df`` re-ingests the whole corpus), and leaving them
-    would let a stale log row (seq ≥ 0) outrank the fresh seq=0 base
-    in the max-seq fold, or an old tombstone silently kill a
-    re-included key. The snapshot of consumed files rides a commit
-    MARKER written only after BOTH staged tiers are complete; a crash
-    anywhere is rolled FORWARD by ``_ivfpq_recover`` at every family
-    entry point — swaps finished, exactly the consumed files dropped —
-    so readers only ever converge to whole generations. Tier files
-    landing AFTER the snapshot are not consumed and survive."""
-    # the IVFADC family's compaction IS this rebuild (both tiers), so
-    # the maintenance lease lives here (VERDICT r8 #2) — a rebuild
-    # racing another maintainer on the same path refuses loudly
-    with _maintenance_lease(df.sparkSession, path, "ivfpq_index_write"):
-        _ivfpq_index_write_unlocked(
-            df, vec_col, id_col, path, centroids, codebooks
-        )
+    This rebuild IS the family's compaction (the codes tier cannot fold
+    incrementally), so instead of refusing existing merge-on-read tiers
+    it CONSUMES them: ``df`` re-ingests the whole corpus, and the log,
+    codes_log and tombstone files present at the start are dropped in
+    the same commit as the two tier swaps (``storage.commit_tiers``).
+    A crash anywhere past the commit marker is rolled forward by the
+    joint recovery every family entry point runs first; tier files
+    landing after the snapshot survive. Runs under the lease."""
+    with storage.maintenance_lease(df.sparkSession, path, "ivfpq_index_write"):
+        _ivfpq_index_write_unlocked(df, vec_col, id_col, path, centroids, codebooks)
 
 
 def _ivfpq_index_write_unlocked(
@@ -3621,145 +2234,25 @@ def _ivfpq_index_write_unlocked(
     centroids: np.ndarray,
     codebooks: np.ndarray,
 ) -> None:
-    """``ivfpq_index_write`` body for callers already inside a leased
-    maintenance section (the streaming ingest's bootstrap fallback via
-    ``ivfpq_index_append``)."""
-    import json as _json
-
-    # ONE fused assign+encode pass feeds both tier writes (previously:
-    # an assignment pass, then a second encode pass over the checkpoint
-    # plus a join to re-attach cluster_id to the codes)
+    """``ivfpq_index_write`` body for callers already holding the lease
+    (the streaming ingest's bootstrap via ``ivfpq_index_append``)."""
+    # ONE fused assign+encode pass feeds both tier writes
     assigned = ivf_assign_encode(
         df, vec_col, id_col, centroids, codebooks
     ).withColumn("seq", F.lit(0).cast("long")).localCheckpoint()
-    # Both tiers staged, then swapped codes-first: a crash between the
-    # two swaps leaves new codes over the OLD base — candidates the
-    # base fetch cannot resolve simply drop out (probe returns fewer
-    # rows), whereas old codes over a NEW base could rank against stale
-    # geometry. A single-pointer manifest (sinks/versioned.py) is the
-    # fully-atomic upgrade path; the marker below rolls a crash in that
-    # window forward at the next entry point.
     spark = df.sparkSession
-    _ivfpq_recover(spark, path)
+    ivfpq_index_recover(spark, path)
     consumed = {}
     for tier in ("log", "codes_log", "tombstones"):
-        _, _tp, files = _fs_snapshot_files(spark, f"{path}/{tier}")
+        files = storage.snapshot_files(spark, f"{path}/{tier}")
         if files:
-            consumed[f"{path}/{tier}"] = [str(f) for f in files]
-    b_staged, c_staged = f"{path}/base__staged", f"{path}/codes__staged"
-    # exact task↔cluster-directory assignment for both tier writes
-    # (VERDICT r12 #1, see _balanced_dir_repartition)
-    _balanced_dir_repartition(
-        assigned.drop("codes"), F.col("cluster_id"), len(centroids)
-    ).write.mode(
-        "overwrite"
-    ).partitionBy("cluster_id").parquet(b_staged)
-    codes = assigned.select(
-        _c(id_col).cast("long").alias("vid"), "codes", "cluster_id", "seq"
+            consumed[f"{path}/{tier}"] = files
+    n = (len(centroids),)
+    tiered.write_partitioned(assigned.drop("codes"), f"{path}/base__staged", IVF_LAYOUT, n)
+    tiered.write_partitioned(
+        _codes_rows(assigned, id_col), f"{path}/codes__staged", _CODES_LAYOUT, n
     )
-    _balanced_dir_repartition(codes, F.col("cluster_id"), len(centroids)).write.mode(
-        "overwrite"
-    ).partitionBy("cluster_id").parquet(c_staged)
-    # commit point: both staged tiers are complete — from here a
-    # crash rolls FORWARD (atomic content: tmp+rename)
-    _fs_write_file_atomic(
-        spark, f"{path}/{_IVFPQ_REBUILD_MARKER}", _json.dumps(consumed)
-    )
-    _fs_swap_dir(spark, f"{path}/codes", c_staged)
-    _fs_swap_dir(spark, f"{path}/base", b_staged)
-    for tier_dir, files in consumed.items():
-        _fs_drop_listed(spark, tier_dir, files)
-    _fs_delete(spark, f"{path}/{_IVFPQ_REBUILD_MARKER}")
-
-
-_IVFPQ_REBUILD_MARKER = "__rebuild_commit"
-
-
-def _ivfpq_recover(spark, path: str) -> None:
-    """Joint crash recovery for the IVFADC rebuild's tier PAIR plus its
-    consumed-snapshot drops — every family entry point calls this
-    before touching the index (the sig+bands twin of
-    ``dedup._doc_index_recover``). Per-tier mid-swap rollback first;
-    then, if a rebuild's commit marker survives, roll it forward: the
-    marker exists only once BOTH staged tiers are complete, so
-    finishing the remaining swaps (codes-then-base, the write order)
-    and dropping exactly the consumed tier files it lists can never
-    publish a partial generation — and never erases a tier file landed
-    after the crashed rebuild's snapshot. Staged dirs WITHOUT a marker
-    are an abandoned pre-commit write: left alone, overwritten by the
-    next rebuild.
-
-    Recovery is itself MAINTENANCE and runs under the maintenance
-    lease (ADVICE r9 high): the commit marker exists during every LIVE
-    rebuild's commit window, not only after a crash, so an unleased
-    probe rolling it forward would interleave destructive renames and
-    consumed-file drops with the live holder's own commit sequence —
-    two uncoordinated actors moving the same tier dirs. The guard:
-    a thread already holding the lease recovers directly (it IS the
-    maintainer); otherwise, when recovery work is actually pending,
-    claim the lease non-blocking and SKIP on refusal — a live holder
-    finishes (or re-runs) its own commit, and two concurrent
-    recovering probes resolve to one worker. Stated trade: after a
-    FOREIGN-host crash the lease looks live until its ttl lapses, so a
-    mid-swap crash can fail probes loudly (missing live dir) for up to
-    the ttl before recovery is permitted — the pre-r10 behavior
-    recovered instantly but could corrupt a LIVE rebuild's commit
-    (ADVICE r9 high); loud-and-late beats silent-and-wrong. Same-host
-    crashes recover immediately (dead-pid staleness)."""
-    if _lease_held_by_this_thread(path):
-        _ivfpq_recover_unlocked(spark, path)
-        return
-    if _recovery_verdict_cached(spark, path):
-        return  # proven clean this session, no lease claim since
-    gen = _recovery_gen(path)  # snapshot BEFORE the probes (TOCTOU)
-    if not (
-        _fs_exists(spark, f"{path}/base__old")
-        or _fs_exists(spark, f"{path}/codes__old")
-        or _fs_exists(spark, f"{path}/{_IVFPQ_REBUILD_MARKER}")
-    ):
-        # clean: cache the verdict so the session's next probe skips
-        # the three exists() rounds (VERDICT r10 #3); any lease claim
-        # on this path invalidates it — including one that landed
-        # DURING the probes (the gen snapshot refuses the stale mark)
-        _recovery_mark_clean(spark, path, gen)
-        return
-    # the full leased section (not a bare claim): the heartbeat keeps
-    # a recovery outlasting the ttl (object-store renames) from being
-    # stolen mid-roll-forward, and release is token-fenced (review r10)
-    try:
-        with _maintenance_lease(spark, path, "ivfpq_recover"):
-            _ivfpq_recover_unlocked(spark, path)
-    except MaintenanceLeaseHeld:
-        return  # a live maintainer owns this path's commit/recovery
-
-
-def _ivfpq_recover_unlocked(spark, path: str) -> None:
-    """``_ivfpq_recover`` body for the thread that owns maintenance on
-    ``path`` (holds the lease, or just claimed it for recovery)."""
-    import json as _json
-
-    _fs_recover_swap(spark, f"{path}/base")
-    _fs_recover_swap(spark, f"{path}/codes")
-    marker = f"{path}/{_IVFPQ_REBUILD_MARKER}"
-    if not _fs_exists(spark, marker):
-        return
-    try:
-        content = _fs_read_file(spark, marker)
-    except Exception:
-        # the marker vanished between the exists() and the read: the
-        # live maintainer just completed this roll-forward itself — a
-        # truncated marker is impossible (atomic tmp+rename write)
-        if not _fs_exists(spark, marker):
-            return
-        raise
-    consumed = _json.loads(content)
-    for tier in ("codes", "base"):
-        staged = f"{path}/{tier}__staged"
-        if _fs_exists(spark, staged):
-            _fs_swap_dir(spark, f"{path}/{tier}", staged)
-    for tier_dir, files in consumed.items():
-        _fs_drop_listed(spark, tier_dir, files)
-    _fs_delete(spark, marker)
+    storage.commit_tiers(spark, path, tiered.REBUILD_MARKER, _IVFPQ_TIERS, consumed)
 
 
 def ivfpq_index_append(
@@ -3771,64 +2264,34 @@ def ivfpq_index_append(
     codebooks: np.ndarray,
     seq: int | None = None,
 ) -> None:
-    """O(batch) merge-on-read ingest for the IVFADC index: ONE
-    assignment GEMM + ONE encode pass over the batch, committed as one
-    vector-log file (``{path}/log`` — the same LSM contract as
-    ``ivf_index_append``) and one code-log file (``{path}/codes_log``)
-    at the same monotonic ``seq``. Probes resolve max-seq per vid on
-    BOTH tiers; the staleness contract for moved re-ingests matches the
-    other append paths (compaction = rebuild of both tiers)."""
-    spark = df.sparkSession
-    # joint recovery: swap rollback + rebuild-marker roll-forward (a
-    # crashed rebuild must finish consuming its tiers before any new
-    # log entry lands, or the drop below could erase it)
-    _ivfpq_recover(spark, path)
-    df = df.dropDuplicates([id_col])
-    if not df.head(1):
-        return  # empty batch: nothing to sign/assign, nothing to commit
-    # committed-base gate, not bare existence: an interrupted build
-    # leaves the directory present but uncommitted, and appending
-    # against it would silently serve an index missing the corpus
-    # (review r6; textindex protocol). The bootstrap rebuild is
-    # MAINTENANCE: a streaming ingest wrapping this append already
-    # holds the lease (unlocked core), but a bare non-streaming caller
-    # does not — two racing first-batch writers would rebuild both
-    # tiers unprotected (ADVICE r9). Take the lease for them, and
-    # re-check the gate under it (the loser of the race must fall
-    # through to a normal append against the winner's base).
-    if not _base_committed(spark, path):
-        if _lease_held_by_this_thread(path):
-            _ivfpq_index_write_unlocked(
-                df, vec_col, id_col, path, centroids, codebooks
-            )
-            return
-        with _maintenance_lease(spark, path, "ivfpq_index_append bootstrap"):
-            if not _base_committed(spark, path):
-                _ivfpq_index_write_unlocked(
-                    df, vec_col, id_col, path, centroids, codebooks
-                )
-                return
-        # lost the bootstrap race: base is committed now — append below
-    if seq is None:
-        # _next_seq, not max(live seq) — the read view is tombstone-
-        # filtered, so a re-ingest after a delete must OUT-RANK the
-        # marker, not tie it (same bug class as ivf_index_append;
-        # review r6)
-        seq = _next_seq(spark, path, ivf_index_read)
-    # ONE fused assign+encode pass feeds both log files (previously two
-    # passes plus a cluster_id re-attach join)
-    assigned = ivf_assign_encode(
-        df, vec_col, id_col, centroids, codebooks
-    ).withColumn("seq", F.lit(int(seq)).cast("long")).localCheckpoint()
-    assigned.drop("codes").repartition(1).sortWithinPartitions(
-        "cluster_id"
-    ).write.mode("append").parquet(f"{path}/log")
-    codes = assigned.select(
-        _c(id_col).cast("long").alias("vid"), "codes", "cluster_id", "seq"
+    """O(batch) merge-on-read ingest for the IVFADC index: ONE fused
+    assignment + encode pass over the batch, committed as one vector-log
+    file (``{path}/log``, the ``ivf_index_append`` contract) and one
+    code-log file (``{path}/codes_log``) at the same ``seq``. Probes
+    resolve max-seq per vid on BOTH tiers; compaction is the rebuild."""
+    # a crashed rebuild must finish consuming its tiers before any new
+    # log entry lands, or its drop could erase the new entry
+    ivfpq_index_recover(df.sparkSession, path)
+
+    def write_log(batch: DataFrame, seq: int) -> None:
+        assigned = ivf_assign_encode(
+            batch, vec_col, id_col, centroids, codebooks
+        ).withColumn("seq", F.lit(seq).cast("long")).localCheckpoint()
+        tiered.write_log_file(assigned.drop("codes"), path, IVF_LAYOUT)
+        tiered.write_log_file(_codes_rows(assigned, id_col), path, _CODES_LAYOUT, "codes_log")
+
+    tiered.append(
+        df,
+        path,
+        "ivfpq_index_append",
+        bootstrap=lambda b: _ivfpq_index_write_unlocked(
+            b, vec_col, id_col, path, centroids, codebooks
+        ),
+        write_log=write_log,
+        reader=ivf_index_read,
+        seq=seq,
+        key=id_col,
     )
-    codes.repartition(1).sortWithinPartitions("cluster_id").write.mode(
-        "append"
-    ).parquet(f"{path}/codes_log")
 
 
 def ivfpq_probe_topk(
@@ -3857,47 +2320,22 @@ def ivfpq_probe_topk(
     q = np.asarray([float(x) for x in query_vec], dtype=np.float64)
     qn = q / max(np.linalg.norm(q), 1e-12)
     probes = [int(p) for p in np.argsort(-(centroids @ qn), kind="stable")[:nprobe]]
-    # every reader/writer recovers a crashed swap first (module
-    # contract); the codes tier was the one reader that did not — a
-    # crash between the codes renames left probes throwing
-    # path-not-found with a complete copy sitting in codes__old
-    # (review r8). Joint recovery also rolls a crashed rebuild's
-    # consumed-tier commit forward, so this probe never ranks fresh
-    # base rows against the stale log/tombstones the rebuild consumed.
-    _ivfpq_recover(spark, index_path)
-    codes = _read_tier_with_recovery(
-        spark, index_path, "codes", _ivfpq_recover
-    )
-    codes = codes.select(
-        "vid",
-        "codes",
-        F.col("cluster_id").cast("int").alias("cluster_id"),
-        F.col("seq").cast("long").alias("seq"),
-    )
-    if _fs_exists(spark, f"{index_path}/codes_log"):
-        # the exists()→read window races a rebuild consuming the log
-        # (ADVICE r11): on failure void the verdict, recover, and only
-        # re-read if the log is still there (a completed roll-forward
-        # legitimately dropped it into the new base generation)
-        def _read_codes_log():
-            if _fs_exists(spark, f"{index_path}/codes_log"):
-                return spark.read.parquet(
-                    f"{index_path}/codes_log"
-                ).select(*codes.columns)
-            return None
-
-        log_df = _read_view_with_recovery(
-            spark, index_path, _read_codes_log, _ivfpq_recover
-        )
-        if log_df is not None:
-            codes = codes.unionByName(log_df)
-    codes = codes.filter(F.col("cluster_id").isin(probes))
-    # tombstones must filter the CODES tier too, not only the base
-    # fetch: a deleted vid that still ADC-scores occupies a
-    # n_candidates slot, then vanishes at the base fetch — the probe
-    # silently returns fewer than k rows even when ≥ k live neighbors
-    # sit just past the cut (review r6)
-    codes = _apply_tombstones(
+    # joint recovery first: it also rolls a crashed rebuild's commit
+    # forward, so fresh base rows never rank against the stale tiers the
+    # rebuild consumed. Each tier read retries through it once more when
+    # a foreign maintainer's crash surfaces after this session cached a
+    # clean verdict (a missing live dir, or a log the rebuild dropped).
+    ivfpq_index_recover(spark, index_path)
+    codes = storage.read_with_recovery(
+        spark,
+        index_path,
+        lambda: tiered.tiers(spark, index_path, _CODES_LAYOUT, "codes", "codes_log"),
+        ivfpq_index_recover,
+    ).filter(F.col("cluster_id").isin(probes))
+    # tombstones filter the CODES tier too: a deleted vid that still
+    # ADC-scores would take an n_candidates slot and then vanish at the
+    # base fetch, returning fewer than k rows
+    codes = tiered.apply_tombstones(
         spark,
         codes.withColumnRenamed("vid", id_col),
         f"{index_path}/tombstones",
@@ -3915,16 +2353,11 @@ def ivfpq_probe_topk(
         .limit(n_candidates)
         .select(F.col("vid").alias("__pq_cand_id"))
     )
-    # the base/log tiers go through the same self-heal wrap as codes
-    # (ADVICE r11): a foreign maintainer's mid-swap crash AFTER this
-    # session cached a clean verdict must not leave the probe throwing
-    # persistent path-not-found — the failed read voids the verdict,
-    # runs the family's joint recovery, and retries once
-    base = _read_view_with_recovery(
+    base = storage.read_with_recovery(
         spark,
         index_path,
         lambda: ivf_index_read(spark, index_path),
-        _ivfpq_recover,
+        ivfpq_index_recover,
     ).filter(F.col("cluster_id").isin(probes))
     base = base.withColumn(
         "_bmx", F.max("seq").over(Window.partitionBy(id_col))

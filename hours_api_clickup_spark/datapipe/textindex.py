@@ -34,17 +34,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from hours_api_clickup_spark.datapipe.similarity import (
-    _fs_drop_consumed,
-    _fs_recover_swap,
-    _fs_snapshot_files,
-    _fs_swap_dir,
-)
+from hours_api_clickup_spark import storage
+from hours_api_clickup_spark.datapipe import tiered
 
 TOKEN_SPLIT_RE = r"[^a-z0-9]+"
 DEFAULT_TEXT_BUCKETS = 64
 
 _POSTING_COLS = ("token", "doc_id", "tf", "positions", "seq", "tb")
+TEXT_LAYOUT = tiered.Layout(
+    key="doc_id",
+    parts=("tb",),
+    sort=("token", "doc_id"),
+    fold=("token",),  # one posting per (doc, token) of the newest version
+    norm=lambda df: df.select(*_POSTING_COLS),
+)
 
 
 def tokenize(text_col: str = "text"):
@@ -60,29 +63,25 @@ def _posting_rows(
     id_col: str,
     n_buckets: int,
     seq: int,
-    single_file: bool = False,
+    balanced: bool = False,
 ) -> DataFrame:
-    """One posting row per (token, doc) with tf and sorted positions,
-    already partitioned for the write: hash on ``tb`` (build/compact) or
-    collapsed to one partition (``single_file``, the append's one-file-
-    per-batch contract).
+    """One posting row per (token, doc) with tf and sorted positions.
 
-    Build path — one shuffle total: the per-occurrence rows are hash-
-    partitioned on ``tb`` BEFORE the aggregation, and ``tb`` leads the
-    groupBy keys, so the existing partitioning satisfies the
-    aggregation's clustering requirement and no second exchange is
-    planned. (The earlier shape aggregated first — exchange on
-    (token, doc_id) — then repartitioned on tb, paying two full
+    Build path (``balanced``) — one shuffle total: the per-occurrence
+    rows are dealt evenly over the write tasks by bucket
+    (``tiered.balanced_salt``) BEFORE the aggregation, and the salt
+    leads the groupBy keys (it is a pure function of ``tb``, so the
+    groups are unchanged), so the existing partitioning satisfies the
+    aggregation's clustering and no second exchange is planned.
+    Aggregating first and then repartitioning on tb paid two full
     shuffles of the postings; the per-occurrence rows cost about the
     same shuffle bytes as the aggregated ones, since the positions
-    arrays carry every occurrence either way. Measured on the 90k-doc
-    bench corpus: 9.0s → 5.3s build median.)
+    arrays carry every occurrence either way (measured on a 90k-doc
+    corpus: 9.0s → 5.3s build median).
 
-    Append path keeps the aggregate-then-collapse order: pre-collapsing
-    to the single output partition would serialize the aggregation of
-    the whole batch into one task (measured +0.5s on the 10k-doc batch);
-    aggregating in parallel first and then shuffling the aggregated rows
-    to one reducer costs the same bytes but keeps the agg distributed.
+    Append path: aggregated in parallel, then collapsed to one file by
+    ``tiered.write_log_file`` — pre-collapsing would serialize the
+    whole batch's aggregation into one task.
     """
     toks = tokenize(text_col)
     occ = (
@@ -98,25 +97,13 @@ def _posting_rows(
         )
     )
     group_keys = ["tb", "token", "doc_id"]
-    if not single_file:
-        # exact task↔bucket-directory assignment (r13, same fix as the
-        # ANN index writes): repartition("tb") hashed 64 bucket keys
-        # into 32 shuffle partitions — collisions gave some tasks two
-        # directories and others none. The salt column makes partition
-        # pid hold exactly bucket pid; it LEADS the groupBy keys (it is
-        # a pure function of tb, so the groups are unchanged) so
-        # hashpartitioning(__p) still satisfies the aggregation's
-        # clustering and the build keeps its single exchange.
-        from hours_api_clickup_spark.datapipe.similarity import (
-            _exact_partition_salts,
-        )
-
-        salts = _exact_partition_salts(n_buckets)
+    if balanced:
+        n_tasks = tiered.write_tasks(docs.sparkSession, n_buckets)
         occ = occ.withColumn(
-            "__p", F.element_at(F.lit(salts), F.col("tb") + 1)
-        ).repartition(n_buckets, F.col("__p"))
-        group_keys = ["__p", "tb", "token", "doc_id"]
-    agg = (
+            "__p", tiered.balanced_salt(F.col("tb"), n_buckets, n_tasks)
+        ).repartition(n_tasks, F.col("__p"))
+        group_keys = ["__p", *group_keys]
+    return (
         occ.groupBy(*group_keys)
         .agg(
             F.count("*").cast("long").alias("tf"),
@@ -125,7 +112,6 @@ def _posting_rows(
         .withColumn("seq", F.lit(int(seq)).cast("long"))
         .select(*_POSTING_COLS)
     )
-    return agg.repartition(1) if single_file else agg
 
 
 def inverted_index_write(
@@ -138,28 +124,16 @@ def inverted_index_write(
     """Materialize the postings table. One posting row per (token, doc)
     with term frequency and the sorted 1-based position list.
 
-    Scale shape: posexplode → one shuffle keyed on (token, doc_id) for
-    the position collect — token keys are zipf-skewed, but the key
-    includes doc_id so no single reducer sees more than one document's
-    occurrences of a term. sortWithinPartitions(token) gives row-group
-    locality for the probe's token IN-list pushdown.
+    Scale shape: posexplode → one shuffle, bucket directories dealt
+    evenly over the write tasks; the aggregation key includes doc_id, so
+    no reducer sees more than one document's occurrences of a zipf-heavy
+    term. Sorting by token gives row-group locality for the probe's
+    token IN-list pushdown.
 
-    Crash safety: postings land in ``{path}/base__staged`` and are
-    renamed in (``_fs_swap_dir``, the ANN-family protocol) — an
-    interrupted build/rebuild never leaves a half-written directory
-    where ``{path}/base`` used to be (ADVICE r3).
-
-    Lease + stale-tier contract: a rebuild is maintenance (single-
-    maintainer LEASE; racing maintainers refuse loudly) and refuses
-    while a log/tombstone tier exists — the fresh seq=0 postings
-    would be outranked by stale log rows and killed by old tombstones
-    (``similarity._refuse_stale_mor_tiers``)."""
-    from hours_api_clickup_spark.datapipe.similarity import (
-        _maintenance_lease,
-    )
-
-    spark = docs.sparkSession
-    with _maintenance_lease(spark, path, "inverted_index_write"):
+    A ``datapipe.tiered`` index: staged + swapped base, a rebuild is
+    maintenance (lease) and refuses while a log or tombstone tier exists
+    (``tiered.refuse_stale_tiers``)."""
+    with storage.maintenance_lease(docs.sparkSession, path, "inverted_index_write"):
         _inverted_index_write_unlocked(docs, text_col, id_col, path, n_buckets)
 
 
@@ -170,43 +144,11 @@ def _inverted_index_write_unlocked(
     path: str,
     n_buckets: int = DEFAULT_TEXT_BUCKETS,
 ) -> None:
-    """``inverted_index_write`` body for callers already inside a
-    leased maintenance section (the streaming text ingest's bootstrap
-    fallback). Still refuses stale MOR tiers."""
-    from hours_api_clickup_spark.datapipe.similarity import (
-        _refuse_stale_mor_tiers,
-    )
-
-    spark = docs.sparkSession
-    _refuse_stale_mor_tiers(spark, path, "inverted_index_write")
-    _fs_recover_swap(spark, f"{path}/base")
-    postings = _posting_rows(docs, text_col, id_col, n_buckets, seq=0)
-    staged = f"{path}/base__staged"
-    (
-        postings.sortWithinPartitions("token", "doc_id")
-        .write.mode("overwrite")
-        .partitionBy("tb")
-        .parquet(staged)
-    )
-    _fs_swap_dir(spark, f"{path}/base", staged)
-
-
-def _fs_exists(spark: SparkSession, path: str) -> bool:
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p)
-
-
-def _base_committed(spark: SparkSession, path: str) -> bool:
-    """True only when ``{path}/base`` holds a COMMITTED write. A failed
-    or interrupted build can leave the directory present (e.g.
-    ``_temporary`` remnants) with no committed data; gating bootstrap on
-    bare existence would then take the append path against an
-    incomplete base and silently lose postings (ADVICE r3). The
-    ``_SUCCESS`` marker is written by the Hadoop committer only after
-    the job commits, and survives the staged-dir rename."""
-    _fs_recover_swap(spark, f"{path}/base")
-    return _fs_exists(spark, f"{path}/base/_SUCCESS")
+    """``inverted_index_write`` body for callers already holding the
+    lease (the streaming text ingest's bootstrap)."""
+    tiered.refuse_stale_tiers(docs.sparkSession, path, "inverted_index_write")
+    postings = _posting_rows(docs, text_col, id_col, n_buckets, seq=0, balanced=True)
+    tiered.write_base(postings, path, TEXT_LAYOUT, radices=None)
 
 
 def inverted_index_append(
@@ -217,123 +159,46 @@ def inverted_index_append(
     n_buckets: int = DEFAULT_TEXT_BUCKETS,
     seq: int | None = None,
 ) -> None:
-    """Append-only (merge-on-read) document ingest — the steady-state
-    path for a growing corpus: tokenize ONLY the batch and commit it as
-    one sorted file under ``{path}/log`` with a monotonically
-    increasing ``seq`` (the L0 of an LSM tree; same contract as
-    similarity.py's ``lsh_index_append``). Nothing is read back or
-    rewritten; write cost is O(batch).
+    """Append-only (merge-on-read) document ingest for a growing corpus:
+    tokenize ONLY the batch and commit it as one sorted file under
+    ``{path}/log`` (``tiered.append``; bootstraps a missing index).
+    Write cost is O(batch).
 
-    Read side: probes keep, per (token, doc), the max-``seq`` posting
-    among the PRUNED rows. Bounded staleness, stated honestly: if a
-    re-ingested document's new version DROPPED a token, the old posting
-    for that token survives until ``inverted_index_compact`` folds the
-    log — the same trade the ANN append makes for signature-moving
-    re-ingest. Appending NEW documents (corpus growth, the common case)
-    is exact immediately."""
-    spark = docs.sparkSession
-    if not _base_committed(spark, path):
-        # no base, or only the wreck of an uncommitted one — (re)build.
-        # The bootstrap is MAINTENANCE: the streaming text ingest
-        # already holds the lease around this append (unlocked core),
-        # but a bare caller does not — take it for them and re-check
-        # the gate under it (ADVICE r9, ivfpq twin).
-        from hours_api_clickup_spark.datapipe.similarity import (
-            _lease_held_by_this_thread,
-            _maintenance_lease,
-        )
-
-        if _lease_held_by_this_thread(path):
-            _inverted_index_write_unlocked(
-                docs, text_col, id_col, path, n_buckets
-            )
-            return
-        with _maintenance_lease(
-            spark, path, "inverted_index_append bootstrap"
-        ):
-            if not _base_committed(spark, path):
-                _inverted_index_write_unlocked(
-                    docs, text_col, id_col, path, n_buckets
-                )
-                return
-        # lost the bootstrap race: base is committed now — append below
-    if seq is None:
-        # stats-read fallback; a production deployment passes ``seq``
-        # from its ingest manifest and skips this scan. Includes
-        # tombstone seqs: reusing a delete's seq would fail to
-        # resurrect a re-ingested doc (survival is seq > tombstone seq)
-        from hours_api_clickup_spark.datapipe.similarity import _next_seq
-
-        seq = _next_seq(spark, path, inverted_index_read)
-    # one file per batch (single_file collapses the aggregated rows to
-    # one reducer; repartition, not coalesce — coalesce would serialize
-    # the upstream explode+agg into a single task)
-    rows = _posting_rows(
-        docs, text_col, id_col, n_buckets, seq=int(seq), single_file=True
+    Probes keep, per (token, doc), the max-``seq`` posting among the
+    PRUNED rows. Bounded staleness: if a re-ingested document's new
+    version DROPPED a token, the old posting survives until
+    ``inverted_index_compact`` folds the log. Appending NEW documents is
+    exact immediately."""
+    tiered.append(
+        docs,
+        path,
+        "inverted_index_append",
+        bootstrap=lambda b: _inverted_index_write_unlocked(
+            b, text_col, id_col, path, n_buckets
+        ),
+        write_log=lambda b, s: tiered.write_log_file(
+            _posting_rows(b, text_col, id_col, n_buckets, seq=s), path, TEXT_LAYOUT
+        ),
+        reader=inverted_index_read,
+        seq=seq,
     )
-    rows.sortWithinPartitions("tb", "token", "doc_id").write.mode(
-        "append"
-    ).parquet(f"{path}/log")
 
 
 def inverted_index_compact(spark: SparkSession, path: str) -> None:
-    """Fold the log into the base: per document keep only its newest
-    version (max ``seq`` across ALL its postings — a token absent from
-    the new version is dropped, restoring exact reads after
-    re-ingest-with-changed-text appends), rewrite ``{path}/base``,
-    drop ``{path}/log``. O(corpus), run on the compaction cadence.
-
-    Crash safety: the compacted postings go to ``{path}/base__staged``
-    and replace the base via ``_fs_swap_dir`` AFTER the write commits —
-    an in-place overwrite would delete the live base before the job
-    finishes, so a mid-compact crash destroyed the base while only the
-    about-to-be-deleted log survived (ADVICE r3). The log is deleted
-    only after the swap lands; a crash between swap and delete leaves a
-    base∪log view that double-counts nothing (max-seq resolution is
-    idempotent over the re-folded rows). Single-maintainer contract
-    lease-enforced — see ``similarity.lsh_index_compact``."""
-    from hours_api_clickup_spark.datapipe.similarity import (
-        _maintenance_lease,
-    )
-
-    with _maintenance_lease(spark, path, "inverted_index_compact"):
-        # consumed-snapshot protocol — see lsh_index_compact (ADVICE r7)
-        fs, log_p, consumed_log = _fs_snapshot_files(spark, f"{path}/log")
-        _, tomb_p, consumed_tomb = _fs_snapshot_files(
-            spark, f"{path}/tombstones"
-        )
-        index = inverted_index_read(spark, path)
-        w = Window.partitionBy("doc_id")
-        latest = (
-            index.withColumn("_mx", F.max("seq").over(w))
-            .filter(F.col("seq") == F.col("_mx"))
-            .select(*_POSTING_COLS)
-            .dropDuplicates(["token", "doc_id"])
-        )
-        staged = f"{path}/base__staged"
-        latest.repartition("tb").sortWithinPartitions(
-            "token", "doc_id"
-        ).write.mode("overwrite").partitionBy("tb").parquet(staged)
-        _fs_swap_dir(spark, f"{path}/base", staged)
-        _fs_drop_consumed(fs, log_p, consumed_log)
-        _fs_drop_consumed(fs, tomb_p, consumed_tomb)
+    """Fold log and tombstones into the base: per document keep only its
+    newest version (max ``seq`` across ALL its postings, so a token the
+    new version dropped disappears), rewritten through the balanced
+    writer (``tiered.compact``). O(corpus), compaction cadence,
+    single-maintainer lease."""
+    tiered.compact(spark, path, TEXT_LAYOUT, "inverted_index_compact")
 
 
 def inverted_index_read(spark: SparkSession, path: str) -> DataFrame:
-    """Base ∪ log merge-on-read view, minus tombstoned documents
-    (duplicates resolved at probe time by max-seq per (token, doc) —
-    see ``term_postings``). The tombstone filter is a broadcast join of
-    the tiny delete set; the probes' tb/token predicates still push
-    below it to the partitioned scan."""
-    from hours_api_clickup_spark.datapipe.similarity import _apply_tombstones
-
-    _fs_recover_swap(spark, f"{path}/base")
-    base = spark.read.parquet(f"{path}/base").select(*_POSTING_COLS)
-    view = base
-    if _fs_exists(spark, f"{path}/log"):
-        log = spark.read.parquet(f"{path}/log").select(*_POSTING_COLS)
-        view = base.unionByName(log)
-    return _apply_tombstones(spark, view, f"{path}/tombstones")
+    """Base ∪ log minus tombstoned documents (``tiered.read``);
+    duplicates resolve at probe time by max-seq per (token, doc) — see
+    ``term_postings``. The probes' tb/token predicates still push below
+    the broadcast tombstone join to the partitioned scan."""
+    return tiered.read(spark, path, TEXT_LAYOUT)
 
 
 def inverted_index_delete(
@@ -342,27 +207,11 @@ def inverted_index_delete(
     doc_ids: "list | DataFrame",
     seq: int | None = None,
 ) -> None:
-    """Tombstone delete (VERDICT r5 #7): drop documents from the
-    persisted index WITHOUT touching its postings — one tiny
-    (doc_id, seq) file under ``{path}/tombstones``. No base bucket is
-    read or rewritten (plan-gated: base files are bit-identical after
-    a delete); probes apply the broadcast tombstone filter at read
-    time; ``inverted_index_compact`` makes the deletes physical and
-    drops the marker dir. Cost: O(deletes), zero corpus I/O.
-    ``doc_ids`` is an id list or a DataFrame of ids (distributed marker
-    write, no driver collect — verdict r6 #3)."""
-    from hours_api_clickup_spark.datapipe.similarity import (
-        _delete_seq,
-        _write_tombstones,
-    )
-
-    if not isinstance(doc_ids, DataFrame):
-        doc_ids = list(doc_ids)  # any iterable; empty → no-op (review r7)
-        if not doc_ids:
-            return
-    if seq is None:
-        seq = _delete_seq(spark, path, inverted_index_read)
-    _write_tombstones(spark, f"{path}/tombstones", "doc_id", doc_ids, int(seq))
+    """Tombstone delete: one tiny (doc_id, seq) file under
+    ``{path}/tombstones``; no posting is read or rewritten (plan-gated).
+    Probes filter at read time; ``inverted_index_compact`` makes it
+    physical. ``doc_ids`` is an id list or a DataFrame of ids."""
+    tiered.delete(spark, path, "doc_id", doc_ids, seq, inverted_index_read)
 
 
 def _term_buckets(

@@ -71,22 +71,16 @@ def compact_small_files(
     before); plain ``df.write.mode("append")`` writers are not leased,
     so quiescing them remains the deployment's contract — the drift
     check turns a violation into an error, not a lost file."""
-    from hours_api_clickup_spark.datapipe.similarity import (
-        _fs_recover_swap,
-        _fs_snapshot_files,
-        _fs_swap_dir,
-        _maintenance_lease,
-    )
+    from hours_api_clickup_spark import storage
 
-    _fs_recover_swap(spark, path)
-    with _maintenance_lease(spark, f"{path}__lock", "compact_small_files"):
+    storage.recover_swap(spark, path)
+    with storage.maintenance_lease(spark, f"{path}__lock", "compact_small_files"):
         n_files, total = dir_file_stats(spark, path)
         n_out = max(1, math.ceil(total / target_bytes))
         if n_files <= n_out:
             return n_files
 
-        fs, live_p, consumed = _fs_snapshot_files(spark, path)
-        before = {str(f) for f in consumed}
+        before = set(storage.snapshot_files(spark, path))
         staged = f"{path}__staged"
         # read EXACTLY the snapshot: a file landing mid-rewrite is
         # neither folded nor silently dropped — it trips the drift
@@ -99,13 +93,12 @@ def compact_small_files(
         df.coalesce(n_out).write.mode("overwrite").parquet(staged)
         if _inject_before_drift_check is not None:
             _inject_before_drift_check()
-        _, _, now_files = _fs_snapshot_files(spark, path)
-        if {str(f) for f in now_files} != before:
-            fs.delete(spark._jvm.org.apache.hadoop.fs.Path(staged), True)
+        if set(storage.snapshot_files(spark, path)) != before:
+            storage.delete(spark, staged, recursive=True)
             raise RuntimeError(
                 f"compact_small_files: directory {path} changed during "
                 f"the rewrite (concurrent append?) — aborted without "
                 f"touching the live table; retry when writes quiesce"
             )
-        _fs_swap_dir(spark, path, staged)
+        storage.swap_dir(spark, path, staged)
     return dir_file_stats(spark, path)[0]

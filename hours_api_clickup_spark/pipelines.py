@@ -25,6 +25,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hours_api_clickup_spark import storage
 from hours_api_clickup_spark.operators.dedupe import dedupe_latest
 from hours_api_clickup_spark.operators.hierarchy import (
     build_dim_accounts,
@@ -117,7 +118,7 @@ def sync_refresh(
     # the streaming per-micro-batch merge — both read the same old
     # fact and the loser's merged rows are silently erased by the
     # winner's swap. Lease-guarded, the loser refuses loudly instead.
-    with _table_lock(
+    with table_lock(
         spark, fact_path, "sync_refresh",
         wait_s=lock_wait_s, ttl_sec=lock_ttl_s,
     ):
@@ -146,7 +147,7 @@ def sync_refresh(
     )
 
 
-def _table_lock(
+def table_lock(
     spark: SparkSession,
     path: str,
     owner: str,
@@ -162,16 +163,11 @@ def _table_lock(
     poll-and-retry before the refusal — the streaming side uses it so a
     collision with the scheduled refresh stalls the batch instead of
     killing the query."""
-    from hours_api_clickup_spark.datapipe.similarity import (
-        LEASE_TTL_SEC,
-        _maintenance_lease,
-    )
-
-    return _maintenance_lease(
+    return storage.maintenance_lease(
         spark,
         f"{path}__lock",
         owner,
-        ttl_sec=LEASE_TTL_SEC if ttl_sec is None else ttl_sec,
+        ttl_sec=storage.LEASE_TTL_SEC if ttl_sec is None else ttl_sec,
         wait_s=wait_s,
     )
 
@@ -210,15 +206,11 @@ def sync_refresh_partitioned(
     # table lock: see sync_refresh — the partitioned merge reads month
     # partitions and dynamic-overwrites them, the same read-modify-write
     # cycle with the same racing-writer lost-update mode
-    with _table_lock(spark, fact_path, "sync_refresh_partitioned"):
+    with table_lock(spark, fact_path, "sync_refresh_partitioned"):
         # ownership fence before the IN-PLACE dynamic partition
         # overwrite (review r10) — this commit never goes through
-        # _fs_swap_dir; see _snapshot_sync for the rationale
-        from hours_api_clickup_spark.datapipe.similarity import (
-            _verify_swap_ownership,
-        )
-
-        _verify_swap_ownership(spark, fact_path)
+        # storage.swap_dir; see _snapshot_sync for the rationale
+        storage.verify_swap_ownership(spark, fact_path)
         if not fs.exists(jvm.org.apache.hadoop.fs.Path(fact_path)):
             # first run: bootstrap the layout
             write_fact_partitioned(
@@ -286,7 +278,7 @@ def sync_full_reindex(
         csv_backup(staging, backup_path)
     # table lock: see sync_refresh — a reindex racing any other writer
     # on this fact path must refuse, not silently erase the loser
-    with _table_lock(
+    with table_lock(
         spark, fact_path, "sync_full_reindex",
         wait_s=lock_wait_s, ttl_sec=lock_ttl_s,
     ):
@@ -309,12 +301,10 @@ def read_fact_or_empty(
     """
     from pyspark.errors.exceptions.captured import AnalysisException
 
-    from hours_api_clickup_spark.datapipe.similarity import _fs_recover_swap
-
     # roll back a crashed stage-then-swap overwrite first: mid-swap the
     # live dir is briefly absent and only {path}__old exists — without
     # recovery that window would read as first-run
-    _fs_recover_swap(spark, fact_path)
+    storage.recover_swap(spark, fact_path)
     try:
         return spark.read.parquet(fact_path)
     except AnalysisException as exc:
@@ -332,21 +322,16 @@ def _overwrite_via_checkpoint(df: DataFrame, path: str) -> int:
     permanent loss of everything outside the window. Writing to
     ``{path}__staged`` needs no lineage cut (the plan still reads the
     live path) and the two-rename swap keeps the old table readable up
-    to the final rename, with ``_fs_recover_swap`` rolling back a
+    to the final rename, with ``storage.recover_swap`` rolling back a
     mid-swap crash at the next read. (On a real warehouse this is a
     Delta/Iceberg MERGE or RTAS — same contract.) Kept name for the
     call sites; the checkpoint is gone because it is no longer needed.
     """
-    from hours_api_clickup_spark.datapipe.similarity import (
-        _fs_recover_swap,
-        _fs_swap_dir,
-    )
-
     spark = df.sparkSession
-    _fs_recover_swap(spark, path)
+    storage.recover_swap(spark, path)
     staged = f"{path}__staged"
     df.write.mode("overwrite").parquet(staged)
-    _fs_swap_dir(spark, path, staged)
+    storage.swap_dir(spark, path, staged)
     # footer-only count (parquet count() is satisfied from row-group
     # metadata, no data pages)
     return spark.read.parquet(path).count()
@@ -367,19 +352,15 @@ def _snapshot_sync(
     # table lock: a snapshot load has no read-modify cycle, but two
     # racing in-place overwrites (WRITE_TRUNCATE parity) interleave
     # their delete-then-write phases into a mixed directory
-    with _table_lock(
+    with table_lock(
         dim.sparkSession, path, f"sync_{mode}",
         wait_s=lock_wait_s, ttl_sec=lock_ttl_s,
     ):
         # ownership fence before the IN-PLACE overwrite (review r10):
-        # this commit never goes through _fs_swap_dir, so without the
-        # explicit re-verify a holder paused past the ttl would
+        # this commit never goes through storage.swap_dir, so without
+        # the explicit re-verify a holder paused past the ttl would
         # silently truncate-and-replace its successor's published dim
-        from hours_api_clickup_spark.datapipe.similarity import (
-            _verify_swap_ownership,
-        )
-
-        _verify_swap_ownership(dim.sparkSession, path)
+        storage.verify_swap_ownership(dim.sparkSession, path)
         write_table_overwrite(dim, path)
         # count the materialized output — re-counting `dim` would re-run
         # the whole build (and raw scan) a second time
@@ -879,7 +860,6 @@ def run_maintenance(spark: SparkSession, targets: list[str]) -> list[dict]:
         doc_neardup_index_compact,
     )
     from hours_api_clickup_spark.datapipe.similarity import (
-        MaintenanceLeaseHeld,
         ivf_index_compact,
         lsh_index_compact,
     )
@@ -940,7 +920,7 @@ def run_maintenance(spark: SparkSession, targets: list[str]) -> list[dict]:
             else:
                 raise ValueError(f"unknown maintenance family {family!r}")
             out["status"] = "ok"
-        except (MaintenanceLeaseHeld, PublishLeaseHeld) as exc:
+        except (storage.MaintenanceLeaseHeld, PublishLeaseHeld) as exc:
             # an ingest/publish holds the lease: defer, don't fail —
             # the next sweep retries (the scheduler's watermark-stays
             # semantics)

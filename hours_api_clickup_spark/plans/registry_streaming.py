@@ -558,9 +558,8 @@ def q_streaming_python_datasource(
     survey_ids="§2.11,datapipe:stateful-ledger",
     doc="Custom stateful streaming op: a per-user running ledger "
     "(event count, integer-cents sum, distinct-type set) folded "
-    "across micro-batches with applyInPandasWithState — the runnable "
-    "twin of streaming/tws.py's transformWithState form (sandbox-"
-    "gated on protobuf). The events table streams as 3 files, one "
+    "across micro-batches with applyInPandasWithState (runs without "
+    "google.protobuf, which transformWithState needs). The events table streams as 3 files, one "
     "micro-batch each; every batch emits the user's cumulative "
     "snapshot, and the final ledger is the max_by(n_events) row per "
     "user — exact because n_events is strictly monotone per user and "

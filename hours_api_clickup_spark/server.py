@@ -120,7 +120,7 @@ class ServerConfig:
     #: Table-lock tuning (VERDICT r9 #8): how long a sync route waits
     #: for the fact/dim table lock when it collides with a streaming
     #: batch's hold (0 = refuse immediately, the pre-r10 behavior), and
-    #: the lock's staleness ttl (None = similarity.LEASE_TTL_SEC). The
+    #: the lock's staleness ttl (None = storage.LEASE_TTL_SEC). The
     #: streaming ingests take the mirror knob (``lock_wait_s``) as a
     #: function parameter.
     lock_wait_s: float = 0.0

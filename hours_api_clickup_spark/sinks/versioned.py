@@ -42,7 +42,7 @@ class PublishLeaseHeld(RuntimeError):
     """Another maintainer holds this store's publish lease — the loud-
     refusal form of the store's single-writer contract (verdict r8 #8,
     the sibling of the index maintainers'
-    ``datapipe.similarity.MaintenanceLeaseHeld``)."""
+    ``storage.MaintenanceLeaseHeld``)."""
 
 
 class PublishLeaseLost(RuntimeError):
@@ -77,16 +77,13 @@ def _lease_token_on_disk(path: str) -> str | None:
     semantics and parser as the index maintenance lease (review r10)."""
     import time
 
-    from hours_api_clickup_spark.datapipe.similarity import (
-        LEASE_UNREADABLE,
-        _parse_lease_fields,
-    )
+    from hours_api_clickup_spark.storage import LEASE_UNREADABLE, parse_lease_fields
 
     lease = os.path.join(path, _LEASE)
     for attempt in range(3):
         try:
             with open(lease) as f:
-                return _parse_lease_fields(f.read()).get("token")
+                return parse_lease_fields(f.read()).get("token")
         except FileNotFoundError:
             return None
         except OSError:
@@ -173,7 +170,7 @@ def publish_lease(path: str, owner: str, ttl_sec: int = LEASE_TTL_SEC):
     _held_publish_leases()[path] = token
     # heartbeat: re-touch every ttl/4 so a legitimate publish outlasting
     # the ttl (a big bootstrap at real scale) is never stolen mid-run —
-    # see similarity._maintenance_lease for the full rationale
+    # see storage.maintenance_lease for the full rationale
     import threading
 
     stop = threading.Event()

@@ -1,10 +1,10 @@
 """Continuous vector ingestion into the persisted ANN indexes.
 
-The batch ingest grades (``lsh_index_append`` O(batch) LSM log /
-``lsh_index_upsert`` exact / ``lsh_index_write`` rebuild) get their
-streaming face here: a vector stream drains through ``foreachBatch``
-and each micro-batch is signed (one O(batch) GEMM) and committed as ONE
-sorted log file with ``seq = batch_id``.
+The one incremental path of the tiered indexes (``lsh_index_append``'s
+O(batch) log, folded by ``lsh_index_compact``; ``lsh_index_write`` is
+the full rebuild) gets its streaming face here: a vector stream drains
+through ``foreachBatch`` and each micro-batch is signed (one O(batch)
+GEMM) and committed as ONE sorted log file with ``seq = batch_id``.
 
 Exactly-once without a transaction log: foreachBatch is at-least-once —
 a crash between the log append and the checkpoint commit re-delivers
@@ -28,10 +28,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from hours_api_clickup_spark import storage
 from hours_api_clickup_spark.datapipe.similarity import (
     DEFAULT_PLANES,
     DEFAULT_TABLES,
-    _maintenance_lease,
     lsh_index_append,
 )
 
@@ -65,7 +65,7 @@ def streaming_lsh_ingest(
         # maintenance lease held for the batch's mutation (VERDICT r8
         # #2): a compact racing this batch gets a loud refusal instead
         # of folding a half-committed batch out of the index
-        with _maintenance_lease(
+        with storage.maintenance_lease(
             batch_df.sparkSession,
             index_path,
             f"streaming_lsh b{batch_id}",
@@ -112,7 +112,7 @@ def streaming_ivf_ingest(
         if not batch_df.head(1):
             return
         # lease for the batch's mutation — see streaming_lsh_ingest
-        with _maintenance_lease(
+        with storage.maintenance_lease(
             batch_df.sparkSession,
             index_path,
             f"streaming_ivf b{batch_id}",
@@ -161,7 +161,7 @@ def streaming_ivfpq_ingest(
         if not batch_df.head(1):
             return
         # lease for the batch's mutation — see streaming_lsh_ingest
-        with _maintenance_lease(
+        with storage.maintenance_lease(
             batch_df.sparkSession,
             index_path,
             f"streaming_ivfpq b{batch_id}",
@@ -251,16 +251,16 @@ def streaming_doc_neardup_ingest(
         # overwrite below would then silently replace the whole corpus
         # index with an empty one (review r7, ADVICE r8)
         from hours_api_clickup_spark.datapipe.dedup import (
-            _doc_index_recover,
-            _doc_tombstones,
+            doc_neardup_index_recover,
+            doc_neardup_tombstones,
         )
 
-        _doc_index_recover(spark, index_path)
+        doc_neardup_index_recover(spark, index_path)
         # a takedown issued between this batch's publication and its
         # arrival must win: drop tombstoned dids from the batch while
         # the markers live (post-compact, a re-ingest is an intentional
         # resurrection — the documented lifecycle)
-        tomb = _doc_tombstones(spark, index_path)
+        tomb = doc_neardup_tombstones(spark, index_path)
         if tomb is not None:
             batch_df = batch_df.join(
                 F.broadcast(tomb),
@@ -392,7 +392,7 @@ def streaming_doc_neardup_ingest(
         # (VERDICT r8 #2): the exact race the lease exists for is a
         # compact folding sig between this batch's append and its
         # done-marker — re-classifying its dids as fresh on redelivery
-        with _maintenance_lease(
+        with storage.maintenance_lease(
             batch_df.sparkSession,
             index_path,
             f"streaming_doc_neardup b{int(batch_id)}",
@@ -433,7 +433,7 @@ def streaming_text_index_ingest(
         if not batch_df.head(1):
             return
         # lease for the batch's mutation — see streaming_lsh_ingest
-        with _maintenance_lease(
+        with storage.maintenance_lease(
             batch_df.sparkSession,
             index_path,
             f"streaming_text b{batch_id}",

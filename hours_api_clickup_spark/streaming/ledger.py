@@ -1,15 +1,14 @@
-"""Per-user running ledger as an ``applyInPandasWithState`` operator —
-the runnable twin of ``streaming/tws.py``'s transformWithState form
-(whose protobuf wire format is absent in this sandbox; see that module's
-docstring).
+"""Per-user running ledger as an ``applyInPandasWithState`` operator.
+(Spark 4's transformWithState form would need google.protobuf for its
+state-server protocol; this API runs without it.)
 
-Semantics are identical: per user, fold a running (event count,
-integer-cents sum, distinct-event-type set) across micro-batches and
-emit the updated ledger row each batch the user appears in (Update-
-style emission in append mode — rows are cumulative snapshots, so the
-FINAL ledger is the max_by(n_events) row per user; n_events is strictly
-monotone per user). All folds are commutative, so the result is
-independent of how rows were split into micro-batches.
+Per user, fold a running (event count, integer-cents sum,
+distinct-event-type set) across micro-batches and emit the updated
+ledger row each batch the user appears in (Update-style emission in
+append mode — rows are cumulative snapshots, so the FINAL ledger is the
+max_by(n_events) row per user; n_events is strictly monotone per user).
+All folds are commutative, so the result is independent of how rows
+were split into micro-batches.
 
 Where transformWithState declares typed state variables (ValueState +
 MapState), this API carries ONE flat state tuple per key — the distinct
@@ -61,12 +60,10 @@ def _ledger_group(
 
 
 def cents_prepared(events_stream: DataFrame) -> DataFrame:
-    """Shared input projection of the two ledger twins (this module and
-    streaming/tws.py): cents computed JVM-side with the repo's pinned
-    rounding rule (floor(x*100+0.5) — NOT F.round, see COVERAGE float
-    determinism note), so the Arrow hop carries exactly what the fold
-    needs. One definition: a rounding fix applied here reaches both
-    operators (review r6 — the twins had drifted-prone copies)."""
+    """Input projection of the ledger: cents computed JVM-side with the
+    repo's pinned rounding rule (floor(x*100+0.5) — NOT F.round, see
+    COVERAGE float determinism note), so the Arrow hop carries exactly
+    what the fold needs."""
     return events_stream.select(
         "user_id",
         "event_type",

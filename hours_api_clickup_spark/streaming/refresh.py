@@ -29,6 +29,7 @@ import datetime as dt
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hours_api_clickup_spark import storage
 from hours_api_clickup_spark.operators.dedupe import dedupe_latest
 from hours_api_clickup_spark.operators.merge import merge_upsert
 from hours_api_clickup_spark.operators.transform import transform_time_entries
@@ -41,15 +42,13 @@ def _overwrite_swap(df: DataFrame, path: str) -> None:
     path MISSING — a restarted stream's ``read_fact_or_empty`` then
     sees first-run and the next batch truncates the table to itself
     (review r6). Writing to ``{path}__staged`` and renaming keeps the
-    old state intact until the swap; ``_fs_recover_swap`` at the next
+    old state intact until the swap; ``storage.recover_swap`` at the next
     read rolls back a crash between the two renames. Writing to a
     DIFFERENT path also means the plan may read ``path`` directly — no
     localCheckpoint materialization needed."""
-    from hours_api_clickup_spark.datapipe.similarity import _fs_swap_dir
-
     staged = path + "__staged"
     df.write.mode("overwrite").parquet(staged)
-    _fs_swap_dir(df.sparkSession, path, staged)
+    storage.swap_dir(df.sparkSession, path, staged)
 
 
 def streaming_refresh(
@@ -74,11 +73,8 @@ def streaming_refresh(
     flat = transform_time_entries(raw)
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from hours_api_clickup_spark.datapipe.similarity import (
-            _fs_recover_swap,
-        )
         from hours_api_clickup_spark.pipelines import (
-            _table_lock,
+            table_lock,
             read_fact_or_empty,
         )
 
@@ -95,13 +91,13 @@ def streaming_refresh(
         # seconds-long scheduled sync — a stall, not a stream kill);
         # past the deadline it errors loudly and replays from the
         # checkpoint on restart.
-        with _table_lock(
+        with table_lock(
             spark,
             fact_path,
             f"streaming_refresh b{batch_id}",
             wait_s=lock_wait_s,
         ):
-            _fs_recover_swap(spark, fact_path)  # roll back mid-swap crash
+            storage.recover_swap(spark, fact_path)  # roll back mid-swap crash
             # reject edits outside the refresh window (the reference's
             # MERGE source prefilter, fetch_clickup_data.py:1280-1282 —
             # entries outside the window are locked history)
@@ -342,9 +338,7 @@ def fold_rollup_batch(
     # swallowing it would make this batch the entire state and the
     # overwrite would silently destroy the accumulated rollup (the same
     # rule read_fact_or_empty pins; review r6).
-    from hours_api_clickup_spark.datapipe.similarity import _fs_recover_swap
-
-    _fs_recover_swap(spark, state_path)  # roll back a mid-swap crash
+    storage.recover_swap(spark, state_path)  # roll back a mid-swap crash
     try:
         prev = spark.read.parquet(state_path)
     except AnalysisException as exc:

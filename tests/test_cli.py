@@ -9,6 +9,7 @@ import json
 import pytest
 
 import hours_api_clickup_spark.session as session_mod
+from hours_api_clickup_spark import storage
 from hours_api_clickup_spark.__main__ import main
 from tests.test_domain_semantics import _entry
 from tests.test_pipelines import _task
@@ -554,13 +555,13 @@ def test_cli_maintain_sweeps_indexes_and_defers_on_lease(
 
     # a held lease defers exactly that target; the rest still run
     S.lsh_index_append(emb.limit(3), "embedding", "vec_id", lsh, dim=64)
-    S._acquire_lease(spark, lsh, "simulated-ingest")
+    storage.acquire_lease(spark, lsh, "simulated-ingest")
     try:
         rc = cli(["--mode", "maintain", "--index", f"lsh={lsh}",
                   "--index", f"text={txt}"])
         out = _out(capsys)
     finally:
-        S._release_lease(spark, lsh)
+        storage.release_lease(spark, lsh)
     assert rc == 0
     assert [r["status"] for r in out] == ["deferred", "ok"]
     assert os.path.exists(f"{lsh}/log")  # untouched under the lease

@@ -16,10 +16,15 @@ rolls crashes forward.
 
 from __future__ import annotations
 
+import contextlib
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
 import hours_api_clickup_spark.datapipe.similarity as S
+from hours_api_clickup_spark import storage
+from hours_api_clickup_spark.datapipe import tiered
 from hours_api_clickup_spark.plans.registry import load_table
 from tests.conftest import SF_DIR_SMOKE
 
@@ -32,34 +37,51 @@ def _docs(spark):
     return load_table(spark, SF_DIR_SMOKE, "documents")
 
 
+@contextlib.contextmanager
+def _crash_after_first_swap():
+    """Inject a crash right after the first of a two-tier rebuild's
+    swaps: one tier published, the other still staged."""
+    real_swap = storage.swap_dir
+
+    def crashing(spark_, live, staged):
+        real_swap(spark_, live, staged)
+        storage.swap_dir = real_swap
+        raise RuntimeError("injected crash between swaps")
+
+    storage.swap_dir = crashing
+    try:
+        with pytest.raises(RuntimeError, match="injected crash"):
+            yield
+    finally:
+        storage.swap_dir = real_swap
+
+
 class TestRebuildWritersLeaseGuarded:
-    """Every full-rebuild writer (and the in-place upserts) refuses
-    while another maintainer holds the index lease."""
+    """Every full-rebuild writer (and every compaction) refuses while
+    another maintainer holds the index lease."""
 
     def _refuses_then_succeeds(self, spark, path, op):
-        S._acquire_lease(spark, path, "simulated-maintainer")
+        storage.acquire_lease(spark, path, "simulated-maintainer")
         try:
-            with pytest.raises(S.MaintenanceLeaseHeld, match="lease"):
+            with pytest.raises(storage.MaintenanceLeaseHeld, match="lease"):
                 op()
         finally:
-            S._release_lease(spark, path)
+            storage.release_lease(spark, path)
         op()  # released: the same call goes through
 
-    def test_lsh_write_and_upsert(self, spark, tmp_path):
+    def test_lsh_write_and_compact(self, spark, tmp_path):
         emb = _emb(spark)
         p = str(tmp_path / "lsh")
         self._refuses_then_succeeds(
             spark, p,
             lambda: S.lsh_index_write(emb, "embedding", "vec_id", p, dim=64),
         )
+        S.lsh_index_append(emb.limit(5), "embedding", "vec_id", p, dim=64)
         self._refuses_then_succeeds(
-            spark, p,
-            lambda: S.lsh_index_upsert(
-                emb.limit(5), "embedding", "vec_id", p, dim=64
-            ),
+            spark, p, lambda: S.lsh_index_compact(spark, p)
         )
 
-    def test_ivf_write_and_upsert(self, spark, tmp_path):
+    def test_ivf_write_and_compact(self, spark, tmp_path):
         emb = _emb(spark)
         cents = S.seed_centroids(emb, "embedding", "vec_id", n_clusters=4)
         p = str(tmp_path / "ivf")
@@ -67,11 +89,9 @@ class TestRebuildWritersLeaseGuarded:
             spark, p,
             lambda: S.ivf_index_write(emb, "embedding", "vec_id", p, cents),
         )
+        S.ivf_index_append(emb.limit(5), "embedding", "vec_id", p, cents)
         self._refuses_then_succeeds(
-            spark, p,
-            lambda: S.ivf_index_upsert(
-                emb.limit(5), "embedding", "vec_id", p, cents
-            ),
+            spark, p, lambda: S.ivf_index_compact(spark, p, "vec_id")
         )
 
     def test_text_write(self, spark, tmp_path):
@@ -146,18 +166,6 @@ class TestRebuildRefusesStaleMorTiers:
         inverted_index_compact(spark, p)
         inverted_index_write(docs, "text", "doc_id", p)
 
-    def test_upsert_still_folds_tiers_itself(self, spark, tmp_path):
-        """The upserts keep their own fold-first behavior (they compact
-        via the unlocked core under one lease) — no refusal there."""
-        emb = _emb(spark)
-        p = str(tmp_path / "lsh")
-        S.lsh_index_write(emb, "embedding", "vec_id", p, dim=64)
-        S.lsh_index_append(emb.limit(3), "embedding", "vec_id", p, dim=64)
-        S.lsh_index_upsert(emb.limit(5), "embedding", "vec_id", p, dim=64)
-        import os
-
-        assert not os.path.exists(f"{p}/log")  # folded, not refused
-
 
 class TestIvfpqRebuildConsumesTiers:
     """The IVFADC rebuild (= the family's compaction) consumes the
@@ -212,27 +220,14 @@ class TestIvfpqRebuildConsumesTiers:
         S.ivf_index_delete(spark, p, "vec_id", doomed)
 
         if crash_between_swaps:
-            real_swap = S._fs_swap_dir
-            calls = {"n": 0}
-
-            def crash_second(spark_, live, staged):
-                calls["n"] += 1
-                if calls["n"] == 2:
-                    raise RuntimeError("injected crash between swaps")
-                real_swap(spark_, live, staged)
-
-            S._fs_swap_dir = crash_second
-            try:
-                with pytest.raises(RuntimeError, match="injected"):
-                    S.ivfpq_index_write(c, "embedding", "vec_id", p, cents, cb)
-            finally:
-                S._fs_swap_dir = real_swap
+            with _crash_after_first_swap():
+                S.ivfpq_index_write(c, "embedding", "vec_id", p, cents, cb)
             import os
 
-            assert os.path.exists(f"{p}/{S._IVFPQ_REBUILD_MARKER}")
+            assert os.path.exists(f"{p}/{tiered.REBUILD_MARKER}")
             # in-process failure released the lease; the marker stays
             # for the roll-forward
-            assert not os.path.exists(f"{p}/{S._LEASE_FILE}")
+            assert not os.path.exists(f"{p}/{storage.LEASE_FILE}")
         else:
             S.ivfpq_index_write(c, "embedding", "vec_id", p, cents, cb)
 
@@ -247,7 +242,7 @@ class TestIvfpqRebuildConsumesTiers:
         # tiers consumed: nothing left to outrank or kill the rebuild
         for tier in ("log", "codes_log", "tombstones"):
             assert not os.path.exists(f"{p}/{tier}"), tier
-        assert not os.path.exists(f"{p}/{S._IVFPQ_REBUILD_MARKER}")
+        assert not os.path.exists(f"{p}/{tiered.REBUILD_MARKER}")
         # the read view IS the rebuild corpus: re-included deleted ids
         # are back, changed vectors serve their NEW values
         view = S.ivf_index_read(spark, p)
@@ -258,20 +253,6 @@ class TestIvfpqRebuildConsumesTiers:
         assert self._probe(spark, p, qv, cents, cb) == self._probe(
             spark, fresh, qv, cents, cb
         )
-
-    def test_crash_between_swaps_rolls_forward(self, spark, tmp_path):
-        import os
-
-        p, fresh, c, cents, cb, qv, doomed = self._lifecycle(
-            spark, tmp_path, crash_between_swaps=True
-        )
-        # first family entry point after the crash finishes the job:
-        # remaining swap + consumed-tier drops + marker delete
-        got = self._probe(spark, p, qv, cents, cb)
-        assert not os.path.exists(f"{p}/{S._IVFPQ_REBUILD_MARKER}")
-        for tier in ("log", "codes_log", "tombstones"):
-            assert not os.path.exists(f"{p}/{tier}"), tier
-        assert got == self._probe(spark, fresh, qv, cents, cb)
 
     def test_tier_entries_after_snapshot_survive(self, spark, tmp_path):
         """A tombstone landing between the rebuild's snapshot and its
@@ -284,24 +265,108 @@ class TestIvfpqRebuildConsumesTiers:
             emb.limit(3), "embedding", "vec_id", p, cents, cb
         )
 
-        real_swap = S._fs_swap_dir
+        real_swap = storage.swap_dir
 
         def late_tombstone_then_swap(spark_, live, staged):
             # fires inside the rebuild, after the snapshot was taken
-            S._fs_swap_dir = real_swap
+            storage.swap_dir = real_swap
             S.ivf_index_delete(spark_, p, "vec_id", [2], seq=99)
             real_swap(spark_, live, staged)
 
-        S._fs_swap_dir = late_tombstone_then_swap
+        storage.swap_dir = late_tombstone_then_swap
         try:
             S.ivfpq_index_write(emb, "embedding", "vec_id", p, cents, cb)
         finally:
-            S._fs_swap_dir = real_swap
+            storage.swap_dir = real_swap
         import os
 
         assert os.path.exists(f"{p}/tombstones")  # survived the drops
         view_ids = {r[0] for r in S.ivf_index_read(spark, p).select("vec_id").collect()}
         assert 2 not in view_ids
+
+
+def _ivfpq_crash_rolls_forward(spark, tmp_path):
+    case = TestIvfpqRebuildConsumesTiers()
+    p, fresh, c, cents, cb, qv, doomed = case._lifecycle(
+        spark, tmp_path, crash_between_swaps=True
+    )
+    # first family entry point after the crash finishes the job:
+    # remaining swap + consumed-tier drops + marker delete
+    got = case._probe(spark, p, qv, cents, cb)
+    assert not os.path.exists(f"{p}/{tiered.REBUILD_MARKER}")
+    for tier in ("log", "codes_log", "tombstones"):
+        assert not os.path.exists(f"{p}/{tier}"), tier
+    assert got == case._probe(spark, fresh, qv, cents, cb)
+
+
+def _doc_neardup_crash_rolls_forward(spark, tmp_path):
+    import hours_api_clickup_spark.datapipe.dedup as D
+
+    docs = _docs(spark)
+    gen_a = docs.filter(F.col("doc_id") % 10 < 8)
+    # gen B REMOVES docs: mixed tiers would break "did in sig ⇒
+    # complete index entry", the invariant the streaming ingest keys on
+    gen_b = gen_a.filter(F.col("doc_id") % 7 != 1)
+    batch = docs.filter(F.col("doc_id") % 10 >= 8)
+    b_ids = {r[0] for r in gen_b.select("doc_id").collect()}
+    removed = {r[0] for r in gen_a.select("doc_id").collect()} - b_ids
+    assert removed  # the rebuild must actually drop docs
+
+    path = str(tmp_path / "didx")
+    D.doc_neardup_index_write(gen_a, "doc_id", "text", path)
+    with _crash_after_first_swap():
+        D.doc_neardup_index_write(gen_b, "doc_id", "text", path)
+
+    # new bands, OLD sig, and the marker that rolls it forward
+    assert os.path.exists(f"{path}/{tiered.REBUILD_MARKER}")
+    sig_dids = {
+        r[0] for r in spark.read.parquet(f"{path}/sig").select("did").collect()
+    }
+    assert removed <= sig_dids  # sig is still generation A
+
+    # any entry point recovers: generations align, marker + staged gone
+    D.doc_neardup_index_recover(spark, path)
+    assert not os.path.exists(f"{path}/{tiered.REBUILD_MARKER}")
+    assert not os.path.exists(f"{path}/sig__staged")
+    assert not os.path.exists(f"{path}/bands__staged")
+    sig_dids = {
+        r[0] for r in spark.read.parquet(f"{path}/sig").select("did").collect()
+    }
+    band_dids = {
+        r[0] for r in spark.read.parquet(f"{path}/bands").select("did").collect()
+    }
+    assert sig_dids == b_ids
+    assert band_dids <= b_ids
+
+    # and the recovered index behaves: incremental append ≡ one-shot
+    # over (gen B ∪ batch) restricted to pairs touching the batch
+    got = {
+        (r.id_a, r.id_b)
+        for r in D.doc_neardup_index_append(batch, path, "doc_id", "text").collect()
+    }
+    batch_ids = {r[0] for r in batch.select("doc_id").collect()}
+    want = {
+        (r.id_a, r.id_b)
+        for r in D.minhash_lsh_pairs(
+            gen_b.unionByName(batch), "doc_id", "text"
+        ).collect()
+        if r.id_a in batch_ids or r.id_b in batch_ids
+    }
+    assert got == want
+
+
+@pytest.mark.parametrize(
+    "roll_forward",
+    [_ivfpq_crash_rolls_forward, _doc_neardup_crash_rolls_forward],
+    ids=["ivfpq", "doc_neardup"],
+)
+def test_crash_between_swaps_rolls_forward(spark, tmp_path, roll_forward):
+    """Both two-tier families publish a rebuild through one commit
+    marker (``storage.commit_tiers``). A crash between the two tier
+    swaps is rolled FORWARD by the next entry point (the one
+    ``tiered.recover_joint``), so readers only ever observe whole
+    generations and the consumed tiers are dropped exactly once."""
+    roll_forward(spark, tmp_path)
 
 
 class TestLeaseHeartbeat:
@@ -314,16 +379,16 @@ class TestLeaseHeartbeat:
         import time
 
         p = str(tmp_path / "idx")
-        with S._maintenance_lease(spark, p, "long-compact", ttl_sec=1):
+        with storage.maintenance_lease(spark, p, "long-compact", ttl_sec=1):
             # hold well past the ttl; a racer must refuse the WHOLE time
             deadline = time.time() + 3.0
             while time.time() < deadline:
-                with pytest.raises(S.MaintenanceLeaseHeld):
-                    S._acquire_lease(spark, p, "racer", ttl_sec=1)
+                with pytest.raises(storage.MaintenanceLeaseHeld):
+                    storage.acquire_lease(spark, p, "racer", ttl_sec=1)
                 time.sleep(0.4)
         # released: the racer acquires immediately
-        S._acquire_lease(spark, p, "racer", ttl_sec=1)
-        S._release_lease(spark, p)
+        storage.acquire_lease(spark, p, "racer", ttl_sec=1)
+        storage.release_lease(spark, p)
 
     def test_publish_lease_heartbeat(self, tmp_path):
         import time
@@ -381,14 +446,14 @@ class TestFactTableLock:
         r = pipelines.sync_refresh(spark, raw, fact, today)
         assert r.rows == 1
 
-        S._acquire_lease(spark, f"{fact}__lock", "simulated-writer")
+        storage.acquire_lease(spark, f"{fact}__lock", "simulated-writer")
         try:
-            with pytest.raises(S.MaintenanceLeaseHeld, match="lease"):
+            with pytest.raises(storage.MaintenanceLeaseHeld, match="lease"):
                 pipelines.sync_refresh(spark, raw, fact, today)
-            with pytest.raises(S.MaintenanceLeaseHeld, match="lease"):
+            with pytest.raises(storage.MaintenanceLeaseHeld, match="lease"):
                 pipelines.sync_full_reindex(spark, raw, fact)
         finally:
-            S._release_lease(spark, f"{fact}__lock")
+            storage.release_lease(spark, f"{fact}__lock")
         # released: both cycles run again
         assert pipelines.sync_refresh(spark, raw, fact, today).rows == 1
         assert pipelines.sync_full_reindex(spark, raw, fact).rows == 1
@@ -408,7 +473,7 @@ class TestFactTableLock:
         with open(src / "a.json", "w") as f:
             f.write(json.dumps(_entry("e1", start_ms=t0, at_ms=t0)) + "\n")
         fact = str(tmp_path / "fact")
-        S._acquire_lease(spark, f"{fact}__lock", "scheduled-refresh")
+        storage.acquire_lease(spark, f"{fact}__lock", "scheduled-refresh")
         try:
             # lock_wait_s=0: immediate loud refusal (the bounded-wait
             # default is exercised in the stall test below)
@@ -424,7 +489,7 @@ class TestFactTableLock:
 
             assert not os.path.exists(fact)  # nothing half-written
         finally:
-            S._release_lease(spark, f"{fact}__lock")
+            storage.release_lease(spark, f"{fact}__lock")
         # released: a fresh stream (same checkpoint) lands the batch
         q2 = streaming_refresh(
             spark, str(src), fact, str(tmp_path / "ckpt"),
@@ -453,9 +518,9 @@ class TestFactTableLock:
         with open(src / "a.json", "w") as f:
             f.write(json.dumps(_entry("e1", start_ms=t0, at_ms=t0)) + "\n")
         fact = str(tmp_path / "fact")
-        S._acquire_lease(spark, f"{fact}__lock", "scheduled-refresh")
+        storage.acquire_lease(spark, f"{fact}__lock", "scheduled-refresh")
         releaser = threading.Timer(
-            3.0, lambda: S._release_lease(spark, f"{fact}__lock")
+            3.0, lambda: storage.release_lease(spark, f"{fact}__lock")
         )
         releaser.start()
         try:
@@ -502,7 +567,7 @@ class TestCompactSmallFilesSafety:
         # live table intact INCLUDING the racing append; staged dropped
         assert spark.read.parquet(path).count() == 51
         assert not os.path.exists(path + "__staged")
-        assert not os.path.exists(f"{path}__lock/{S._LEASE_FILE}")
+        assert not os.path.exists(f"{path}__lock/{storage.LEASE_FILE}")
         # writers quiescent: the retry compacts everything
         assert compact_small_files(spark, path, target_bytes=10**9) == 1
         assert spark.read.parquet(path).count() == 51
@@ -515,12 +580,12 @@ class TestCompactSmallFilesSafety:
         docs = _docs(spark).limit(20)
         path = str(tmp_path / "tbl")
         docs.repartition(8).write.parquet(path)
-        S._acquire_lease(spark, f"{path}__lock", "simulated-maintainer")
+        storage.acquire_lease(spark, f"{path}__lock", "simulated-maintainer")
         try:
-            with pytest.raises(S.MaintenanceLeaseHeld, match="lease"):
+            with pytest.raises(storage.MaintenanceLeaseHeld, match="lease"):
                 compact_small_files(spark, path, target_bytes=10**9)
         finally:
-            S._release_lease(spark, f"{path}__lock")
+            storage.release_lease(spark, f"{path}__lock")
         assert compact_small_files(spark, path, target_bytes=10**9) == 1
 
 
@@ -540,23 +605,23 @@ class TestLeaseFencing:
         p = str(tmp_path / "idx")
         staged = f"{p}/base__staged"
         os.makedirs(staged)
-        old_token = S._acquire_lease(spark, p, "old-holder", ttl_sec=1)
-        S._held_leases()[p] = old_token
+        old_token = storage.acquire_lease(spark, p, "old-holder", ttl_sec=1)
+        storage.held_leases()[p] = old_token
         try:
             time.sleep(1.2)  # the stall: lease goes stale by mtime
-            taker_token = S._acquire_lease(spark, p, "taker", ttl_sec=1)
+            taker_token = storage.acquire_lease(spark, p, "taker", ttl_sec=1)
             # old holder resumes at its commit point: the swap re-reads
             # the lease, sees the successor's token, refuses loudly
-            with pytest.raises(S.MaintenanceLeaseLost, match="successor"):
-                S._fs_swap_dir(spark, f"{p}/base", staged)
+            with pytest.raises(storage.MaintenanceLeaseLost, match="successor"):
+                storage.swap_dir(spark, f"{p}/base", staged)
             assert os.path.exists(staged)  # nothing was clobbered
             # ...and the old holder's release spares the taker's lease
-            S._release_lease(spark, p, old_token)
-            assert os.path.exists(f"{p}/{S._LEASE_FILE}")
-            assert S._read_lease_token(spark, p) == taker_token
+            storage.release_lease(spark, p, old_token)
+            assert os.path.exists(f"{p}/{storage.LEASE_FILE}")
+            assert storage.read_lease_token(spark, p) == taker_token
         finally:
-            S._held_leases().pop(p, None)
-            S._release_lease(spark, p)
+            storage.held_leases().pop(p, None)
+            storage.release_lease(spark, p)
 
     def test_maintenance_section_fences_its_swap(self, spark, tmp_path):
         """End-to-end through the contextmanager: a takeover mid-section
@@ -567,19 +632,19 @@ class TestLeaseFencing:
         p = str(tmp_path / "idx")
         staged = f"{p}/base__staged"
         os.makedirs(staged)
-        with S._maintenance_lease(spark, p, "old-holder"):
+        with storage.maintenance_lease(spark, p, "old-holder"):
             # simulate a successful takeover after a stall the way a
             # real taker does it: delete the stale lease + re-claim
             # (a Python-side file rewrite would desync Hadoop's local
             # .crc sidecar and read as unreadable, which also refuses —
             # but the assertion below wants the successor's token)
-            S._fs_delete(spark, f"{p}/{S._LEASE_FILE}")
-            succ_token = S._acquire_lease(spark, p, "taker")
-            with pytest.raises(S.MaintenanceLeaseLost, match="successor"):
-                S._fs_swap_dir(spark, f"{p}/base", staged)
+            storage.delete(spark, f"{p}/{storage.LEASE_FILE}")
+            succ_token = storage.acquire_lease(spark, p, "taker")
+            with pytest.raises(storage.MaintenanceLeaseLost, match="successor"):
+                storage.swap_dir(spark, f"{p}/base", staged)
         # the finally-release saw a foreign token and left it alone
-        assert S._read_lease_token(spark, p) == succ_token
-        S._release_lease(spark, p)  # cleanup
+        assert storage.read_lease_token(spark, p) == succ_token
+        storage.release_lease(spark, p)  # cleanup
 
     def test_matching_token_swaps_normally(self, spark, tmp_path):
         import os
@@ -589,10 +654,10 @@ class TestLeaseFencing:
         os.makedirs(staged)
         with open(f"{staged}/data.txt", "w") as f:
             f.write("x")
-        with S._maintenance_lease(spark, p, "holder"):
-            S._fs_swap_dir(spark, f"{p}/base", staged)
+        with storage.maintenance_lease(spark, p, "holder"):
+            storage.swap_dir(spark, f"{p}/base", staged)
         assert os.path.exists(f"{p}/base/data.txt")
-        assert not os.path.exists(f"{p}/{S._LEASE_FILE}")  # released
+        assert not os.path.exists(f"{p}/{storage.LEASE_FILE}")  # released
 
     def test_publish_lease_takeover(self, tmp_path):
         """The versioned store's twin: pointer/manifest swaps re-verify
@@ -615,14 +680,14 @@ class TestLeaseFencing:
         assert V.read_manifest(p) == {"2024-01": 0}
 
     def test_unleased_callers_are_not_fenced(self, spark, tmp_path):
-        """The lease is opt-in: a bare _fs_swap_dir with no held lease
+        """The lease is opt-in: a bare storage.swap_dir with no held lease
         (recovery roll-forwards run this way pre-claim) still works."""
         import os
 
         p = str(tmp_path / "idx")
         staged = f"{p}/base__staged"
         os.makedirs(staged)
-        S._fs_swap_dir(spark, f"{p}/base", staged)
+        storage.swap_dir(spark, f"{p}/base", staged)
         assert os.path.exists(f"{p}/base")
 
 
@@ -638,17 +703,17 @@ class TestRecoveryIsLeased:
 
         p = str(tmp_path / "ivfpq")
         os.makedirs(p)
-        marker = f"{p}/{S._IVFPQ_REBUILD_MARKER}"
-        S._fs_write_file_atomic(spark, marker, "{}")
-        S._acquire_lease(spark, p, "live-maintainer")  # our pid: live
+        marker = f"{p}/{tiered.REBUILD_MARKER}"
+        storage.write_file_atomic(spark, marker, "{}")
+        storage.acquire_lease(spark, p, "live-maintainer")  # our pid: live
         try:
-            S._ivfpq_recover(spark, p)  # skips: the holder owns this
+            S.ivfpq_index_recover(spark, p)  # skips: the holder owns this
             assert os.path.exists(marker)
         finally:
-            S._release_lease(spark, p)
-        S._ivfpq_recover(spark, p)  # no lease: claims, rolls forward
+            storage.release_lease(spark, p)
+        S.ivfpq_index_recover(spark, p)  # no lease: claims, rolls forward
         assert not os.path.exists(marker)
-        assert not os.path.exists(f"{p}/{S._LEASE_FILE}")  # released
+        assert not os.path.exists(f"{p}/{storage.LEASE_FILE}")  # released
 
     def test_doc_index_recover_defers_to_live_maintainer(
         self, spark, tmp_path
@@ -659,17 +724,17 @@ class TestRecoveryIsLeased:
 
         p = str(tmp_path / "neardup")
         os.makedirs(p)
-        marker = f"{p}/{D._REBUILD_MARKER}"
-        S._fs_touch(spark, marker)
-        S._acquire_lease(spark, p, "live-maintainer")
+        marker = f"{p}/{tiered.REBUILD_MARKER}"
+        storage.write_file_atomic(spark, marker, "")  # an empty marker
+        storage.acquire_lease(spark, p, "live-maintainer")
         try:
-            D._doc_index_recover(spark, p)
+            D.doc_neardup_index_recover(spark, p)
             assert os.path.exists(marker)
         finally:
-            S._release_lease(spark, p)
-        D._doc_index_recover(spark, p)
+            storage.release_lease(spark, p)
+        D.doc_neardup_index_recover(spark, p)
         assert not os.path.exists(marker)
-        assert not os.path.exists(f"{p}/{S._LEASE_FILE}")
+        assert not os.path.exists(f"{p}/{storage.LEASE_FILE}")
 
 
 class TestRecoveryVerdictCache:
@@ -680,13 +745,13 @@ class TestRecoveryVerdictCache:
 
     def _count_exists(self, monkeypatch):
         calls = {"n": 0}
-        real = S._fs_exists
+        real = storage.exists
 
         def counting(spark, p):
             calls["n"] += 1
             return real(spark, p)
 
-        monkeypatch.setattr(S, "_fs_exists", counting)
+        monkeypatch.setattr(storage, "exists", counting)
         return calls
 
     def test_clean_verdict_cached_then_voided_by_lease(
@@ -697,14 +762,14 @@ class TestRecoveryVerdictCache:
         p = str(tmp_path / "ivfpq")
         os.makedirs(p)
         calls = self._count_exists(monkeypatch)
-        S._ivfpq_recover(spark, p)  # full probe, proves clean
+        S.ivfpq_index_recover(spark, p)  # full probe, proves clean
         first = calls["n"]
         assert first >= 3
-        S._ivfpq_recover(spark, p)  # cached: zero fs rounds
+        S.ivfpq_index_recover(spark, p)  # cached: zero fs rounds
         assert calls["n"] == first
         # a lease claim (any maintenance) voids the verdict
-        S._release_lease(spark, p, S._acquire_lease(spark, p, "compact"))
-        S._ivfpq_recover(spark, p)
+        storage.release_lease(spark, p, storage.acquire_lease(spark, p, "compact"))
+        S.ivfpq_index_recover(spark, p)
         assert calls["n"] > first
 
     def test_pending_recovery_is_never_cached(self, spark, tmp_path):
@@ -712,14 +777,14 @@ class TestRecoveryVerdictCache:
 
         p = str(tmp_path / "ivfpq")
         os.makedirs(p)
-        marker = f"{p}/{S._IVFPQ_REBUILD_MARKER}"
-        S._fs_write_file_atomic(spark, marker, "{}")
-        S._ivfpq_recover(spark, p)  # claims, rolls forward
+        marker = f"{p}/{tiered.REBUILD_MARKER}"
+        storage.write_file_atomic(spark, marker, "{}")
+        S.ivfpq_index_recover(spark, p)  # claims, rolls forward
         assert not os.path.exists(marker)
         # the roll-forward's own lease claim voided any verdict; a new
         # marker (fresh crash) must be seen by the next probe
-        S._fs_write_file_atomic(spark, marker, "{}")
-        S._ivfpq_recover(spark, p)
+        storage.write_file_atomic(spark, marker, "{}")
+        S.ivfpq_index_recover(spark, p)
         assert not os.path.exists(marker)
 
     def test_doc_index_verdict_cached(self, spark, tmp_path, monkeypatch):
@@ -730,10 +795,10 @@ class TestRecoveryVerdictCache:
         p = str(tmp_path / "neardup")
         os.makedirs(p)
         calls = self._count_exists(monkeypatch)
-        D._doc_index_recover(spark, p)
+        D.doc_neardup_index_recover(spark, p)
         first = calls["n"]
         assert first >= 3
-        D._doc_index_recover(spark, p)
+        D.doc_neardup_index_recover(spark, p)
         assert calls["n"] == first
 
     def test_ivfpq_probe_self_heals_past_cached_verdict(
@@ -767,7 +832,7 @@ class TestRecoveryVerdictCache:
             ]
 
         want = probe()  # proves clean and caches the verdict
-        assert S._recovery_verdict_cached(spark, p)
+        assert storage.recovery_verdict_cached(spark, p)
         os.rename(f"{p}/base", f"{p}/base__old")  # foreign crash
         assert probe() == want  # self-heals: read fails → recover → retry
         assert os.path.isdir(f"{p}/base")
@@ -784,15 +849,15 @@ class TestRecoveryVerdictCache:
 
         p = str(tmp_path / "ivfpq")
         os.makedirs(p)
-        gen = S._recovery_gen(p)
+        gen = storage.recovery_gen(p)
         # simulate: another thread claims (and releases) the lease
         # while this thread is mid-probe
-        S._release_lease(spark, p, S._acquire_lease(spark, p, "compact"))
-        S._recovery_mark_clean(spark, p, gen)  # stale gen: refused
-        assert not S._recovery_verdict_cached(spark, p)
+        storage.release_lease(spark, p, storage.acquire_lease(spark, p, "compact"))
+        storage.recovery_mark_clean(spark, p, gen)  # stale gen: refused
+        assert not storage.recovery_verdict_cached(spark, p)
         # with the CURRENT gen the mark lands
-        S._recovery_mark_clean(spark, p, S._recovery_gen(p))
-        assert S._recovery_verdict_cached(spark, p)
+        storage.recovery_mark_clean(spark, p, storage.recovery_gen(p))
+        assert storage.recovery_verdict_cached(spark, p)
 
     def test_doc_probe_self_heals_past_cached_verdict(self, spark, tmp_path):
         """The cache's foreign-crash trade (review r11): a probe that
@@ -819,7 +884,7 @@ class TestRecoveryVerdictCache:
             (r.id_a, r.id_b)
             for r in doc_neardup_index_pairs_for_ids(spark, path, ids).collect()
         }  # this probe proved clean and CACHED the verdict
-        assert S._recovery_verdict_cached(spark, path)
+        assert storage.recovery_verdict_cached(spark, path)
         os.rename(f"{path}/sig", f"{path}/sig__old")  # foreign crash
         got = {
             (r.id_a, r.id_b)
@@ -836,12 +901,12 @@ class TestAppendBootstrapLeased:
     first-batch writers must not rebuild both tiers unprotected."""
 
     def _refuses_bootstrap(self, spark, path, op):
-        S._acquire_lease(spark, path, "simulated-maintainer")
+        storage.acquire_lease(spark, path, "simulated-maintainer")
         try:
-            with pytest.raises(S.MaintenanceLeaseHeld, match="lease"):
+            with pytest.raises(storage.MaintenanceLeaseHeld, match="lease"):
                 op()
         finally:
-            S._release_lease(spark, path)
+            storage.release_lease(spark, path)
         op()  # released: the same bootstrap goes through
 
     def test_lsh_append_bootstrap(self, spark, tmp_path):

@@ -7,8 +7,11 @@ from __future__ import annotations
 import contextlib
 import io
 
+import pytest
 from pyspark.sql import functions as F
 
+from hours_api_clickup_spark import storage
+from hours_api_clickup_spark.datapipe import tiered
 from hours_api_clickup_spark.operators.skew import salted_agg, with_salt
 from hours_api_clickup_spark.plans.registry import load_table
 from hours_api_clickup_spark.sinks.writers import write_bucketed
@@ -243,14 +246,16 @@ class TestExactQuantiles:
 
 
 class TestLshIndexUpsert:
-    """Incremental ANN index maintenance: upserting a batch must equal
-    rebuilding the index from scratch on the combined corpus."""
+    """Incremental ANN index maintenance: upserting a batch (re-ingest
+    by id through append + compact, the one incremental path) must
+    equal rebuilding the index from scratch on the combined corpus."""
 
     def test_upsert_equals_rebuild(self, spark, tmp_path):
         from pyspark.sql import functions as F
 
         from hours_api_clickup_spark.datapipe.similarity import (
-            lsh_index_upsert,
+            lsh_index_append,
+            lsh_index_compact,
             lsh_index_write,
         )
         from hours_api_clickup_spark.plans.registry import load_table
@@ -275,13 +280,14 @@ class TestLshIndexUpsert:
             .otherwise(F.col("embedding"))
             .cast("array<float>"),  # keep the index element type stable
         )
-        # a real ingest batch can carry the same id twice; upsert must
-        # collapse it, not write both copies
+        # a real ingest batch can carry the same id twice; the append
+        # must collapse it, not write both copies
         new = new.unionByName(new.filter(F.col("vec_id") == 5))
 
         inc_path = str(tmp_path / "inc")
         lsh_index_write(old, "embedding", "vec_id", inc_path, dim=64)
-        lsh_index_upsert(new, "embedding", "vec_id", inc_path, dim=64)
+        lsh_index_append(new, "embedding", "vec_id", inc_path, dim=64)
+        lsh_index_compact(spark, inc_path)
 
         full_path = str(tmp_path / "full")
         combined = old.join(
@@ -367,21 +373,35 @@ class TestLshIndexUpsert:
         ).unionByName(new)
         lsh_index_write(combined, "embedding", "vec_id", full_path, dim=64)
 
-        def canon(path):
-            from hours_api_clickup_spark.datapipe.similarity import lsh_index_read
+        from hours_api_clickup_spark.datapipe.similarity import lsh_index_read
 
+        def canon(path):
             return sorted(
                 (r["t"], r["sig"], r["vid"], tuple(round(float(x), 6) for x in r["v"]))
                 for r in lsh_index_read(spark, path).collect()
             )
 
         assert canon(inc_path) == canon(full_path)
+        # the compaction leaves no staged/rolled-back copy behind and
+        # one row per (vid, table)
+        import os
+
+        for leftover in ("base__staged", "base__old", "log"):
+            assert not os.path.exists(f"{inc_path}/{leftover}"), leftover
+        dupes = (
+            lsh_index_read(spark, inc_path)
+            .groupBy("vid", "t")
+            .count()
+            .filter("count > 1")
+            .count()
+        )
+        assert dupes == 0
 
     def test_upsert_bootstraps_missing_index(self, spark, tmp_path):
         from pyspark.sql import functions as F
 
         from hours_api_clickup_spark.datapipe.similarity import (
-            lsh_index_upsert,
+            lsh_index_append,
             lsh_index_write,
         )
         from hours_api_clickup_spark.plans.registry import load_table
@@ -389,7 +409,7 @@ class TestLshIndexUpsert:
 
         emb = load_table(spark, SF_DIR, "embeddings").filter(F.col("vec_id") < 100)
         boot_path = str(tmp_path / "boot")
-        lsh_index_upsert(emb, "embedding", "vec_id", boot_path, dim=64)
+        lsh_index_append(emb, "embedding", "vec_id", boot_path, dim=64)
         ref_path = str(tmp_path / "ref")
         lsh_index_write(emb, "embedding", "vec_id", ref_path, dim=64)
         from hours_api_clickup_spark.datapipe.similarity import lsh_index_read
@@ -407,10 +427,12 @@ class TestLshIndexUpsert:
 
 class TestIvfIndexUpsert:
     def test_upsert_equals_rebuild(self, spark, tmp_path):
+        """Re-ingest by id through append + compact equals a rebuild."""
         from pyspark.sql import functions as F
 
         from hours_api_clickup_spark.datapipe.similarity import (
-            ivf_index_upsert,
+            ivf_index_append,
+            ivf_index_compact,
             ivf_index_write,
             seed_centroids,
         )
@@ -418,7 +440,7 @@ class TestIvfIndexUpsert:
         from tests.conftest import SF_DIR
 
         emb = load_table(spark, SF_DIR, "embeddings")
-        # quantizer frozen on the ORIGINAL corpus — upsert must not
+        # quantizer frozen on the ORIGINAL corpus — ingest must not
         # retrain it (standard IVF: rebalance is an offline rebuild)
         cents = seed_centroids(emb.filter(F.col("vec_id") < 400), "embedding", "vec_id")
         old = emb.filter(F.col("vec_id") < 400)
@@ -439,7 +461,8 @@ class TestIvfIndexUpsert:
 
         inc_path = str(tmp_path / "inc")
         ivf_index_write(old, "embedding", "vec_id", inc_path, cents)
-        ivf_index_upsert(new, "embedding", "vec_id", inc_path, cents)
+        ivf_index_append(new, "embedding", "vec_id", inc_path, cents)
+        ivf_index_compact(spark, inc_path, "vec_id")
 
         full_path = str(tmp_path / "full")
         combined = old.join(
@@ -754,8 +777,9 @@ def test_filtered_probe_on_persisted_ivf_index(spark, tmp_path):
 
 
 class TestUpsertBranchParity:
-    """lsh_index_upsert picks touched-bucket overwrite vs read-merge-swap
-    by touched fraction; BOTH branches must preserve upsert ≡ rebuild."""
+    """Re-ingest through append + compact must equal a rebuild at both
+    ends of the batch-size range: one moved vector (a few touched
+    buckets) and a corpus-wide batch (~every bucket touched)."""
 
     def _canon(self, spark, path):
         from hours_api_clickup_spark.datapipe.similarity import lsh_index_read
@@ -765,12 +789,14 @@ class TestUpsertBranchParity:
         )
 
     def test_tiny_batch_takes_dynamic_path(self, spark, tmp_path):
-        """One moved vector touches ≤ 2·tables of 96 dirs → the dynamic
-        touched-bucket branch; result still equals a rebuild."""
+        """One moved vector touches ≤ 2·tables of 96 dirs; after the
+        compaction its old buckets are gone and the index equals a
+        rebuild."""
         from pyspark.sql import functions as F
 
         from hours_api_clickup_spark.datapipe.similarity import (
-            lsh_index_upsert,
+            lsh_index_append,
+            lsh_index_compact,
             lsh_index_write,
         )
         from hours_api_clickup_spark.plans.registry import load_table
@@ -784,26 +810,28 @@ class TestUpsertBranchParity:
         )
         inc = str(tmp_path / "inc")
         lsh_index_write(old, "embedding", "vec_id", inc, dim=64)
-        lsh_index_upsert(batch, "embedding", "vec_id", inc, dim=64)
+        lsh_index_append(batch, "embedding", "vec_id", inc, dim=64)
+        lsh_index_compact(spark, inc)
         full = str(tmp_path / "full")
         combined = old.filter(F.col("vec_id") != 3).unionByName(batch)
         lsh_index_write(combined, "embedding", "vec_id", full, dim=64)
         assert self._canon(spark, inc) == self._canon(spark, full)
-        # and the staged-swap leftover must not exist on this branch
+        # and no staged-swap leftover survives the compaction
         import os
 
         assert not os.path.exists(f"{inc}/base__staged")
         assert not os.path.exists(f"{inc}/base__old")
 
     def test_broad_batch_takes_swap_path(self, spark, tmp_path):
-        """A corpus-wide batch touches ~every dir → the swap branch;
+        """A corpus-wide batch touches ~every dir; after the compaction
         no stale base__old/staged dirs survive and probes see one
         version per id."""
         from pyspark.sql import functions as F
 
         from hours_api_clickup_spark.datapipe.similarity import (
+            lsh_index_append,
+            lsh_index_compact,
             lsh_index_read,
-            lsh_index_upsert,
             lsh_index_write,
         )
         from hours_api_clickup_spark.plans.registry import load_table
@@ -814,7 +842,8 @@ class TestUpsertBranchParity:
         batch = emb.filter(F.col("vec_id") >= 350)  # 150 vectors, 50 re-ingested
         inc = str(tmp_path / "inc")
         lsh_index_write(old, "embedding", "vec_id", inc, dim=64)
-        lsh_index_upsert(batch, "embedding", "vec_id", inc, dim=64)
+        lsh_index_append(batch, "embedding", "vec_id", inc, dim=64)
+        lsh_index_compact(spark, inc)
         full = str(tmp_path / "full")
         combined = old.filter(F.col("vec_id") < 350).unionByName(batch)
         lsh_index_write(combined, "embedding", "vec_id", full, dim=64)
@@ -831,104 +860,6 @@ class TestUpsertBranchParity:
             .count()
         )
         assert dupes == 0
-
-    def test_heavy_touch_routes_to_swap(self, spark, tmp_path, monkeypatch):
-        """The r3 bench regime (~100-vector random batch over a coarse
-        96-dir layout — touches nearly every directory): the router must
-        take the read-merge-swap branch, not the per-directory dynamic
-        overwrite that measured ~3x a rebuild there, and the result
-        still equals a from-scratch build. Routing is observed via the
-        swap call itself."""
-        from pyspark.sql import functions as F
-
-        import hours_api_clickup_spark.datapipe.similarity as S
-        from hours_api_clickup_spark.plans.registry import load_table
-        from tests.conftest import SF_DIR
-
-        swaps = []
-        real_swap = S._fs_swap_dir
-        monkeypatch.setattr(
-            S, "_fs_swap_dir", lambda *a: (swaps.append(a), real_swap(*a))
-        )
-
-        emb = load_table(spark, SF_DIR, "embeddings")
-        old = emb.filter(F.col("vec_id") < 900)
-        batch = emb.filter(F.col("vec_id") % 9 == 0)  # ~100 random ids
-        inc = str(tmp_path / "inc")
-        S.lsh_index_write(old, "embedding", "vec_id", inc, dim=64)
-        swaps.clear()  # the build itself stages+swaps (crash safety, r6)
-        S.lsh_index_upsert(batch, "embedding", "vec_id", inc, dim=64)
-        assert swaps, "heavy-touch batch must take the read-merge-swap branch"
-
-        full = str(tmp_path / "full")
-        combined = old.join(
-            batch.select("vec_id"), "vec_id", "left_anti"
-        ).unionByName(batch)
-        S.lsh_index_write(combined, "embedding", "vec_id", full, dim=64)
-        assert self._canon(spark, inc) == self._canon(spark, full)
-
-    def test_tiny_batch_does_not_swap(self, spark, tmp_path, monkeypatch):
-        """Converse routing pin: a single-vector batch stays on the
-        touched-bucket dynamic overwrite (no directory swap)."""
-        from pyspark.sql import functions as F
-
-        import hours_api_clickup_spark.datapipe.similarity as S
-        from hours_api_clickup_spark.plans.registry import load_table
-        from tests.conftest import SF_DIR
-
-        swaps = []
-        real_swap = S._fs_swap_dir
-        monkeypatch.setattr(
-            S, "_fs_swap_dir", lambda *a: (swaps.append(a), real_swap(*a))
-        )
-        emb = load_table(spark, SF_DIR, "embeddings")
-        old = emb.filter(F.col("vec_id") < 400)
-        batch = emb.filter(F.col("vec_id") == 401)
-        inc = str(tmp_path / "inc")
-        S.lsh_index_write(old, "embedding", "vec_id", inc, dim=64)
-        swaps.clear()  # the build itself stages+swaps (crash safety, r6)
-        S.lsh_index_upsert(batch, "embedding", "vec_id", inc, dim=64)
-        assert not swaps
-
-    def test_ivf_heavy_touch_routes_to_swap(self, spark, tmp_path, monkeypatch):
-        """IVF twin of the heavy-touch routing pin: a batch spread over
-        every cluster takes the swap branch and equals a rebuild."""
-        from pyspark.sql import functions as F
-
-        import hours_api_clickup_spark.datapipe.similarity as S
-        from hours_api_clickup_spark.plans.registry import load_table
-        from tests.conftest import SF_DIR
-
-        swaps = []
-        real_swap = S._fs_swap_dir
-        monkeypatch.setattr(
-            S, "_fs_swap_dir", lambda *a: (swaps.append(a), real_swap(*a))
-        )
-        emb = load_table(spark, SF_DIR, "embeddings")
-        cents = S.seed_centroids(
-            emb.filter(F.col("vec_id") < 900), "embedding", "vec_id", n_clusters=8
-        )
-        old = emb.filter(F.col("vec_id") < 900)
-        batch = emb.filter(F.col("vec_id") % 9 == 0)
-        inc = str(tmp_path / "inc")
-        S.ivf_index_write(old, "embedding", "vec_id", inc, cents)
-        swaps.clear()  # the build itself stages+swaps (crash safety, r6)
-        S.ivf_index_upsert(batch, "embedding", "vec_id", inc, cents)
-        assert swaps
-
-        full = str(tmp_path / "full")
-        combined = old.join(
-            batch.select("vec_id"), "vec_id", "left_anti"
-        ).unionByName(batch)
-        S.ivf_index_write(combined, "embedding", "vec_id", full, cents)
-
-        def canon(path):
-            return sorted(
-                (r["vec_id"], r["cluster_id"])
-                for r in S.ivf_index_read(spark, path).collect()
-            )
-
-        assert canon(inc) == canon(full)
 
 
 def test_doc_neardup_index_incremental_equals_one_shot(spark, tmp_path):
@@ -975,7 +906,7 @@ class TestMaintenanceLease:
     """VERDICT r8 #2: the single-maintainer contract every compactor
     documented is now a MECHANISM — a lease file checked by compacts
     and the streaming ingests — so a racing maintainer gets a loud
-    MaintenanceLeaseHeld instead of the silent wrong answer (a compact
+    storage.MaintenanceLeaseHeld instead of the silent wrong answer (a compact
     racing a crashed-mid-batch ingest re-classifies its ids as
     fresh)."""
 
@@ -984,22 +915,17 @@ class TestMaintenanceLease:
         refuse loudly and touch NOTHING; after release it must run."""
         import pytest
 
-        from hours_api_clickup_spark.datapipe.similarity import (
-            MaintenanceLeaseHeld,
-            _acquire_lease,
-            _release_lease,
-        )
 
         before = {d: self._listing(f"{path}/{d}") for d in listings}
-        _acquire_lease(spark, path, "simulated-ingest")
+        storage.acquire_lease(spark, path, "simulated-ingest")
         try:
-            with pytest.raises(MaintenanceLeaseHeld, match="lease"):
+            with pytest.raises(storage.MaintenanceLeaseHeld, match="lease"):
                 compact()
             # zero divergence: not one tier file added/removed/resized
             for d in listings:
                 assert self._listing(f"{path}/{d}") == before[d]
         finally:
-            _release_lease(spark, path)
+            storage.release_lease(spark, path)
         compact()  # released: the same call goes through
 
     @staticmethod
@@ -1078,12 +1004,12 @@ class TestMaintenanceLease:
             emb, "embedding", "vec_id", n_subspaces=4, n_codes=16
         )
         S.ivfpq_index_write(emb, "embedding", "vec_id", p, cents, cb)
-        S._acquire_lease(spark, p, "simulated-ingest")
+        storage.acquire_lease(spark, p, "simulated-ingest")
         try:
-            with pytest.raises(S.MaintenanceLeaseHeld, match="lease"):
+            with pytest.raises(storage.MaintenanceLeaseHeld, match="lease"):
                 S.ivfpq_index_write(emb, "embedding", "vec_id", p, cents, cb)
         finally:
-            S._release_lease(spark, p)
+            storage.release_lease(spark, p)
         S.ivfpq_index_write(emb, "embedding", "vec_id", p, cents, cb)
 
         # a compact that FAILS mid-run releases the lease (in-process
@@ -1093,18 +1019,18 @@ class TestMaintenanceLease:
         S.lsh_index_delete(spark, p, [0])
         import os
 
-        real_swap = S._fs_swap_dir
+        real_swap = storage.swap_dir
 
         def boom(*a, **k):
             raise RuntimeError("injected compact failure")
 
-        S._fs_swap_dir = boom
+        storage.swap_dir = boom
         try:
             with pytest.raises(RuntimeError, match="injected"):
                 S.lsh_index_compact(spark, p)
         finally:
-            S._fs_swap_dir = real_swap
-        assert not os.path.exists(f"{p}/{S._LEASE_FILE}")
+            storage.swap_dir = real_swap
+        assert not os.path.exists(f"{p}/{storage.LEASE_FILE}")
         S.lsh_index_compact(spark, p)  # retry succeeds immediately
 
     def test_stale_lease_taken_over(self, spark, tmp_path):
@@ -1123,9 +1049,9 @@ class TestMaintenanceLease:
         p = str(tmp_path / "lsh")
         S.lsh_index_write(emb, "embedding", "vec_id", p, dim=64)
         S.lsh_index_delete(spark, p, [0])
-        S._acquire_lease(spark, p, "crashed-holder")
-        lease = f"{p}/{S._LEASE_FILE}"
-        old = time.time() - S.LEASE_TTL_SEC - 60
+        storage.acquire_lease(spark, p, "crashed-holder")
+        lease = f"{p}/{storage.LEASE_FILE}"
+        old = time.time() - storage.LEASE_TTL_SEC - 60
         os.utime(lease, (old, old))
         S.lsh_index_compact(spark, p)  # takeover, no refusal
         assert not os.path.exists(lease)  # and released afterwards
@@ -1177,103 +1103,7 @@ class TestMaintenanceLease:
         # zero divergence: the refusal aborted the batch before any
         # mutation, and the lease was released on the way out
         assert self._listing(idx) == before
-        assert not os.path.exists(f"{idx}/{S._LEASE_FILE}")
-
-
-def test_doc_neardup_rebuild_crash_between_swaps_rolls_forward(
-    spark, tmp_path, monkeypatch
-):
-    """ADVICE r8: doc_neardup_index_write's publish was two sequential
-    directory swaps (bands then sig); a crash between them during a
-    doc-REMOVING rebuild left mixed generations — new bands, old sig —
-    so "did present in sig" no longer implied a complete index entry.
-    The commit marker makes the pair one transaction: the next entry
-    point rolls the rebuild FORWARD, and readers only ever observe
-    whole generations."""
-    import os
-
-    import pytest
-    from pyspark.sql import functions as F
-
-    import hours_api_clickup_spark.datapipe.similarity as sim
-    from hours_api_clickup_spark.datapipe.dedup import (
-        _doc_index_recover,
-        doc_neardup_index_append,
-        doc_neardup_index_write,
-        minhash_lsh_pairs,
-    )
-    from hours_api_clickup_spark.plans.registry import load_table
-    from tests.conftest import SF_DIR_SMOKE
-
-    docs = load_table(spark, SF_DIR_SMOKE, "documents")
-    gen_a = docs.filter(F.col("doc_id") % 10 < 8)
-    # gen B REMOVES docs (the case whose mixed-tier window broke the
-    # sig invariant) and is what a takedown-rebuild looks like
-    gen_b = gen_a.filter(F.col("doc_id") % 7 != 1)
-    batch = docs.filter(F.col("doc_id") % 10 >= 8)
-    b_ids = {r[0] for r in gen_b.select("doc_id").collect()}
-    removed = {
-        r[0] for r in gen_a.select("doc_id").collect()
-    } - b_ids
-    assert removed  # the rebuild must actually drop docs
-
-    path = str(tmp_path / "didx")
-    doc_neardup_index_write(gen_a, "doc_id", "text", path)
-
-    # crash EXACTLY between the two swaps: bands published, sig not
-    real_swap = sim._fs_swap_dir
-    calls = {"n": 0}
-
-    def crashing(spark_, live, staged):
-        real_swap(spark_, live, staged)
-        calls["n"] += 1
-        if calls["n"] == 1:
-            raise RuntimeError("injected crash between joint swaps")
-
-    monkeypatch.setattr(sim, "_fs_swap_dir", crashing)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        doc_neardup_index_write(gen_b, "doc_id", "text", path)
-    monkeypatch.undo()
-
-    # the mixed state the old code shipped: new bands, OLD sig, marker
-    assert os.path.exists(f"{path}/__rebuild_commit")
-    sig_dids = {
-        r[0] for r in spark.read.parquet(f"{path}/sig").select("did").collect()
-    }
-    assert removed <= sig_dids  # sig is still generation A
-
-    # any entry point recovers: generations align, marker + staged gone
-    _doc_index_recover(spark, path)
-    assert not os.path.exists(f"{path}/__rebuild_commit")
-    assert not os.path.exists(f"{path}/sig__staged")
-    assert not os.path.exists(f"{path}/bands__staged")
-    sig_dids = {
-        r[0] for r in spark.read.parquet(f"{path}/sig").select("did").collect()
-    }
-    band_dids = {
-        r[0]
-        for r in spark.read.parquet(f"{path}/bands").select("did").collect()
-    }
-    assert sig_dids == b_ids
-    assert band_dids <= b_ids
-
-    # and the recovered index behaves: incremental append ≡ one-shot
-    # over (gen B ∪ batch) restricted to pairs touching the batch
-    got = {
-        (r.id_a, r.id_b)
-        for r in doc_neardup_index_append(
-            batch, path, "doc_id", "text"
-        ).collect()
-    }
-    batch_ids = {r[0] for r in batch.select("doc_id").collect()}
-    want = {
-        (r.id_a, r.id_b)
-        for r in minhash_lsh_pairs(
-            gen_b.unionByName(batch), "doc_id", "text"
-        ).collect()
-        if r.id_a in batch_ids or r.id_b in batch_ids
-    }
-    assert got == want
+        assert not os.path.exists(f"{idx}/{storage.LEASE_FILE}")
 
 
 def test_ivfpq_append_equals_rebuild_probe(spark, tmp_path):
@@ -1381,8 +1211,8 @@ def test_aqe_skew_join_splits_hot_partition(spark):
 
 
 def test_mid_swap_crash_recovers_prior_index(spark, tmp_path):
-    """Simulate a crash in the _fs_swap_dir window (base renamed to
-    base__old, staged rename never happened): the next read OR upsert
+    """Simulate a crash in the storage.swap_dir window (base renamed to
+    base__old, staged rename never happened): the next read OR append
     must roll the prior index back in — never bootstrap-from-batch
     (which would silently discard the corpus)."""
     import os
@@ -1390,8 +1220,8 @@ def test_mid_swap_crash_recovers_prior_index(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from hours_api_clickup_spark.datapipe.similarity import (
+        lsh_index_append,
         lsh_index_read,
-        lsh_index_upsert,
         lsh_index_write,
     )
     from hours_api_clickup_spark.plans.registry import load_table
@@ -1409,11 +1239,11 @@ def test_mid_swap_crash_recovers_prior_index(spark, tmp_path):
     # a reader recovers transparently
     assert lsh_index_read(spark, path).count() == n_before
 
-    # crash again, then an UPSERT of a small batch must fold into the
+    # crash again, then an APPEND of a small batch must fold into the
     # RECOVERED corpus, not bootstrap an index of just the batch
     os.rename(f"{path}/base", f"{path}/base__old")
     batch = emb.filter((F.col("vec_id") >= 300) & (F.col("vec_id") < 310))
-    lsh_index_upsert(batch, "embedding", "vec_id", path, dim=64)
+    lsh_index_append(batch, "embedding", "vec_id", path, dim=64)
     vids = {
         r["vid"]
         for r in lsh_index_read(spark, path).select("vid").distinct().collect()
@@ -1492,7 +1322,6 @@ class TestInvertedIndexAppend:
         # serve the stale posting (documented bound); compaction must
         # restore probe == rebuild-of-current-corpus, and remove log/
         from hours_api_clickup_spark.datapipe.textindex import (
-            _fs_exists,
             inverted_index_append,
             inverted_index_compact,
             inverted_index_write,
@@ -1512,7 +1341,7 @@ class TestInvertedIndexAppend:
         inverted_index_write(current, "text", "doc_id", p2)
 
         assert self._probe(spark, p) == self._probe(spark, p2)
-        assert not _fs_exists(spark, f"{p}/log")
+        assert not storage.exists(spark, f"{p}/log")
 
     def test_append_bootstraps_missing_index(self, spark, tmp_path):
         from hours_api_clickup_spark.datapipe.textindex import (
@@ -1570,7 +1399,6 @@ class TestInvertedIndexAppend:
         import os
 
         from hours_api_clickup_spark.datapipe.textindex import (
-            _fs_exists,
             inverted_index_append,
             inverted_index_write,
         )
@@ -1581,7 +1409,7 @@ class TestInvertedIndexAppend:
         with open(f"{p}/base/_temporary/0/junk", "w") as fh:
             fh.write("half-written")
         inverted_index_append(docs, "text", "doc_id", p)
-        assert _fs_exists(spark, f"{p}/base/_SUCCESS")
+        assert storage.exists(spark, f"{p}/base/_SUCCESS")
         p2 = str(tmp_path / "ref")
         inverted_index_write(docs, "text", "doc_id", p2)
         assert self._probe(spark, p) == self._probe(spark, p2)
@@ -1593,7 +1421,6 @@ class TestInvertedIndexAppend:
         checkpoint along the way must probe identically to a
         from-scratch build of the then-current corpus."""
         from hours_api_clickup_spark.datapipe.textindex import (
-            _fs_exists,
             inverted_index_append,
             inverted_index_compact,
             inverted_index_write,
@@ -1640,7 +1467,7 @@ class TestInvertedIndexAppend:
         # double compact: idempotent, log stays absent
         inverted_index_compact(spark, p)
         assert self._probe(spark, p) == want
-        assert not _fs_exists(spark, f"{p}/log")
+        assert not storage.exists(spark, f"{p}/log")
 
 
 def test_inverted_index_matches_python_recount(spark, tmp_path):
@@ -2502,7 +2329,7 @@ class TestDocNeardupCompactCrashWindows:
     """Review r7: the compactor's crash/concurrency windows."""
 
     def test_readers_recover_mid_compact_swap(self, spark, tmp_path):
-        """A crash between _fs_swap_dir's two renames leaves live
+        """A crash between storage.swap_dir's two renames leaves live
         absent and __old present; every reader must roll it back, and
         the streaming bootstrap must NOT misread it as first-run."""
         import os
@@ -2571,7 +2398,7 @@ class TestDocNeardupCompactCrashWindows:
         doc_neardup_index_write(corpus, "doc_id", "text", path)
         doc_neardup_index_delete(spark, path, [early])
 
-        real_swap = sim._fs_swap_dir
+        real_swap = storage.swap_dir
         fired = []
 
         def inject_late_delete(spark_, live, staged):
@@ -2580,9 +2407,9 @@ class TestDocNeardupCompactCrashWindows:
                 doc_neardup_index_delete(spark, path, [late])
             return real_swap(spark_, live, staged)
 
-        monkeypatch.setattr(sim, "_fs_swap_dir", inject_late_delete)
+        monkeypatch.setattr(storage, "swap_dir", inject_late_delete)
         doc_neardup_index_compact(spark, path)
-        monkeypatch.setattr(sim, "_fs_swap_dir", real_swap)
+        monkeypatch.setattr(storage, "swap_dir", real_swap)
 
         # early folded physically; late's marker survived the drop
         sig = spark.read.parquet(f"{path}/sig")
@@ -2623,7 +2450,7 @@ class TestCompactConsumedSnapshot:
     fold. The fix is the consumed-snapshot protocol (delete exactly the
     snapshot, then a NON-recursive dir drop that refuses a non-empty
     dir) shared by all five index families via
-    similarity._fs_drop_consumed."""
+    storage.drop_consumed."""
 
     def test_drop_consumed_keeps_late_file(self, spark, tmp_path):
         """A file committed after the snapshot survives the drop; the
@@ -2631,20 +2458,15 @@ class TestCompactConsumedSnapshot:
         dir itself stays for the next compact."""
         import os
 
-        from hours_api_clickup_spark.datapipe.similarity import (
-            _fs_drop_consumed,
-            _fs_snapshot_files,
-        )
-
         d = tmp_path / "tier"
         d.mkdir()
         (d / "part-0001.parquet").write_bytes(b"x")
         (d / "part-0002.parquet").write_bytes(b"x")
         (d / "_SUCCESS").write_bytes(b"")
-        fs, dir_p, consumed = _fs_snapshot_files(spark, str(d))
+        consumed = storage.snapshot_files(spark, str(d))
         assert len(consumed) == 2
         (d / "part-late.parquet").write_bytes(b"x")  # the TOCTOU arrival
-        _fs_drop_consumed(fs, dir_p, consumed)
+        storage.drop_consumed(spark, str(d), consumed)
         assert os.path.isdir(d)
         assert sorted(os.listdir(d)) == ["part-late.parquet"]
 
@@ -2653,17 +2475,11 @@ class TestCompactConsumedSnapshot:
         steady-state compact leaves no empty debris behind."""
         import os
 
-        from hours_api_clickup_spark.datapipe.similarity import (
-            _fs_drop_consumed,
-            _fs_snapshot_files,
-        )
-
         d = tmp_path / "tier"
         d.mkdir()
         (d / "part-0001.parquet").write_bytes(b"x")
         (d / "_SUCCESS").write_bytes(b"")
-        fs, dir_p, consumed = _fs_snapshot_files(spark, str(d))
-        _fs_drop_consumed(fs, dir_p, consumed)
+        storage.drop_consumed(spark, str(d), storage.snapshot_files(spark, str(d)))
         assert not os.path.exists(d)
 
     def test_lsh_append_during_compact_survives(
@@ -2698,7 +2514,7 @@ class TestCompactConsumedSnapshot:
         lsh_index_write(old, "embedding", "vec_id", path, dim=64)
         lsh_index_append(appended, "embedding", "vec_id", path, dim=64)
 
-        real_swap = sim._fs_swap_dir
+        real_swap = storage.swap_dir
         fired = []
 
         def inject_late_append(spark_, live, staged):
@@ -2707,9 +2523,9 @@ class TestCompactConsumedSnapshot:
                 lsh_index_append(late, "embedding", "vec_id", path, dim=64)
             return real_swap(spark_, live, staged)
 
-        monkeypatch.setattr(sim, "_fs_swap_dir", inject_late_append)
+        monkeypatch.setattr(storage, "swap_dir", inject_late_append)
         lsh_index_compact(spark, path)
-        monkeypatch.setattr(sim, "_fs_swap_dir", real_swap)
+        monkeypatch.setattr(storage, "swap_dir", real_swap)
 
         # the mid-compact batch survived in the log tier...
         assert os.path.isdir(f"{path}/log")
@@ -3156,17 +2972,17 @@ class TestFourthReviewPassRegressions:
             for r in doc_neardup_index_pairs_for_ids(spark, path, ids).collect()
         }
 
-        real_swap = sim._fs_swap_dir
+        real_swap = storage.swap_dir
 
         def crash_swap(spark_, live, staged):
             raise RuntimeError("injected crash before any swap")
 
-        monkeypatch.setattr(sim, "_fs_swap_dir", crash_swap)
+        monkeypatch.setattr(storage, "swap_dir", crash_swap)
         import pytest as _pytest
 
         with _pytest.raises(RuntimeError, match="injected crash"):
             doc_neardup_index_write(docs, "doc_id", "text", path)
-        monkeypatch.setattr(sim, "_fs_swap_dir", real_swap)
+        monkeypatch.setattr(storage, "swap_dir", real_swap)
         # live index untouched and fully consistent
         got = {
             (r.id_a, r.id_b)
@@ -3219,66 +3035,71 @@ def test_index_lease_dead_same_host_holder_taken_over(spark, tmp_path):
     os.makedirs(p)
     proc = subprocess.Popen(["true"])
     proc.wait()
-    with open(os.path.join(p, S._LEASE_FILE), "w") as f:
+    with open(os.path.join(p, storage.LEASE_FILE), "w") as f:
         f.write(f"crashed host={socket.gethostname()} pid={proc.pid} t=0")
-    S._acquire_lease(spark, p, "restarted-ingest")  # takes over
-    S._release_lease(spark, p)
+    storage.acquire_lease(spark, p, "restarted-ingest")  # takes over
+    storage.release_lease(spark, p)
 
-    with open(os.path.join(p, S._LEASE_FILE), "w") as f:
+    with open(os.path.join(p, storage.LEASE_FILE), "w") as f:
         f.write(f"live host={socket.gethostname()} pid={os.getpid()} t=0")
-    with pytest.raises(S.MaintenanceLeaseHeld):
-        S._acquire_lease(spark, p, "racer")
-    os.unlink(os.path.join(p, S._LEASE_FILE))
+    with pytest.raises(storage.MaintenanceLeaseHeld):
+        storage.acquire_lease(spark, p, "racer")
+    os.unlink(os.path.join(p, storage.LEASE_FILE))
 
-    with open(os.path.join(p, S._LEASE_FILE), "w") as f:
+    with open(os.path.join(p, storage.LEASE_FILE), "w") as f:
         f.write(f"remote host=some-other-host pid={proc.pid} t=0")
-    with pytest.raises(S.MaintenanceLeaseHeld):
-        S._acquire_lease(spark, p, "racer")
+    with pytest.raises(storage.MaintenanceLeaseHeld):
+        storage.acquire_lease(spark, p, "racer")
 
 
 class TestBalancedDirRepartition:
-    """r13: the partitioned index writes assign each output directory
-    its own shuffle task via a driver-computed salt whose Murmur3 hash
-    lands exactly on partition pid — pinned here against the JVM hash
-    so a Spark upgrade that changed HashPartitioning would fail loudly
-    instead of silently skewing the write."""
+    """The partitioned index writes deal output directories over the
+    write tasks via a driver-computed salt whose Murmur3 hash lands
+    exactly on partition ``pid mod n_tasks`` (with n_tasks = n_dirs,
+    each directory gets its own task) — pinned here against the JVM
+    hash so a Spark upgrade that changed HashPartitioning would fail
+    loudly instead of silently skewing the write."""
 
     def test_mmh3_matches_spark_hash(self, spark):
         from pyspark.sql import functions as F
 
-        from hours_api_clickup_spark.datapipe.similarity import _mmh3_int
-
         vals = list(range(-8, 40)) + [2**31 - 1, -(2**31), 123456789]
         df = spark.createDataFrame([(v,) for v in vals], "x int")
         got = {r["x"]: r["h"] for r in df.select("x", F.hash("x").alias("h")).collect()}
-        assert all(got[v] == _mmh3_int(v) for v in vals)
+        assert all(got[v] == tiered.mmh3_int(v) for v in vals)
 
     def test_salts_are_injective(self):
-        from hours_api_clickup_spark.datapipe.similarity import (
-            _exact_partition_salts,
-            _mmh3_int,
-        )
-
         for n in (16, 96):
-            salts = _exact_partition_salts(n)
-            assert [_mmh3_int(s) % n for s in salts] == list(range(n))
+            salts = tiered.partition_salts(n)
+            assert [tiered.mmh3_int(s) % n for s in salts] == list(range(n))
 
     def test_each_pid_gets_its_own_partition(self, spark):
         from pyspark.sql import functions as F
-
-        from hours_api_clickup_spark.datapipe.similarity import (
-            _balanced_dir_repartition,
-        )
 
         n = 96
         pids = spark.range(0, n * 20).select(
             (F.col("id") % n).cast("int").alias("pid")
         )
         placed = (
-            _balanced_dir_repartition(pids, F.col("pid"), n)
+            tiered.balanced_repartition(pids, F.col("pid"), n, n)
             .select("pid", F.spark_partition_id().alias("part"))
             .distinct()
             .collect()
         )
         assert len(placed) == n
         assert all(r["pid"] == r["part"] for r in placed)
+
+    @pytest.mark.parametrize("bad", [-1, 16])
+    def test_out_of_range_pid_fails_the_write(self, spark, bad):
+        """A pid outside [0, n) must fail loudly, not collapse every
+        such row onto one partition (element_at's null)."""
+        from pyspark.sql import functions as F
+
+        pids = spark.range(0, 32).select(
+            F.when(F.col("id") == 7, F.lit(bad))
+            .otherwise(F.col("id") % 16)
+            .cast("int")
+            .alias("pid")
+        )
+        with pytest.raises(Exception, match="partition id out of range"):
+            tiered.balanced_repartition(pids, F.col("pid"), 16, 4).collect()

@@ -11,6 +11,7 @@ from zoneinfo import ZoneInfo
 
 import pytest
 
+from hours_api_clickup_spark import storage
 from hours_api_clickup_spark.scheduler import (
     OSLO,
     REFERENCE_JOBS,
@@ -445,7 +446,7 @@ def test_maintenance_sweep_tick_end_to_end(spark, tmp_path):
     # target 2: an index whose lease a live ingest holds → deferred
     held_idx = str(tmp_path / "lsh_held")
     S.lsh_index_write(emb, "embedding", "vec_id", held_idx, dim=64)
-    S._acquire_lease(spark, held_idx, "live-streaming-ingest")
+    storage.acquire_lease(spark, held_idx, "live-streaming-ingest")
 
     cfg = ServerConfig(
         spark=spark,
@@ -483,7 +484,7 @@ def test_maintenance_sweep_tick_end_to_end(spark, tmp_path):
             cfg, state, oslo(2026, 1, 4, 2, 0), jobs=ALL_JOBS
         ) == []
     finally:
-        S._release_lease(spark, held_idx)
+        storage.release_lease(spark, held_idx)
     # lease released (the ingest finished): next week's tick compacts it
     results = run_pending(cfg, state, oslo(2026, 1, 11, 2, 0), jobs=ALL_JOBS)
     sweep = next(r for r in results if r["job"] == MAINTENANCE_JOB.name)

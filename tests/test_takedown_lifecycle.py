@@ -18,6 +18,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from hours_api_clickup_spark import storage
 from hours_api_clickup_spark.plans.registry import load_table
 from tests.conftest import SF_DIR
 
@@ -293,12 +294,12 @@ def test_streaming_ivfpq_lifecycle_equals_fresh_build(spark, tmp_path):
 
     # and a compact racing a live streamed batch refuses loudly: the
     # lease the wrapper holds per batch is the same one the rebuild takes
-    S._acquire_lease(spark, p, "simulated-streaming-batch")
+    storage.acquire_lease(spark, p, "simulated-streaming-batch")
     try:
-        with pytest.raises(S.MaintenanceLeaseHeld, match="lease"):
+        with pytest.raises(storage.MaintenanceLeaseHeld, match="lease"):
             S.ivfpq_index_write(final_live, "embedding", "vec_id", p, cents, cb)
     finally:
-        S._release_lease(spark, p)
+        storage.release_lease(spark, p)
 
 
 def test_streaming_lsh_lifecycle_equals_fresh_build(spark, tmp_path):
