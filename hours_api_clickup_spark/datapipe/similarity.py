@@ -554,16 +554,10 @@ def lsh_probe_topk(
     )
     idx = reader.filter(cond)
     if "seq" in idx.columns:
-        # merge-on-read resolution: a vid appended more than once keeps
-        # only its newest version among the probed candidates (the
+        # merge-on-read resolution among the probed candidates (the
         # candidate set is bucket-pruned and tiny, so the window is a
         # few rows, not a corpus pass)
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("vid")
-        idx = idx.withColumn("_mx", F.max("seq").over(w)).filter(
-            F.col("seq") == F.col("_mx")
-        )
+        idx = tiered.newest(idx, "vid")
     cand = idx.select("vid", "v").dropDuplicates(["vid"])
     q = F.array(*[F.lit(float(x)) for x in query_vec])
     scored = cand.select(
@@ -1349,12 +1343,7 @@ def ivf_probe_topk(
     cand = ivf_index_read(spark, index_path).filter(
         F.col("cluster_id").isin([int(p) for p in probes])
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(id_col)
-    cand = cand.withColumn("_mx", F.max("seq").over(w)).filter(
-        F.col("seq") == F.col("_mx")
-    )
+    cand = tiered.newest(cand, id_col)
     return brute_force_topk(
         cand, vec_col, id_col, query_vec, k=k, exclude_id=exclude_id
     )
@@ -2315,8 +2304,6 @@ def ivfpq_probe_topk(
     re-rank. Candidates are identical to ``ivfpq_topk`` with the same
     quantizers; scan bytes are nprobe/n_clusters × (codes + C vectors).
     """
-    from pyspark.sql import Window
-
     q = np.asarray([float(x) for x in query_vec], dtype=np.float64)
     qn = q / max(np.linalg.norm(q), 1e-12)
     probes = [int(p) for p in np.argsort(-(centroids @ qn), kind="stable")[:nprobe]]
@@ -2340,10 +2327,7 @@ def ivfpq_probe_topk(
         codes.withColumnRenamed("vid", id_col),
         f"{index_path}/tombstones",
     ).withColumnRenamed(id_col, "vid")
-    w_seq = Window.partitionBy("vid")
-    codes = codes.withColumn("_mx", F.max("seq").over(w_seq)).filter(
-        F.col("seq") == F.col("_mx")
-    )
+    codes = tiered.newest(codes, "vid")
     dt = pq_adc_table(query_vec, codebooks)
     cand = codes.select(F.col("vid"), _adc_col(dt).alias("adc"))
     if exclude_id is not None:
@@ -2359,9 +2343,7 @@ def ivfpq_probe_topk(
         lambda: ivf_index_read(spark, index_path),
         ivfpq_index_recover,
     ).filter(F.col("cluster_id").isin(probes))
-    base = base.withColumn(
-        "_bmx", F.max("seq").over(Window.partitionBy(id_col))
-    ).filter(F.col("seq") == F.col("_bmx"))
+    base = tiered.newest(base, id_col)
     pruned = base.join(
         F.broadcast(cand_ids), _c(id_col) == F.col("__pq_cand_id")
     ).drop("__pq_cand_id")

@@ -31,7 +31,7 @@ this is part of the beyond-reference scale surface.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hours_api_clickup_spark import storage
@@ -243,13 +243,7 @@ def term_postings(
     pruned = index.filter(
         F.col("tb").isin(buckets) & F.col("token").isin(terms)
     )
-    w = Window.partitionBy("token", "doc_id")
-    return (
-        pruned.withColumn("_mx", F.max("seq").over(w))
-        .filter(F.col("seq") == F.col("_mx"))
-        .drop("_mx")
-        .dropDuplicates(["token", "doc_id"])
-    )
+    return tiered.newest(pruned, "token", "doc_id").dropDuplicates(["token", "doc_id"])
 
 
 def index_term_topk(

@@ -221,6 +221,18 @@ def read_tier(spark, path: str, tier: str, recover) -> DataFrame:
     )
 
 
+def newest(view: DataFrame, *keys: str) -> DataFrame:
+    """Merge-on-read resolution: keep each key's rows at its newest
+    ``seq`` (a key appended more than once keeps only its latest
+    version). One window max per key — the fold and every probe resolve
+    through this one expression."""
+    return (
+        view.withColumn("_mx", F.max("seq").over(Window.partitionBy(*keys)))
+        .filter(F.col("seq") == F.col("_mx"))
+        .drop("_mx")
+    )
+
+
 def apply_tombstones(spark, view: DataFrame, tomb_path: str) -> DataFrame:
     """Keep a row iff its ``seq`` is newer than its key's newest
     tombstone: a delete kills every current version, and a LATER
@@ -367,15 +379,10 @@ def compact(spark, path: str, layout: Layout, owner: str) -> None:
         consumed = {t: storage.snapshot_files(spark, f"{path}/{t}") for t in ("log", "tombstones")}
         both = tiers(spark, path, layout)
         view = apply_tombstones(spark, both, f"{path}/tombstones")
-        newest = (
-            view.withColumn("_mx", F.max("seq").over(Window.partitionBy(layout.key)))
-            .filter(F.col("seq") == F.col("_mx"))
-            .drop("_mx")
-            .dropDuplicates([layout.key, *layout.fold])
-        )
+        folded = newest(view, layout.key).dropDuplicates([layout.key, *layout.fold])
         bounds = both.agg(*[F.max(c) for c in layout.parts]).head()
         radices = tuple(1 + (b if b is not None else 0) for b in bounds)
-        write_base(newest, path, layout, radices)
+        write_base(folded, path, layout, radices)
         for tier, files in consumed.items():
             storage.drop_consumed(spark, f"{path}/{tier}", files)
 

@@ -13,18 +13,12 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import functions as F  # noqa: F401  (parity with siblings)
-
-
-def _fs(spark, path: str):
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p, jvm
+from hours_api_clickup_spark import storage
 
 
 def dir_file_stats(spark, path: str) -> tuple[int, int]:
     """(n_files, total_bytes) of the parquet data files under ``path``."""
-    fs, p, _ = _fs(spark, path)
+    fs, p = storage.filesystem(spark, path)
     n, total = 0, 0
     it = fs.listFiles(p, True)
     while it.hasNext():
@@ -71,8 +65,6 @@ def compact_small_files(
     before); plain ``df.write.mode("append")`` writers are not leased,
     so quiescing them remains the deployment's contract — the drift
     check turns a violation into an error, not a lost file."""
-    from hours_api_clickup_spark import storage
-
     storage.recover_swap(spark, path)
     with storage.maintenance_lease(spark, f"{path}__lock", "compact_small_files"):
         n_files, total = dir_file_stats(spark, path)

@@ -38,10 +38,7 @@ from hours_api_clickup_spark.operators.merge import (
     merge_refresh,
 )
 from hours_api_clickup_spark.operators.transform import transform_time_entries
-from hours_api_clickup_spark.sinks.writers import (
-    csv_backup,
-    write_table_overwrite,
-)
+from hours_api_clickup_spark.sinks.writers import csv_backup
 
 DEFAULT_REFRESH_DAYS = 60  # deploy.sh:70 (REFRESH_DAYS=60, 6-hourly job)
 
@@ -133,8 +130,11 @@ def sync_refresh(
             )
 
             merged, obs = observe_expectations(merged, expectations)
-        # self-overwrite safety: materialize before truncating the source
-        rows = _overwrite_via_checkpoint(merged, fact_path)
+        # stage-then-swap: a failed write leaves the old table live
+        storage.replace_table(merged, fact_path)
+        # footer-only count (parquet count() is satisfied from
+        # row-group metadata, no data pages)
+        rows = spark.read.parquet(fact_path).count()
     metrics = None
     if obs is not None:
         from hours_api_clickup_spark.operators.validate import (
@@ -170,65 +170,6 @@ def table_lock(
         ttl_sec=storage.LEASE_TTL_SEC if ttl_sec is None else ttl_sec,
         wait_s=wait_s,
     )
-
-
-def sync_refresh_partitioned(
-    spark: SparkSession,
-    raw_entries: DataFrame,
-    fact_path: str,
-    today_oslo: dt.date,
-    days: int = DEFAULT_REFRESH_DAYS,
-    backup_path: str | None = None,
-) -> SyncResult:
-    """Windowed refresh against a month-partitioned fact table — the
-    at-scale form: only the window's month partitions are read and
-    rewritten (operators.merge.merge_refresh_partitioned); history
-    partitions are never touched."""
-    from hours_api_clickup_spark.operators.merge import (
-        merge_refresh_partitioned,
-    )
-    from hours_api_clickup_spark.sinks.writers import write_fact_partitioned
-
-    staging = _stage_entries(raw_entries)
-    if backup_path:
-        csv_backup(staging, backup_path)
-    lo = today_oslo - dt.timedelta(days=days)
-    # first-run probe through the Hadoop FS API so it answers correctly
-    # on any filesystem Spark can write (os.path.exists is local-only);
-    # resolved from the TABLE's path, not the cluster default FS — a
-    # default-FS probe on an s3a table either throws Wrong FS or, on
-    # lenient implementations, returns False and dynamic-overwrites an
-    # existing table as if it were a first run (review r6)
-    jvm = spark._jvm
-    fs = jvm.org.apache.hadoop.fs.Path(fact_path).getFileSystem(
-        spark._jsc.hadoopConfiguration()
-    )
-    # table lock: see sync_refresh — the partitioned merge reads month
-    # partitions and dynamic-overwrites them, the same read-modify-write
-    # cycle with the same racing-writer lost-update mode
-    with table_lock(spark, fact_path, "sync_refresh_partitioned"):
-        # ownership fence before the IN-PLACE dynamic partition
-        # overwrite (review r10) — this commit never goes through
-        # storage.swap_dir; see _snapshot_sync for the rationale
-        storage.verify_swap_ownership(spark, fact_path)
-        if not fs.exists(jvm.org.apache.hadoop.fs.Path(fact_path)):
-            # first run: bootstrap the layout
-            write_fact_partitioned(
-                staging.filter(refresh_window_pred(today_oslo, days)),
-                fact_path,
-            )
-        else:
-            merge_refresh_partitioned(
-                spark, fact_path, staging, lo, today_oslo, key="id"
-            )
-    # reference parity: the reported metric is the TABLE's row count
-    # after the load (fetch_clickup_data.py reports the loaded table).
-    # Cost note: a parquet count() is answered from row-group metadata
-    # (footers only, no data pages) — at very large history even footer
-    # listing has a price; report the merged-slice count instead if
-    # that ever matters.
-    rows = spark.read.parquet(fact_path).count()
-    return SyncResult(table=fact_path, rows=rows, mode="refresh_partitioned")
 
 
 def sync_refresh_manifest(
@@ -283,8 +224,8 @@ def sync_full_reindex(
         wait_s=lock_wait_s, ttl_sec=lock_ttl_s,
     ):
         fact = read_fact_or_empty(spark, fact_path, staging)
-        merged = merge_full_reindex(fact, staging)
-        rows = _overwrite_via_checkpoint(merged, fact_path)
+        storage.replace_table(merge_full_reindex(fact, staging), fact_path)
+        rows = spark.read.parquet(fact_path).count()
     return SyncResult(table=fact_path, rows=rows, mode="full_reindex")
 
 
@@ -313,30 +254,6 @@ def read_fact_or_empty(
         raise
 
 
-def _overwrite_via_checkpoint(df: DataFrame, path: str) -> int:
-    """Overwrite ``path`` with ``df`` even when ``df`` reads from it —
-    via stage-then-swap, NOT an in-place overwrite (review r6): parquet
-    overwrite truncates the target at job start, so a crash mid-write
-    (OOM-kill, node loss) left the fact table empty and the NEXT
-    refresh merged against the truncated remnant and committed it —
-    permanent loss of everything outside the window. Writing to
-    ``{path}__staged`` needs no lineage cut (the plan still reads the
-    live path) and the two-rename swap keeps the old table readable up
-    to the final rename, with ``storage.recover_swap`` rolling back a
-    mid-swap crash at the next read. (On a real warehouse this is a
-    Delta/Iceberg MERGE or RTAS — same contract.) Kept name for the
-    call sites; the checkpoint is gone because it is no longer needed.
-    """
-    spark = df.sparkSession
-    storage.recover_swap(spark, path)
-    staged = f"{path}__staged"
-    df.write.mode("overwrite").parquet(staged)
-    storage.swap_dir(spark, path, staged)
-    # footer-only count (parquet count() is satisfied from row-group
-    # metadata, no data pages)
-    return spark.read.parquet(path).count()
-
-
 def _snapshot_sync(
     build,
     raw: DataFrame,
@@ -350,18 +267,15 @@ def _snapshot_sync(
     if backup_path:
         csv_backup(dim, backup_path)
     # table lock: a snapshot load has no read-modify cycle, but two
-    # racing in-place overwrites (WRITE_TRUNCATE parity) interleave
-    # their delete-then-write phases into a mixed directory
+    # racing loads would swap over each other's staged directory.
+    # WRITE_TRUNCATE parity through stage-then-swap: a write that fails
+    # mid-job leaves the previous dimension readable, and swap_dir
+    # fences the commit against a lost lock
     with table_lock(
         dim.sparkSession, path, f"sync_{mode}",
         wait_s=lock_wait_s, ttl_sec=lock_ttl_s,
     ):
-        # ownership fence before the IN-PLACE overwrite (review r10):
-        # this commit never goes through storage.swap_dir, so without
-        # the explicit re-verify a holder paused past the ttl would
-        # silently truncate-and-replace its successor's published dim
-        storage.verify_swap_ownership(dim.sparkSession, path)
-        write_table_overwrite(dim, path)
+        storage.replace_table(dim, path)
         # count the materialized output — re-counting `dim` would re-run
         # the whole build (and raw scan) a second time
         rows = dim.sparkSession.read.parquet(path).count()
@@ -852,7 +766,7 @@ def run_maintenance(spark: SparkSession, targets: list[str]) -> list[dict]:
     the ingest pipeline, not a generic sweep.)
 
     Per-target isolation mirrors the scheduler's per-job contract: a
-    held maintenance/publish LEASE — some ingest or publish is running
+    held maintenance LEASE — some ingest or publish is running
     — reports the target ``deferred`` (retry next sweep); any other
     failure reports ``error``; neither stops the remaining targets.
     """
@@ -867,7 +781,6 @@ def run_maintenance(spark: SparkSession, targets: list[str]) -> list[dict]:
         inverted_index_compact,
     )
     from hours_api_clickup_spark.sinks.versioned import (
-        PublishLeaseHeld,
         prune_months,
         prune_snapshots,
     )
@@ -920,7 +833,7 @@ def run_maintenance(spark: SparkSession, targets: list[str]) -> list[dict]:
             else:
                 raise ValueError(f"unknown maintenance family {family!r}")
             out["status"] = "ok"
-        except (storage.MaintenanceLeaseHeld, PublishLeaseHeld) as exc:
+        except storage.MaintenanceLeaseHeld as exc:
             # an ingest/publish holds the lease: defer, don't fail —
             # the next sweep retries (the scheduler's watermark-stays
             # semantics)

@@ -1,7 +1,3 @@
-from hours_api_clickup_spark.sinks.writers import (
-    csv_backup,
-    write_fact_partitioned,
-    write_table_overwrite,
-)
+from hours_api_clickup_spark.sinks.writers import csv_backup
 
-__all__ = ["csv_backup", "write_table_overwrite", "write_fact_partitioned"]
+__all__ = ["csv_backup"]

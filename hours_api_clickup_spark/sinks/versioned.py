@@ -22,208 +22,44 @@ core):
 This intentionally does NOT implement multi-writer commit protocols
 (that is a table format's job); single-writer pipelines — this repo's
 sync model — get crash-safe snapshots and time travel with zero
-dependencies.
+dependencies. The single writer is enforced, not assumed: every
+read-modify-publish cycle (snapshot write, atomic merge, bootstrap,
+both pruners) runs under ``storage.maintenance_lease`` on the store
+root, and the pointer and manifest replaces are fenced by
+``storage.verify_swap_ownership``. Without it, two maintainers would
+silently erase each other's months (both derive the new manifest from
+the same stale read), or GC a version an in-flight publish is about
+to reference; with it, the loser gets ``storage.MaintenanceLeaseHeld``.
 """
 
 from __future__ import annotations
 
+import json
 import os
-from contextlib import contextmanager
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
+from hours_api_clickup_spark import storage
+
 _POINTER = "_LATEST"
 
-_LEASE = "__publish_lease"
-LEASE_TTL_SEC = 3600
+
+def _session() -> SparkSession:
+    """The session the store's lease and fences go through (the store
+    functions that take no DataFrame take no session either)."""
+    return SparkSession.getActiveSession() or SparkSession.builder.getOrCreate()
 
 
-class PublishLeaseHeld(RuntimeError):
-    """Another maintainer holds this store's publish lease — the loud-
-    refusal form of the store's single-writer contract (verdict r8 #8,
-    the sibling of the index maintainers'
-    ``storage.MaintenanceLeaseHeld``)."""
-
-
-class PublishLeaseLost(RuntimeError):
-    """This publisher's lease was taken over mid-run (a >ttl stall let
-    a successor claim it) and the loss was detected at the pointer/
-    manifest swap — the publish is REFUSED so the paused-then-resumed
-    holder can never clobber the successor's commit (VERDICT r9 #2)."""
-
-
-# Per-thread {store_path: claim_token} for leases held via
-# ``publish_lease`` — lets the commit points (pointer/manifest
-# ``os.replace``) re-verify ownership without threading a token
-# through every publish helper's signature.
-import threading as _threading
-
-_HELD = _threading.local()
-
-
-def _held_publish_leases() -> dict:
-    d = getattr(_HELD, "by_path", None)
-    if d is None:
-        d = {}
-        _HELD.by_path = d
-    return d
-
-
-def _lease_token_on_disk(path: str) -> str | None:
-    """Token of the on-disk lease; None when ABSENT; the shared
-    ``LEASE_UNREADABLE`` sentinel when it exists but can't be read
-    (commit points then refuse — the safe direction — and the fenced
-    release skips its delete; the ttl expires the orphan). Same
-    semantics and parser as the index maintenance lease (review r10)."""
-    import time
-
-    from hours_api_clickup_spark.storage import LEASE_UNREADABLE, parse_lease_fields
-
-    lease = os.path.join(path, _LEASE)
-    for attempt in range(3):
-        try:
-            with open(lease) as f:
-                return parse_lease_fields(f.read()).get("token")
-        except FileNotFoundError:
-            return None
-        except OSError:
-            if attempt == 2:
-                return LEASE_UNREADABLE
-            time.sleep(0.1)
-
-
-def _verify_publish_ownership(path: str) -> None:
-    """Raise ``PublishLeaseLost`` when this thread holds a publish
-    lease on ``path`` whose claim token no longer matches the lease on
-    disk — called immediately before each pointer/manifest swap, so a
-    paused-then-resumed holder refuses its commit instead of clobbering
-    the successor's (VERDICT r9 #2b). Unleased callers are not fenced
-    (the lease is opt-in by design)."""
-    token = _held_publish_leases().get(path)
-    if token is not None and _lease_token_on_disk(path) != token:
-        _held_publish_leases().pop(path, None)
-        raise PublishLeaseLost(
-            f"publish lease at {os.path.join(path, _LEASE)} no longer "
-            f"carries this holder's claim token — a successor took "
-            f"over after a >ttl stall; refusing to publish over its "
-            f"work"
-        )
-
-
-@contextmanager
-def publish_lease(path: str, owner: str, ttl_sec: int = LEASE_TTL_SEC):
-    """Best-effort single-writer lease on a store root. The store's
-    publish cycle is read-manifest → write versions → swap pointer, and
-    its GC keeps only manifest-referenced versions — two concurrent
-    maintainers can silently erase each other's published months (both
-    derive the new manifest from the same stale read) or GC a version
-    an in-flight publish is about to reference. Every such cycle
-    (atomic merge, bootstrap, snapshot write, both pruners) runs under
-    this lease so the race becomes a loud ``PublishLeaseHeld``.
-
-    Same semantics as the index maintenance lease: ``O_EXCL`` create is
-    the atomic claim, a stale lease is taken over, and in-process
-    failures release on the way out. Staleness is two-tier: a holder on
-    THIS host whose pid is gone is presumed crashed immediately (a
-    killed publisher must not block its own restart for the whole
-    ttl), anything else waits out ``ttl_sec`` by mtime (pid liveness
-    means nothing across hosts, and a recycled pid just falls back to
-    the ttl). Local-FS primitives because this store IS local-FS by
-    design (object stores should use a real table format's commit
-    protocol, see module docstring)."""
-    import socket
-    import time
-
-    os.makedirs(path, exist_ok=True)
-    lease = os.path.join(path, _LEASE)
-    host = socket.gethostname()
-    if os.path.exists(lease):
-        try:
-            age = time.time() - os.path.getmtime(lease)
-        except OSError:
-            age = 0.0  # raced a concurrent claim: treat as live
-        if age <= ttl_sec and not _holder_known_dead(lease, host):
-            raise PublishLeaseHeld(
-                f"publish lease at {lease} is live (age {age:.0f}s <= "
-                f"ttl {ttl_sec}s) — another publish/GC is running; "
-                f"{owner!r} must wait or the holder must release/crash "
-                f"past the ttl"
-            )
-        try:
-            os.unlink(lease)  # stale: holder presumed crashed
-        except FileNotFoundError:
-            pass
-    try:
-        fd = os.open(lease, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError:
-        raise PublishLeaseHeld(
-            f"lost the publish-lease race at {lease}"
-        ) from None
-    import uuid
-
-    token = uuid.uuid4().hex
-    with os.fdopen(fd, "w") as f:
-        f.write(
-            f"{owner} host={host} pid={os.getpid()} "
-            f"t={int(time.time())} token={token}"
-        )
-    _held_publish_leases()[path] = token
-    # heartbeat: re-touch every ttl/4 so a legitimate publish outlasting
-    # the ttl (a big bootstrap at real scale) is never stolen mid-run —
-    # see storage.maintenance_lease for the full rationale
-    import threading
-
-    stop = threading.Event()
-
-    def _heartbeat() -> None:
-        while not stop.wait(max(ttl_sec / 4.0, 0.05)):
-            try:
-                os.utime(lease, None)
-            except OSError:
-                return  # lease gone: stop quietly
-
-    hb = threading.Thread(
-        target=_heartbeat, daemon=True, name=f"publish-heartbeat {owner}"
-    )
-    hb.start()
-    try:
-        yield
-    finally:
-        stop.set()
-        _held_publish_leases().pop(path, None)
-        # fenced release: after a >ttl stall and takeover the lease on
-        # disk belongs to a SUCCESSOR — deleting it would erase the new
-        # holder's claim mid-run (VERDICT r9 #2a)
-        if _lease_token_on_disk(path) == token:
-            try:
-                os.unlink(lease)
-            except FileNotFoundError:
-                pass
-
-
-def _holder_known_dead(lease: str, host: str) -> bool:
-    """True only when the lease names THIS host and its pid no longer
-    exists — the one case staleness is provable without waiting out the
-    ttl. Any parse failure, foreign host, or live/recycled pid returns
-    False (fall back to the mtime ttl)."""
-    try:
-        with open(lease) as f:
-            content = f.read()
-        fields = dict(
-            kv.split("=", 1) for kv in content.split() if "=" in kv
-        )
-        if fields.get("host") != host:
-            return False
-        pid = int(fields["pid"])
-    except (OSError, KeyError, ValueError):
-        return False
-    try:
-        os.kill(pid, 0)
-    except ProcessLookupError:
-        return True
-    except PermissionError:
-        return False  # alive under another uid
-    return False
+def _replace(spark: SparkSession, path: str, name: str, content: str) -> None:
+    """Publish ``{path}/{name}`` by tmp write + ``os.replace`` (an
+    atomic replace, unlike ``storage.write_file_atomic``'s
+    delete-then-rename), fenced against a lost lease."""
+    tmp = os.path.join(path, name + ".tmp")
+    with open(tmp, "w") as f:
+        f.write(content)
+    storage.verify_swap_ownership(spark, path)  # fence: re-check before swap
+    os.replace(tmp, os.path.join(path, name))
 
 
 def _versions(path: str) -> list[int]:
@@ -275,7 +111,8 @@ def latest_version(path: str) -> int | None:
 def write_snapshot(df: DataFrame, path: str) -> int:
     """Write ``df`` as the next immutable version and publish it.
     Returns the new version number."""
-    with publish_lease(path, "write_snapshot"):
+    spark = df.sparkSession
+    with storage.maintenance_lease(spark, path, "write_snapshot"):
         current = latest_version(path)
         next_v = 0 if current is None else current + 1
         # skip over dangling unpublished dirs from interrupted writes
@@ -286,11 +123,7 @@ def write_snapshot(df: DataFrame, path: str) -> int:
         df.write.mode("errorifexists").parquet(
             os.path.join(path, f"v={next_v}")
         )
-        tmp = os.path.join(path, _POINTER + ".tmp")
-        with open(tmp, "w") as f:
-            f.write(str(next_v))
-        _verify_publish_ownership(path)  # fence: re-check before swap
-        os.replace(tmp, os.path.join(path, _POINTER))  # atomic publish
+        _replace(spark, path, _POINTER, str(next_v))  # atomic publish
         return next_v
 
 
@@ -308,9 +141,7 @@ def prune_snapshots(path: str, keep_last: int = 2) -> list[int]:
     """Drop all but the newest ``keep_last`` PUBLISHED-or-older
     versions; the published version itself is always kept. Returns the
     removed version numbers."""
-    import shutil
-
-    with publish_lease(path, "prune_snapshots"):
+    with storage.maintenance_lease(_session(), path, "prune_snapshots"):
         published = latest_version(path)
         vers = _versions(path)
         # dangling versions NEWER than the pointer are unpublished
@@ -329,12 +160,11 @@ def prune_snapshots(path: str, keep_last: int = 2) -> list[int]:
 
 
 # ---------------------------------------------------------------------------
-# Manifest-committed month store — the atomic form of the partitioned
-# fact table (VERDICT r5 #4).
+# Manifest-committed month store — the at-scale form of the fact table
+# (VERDICT r5 #4): a windowed refresh reads and rewrites only the
+# window's months.
 #
-# delete-then-dynamic-overwrite (operators.merge.merge_refresh_partitioned)
-# has a crash window between the partition delete and the rewrite. Here
-# every month rewrite lands in a fresh immutable ``month=M/v=N`` dir and
+# Every month rewrite lands in a fresh immutable ``month=M/v=N`` dir and
 # ONE root manifest file — {month: version} — is the only mutable state,
 # published with the same tmp+rename pointer trick as ``write_snapshot``.
 # A crash at ANY point before the publish leaves the old manifest intact:
@@ -348,8 +178,6 @@ _MANIFEST = "_MANIFEST"
 
 def read_manifest(path: str) -> dict[str, int]:
     """{month: published version}; {} for an empty store."""
-    import json
-
     ptr = os.path.join(path, _MANIFEST)
     if not os.path.exists(ptr):
         return {}
@@ -359,14 +187,8 @@ def read_manifest(path: str) -> dict[str, int]:
 
 def publish_manifest(path: str, months: dict[str, int]) -> None:
     """Atomically replace the manifest (tmp write + rename)."""
-    import json
-
     os.makedirs(path, exist_ok=True)
-    tmp = os.path.join(path, _MANIFEST + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(dict(sorted(months.items())), f)
-    _verify_publish_ownership(path)  # fence: re-check before swap
-    os.replace(tmp, os.path.join(path, _MANIFEST))
+    _replace(_session(), path, _MANIFEST, json.dumps(dict(sorted(months.items()))))
 
 
 _FILE_STATS = "_file_stats.json"
@@ -381,27 +203,20 @@ def publish_file_stats(path: str, stats: dict[str, dict[str, list]]) -> None:
     closes that gap without the dependency (verdict r7 #3). Atomic
     tmp+rename publish like ``publish_manifest``; the underscore name
     keeps Spark's parquet reader from treating it as data."""
-    import json
-
-    tmp = os.path.join(path, _FILE_STATS + ".tmp")
-    with open(tmp, "w") as f:
-        # ORDER-PRESERVING encoding is collect_file_stats' job
-        # (operators/zorder.py — isoformat for temporals, outward-
-        # widened floats for Decimals); default=str here is only the
-        # backstop that keeps a direct caller's exotic type from
-        # crashing the publish AFTER a successful O(corpus) write. A
-        # str() fallback does NOT promise lexicographic order — do not
-        # prune on a column that reached it (review r8).
-        json.dump(dict(sorted(stats.items())), f, sort_keys=True, default=str)
-    _verify_publish_ownership(path)  # fence: re-check before swap
-    os.replace(tmp, os.path.join(path, _FILE_STATS))
+    # ORDER-PRESERVING encoding is collect_file_stats' job
+    # (operators/zorder.py — isoformat for temporals, outward-widened
+    # floats for Decimals); default=str here is only the backstop that
+    # keeps a direct caller's exotic type from crashing the publish
+    # AFTER a successful O(corpus) write. A str() fallback does NOT
+    # promise lexicographic order — do not prune on a column that
+    # reached it (review r8).
+    content = json.dumps(dict(sorted(stats.items())), sort_keys=True, default=str)
+    _replace(_session(), path, _FILE_STATS, content)
 
 
 def read_file_stats(path: str) -> dict[str, dict[str, list]] | None:
     """The published per-file stats manifest, or None when the layout
     was written without one (readers must then scan every file)."""
-    import json
-
     p = os.path.join(path, _FILE_STATS)
     if not os.path.exists(p):
         return None
@@ -447,8 +262,7 @@ def read_months(
 
 #: month label for null-dated rows — sorts before any real yyyy-MM and
 #: can never fall inside a refresh window, so null-dated history is
-#: structurally untouchable by the windowed merge (same invariant the
-#: non-atomic form gets from __HIVE_DEFAULT_PARTITION__).
+#: structurally untouchable by the windowed merge.
 NULL_MONTH = "0000-00"
 
 
@@ -468,7 +282,7 @@ def bootstrap_months(
     months = sorted(
         r["month"] for r in with_month.select("month").distinct().collect()
     )
-    with publish_lease(path, "bootstrap_months"):
+    with storage.maintenance_lease(df.sparkSession, path, "bootstrap_months"):
         manifest = {
             m: write_month_version(
                 with_month.filter(F.col("month") == m), path, m
@@ -486,12 +300,10 @@ def prune_months(path: str, keep_unreferenced: int = 0) -> list[str]:
     ``keep_unreferenced`` retains that many NEWEST unreferenced
     versions per month (the ``prune_snapshots(keep_last=…)`` analog:
     a time-travel/rollback grace window before space is reclaimed)."""
-    import shutil
-
     removed: list[str] = []
     if not os.path.isdir(path):
         return removed
-    with publish_lease(path, "prune_months"):
+    with storage.maintenance_lease(_session(), path, "prune_months"):
         manifest = read_manifest(path)
         for d in os.listdir(path):
             mdir = os.path.join(path, d)

@@ -4,12 +4,13 @@
   (``fetch_clickup_data.py:1780-1782`` — ``to_csv(index=False)``).
   coalesce(1) is deliberate and bounded: backups are per-batch
   artifacts, not the analytical store.
-- ``write_table_overwrite``: the WRITE_TRUNCATE full-replace dims
-  (``fetch_clickup_data.py:976,1039,1109,1178``).
-- ``write_fact_partitioned``: fact table partitioned by month of
-  start_date_oslo so the windowed merge prunes partitions (SURVEY §4.1).
-  Dynamic partition overwrite rewrites only touched months — the Spark
-  analog of "MERGE touches only the window".
+- ``write_bucketed``: a bucketed managed table for co-located joins.
+
+The WRITE_TRUNCATE full-replace loads of the fact table and the dims
+(``fetch_clickup_data.py:976,1039,1109,1178``) go through
+``storage.replace_table`` (stage, then swap), and the at-scale
+month-partitioned fact table is the manifest-committed month store in
+``sinks/versioned.py``.
 
 The BigQuery side of S10/S11 is fully wired: ``sinks/warehouse.py``
 renders the reference's two BigQuery MERGE texts and executes their
@@ -25,31 +26,11 @@ installable in this sandbox.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
 def csv_backup(df: DataFrame, path: str) -> None:
     """Single-file headered CSV snapshot (S9)."""
     df.coalesce(1).write.option("header", True).mode("overwrite").csv(path)
-
-
-def write_table_overwrite(df: DataFrame, path: str) -> None:
-    """Full-replace snapshot load — WRITE_TRUNCATE semantics (S10/S11)."""
-    df.write.mode("overwrite").parquet(path)
-
-
-def write_fact_partitioned(
-    df: DataFrame, path: str, date_col: str = "start_date_oslo"
-) -> None:
-    """Fact write partitioned by month(date_col); dynamic overwrite
-    replaces only the partitions present in ``df``."""
-    (
-        df.withColumn("month", F.date_format(F.col(date_col), "yyyy-MM"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("month")
-        .parquet(path)
-    )
 
 
 def write_bucketed(

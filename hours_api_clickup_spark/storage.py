@@ -6,14 +6,19 @@ one place to monkeypatch them in tests:
 - **Filesystem** (Hadoop FileSystem via the JVM, so local, HDFS and
   object-store paths behave alike): ``exists``, ``delete``,
   ``read_file``, ``write_file_atomic``, and the stage-then-swap commit
-  ``swap_dir`` with its crash rollback ``recover_swap``. A
-  merge-on-read tier is consumed with ``snapshot_files`` before a fold
-  and ``drop_consumed`` after it, so a file landing mid-fold survives.
+  ``swap_dir`` with its crash rollback ``recover_swap``.
+  ``replace_table`` is the one whole-table replace built from them
+  (fact refresh and reindex, the dimension loads, the streaming refresh
+  and the rollup state). A merge-on-read tier is consumed with
+  ``snapshot_files`` before a fold and ``drop_consumed`` after it, so a
+  file landing mid-fold survives.
 - **Maintenance lease**: ``maintenance_lease`` is the single-maintainer
-  marker file (``__maintenance_lease``) with a heartbeat, claim token,
-  dead-pid takeover and a fenced release. ``verify_swap_ownership``
-  re-reads the token at each commit point, so a holder whose lease was
-  taken over after a stall refuses to publish.
+  marker file (``__maintenance_lease``) with a heartbeat, an exclusive
+  claim, a claim token, dead-pid takeover and a fenced release. Index
+  maintenance, the table locks and the versioned stores
+  (sinks/versioned.py) all hold it. ``verify_swap_ownership`` re-reads
+  the token at each commit point, so a holder whose lease was taken
+  over after a stall refuses to publish.
 - **Recovery verdict cache**: per session, the paths whose recovery
   probe came back clean. Any lease claim on a path voids its verdict;
   ``read_with_recovery`` voids it on a failed read and retries once.
@@ -35,26 +40,27 @@ from contextlib import contextmanager
 # ---------------------------------------------------------------------------
 
 
-def _fs(spark, path: str):
-    """(FileSystem, Path) for ``path``."""
+def filesystem(spark, path: str):
+    """(FileSystem, Path) for ``path``, resolved from the path's own
+    scheme, not the cluster default."""
     p = spark._jvm.org.apache.hadoop.fs.Path(path)
     return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
 
 
 def exists(spark, path: str) -> bool:
-    fs, p = _fs(spark, path)
+    fs, p = filesystem(spark, path)
     return fs.exists(p)
 
 
 def delete(spark, path: str, recursive: bool = False) -> None:
     """Delete a file (or a directory with ``recursive``); absent is a no-op."""
-    fs, p = _fs(spark, path)
+    fs, p = filesystem(spark, path)
     if fs.exists(p):
         fs.delete(p, recursive)
 
 
 def read_file(spark, path: str) -> str:
-    fs, p = _fs(spark, path)
+    fs, p = filesystem(spark, path)
     stream = fs.open(p)
     try:
         return spark._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
@@ -66,7 +72,7 @@ def write_file_atomic(spark, path: str, content: str) -> None:
     """Write a small file through ``.tmp`` + rename: it is either absent
     or complete, never truncated. Commit markers whose content drives
     crash recovery need this."""
-    fs, dst = _fs(spark, path)
+    fs, dst = filesystem(spark, path)
     tmp = spark._jvm.org.apache.hadoop.fs.Path(path + ".tmp")
     out = fs.create(tmp, True)
     out.write(bytearray(content.encode()))
@@ -83,7 +89,7 @@ def snapshot_files(spark, dir_path: str) -> list[str]:
     strings; ``[]`` when it is absent. A compaction folds and then drops
     exactly this list, so a file committed during the fold is never
     erased unfolded."""
-    fs, p = _fs(spark, dir_path)
+    fs, p = filesystem(spark, dir_path)
     if not fs.exists(p):
         return []
     return [
@@ -98,7 +104,7 @@ def drop_consumed(spark, dir_path: str, files: list[str]) -> None:
     crashed run), then the underscore debris, then the directory itself
     with a NON-recursive delete that refuses a non-empty directory: a
     file committed after the snapshot survives for the next fold."""
-    fs, dp = _fs(spark, dir_path)
+    fs, dp = filesystem(spark, dir_path)
     for f in files:
         fs.delete(spark._jvm.org.apache.hadoop.fs.Path(f), False)
     if not fs.exists(dp):
@@ -114,8 +120,9 @@ def drop_consumed(spark, dir_path: str, files: list[str]) -> None:
 
 def swap_dir(spark, live: str, staged: str) -> None:
     """Replace directory ``live`` with ``staged`` by two renames, the
-    closest a filesystem gets to an atomic pointer flip (the versioned
-    snapshot store in sinks/versioned.py is the fully atomic form).
+    closest a directory swap gets to an atomic pointer flip (the
+    versioned stores in sinks/versioned.py publish through a one-file
+    pointer ``os.replace`` instead, which is atomic).
 
     Between the renames only ``live__old`` exists; ``recover_swap``,
     called by every reader and writer first, rolls it back, so a crash
@@ -123,7 +130,7 @@ def swap_dir(spark, live: str, staged: str) -> None:
     calling thread holds a lease covering ``live``, ownership is
     re-checked right before the destructive rename."""
     verify_swap_ownership(spark, live)
-    fs, live_p = _fs(spark, live)
+    fs, live_p = filesystem(spark, live)
     path_cls = spark._jvm.org.apache.hadoop.fs.Path
     staged_p, old_p = path_cls(staged), path_cls(live + "__old")
     if fs.exists(old_p):
@@ -144,10 +151,26 @@ def recover_swap(spark, live: str) -> None:
     ``live__old`` present means the crash hit between the renames, so
     the old directory goes back. A ``live__old`` next to a live dir is
     garbage the next swap deletes."""
-    fs, live_p = _fs(spark, live)
+    fs, live_p = filesystem(spark, live)
     old_p = spark._jvm.org.apache.hadoop.fs.Path(live + "__old")
     if not fs.exists(live_p) and fs.exists(old_p):
         fs.rename(old_p, live_p)
+
+
+def replace_table(df, path: str) -> None:
+    """Replace the table at ``path`` with ``df``: roll back a crashed
+    swap, write ``{path}__staged``, swap it in. A plain
+    ``mode("overwrite")`` truncates the live directory at job start, so
+    a failed or killed write loses the table; here the old table stays
+    readable until the swap's last rename. ``df`` may read ``path``
+    itself (a merge over the live table): the write goes to another
+    directory, so it needs no lineage cut. ``swap_dir`` fences the
+    commit when the caller holds a lease covering ``path``."""
+    spark = df.sparkSession
+    recover_swap(spark, path)
+    staged = f"{path}__staged"
+    df.write.mode("overwrite").parquet(staged)
+    swap_dir(spark, path, staged)
 
 
 def commit_tiers(spark, path: str, marker: str, tiers: tuple, consumed: dict) -> None:
@@ -251,7 +274,7 @@ def covering_held_lease(target: str):
 
 def parse_lease_fields(content: str) -> dict:
     """``k=v`` fields of a lease file body — the one parser for the
-    lease wire format (shared with sinks/versioned.py's publish lease)."""
+    lease wire format."""
     return dict(kv.split("=", 1) for kv in content.split() if "=" in kv)
 
 
@@ -287,10 +310,11 @@ def acquire_lease(spark, path: str, owner: str, ttl_sec: int = LEASE_TTL_SEC) ->
     Staleness is two-tier: a holder on THIS host whose pid is gone is
     presumed crashed at once (a killed ingest must not block its own
     restart for the whole ttl); anything else waits out ``ttl_sec`` by
-    mtime. The claim is ``create(overwrite=False)``, so two racing
-    takers resolve to one winner. Best-effort by design: it turns an
-    operator mistake into an error; it is not a distributed lock."""
-    fs, lease = _fs(spark, f"{path}/{LEASE_FILE}")
+    mtime. The claim is an exclusive create (``_claim``), so takers
+    racing for a free lease resolve to one winner. Best-effort by
+    design: it turns an operator mistake into an error; it is not a
+    distributed lock."""
+    fs, lease = filesystem(spark, f"{path}/{LEASE_FILE}")
     host = socket.gethostname()
     if fs.exists(lease):
         try:
@@ -300,27 +324,43 @@ def acquire_lease(spark, path: str, owner: str, ttl_sec: int = LEASE_TTL_SEC) ->
         if age <= ttl_sec and not _lease_holder_known_dead(spark, path, host):
             raise MaintenanceLeaseHeld(
                 f"maintenance lease at {path}/{LEASE_FILE} is live "
-                f"(age {age:.0f}s <= ttl {ttl_sec}s) — another compact "
-                f"or ingest is running; {owner!r} must wait or the "
-                f"holder must release/crash past the ttl"
+                f"(age {age:.0f}s <= ttl {ttl_sec}s) — another compact, "
+                f"ingest, sync or store publish is running; {owner!r} "
+                f"must wait or the holder must release/crash past the ttl"
             )
         fs.delete(lease, False)  # stale: holder presumed crashed
+    token = uuid.uuid4().hex
+    body = f"{owner} host={host} pid={os.getpid()} t={int(time.time())} token={token}"
     try:
-        out = fs.create(lease, False)  # overwrite=False → atomic claim
+        _claim(fs, lease, body.encode())
     except Exception as exc:
         raise MaintenanceLeaseHeld(
             f"lost the lease race at {path}/{LEASE_FILE}: {exc}"
         ) from None
-    token = uuid.uuid4().hex
-    out.write(bytearray(
-        f"{owner} host={host} pid={os.getpid()} "
-        f"t={int(time.time())} token={token}".encode()
-    ))
-    out.close()
     # maintenance is about to mutate this path: cached "no recovery
     # pending" verdicts are void until a full probe proves clean again
     recovery_invalidate(path)
     return token
+
+
+def _claim(fs, lease, body: bytes) -> None:
+    """Create the lease file only if it is absent, in one atomic step,
+    and write ``body``. Hadoop's local filesystem implements
+    ``create(overwrite=False)`` as exists-then-create, which lets
+    several racing takers all win; a ``file:`` lease is therefore
+    claimed with an ``O_EXCL`` open. Elsewhere ``create(overwrite=False)``
+    is kept: HDFS makes it atomic."""
+    if fs.getUri().getScheme() == "file":
+        local = fs.makeQualified(lease).toUri().getPath()
+        os.makedirs(os.path.dirname(local), exist_ok=True)
+        with os.fdopen(os.open(local, os.O_CREAT | os.O_EXCL | os.O_WRONLY), "wb") as f:
+            f.write(body)
+        return
+    out = fs.create(lease, False)
+    try:
+        out.write(bytearray(body))
+    finally:
+        out.close()
 
 
 def _lease_holder_known_dead(spark, path: str, host: str) -> bool:
@@ -397,7 +437,7 @@ def maintenance_lease(
     stop = threading.Event()
 
     def _heartbeat() -> None:
-        fs, lease = _fs(spark, f"{path}/{LEASE_FILE}")
+        fs, lease = filesystem(spark, f"{path}/{LEASE_FILE}")
         while not stop.wait(max(ttl_sec / 4.0, 0.05)):
             try:
                 fs.setTimes(lease, int(time.time() * 1000), -1)
@@ -417,8 +457,9 @@ def verify_swap_ownership(spark, target: str) -> None:
     """The commit-point ownership fence: when the calling thread holds a
     lease covering ``target``, re-read it and raise
     ``MaintenanceLeaseLost`` on a token mismatch. ``swap_dir`` calls it
-    before its destructive rename; in-place table overwrites that never
-    swap call it directly. Unleased callers are not fenced."""
+    before its destructive rename; commits that swap no directory (the
+    versioned stores' pointer, manifest and file-stats replaces) call it
+    directly. Unleased callers are not fenced."""
     held = covering_held_lease(target)
     if held is None:
         return

@@ -36,20 +36,6 @@ from hours_api_clickup_spark.operators.transform import transform_time_entries
 from hours_api_clickup_spark.pipelines import refresh_window_pred
 from hours_api_clickup_spark.schemas import RAW_TIME_ENTRY_SCHEMA
 
-def _overwrite_swap(df: DataFrame, path: str) -> None:
-    """Stage-then-swap overwrite. Plain ``mode('overwrite')`` deletes
-    the live directory before writing, so a crash mid-write leaves the
-    path MISSING — a restarted stream's ``read_fact_or_empty`` then
-    sees first-run and the next batch truncates the table to itself
-    (review r6). Writing to ``{path}__staged`` and renaming keeps the
-    old state intact until the swap; ``storage.recover_swap`` at the next
-    read rolls back a crash between the two renames. Writing to a
-    DIFFERENT path also means the plan may read ``path`` directly — no
-    localCheckpoint materialization needed."""
-    staged = path + "__staged"
-    df.write.mode("overwrite").parquet(staged)
-    storage.swap_dir(df.sparkSession, path, staged)
-
 
 def streaming_refresh(
     spark: SparkSession,
@@ -97,7 +83,6 @@ def streaming_refresh(
             f"streaming_refresh b{batch_id}",
             wait_s=lock_wait_s,
         ):
-            storage.recover_swap(spark, fact_path)  # roll back mid-swap crash
             # reject edits outside the refresh window (the reference's
             # MERGE source prefilter, fetch_clickup_data.py:1280-1282 —
             # entries outside the window are locked history)
@@ -110,8 +95,7 @@ def streaming_refresh(
             # incremental slice, not a window snapshot — deletes
             # reconcile in the scheduled batch refresh (see merge_upsert
             # docstring)
-            merged = merge_upsert(fact, staging, key="id")
-            _overwrite_swap(merged, fact_path)
+            storage.replace_table(merge_upsert(fact, staging, key="id"), fact_path)
 
     return (
         flat.writeStream.foreachBatch(apply_batch)
@@ -296,8 +280,9 @@ def streaming_continuous_rollup(
     with the highest applied ``batch_id`` and skips any batch at or
     below it — re-delivery becomes a no-op, which upgrades the sink to
     exactly-once (the same idempotence argument merge_upsert makes by
-    key). The merged state is localCheckpoint'd before overwriting so
-    the read-modify-write never scans the files it is replacing.
+    key). The merged state is written staged and swapped in
+    (``storage.replace_table``), so the read-modify-write never scans
+    the files it is replacing and a failed write keeps the old state.
     """
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -352,7 +337,7 @@ def fold_rollup_batch(
         merged = merge_rollup_states(prev.drop("__last_batch_id"), delta)
     else:
         merged = delta
-    _overwrite_swap(
+    storage.replace_table(
         merged.withColumn("__last_batch_id", F.lit(int(batch_id))),
         state_path,
     )

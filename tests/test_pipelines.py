@@ -367,41 +367,35 @@ def test_ensure_star_schema(spark):
     spark.table("hours_test.dim_accounts")  # resolvable
 
 
-def test_sync_refresh_partitioned(spark, tmp_path, entries_path):
-    from hours_api_clickup_spark.pipelines import sync_refresh_partitioned
+def test_failed_dim_sync_keeps_previous_dim(spark, tmp_path, raw_tasks, monkeypatch):
+    """A dimension load that fails mid-job must leave the previous
+    dimension readable (WRITE_TRUNCATE is atomic in the reference's
+    warehouse): the load is staged and swapped, never an in-place
+    overwrite that truncates the live table first."""
+    from hours_api_clickup_spark import pipelines
+    from hours_api_clickup_spark.operators.hierarchy import select_raw_lists
 
-    fact_path = str(tmp_path / "fact_part_sync")
-    today = dt.date(2023, 11, 20)
-    t0 = 1700000000000  # 2023-11-14 (in window)
-    old = 1690000000000  # 2023-07-22 (outside 60-day window)
-    p1 = entries_path(
-        [
-            _entry("h1", start_ms=old, at_ms=old),
-            _entry("w1", start_ms=t0, at_ms=t0),
-        ],
-        "boot.json",
-    )
-    # bootstrap writes only in-window entries (h1 is outside and there
-    # is no history yet to preserve)
-    r1 = sync_refresh_partitioned(
-        spark, read_raw_time_entries(spark, p1), fact_path, today
-    )
-    assert r1.rows == 1
+    path = str(tmp_path / "dim_lists")
+    raw = select_raw_lists(raw_tasks)
+    first = pipelines.sync_lists(raw, path)
+    before = sorted(tuple(r) for r in spark.read.parquet(path).collect())
+    assert first.rows == len(before) > 0
 
-    p2 = entries_path(
-        [
-            _entry("w1", start_ms=t0, at_ms=t0 + 9, duration="3600000"),
-            _entry("w2", start_ms=t0 + 50, at_ms=t0 + 50),
-        ],
-        "next.json",
-    )
-    r2 = sync_refresh_partitioned(
-        spark, read_raw_time_entries(spark, p2), fact_path, today
-    )
-    assert r2.rows == 2
-    rows = {r["id"]: r for r in spark.read.parquet(fact_path).collect()}
-    assert set(rows) == {"w1", "w2"}
-    assert rows["w1"]["duration_hours"] == 1.0
+    real_build = pipelines.build_dim_lists
+
+    def failing_build(df):
+        dim = real_build(df)
+        return dim.withColumn(
+            "list_name",
+            F.when(F.lit(True), F.raise_error(F.lit("injected write failure")))
+            .otherwise(F.col("list_name")),
+        )
+
+    monkeypatch.setattr(pipelines, "build_dim_lists", failing_build)
+    with pytest.raises(Exception, match="injected write failure"):
+        pipelines.sync_lists(raw, path)
+    after = sorted(tuple(r) for r in spark.read.parquet(path).collect())
+    assert after == before
 
 
 def test_streaming_sessionize_state_spans_batches(spark, tmp_path):

@@ -200,11 +200,9 @@ def test_streaming_refresh_through_paged_source(spark, fixture_dir, tmp_path):
     per-batch streaming merge). A second full re-delivery run (no
     checkpoint — every chunk replays) must leave the fact unchanged:
     at-least-once delivery + keyed upsert = effectively-once content."""
+    from hours_api_clickup_spark import storage
     from hours_api_clickup_spark.operators.merge import merge_upsert
-    from hours_api_clickup_spark.pipelines import (
-        _overwrite_via_checkpoint,
-        read_fact_or_empty,
-    )
+    from hours_api_clickup_spark.pipelines import read_fact_or_empty
 
     fact_path = str(tmp_path / "events_fact")
 
@@ -214,7 +212,7 @@ def test_streaming_refresh_through_paged_source(spark, fixture_dir, tmp_path):
         def apply(batch_df, batch_id):
             cur = read_fact_or_empty(spark, fact_path, batch_df)
             merged = merge_upsert(cur, batch_df, key="event_id")
-            _overwrite_via_checkpoint(merged, fact_path)
+            storage.replace_table(merged, fact_path)
 
         q = (
             stream.writeStream.foreachBatch(apply)

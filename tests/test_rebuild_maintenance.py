@@ -390,24 +390,46 @@ class TestLeaseHeartbeat:
         storage.acquire_lease(spark, p, "racer", ttl_sec=1)
         storage.release_lease(spark, p)
 
-    def test_publish_lease_heartbeat(self, tmp_path):
+    def test_publish_lease_heartbeat(self, spark, tmp_path):
+        """A versioned store root is leased like an index: a publish
+        outlasting the ttl is not stolen while its heartbeat runs, a
+        store cycle refuses meanwhile, and goes through once released."""
         import time
 
-        from hours_api_clickup_spark.sinks.versioned import (
-            PublishLeaseHeld,
-            publish_lease,
-        )
+        from hours_api_clickup_spark.sinks import versioned as V
 
         p = str(tmp_path / "store")
-        with publish_lease(p, "long-publish", ttl_sec=1):
+        with storage.maintenance_lease(spark, p, "long-publish", ttl_sec=1):
             deadline = time.time() + 3.0
             while time.time() < deadline:
-                with pytest.raises(PublishLeaseHeld):
-                    with publish_lease(p, "racer", ttl_sec=1):
-                        pass
+                with pytest.raises(storage.MaintenanceLeaseHeld):
+                    storage.acquire_lease(spark, p, "racer", ttl_sec=1)
                 time.sleep(0.4)
-        with publish_lease(p, "racer", ttl_sec=1):
-            pass
+            with pytest.raises(storage.MaintenanceLeaseHeld):
+                V.write_snapshot(spark.range(1), p)
+        assert V.write_snapshot(spark.range(1), p) == 0
+
+
+def test_only_storage_owns_leases_and_hadoop_commits():
+    """One commit protocol: no module outside storage.py names a lease
+    file or calls Hadoop ``FileSystem.rename``/``create`` — a second
+    lease or a hand-rolled swap is how the forks this layer replaced
+    (a store-private lease, in-place overwrites) came about."""
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(storage.__file__).parent
+    lease_name = re.compile(r"""["'][\w.-]*_lease["']""")
+    hadoop_commit = re.compile(r"(?<!\bos)\.(rename|create)\(")
+    offenders = []
+    for f in sorted(pkg.rglob("*.py")):
+        if f == pathlib.Path(storage.__file__):
+            continue
+        for n, line in enumerate(f.read_text().splitlines(), 1):
+            code = line.split("#", 1)[0]
+            if lease_name.search(code) or hadoop_commit.search(code):
+                offenders.append(f"{f.relative_to(pkg)}:{n}: {line.strip()}")
+    assert not offenders, offenders
 
 
 class TestFactTableLock:
@@ -659,22 +681,24 @@ class TestLeaseFencing:
         assert os.path.exists(f"{p}/base/data.txt")
         assert not os.path.exists(f"{p}/{storage.LEASE_FILE}")  # released
 
-    def test_publish_lease_takeover(self, tmp_path):
-        """The versioned store's twin: pointer/manifest swaps re-verify
-        the claim token, and release spares the successor's lease."""
+    def test_publish_lease_takeover(self, spark, tmp_path):
+        """The versioned store's commits are fenced by the same lease:
+        pointer/manifest swaps re-verify the claim token, and release
+        spares the successor's lease."""
         import os
 
         import hours_api_clickup_spark.sinks.versioned as V
 
         p = str(tmp_path / "store")
-        with V.publish_lease(p, "old-holder"):
-            with open(os.path.join(p, V._LEASE), "w") as f:
+        lease = os.path.join(p, storage.LEASE_FILE)
+        with storage.maintenance_lease(spark, p, "old-holder"):
+            with open(lease, "w") as f:
                 f.write("taker host=elsewhere pid=1 t=0 token=succtok")
-            with pytest.raises(V.PublishLeaseLost, match="successor"):
+            with pytest.raises(storage.MaintenanceLeaseLost, match="successor"):
                 V.publish_manifest(p, {"2024-01": 0})
             assert not os.path.exists(os.path.join(p, V._MANIFEST))
-        assert V._lease_token_on_disk(p) == "succtok"  # spared
-        os.unlink(os.path.join(p, V._LEASE))
+        assert storage.read_lease_token(spark, p) == "succtok"  # spared
+        os.unlink(lease)
         # unfenced again: the same publish goes through
         V.publish_manifest(p, {"2024-01": 0})
         assert V.read_manifest(p) == {"2024-01": 0}

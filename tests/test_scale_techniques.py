@@ -87,20 +87,18 @@ def test_bucketed_join_no_shuffle(spark):
 
 
 def test_partitioned_fact_merge_prunes(spark, tmp_path):
-    """merge_refresh_partitioned must (a) scan only window-month
-    partitions (PartitionFilters), (b) rewrite only those partitions —
-    untouched history files keep their identity, (c) apply the full
-    update/insert/delete semantics inside the window, and (d) drop a
-    window month whose rows were all deleted."""
+    """The at-scale windowed refresh (merge_refresh_partitioned_atomic)
+    must (a) read only window-month version dirs, (b) rewrite only
+    those months — untouched history files keep their identity, (c)
+    apply the full update/insert/delete semantics inside the window,
+    and (d) drop a window month whose rows were all deleted."""
     import datetime as dt
     import glob
 
-    from pyspark.sql import functions as F
-
     from hours_api_clickup_spark.operators.merge import (
-        merge_refresh_partitioned,
+        merge_refresh_partitioned_atomic,
     )
-    from hours_api_clickup_spark.sinks.writers import write_fact_partitioned
+    from hours_api_clickup_spark.sinks import versioned as V
 
     # fact: one row per month of 2024 (ids id1..id12), months 11-12 in window
     fact = spark.createDataFrame(
@@ -108,23 +106,20 @@ def test_partitioned_fact_merge_prunes(spark, tmp_path):
         "id string, start_date_oslo date, v double",
     )
     path = str(tmp_path / "fact_part")
-    write_fact_partitioned(fact, path)
-    history_files = set(glob.glob(f"{path}/month=2024-0*/**/*.parquet"))
+    V.bootstrap_months(fact, path)
+    history_files = set(glob.glob(f"{path}/month=2024-0*/**/*.parquet", recursive=True))
+    assert history_files
 
-    # plan check: the fact slice scan is partition-pruned
-    pruned = spark.read.parquet(path).filter(
-        F.col("month").isin(["2024-11", "2024-12"])
-    )
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        pruned.explain("formatted")
-    plan = buf.getvalue()
-    assert "PartitionFilters" in plan and "month" in plan.split(
-        "PartitionFilters"
-    )[1].split("\n")[0]
+    # the window slice reads only its months' published version dirs
+    window = ["2024-11", "2024-12"]
+    read_dirs = {
+        f.split("/month=")[1].split("/")[0]
+        for f in V.read_months(spark, path, months=window).inputFiles()
+    }
+    assert read_dirs == set(window)
 
     # staging: id11 updated; id13 new (Nov); December row absent → the
-    # whole 2024-12 partition must disappear (full-month delete)
+    # whole 2024-12 month must disappear (full-month delete)
     staging = spark.createDataFrame(
         [
             ("id11", dt.date(2024, 11, 10), 99.0),
@@ -132,7 +127,7 @@ def test_partitioned_fact_merge_prunes(spark, tmp_path):
         ],
         "id string, start_date_oslo date, v double",
     )
-    months = merge_refresh_partitioned(
+    months = merge_refresh_partitioned_atomic(
         spark,
         path,
         staging,
@@ -140,16 +135,18 @@ def test_partitioned_fact_merge_prunes(spark, tmp_path):
         window_hi=dt.date(2024, 12, 31),
         key="id",
     )
-    assert months == ["2024-11", "2024-12"]
+    assert months == window
 
-    after = spark.read.parquet(path)
-    rows = {r["id"]: r for r in after.collect()}
+    rows = {r["id"]: r for r in V.read_months(spark, path).collect()}
     assert set(rows) == {f"id{m}" for m in range(1, 11)} | {"id11", "id13"}
     assert rows["id11"]["v"] == 99.0
     assert rows["id13"]["v"] == 77.0
-    # history partitions were not rewritten (same physical files)
-    assert set(glob.glob(f"{path}/month=2024-0*/**/*.parquet")) == history_files
-    # the fully-deleted December partition is gone
+    # history months were not rewritten (same physical files)
+    assert set(glob.glob(f"{path}/month=2024-0*/**/*.parquet", recursive=True)) == history_files
+    # the fully-deleted December month is gone: out of the manifest,
+    # and its directory reclaimed by GC
+    assert "2024-12" not in V.read_manifest(path)
+    V.prune_months(path)
     assert not glob.glob(f"{path}/month=2024-12*")
 
 
@@ -3018,7 +3015,7 @@ class TestFourthReviewPassRegressions:
 
 
 def test_index_lease_dead_same_host_holder_taken_over(spark, tmp_path):
-    """Same two-tier staleness as the store's publish lease: a killed
+    """Two-tier staleness of the one storage lease: a killed
     ingest's lease (this host, pid gone, mtime fresh) must not block
     the restarted ingest for the whole ttl — takeover is immediate.
     A live same-host holder and a fresh foreign-host holder both still
@@ -3050,6 +3047,38 @@ def test_index_lease_dead_same_host_holder_taken_over(spark, tmp_path):
         f.write(f"remote host=some-other-host pid={proc.pid} t=0")
     with pytest.raises(storage.MaintenanceLeaseHeld):
         storage.acquire_lease(spark, p, "racer")
+
+
+def test_lease_claim_is_exclusive_under_a_race(spark, tmp_path):
+    """Takers racing for a free local lease resolve to exactly one
+    winner. Hadoop's local ``create(overwrite=False)`` checks and then
+    creates, so several racers could all win; the ``file:`` claim is an
+    ``O_EXCL`` create."""
+    import threading
+
+    for trial in range(40):
+        p = str(tmp_path / f"idx{trial}")
+        barrier = threading.Barrier(6, timeout=60)
+        winners, errors = [], []
+
+        def take(i):
+            barrier.wait()
+            try:
+                storage.acquire_lease(spark, p, f"taker{i}")
+                winners.append(i)
+            except storage.MaintenanceLeaseHeld:
+                pass
+            except Exception as exc:  # surfaced below, not swallowed
+                errors.append(exc)
+
+        threads = [threading.Thread(target=take, args=(i,)) for i in range(6)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+        assert not any(t.is_alive() for t in threads)
+        assert not errors, errors
+        assert len(winners) == 1, (trial, winners)
 
 
 class TestBalancedDirRepartition:

@@ -78,13 +78,16 @@ def test_writers_skip_colliding_version_file_debris(spark, tmp_path):
 class TestPublishLease:
     """Verdict r8 #8: the store's read-manifest → write → swap cycle
     and its GC assume a single writer; a second maintainer must get a
-    loud PublishLeaseHeld, never a silent lost update."""
+    loud MaintenanceLeaseHeld (the store holds the one storage lease on
+    its root), never a silent lost update."""
 
     def _hold(self, store):
         import os
 
+        from hours_api_clickup_spark import storage
+
         os.makedirs(store, exist_ok=True)
-        with open(os.path.join(store, "__publish_lease"), "w") as f:
+        with open(os.path.join(store, storage.LEASE_FILE), "w") as f:
             f.write("other pid=1 t=0")
 
     def test_snapshot_write_and_prune_refuse_under_held_lease(
@@ -94,18 +97,19 @@ class TestPublishLease:
 
         import pytest
 
+        from hours_api_clickup_spark import storage
         from hours_api_clickup_spark.sinks import versioned as V
 
         df = spark.range(3)
         store = str(tmp_path / "snap")
         V.write_snapshot(df, store)
         self._hold(store)
-        with pytest.raises(V.PublishLeaseHeld):
+        with pytest.raises(storage.MaintenanceLeaseHeld):
             V.write_snapshot(df, store)
-        with pytest.raises(V.PublishLeaseHeld):
+        with pytest.raises(storage.MaintenanceLeaseHeld):
             V.prune_snapshots(store)
         assert V.latest_version(store) == 0  # store untouched
-        os.unlink(os.path.join(store, "__publish_lease"))
+        os.unlink(os.path.join(store, storage.LEASE_FILE))
         assert V.write_snapshot(df, store) == 1  # released: goes through
 
     def test_month_cycle_refuses_under_held_lease(self, spark, tmp_path):
@@ -113,6 +117,7 @@ class TestPublishLease:
 
         import pytest
 
+        from hours_api_clickup_spark import storage
         from hours_api_clickup_spark.operators.merge import (
             merge_refresh_partitioned_atomic,
         )
@@ -125,25 +130,26 @@ class TestPublishLease:
         V.bootstrap_months(df, store)
         before = V.read_manifest(store)
         self._hold(store)
-        with pytest.raises(V.PublishLeaseHeld):
+        with pytest.raises(storage.MaintenanceLeaseHeld):
             merge_refresh_partitioned_atomic(
                 spark, store, df, dt.date(2024, 1, 1), dt.date(2024, 1, 31)
             )
-        with pytest.raises(V.PublishLeaseHeld):
+        with pytest.raises(storage.MaintenanceLeaseHeld):
             V.prune_months(store)
-        with pytest.raises(V.PublishLeaseHeld):
+        with pytest.raises(storage.MaintenanceLeaseHeld):
             V.bootstrap_months(df, store)
         assert V.read_manifest(store) == before  # nothing moved
 
     def test_stale_lease_taken_over(self, spark, tmp_path):
         import os
 
+        from hours_api_clickup_spark import storage
         from hours_api_clickup_spark.sinks import versioned as V
 
         df = spark.range(2)
         store = str(tmp_path / "snap")
         self._hold(store)
-        lease = os.path.join(store, "__publish_lease")
+        lease = os.path.join(store, storage.LEASE_FILE)
         os.utime(lease, (1, 1))  # ancient mtime: holder presumed dead
         assert V.write_snapshot(df, store) == 0
         assert not os.path.exists(lease)  # and released afterwards
@@ -154,6 +160,7 @@ class TestPublishLease:
 
         import pytest
 
+        from hours_api_clickup_spark import storage
         from hours_api_clickup_spark.operators.merge import (
             merge_refresh_partitioned_atomic,
         )
@@ -172,7 +179,7 @@ class TestPublishLease:
                 spark, store, df, dt.date(2024, 1, 1), dt.date(2024, 1, 31),
                 _crash_before_publish=boom,
             )
-        assert not os.path.exists(os.path.join(store, "__publish_lease"))
+        assert not os.path.exists(os.path.join(store, storage.LEASE_FILE))
         # the retry (the documented crash-recovery path) goes through
         merge_refresh_partitioned_atomic(
             spark, store, df, dt.date(2024, 1, 1), dt.date(2024, 1, 31)
@@ -190,6 +197,7 @@ class TestPublishLease:
         import socket
         import subprocess
 
+        from hours_api_clickup_spark import storage
         from hours_api_clickup_spark.sinks import versioned as V
 
         df = spark.range(2)
@@ -197,7 +205,7 @@ class TestPublishLease:
         os.makedirs(store)
         proc = subprocess.Popen(["true"])
         proc.wait()
-        with open(os.path.join(store, "__publish_lease"), "w") as f:
+        with open(os.path.join(store, storage.LEASE_FILE), "w") as f:
             f.write(f"crashed host={socket.gethostname()} pid={proc.pid} t=0")
         # mtime is FRESH (inside the ttl) — only the dead pid proves it
         assert V.write_snapshot(df, store) == 0
@@ -208,13 +216,14 @@ class TestPublishLease:
 
         import pytest
 
+        from hours_api_clickup_spark import storage
         from hours_api_clickup_spark.sinks import versioned as V
 
         store = str(tmp_path / "snap")
         os.makedirs(store)
-        with open(os.path.join(store, "__publish_lease"), "w") as f:
+        with open(os.path.join(store, storage.LEASE_FILE), "w") as f:
             f.write(f"live host={socket.gethostname()} pid={os.getpid()} t=0")
-        with pytest.raises(V.PublishLeaseHeld):
+        with pytest.raises(storage.MaintenanceLeaseHeld):
             V.write_snapshot(spark.range(2), store)
 
     def test_foreign_host_holder_waits_out_the_ttl(self, spark, tmp_path):
@@ -226,13 +235,14 @@ class TestPublishLease:
 
         import pytest
 
+        from hours_api_clickup_spark import storage
         from hours_api_clickup_spark.sinks import versioned as V
 
         store = str(tmp_path / "snap")
         os.makedirs(store)
         proc = subprocess.Popen(["true"])
         proc.wait()
-        with open(os.path.join(store, "__publish_lease"), "w") as f:
+        with open(os.path.join(store, storage.LEASE_FILE), "w") as f:
             f.write(f"remote host=some-other-host pid={proc.pid} t=0")
-        with pytest.raises(V.PublishLeaseHeld):
+        with pytest.raises(storage.MaintenanceLeaseHeld):
             V.write_snapshot(spark.range(2), store)
