@@ -4,8 +4,9 @@ Replicates the sf0.1 ``documents`` table 2x/5x/10x (fresh doc_ids per
 replica; text kept verbatim so every gram/shingle shuffles — replication
 scales the dominant shuffle volumes linearly, which is exactly the
 quantity under test; the near-dup stages see replica clusters, the
-conservative heavy-bucket case) and times the same 7-query unit
-``bench.py`` reports as ``pipeline_curation_composite``.  Other tables
+conservative heavy-bucket case) and times a 7-query curation unit
+(quality gate → span dedup → MinHash manifest → decontaminate → split)
+as one sum.  Other tables
 are symlinked unmodified.  Output: one wall-time row per scale plus the
 fitted log-log exponent — ~1.0 means the composite is linear in corpus
 size; a super-linear stage would show up here before it shows up at

@@ -2,8 +2,8 @@
 
 History grows x1 -> x10 while the refresh window stays FIXED: the
 flagship sync path (transform -> keep-latest dedup -> partitioned
-ATOMIC month merge, the unit bench.py times as
-``pipeline_refresh_composite``) must cost O(window), never O(history).
+ATOMIC month merge; perfbench's ``warehouse_sync`` times the unit end
+to end) must cost O(window), never O(history).
 For each scale this script bootstraps a manifest-committed month store
 with ``scale * 6`` months of history (fixed rows/month, synthesized
 DISTRIBUTEDLY in the raw nested schema so the timed tick includes the
