@@ -7,6 +7,12 @@ endpoints (lists/tasks/accounts/apps), plus ``--mode serve`` which
 boots the HTTP façade itself (the reference's main.py IS its server
 entrypoint). Input is a raw-entry/task NDJSON path (the REST fetch
 feeds the same readers in production).
+
+Every sync and maintain mode builds the same ``ServerConfig`` that
+``serve`` and ``scheduler`` build (``--out`` is the warehouse root) and
+runs through ``server.dispatch``, printing the route's JSON payload —
+the reference's routes likewise call its CLI ``main()``
+(main.py:35-39), so no entry point has a sync path of its own.
 """
 
 from __future__ import annotations
@@ -31,9 +37,16 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--port", type=int, default=8080, help="serve mode port")
     p.add_argument("--entries", help="raw time-entry NDJSON path")
     p.add_argument("--tasks", help="raw task NDJSON path")
-    p.add_argument("--fact", help="fact table path", default="./fact_time_entries")
-    p.add_argument("--out", help="dim table output path")
-    p.add_argument("--backup", help="CSV backup path")
+    p.add_argument(
+        "--out",
+        help="sync modes: warehouse root for the fact and dim tables "
+        "(default ./warehouse); curate mode: corpus output directory",
+    )
+    p.add_argument(
+        "--backup",
+        help="sync modes: CSV backup directory; each sync writes its "
+        "batch to {dir}/{mode} as one headered CSV",
+    )
     p.add_argument(
         "--today-oslo",
         help="civil date anchor (YYYY-MM-DD); defaults to today in Europe/Oslo",
@@ -96,22 +109,46 @@ def main(argv: list[str] | None = None) -> int:
         "--index", action="append", default=[], metavar="FAMILY=PATH[:OPT]",
         help="maintain: compaction/GC target, repeatable — "
         "lsh=/p | ivf=/p[:id_col] | text=/p | docneardup=/p | "
-        "store=/p[:keep] | snapshots=/p[:keep]. A target whose "
+        "store=/p[:keep] (month-store GC). A target whose "
         "maintenance lease is held reports deferred (retry next sweep).",
     )
     args = p.parse_args(argv)
+    needs = {
+        "refresh": ("entries",), "full_reindex": ("entries",),
+        **dict.fromkeys(("lists", "tasks", "accounts", "apps"), ("tasks",)),
+        "serve": ("entries", "tasks"), "scheduler": ("entries", "tasks", "state"),
+        "maintain": ("index",), "curate": ("docs", "out"),
+    }[args.mode]
+    missing = [f"--{n}" for n in needs if not getattr(args, n)]
+    if missing:
+        p.error(f"--mode {args.mode} requires {', '.join(missing)}")
 
-    from hours_api_clickup_spark import pipelines
     from hours_api_clickup_spark.session import get_spark
-    from hours_api_clickup_spark.sources.readers import (
-        read_raw_tasks,
-        read_raw_time_entries,
-    )
+
+    def config(spark):
+        from hours_api_clickup_spark.server import ServerConfig
+
+        return ServerConfig(
+            spark=spark,
+            entries_path=args.entries,
+            tasks_path=args.tasks,
+            warehouse=args.out or "./warehouse",
+            today_oslo=(
+                dt.date.fromisoformat(args.today_oslo)
+                if args.today_oslo
+                else None
+            ),
+            refresh_days=args.days,
+            maintenance_targets=tuple(args.index),
+            lock_wait_s=args.lock_wait_s,
+            lease_ttl_s=args.lease_ttl_s,
+            backup_dir=args.backup,
+        )
 
     if args.mode == "scheduler":
         # One scheduler TICK (deploy.sh:66-136 analog): compute the jobs
-        # due since the persisted watermarks, dispatch each through the
-        # HTTP routes' seam, persist the new watermarks. An external
+        # due since the persisted watermarks, dispatch each through
+        # server.dispatch, persist the new watermarks. An external
         # cron / systemd timer / while-sleep loop calls this; catch-up
         # is at-most-once per job per outage. Due-ness is pure datetime
         # math, so the SparkSession is created ONLY when a job actually
@@ -127,15 +164,11 @@ def main(argv: list[str] | None = None) -> int:
             due_jobs,
             run_pending,
         )
-        from hours_api_clickup_spark.server import ServerConfig
 
         # --index targets opt the tick into the weekly compaction/GC
         # sweep job on top of the reference's six
         jobs = ALL_JOBS if args.index else REFERENCE_JOBS
 
-        if not args.entries or not args.tasks or not args.state:
-            p.error("--entries, --tasks and --state are required "
-                    "for scheduler")
         now = (
             dt.datetime.fromisoformat(args.now)
             if args.now
@@ -179,22 +212,7 @@ def main(argv: list[str] | None = None) -> int:
             return 0
         spark = get_spark(app_name="sync-scheduler")
         try:
-            cfg = ServerConfig(
-                spark=spark,
-                entries_path=args.entries,
-                tasks_path=args.tasks,
-                warehouse=args.out or "./warehouse",
-                today_oslo=(
-                    dt.date.fromisoformat(args.today_oslo)
-                    if args.today_oslo
-                    else None
-                ),
-                refresh_days=args.days,
-                maintenance_targets=tuple(args.index),
-                lock_wait_s=args.lock_wait_s,
-                lease_ttl_s=args.lease_ttl_s,
-            )
-            ran = run_pending(cfg, state, now, jobs=jobs)
+            ran = run_pending(config(spark), state, now, jobs=jobs)
             _persist_state()
             print(json.dumps({"ticked_at": now.isoformat(), "ran": ran}))
             return 0
@@ -204,12 +222,12 @@ def main(argv: list[str] | None = None) -> int:
     spark = get_spark(app_name=f"sync-{args.mode}")
     try:
         if args.mode == "curate":
+            from hours_api_clickup_spark import pipelines
+
             # one-command training-corpus build (verdict r7 #6): the
             # 7-stage curation unit over a documents parquet — dedup →
             # quality gate → near-dup clusters → (decontaminate) →
             # split → pack → shards + manifest
-            if not args.docs or not args.out:
-                p.error("--docs and --out are required for curate")
             docs = spark.read.parquet(args.docs)
             bench = (
                 spark.read.parquet(args.benchmark)
@@ -239,96 +257,26 @@ def main(argv: list[str] | None = None) -> int:
             )
             print(json.dumps(manifest, sort_keys=True))
             return 0
-        if args.mode == "maintain":
-            # one compaction/GC sweep over persisted indexes and
-            # versioned stores — the scheduled-cadence glue the LSM
-            # ingest topology assumes; per-target isolation, held
-            # leases report deferred
-            if not args.index:
-                p.error("--index FAMILY=PATH[:OPT] required for maintain")
-            results = pipelines.run_maintenance(spark, args.index)
-            print(json.dumps(results, sort_keys=True))
-            return 0 if all(
-                r["status"] in ("ok", "deferred") for r in results
-            ) else 1
         if args.mode == "serve":
             from http.server import ThreadingHTTPServer
 
-            from hours_api_clickup_spark.server import (
-                ServerConfig,
-                make_handler,
-            )
+            from hours_api_clickup_spark.server import make_handler
 
-            if not args.entries or not args.tasks:
-                p.error("--entries and --tasks are required for serve")
-            cfg = ServerConfig(
-                spark=spark,
-                entries_path=args.entries,
-                tasks_path=args.tasks,
-                warehouse=args.out or "./warehouse",
-                today_oslo=(
-                    dt.date.fromisoformat(args.today_oslo)
-                    if args.today_oslo
-                    else None
-                ),
-                refresh_days=args.days,
-                maintenance_targets=tuple(args.index),
-                lock_wait_s=args.lock_wait_s,
-                lease_ttl_s=args.lease_ttl_s,
+            srv = ThreadingHTTPServer(
+                ("0.0.0.0", args.port), make_handler(config(spark))
             )
-            srv = ThreadingHTTPServer(("0.0.0.0", args.port), make_handler(cfg))
             print(json.dumps({"serving": f"0.0.0.0:{srv.server_address[1]}"}))
             srv.serve_forever()
             return 0
-        if args.mode in ("refresh", "full_reindex"):
-            if not args.entries:
-                p.error("--entries is required for refresh/full_reindex")
-            raw = read_raw_time_entries(spark, args.entries)
-            if args.mode == "refresh":
-                from zoneinfo import ZoneInfo
+        from hours_api_clickup_spark.server import dispatch
 
-                # the Europe/Oslo date, NOT the host timezone's — a UTC
-                # host between 22:00Z and midnight is already on the
-                # next Oslo day (CURRENT_DATE('Europe/Oslo') parity)
-                today = (
-                    dt.date.fromisoformat(args.today_oslo)
-                    if args.today_oslo
-                    else dt.datetime.now(ZoneInfo("Europe/Oslo")).date()
-                )
-                res = pipelines.sync_refresh(
-                    spark, raw, args.fact, today, args.days, args.backup
-                )
-            else:
-                res = pipelines.sync_full_reindex(
-                    spark, raw, args.fact, args.backup
-                )
-        else:
-            if not args.tasks:
-                p.error("--tasks is required for dimension syncs")
-            raw = read_raw_tasks(spark, args.tasks)
-            if args.mode == "lists":
-                from hours_api_clickup_spark.operators.hierarchy import (
-                    select_raw_lists,
-                )
-
-                # one definition shared with server.py (normalized
-                # before distinct — review r6)
-                raw = select_raw_lists(raw)
-            elif args.mode == "accounts":
-                from pyspark.sql import functions as F
-
-                from hours_api_clickup_spark.operators.hierarchy import (
-                    ACCOUNTS_CUSTOM_ITEM_ID,
-                )
-
-                raw = raw.filter(
-                    F.col("custom_item_id") == ACCOUNTS_CUSTOM_ITEM_ID
-                )
-            out = args.out or f"./dim_{args.mode}"
-            sync = getattr(pipelines, f"sync_{args.mode}")
-            res = sync(raw, out, args.backup)
-        print(json.dumps({"table": res.table, "rows": res.rows, "mode": res.mode}))
-        return 0
+        # the sync and maintain modes: one route each, same payload as
+        # the HTTP façade. A maintain sweep exits 1 when a target
+        # errored (deferred is the designed collision outcome, exit 0)
+        route = "/maintain" if args.mode == "maintain" else f"/sync/{args.mode}"
+        payload = dispatch(config(spark), route, {})
+        print(json.dumps(payload, sort_keys=True))
+        return 1 if payload.get("errors") else 0
     finally:
         spark.stop()
 

@@ -396,20 +396,6 @@ def _sig_frame(
     return _signed(df, id_col, text_col, k, num_hashes, "full")
 
 
-def _gram_rows(texts: DataFrame, k: int) -> DataFrame:
-    """(did, h) gram-hash rows from a (did, txt) frame — offsets
-    exploded, no shingle strings materialized."""
-    return (
-        texts.filter(F.length("txt") >= k)
-        .select(
-            "did",
-            "txt",
-            F.explode(F.sequence(F.lit(0), F.length("txt") - k)).alias("i"),
-        )
-        .select("did", portable_gram_hash(F.col("txt"), F.col("i"), k).alias("h"))
-    )
-
-
 def _sig_frame_thin(
     df: DataFrame, id_col: str, text_col: str, k: int, num_hashes: int
 ) -> DataFrame:
@@ -418,8 +404,6 @@ def _sig_frame_thin(
     True)``) uses this and re-derives gram sets for CANDIDATE docs
     only."""
     return _signed(df, id_col, text_col, k, num_hashes, "thin")
-
-
 
 
 def _band_frame(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:

@@ -4,8 +4,7 @@ The reference walks space→folder→list trees imperatively and emits one
 flat row per leaf (``fetch_clickup_data.py:245-272`` lists,
 ``:356-394`` tasks), with ``''`` (not null) for the folder level when a
 list lives directly under a space. Here the same shape is a declarative
-projection over nested input — or, when levels arrive as separate
-tables, two joins that Catalyst broadcast-optimizes (dims are tiny).
+projection over the task feed's hierarchy columns.
 
 Dimension builders take raw nested DataFrames (schemas.RAW_TASK_SCHEMA)
 and produce the four dim tables. All pure column expressions.
@@ -25,9 +24,7 @@ from hours_api_clickup_spark.operators.explode import (
 )
 
 APPS_CUSTOM_ITEM_ID = 1005  # fetch_clickup_data.py:703-704
-ACCOUNTS_CUSTOM_ITEM_ID = 1001  # the account task type (named once —
-# server.py and __main__.py used to carry the magic number inline,
-# review r6)
+ACCOUNTS_CUSTOM_ITEM_ID = 1001  # the account task type (pipelines.sync_dim)
 
 # custom-field UUIDs probed by the reference (fetch_clickup_data.py:552,561,572,711,728,738,743)
 CF_CONNECTED_LISTS = "connected_lists"
@@ -77,8 +74,7 @@ def select_raw_lists(raw_tasks: DataFrame) -> DataFrame:
     hierarchy columns, NORMALIZED ('' folder backfill) before distinct —
     normalizing after distinct would keep a null-folder and a ''-folder
     variant of the same list as two rows and fan out every downstream
-    list_id join (review r6). One definition for server.py and
-    __main__.py, which carried drift-prone copies."""
+    list_id join (review r6). ``pipelines.sync_dim`` is its one caller."""
     return raw_tasks.select(
         "space_id",
         "space_name",
@@ -87,29 +83,6 @@ def select_raw_lists(raw_tasks: DataFrame) -> DataFrame:
         "list_id",
         "list_name",
     ).distinct()
-
-
-def flatten_hierarchy(
-    spaces: DataFrame, folders: DataFrame, lists: DataFrame
-) -> DataFrame:
-    """Separate-level variant: one row per leaf list with ancestor columns.
-
-    ``folders`` may miss rows (folder-less lists) → left join + '' fill,
-    matching fetch_clickup_data.py:268-269. Levels are small dims →
-    broadcast joins, no shuffle on the leaf side.
-    """
-    return (
-        lists.join(F.broadcast(folders), "folder_id", "left")
-        .join(F.broadcast(spaces), "space_id", "inner")
-        .select(
-            "space_id",
-            "space_name",
-            _blank_if_null("folder_id").alias("folder_id"),
-            _blank_if_null("folder_name").alias("folder_name"),
-            "list_id",
-            "list_name",
-        )
-    )
 
 
 def build_dim_tasks(raw_tasks: DataFrame) -> DataFrame:

@@ -102,13 +102,18 @@ def fact_expectations() -> list[Expectation]:
     ]
 
 
+#: the row count ``observe_expectations`` collects next to the suite
+OBSERVED_ROWS = "__rows"
+
+
 def observe_expectations(
-    df: DataFrame, expectations: list[Expectation], name: str = "expectations"
+    df: DataFrame, expectations: list[Expectation], name: str | None = None
 ):
     """Attach the expectation suite to ``df`` as an ``Observation`` so
     the violations are collected DURING the next action on ``df`` —
     zero extra scans, where ``run_expectations`` costs one dedicated
-    pass.
+    pass. The observation also counts the rows (``OBSERVED_ROWS``), so
+    a write learns how many rows it wrote without reading them back.
 
     This is the write-path form of the reference's post-load
     verification SQL (docs/setup.md:93-101): instead of loading the
@@ -117,9 +122,11 @@ def observe_expectations(
     point — validation becomes free.
 
     Returns ``(df_observed, observation)``; after an action runs on
-    ``df_observed``, ``observation.get`` holds {expectation_name:
-    violation_count} and ``assert_observed_clean(observation)`` raises
-    on any non-zero count.
+    ``df_observed``, ``observation.get`` holds the row count and
+    {expectation_name: violation_count}, and
+    ``assert_observed_clean(observation)`` raises on any non-zero
+    violation count. ``name`` defaults to a unique one, so concurrent
+    writes in one session never read each other's metrics.
 
     Engine limitation: observed metrics reject DISTINCT aggregates, so
     ``expect_unique`` suites must keep using ``run_expectations``'s
@@ -129,16 +136,19 @@ def observe_expectations(
 
     obs = Observation(name)
     out = df.observe(
-        obs, *[e.violations.alias(e.name) for e in expectations]
+        obs,
+        F.count(F.lit(1)).alias(OBSERVED_ROWS),
+        *[e.violations.alias(e.name) for e in expectations],
     )
     return out, obs
 
 
 def assert_observed_clean(observation) -> dict:
     """Raise if any observed expectation recorded violations; returns
-    the metrics dict otherwise. Call only after an action has run on
-    the observed DataFrame."""
-    metrics = observation.get
+    the {expectation_name: violation_count} dict otherwise. Call only
+    after an action has run on the observed DataFrame."""
+    metrics = dict(observation.get)
+    metrics.pop(OBSERVED_ROWS)
     bad = {k: v for k, v in metrics.items() if v}
     if bad:
         raise AssertionError(f"expectations violated: {bad}")

@@ -1,14 +1,12 @@
 """Sync orchestration — the reference's 7-endpoint surface as functions.
 
-Each ``sync_*`` mirrors one Flask route / CLI mode
-(``/root/reference/main.py:22-207``, ``fetch_clickup_data.py:1679-1735``):
+Each ``sync_*`` backs one of the reference's Flask routes / CLI modes
+(``main.py:22-207``, ``fetch_clickup_data.py:1679-1735``);
+``server.dispatch`` is the one place that maps a route onto them:
 
     sync_refresh        POST /sync/refresh       (--mode refresh --days N)
     sync_full_reindex   POST /sync/full_reindex  (--mode full_reindex)
-    sync_lists          POST /sync/lists
-    sync_tasks          POST /sync/tasks
-    sync_accounts       POST /sync/accounts
-    sync_apps           POST /sync/apps
+    sync_dim            POST /sync/lists | tasks | accounts | apps
     health              GET  /health
 
 Inputs are DataFrames (fixture JSON or REST-fed), outputs are written
@@ -21,6 +19,7 @@ from __future__ import annotations
 
 import datetime as dt
 from dataclasses import dataclass
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -28,19 +27,29 @@ from pyspark.sql import functions as F
 from hours_api_clickup_spark import storage
 from hours_api_clickup_spark.operators.dedupe import dedupe_latest
 from hours_api_clickup_spark.operators.hierarchy import (
+    ACCOUNTS_CUSTOM_ITEM_ID,
     build_dim_accounts,
     build_dim_apps,
     build_dim_lists,
     build_dim_tasks,
+    select_raw_lists,
 )
 from hours_api_clickup_spark.operators.merge import (
     merge_full_reindex,
     merge_refresh,
 )
 from hours_api_clickup_spark.operators.transform import transform_time_entries
+from hours_api_clickup_spark.operators.validate import (
+    OBSERVED_ROWS,
+    assert_observed_clean,
+    observe_expectations,
+)
 from hours_api_clickup_spark.sinks.writers import csv_backup
 
 DEFAULT_REFRESH_DAYS = 60  # deploy.sh:70 (REFRESH_DAYS=60, 6-hourly job)
+
+#: the dimension tables ``sync_dim`` loads, one per /sync/<name> route
+DIMS = ("lists", "tasks", "accounts", "apps")
 
 #: build_corpus stage-03 crossover (VERDICT r10 #4): at or above this
 #: many gate-surviving docs the near-dedup signing pass stops shipping
@@ -78,6 +87,58 @@ def refresh_window_pred(today_oslo: dt.date, days: int):
     return F.col("start_date_oslo").between(F.lit(lo), F.lit(today_oslo))
 
 
+def commit_table(
+    path: str,
+    owner: str,
+    staging: DataFrame,
+    merge: Callable[[DataFrame, DataFrame], DataFrame] | None = None,
+    lock_wait_s: float = 0.0,
+    lock_ttl_s: int | None = None,
+    expectations: list | None = None,
+) -> tuple[int, dict | None]:
+    """The one leased write every warehouse table commits through:
+    table lock → ``merge(live table or an empty one, staging)`` (or
+    ``staging`` itself for a full-replace load, which reads nothing) →
+    ``storage.replace_table``. Returns ``(rows written, observed
+    expectation metrics or None)``.
+
+    The lock is a single-writer lease in a ``{path}__lock`` SIBLING (the
+    swap replaces the table directory itself, so a lease inside it
+    would ride out with the swap — the ``compact_small_files``
+    convention). It closes the race where two writers (batch syncs, the
+    streaming refresh's foreachBatch) read the same old table and the
+    loser's rows are erased by the winner's swap: the loser refuses
+    loudly. ``lock_wait_s`` bounds a poll-and-retry before the refusal —
+    the streaming side uses it so a collision with the scheduled
+    refresh stalls the batch instead of killing the query;
+    ``lock_ttl_s`` is the lease's staleness ttl (None =
+    ``storage.LEASE_TTL_SEC``). The stage-then-swap keeps the old table
+    readable if the write fails.
+
+    The row count and the optional ``expectations`` suite
+    (operators.validate.Expectation list — the reference's post-load
+    verification SQL, docs/setup.md:93-101) ride the write as ONE
+    ``Observation``: no read-back job, no second scan. Violations raise
+    once the write has committed, like the reference's after-the-load
+    checks — gate ``staging`` with ``run_expectations`` when a violated
+    batch must never land."""
+    spark = staging.sparkSession
+    with storage.maintenance_lease(
+        spark,
+        f"{path}__lock",
+        owner,
+        ttl_sec=storage.LEASE_TTL_SEC if lock_ttl_s is None else lock_ttl_s,
+        wait_s=lock_wait_s,
+    ):
+        out = staging
+        if merge is not None:
+            out = merge(read_fact_or_empty(spark, path, staging), staging)
+        out, obs = observe_expectations(out, expectations or [])
+        storage.replace_table(out, path)
+    rows = obs.get[OBSERVED_ROWS]
+    return rows, assert_observed_clean(obs) if expectations else None
+
+
 def sync_refresh(
     spark: SparkSession,
     raw_entries: DataFrame,
@@ -89,86 +150,24 @@ def sync_refresh(
     lock_wait_s: float = 0.0,
     lock_ttl_s: int | None = None,
 ) -> SyncResult:
-    """Windowed refresh: stage → windowed MERGE into the fact table.
+    """Windowed refresh: stage → windowed MERGE into the fact table,
+    committed by ``commit_table`` (which also runs ``expectations``).
 
     ``lock_wait_s``/``lock_ttl_s`` tune the table lock (VERDICT r9 #8):
     a deployment that runs this side by side with the streaming refresh
     can let a scheduled sync wait out a streaming batch's short hold
-    the same way the streaming side waits out the sync's.
-
-    ``expectations`` (operators.validate.Expectation list) rides the
-    merge write as observed metrics — the reference's post-load
-    verification SQL (docs/setup.md:93-101) collected DURING the load
-    for free instead of by a second scan; violations raise BEFORE the
-    result is returned, and the counts land in ``SyncResult.metrics``.
-    Like the reference's after-the-load checks, detection happens once
-    the write has committed — gate BEFORE the write (a dedicated
-    run_expectations pass on ``staging``) when a violated batch must
-    never land.
-    """
+    the same way the streaming side waits out the sync's."""
     staging = _stage_entries(raw_entries)
     if backup_path:
         csv_backup(staging, backup_path)
-    # the read → merge → overwrite cycle runs under the table lock
-    # (r9): two refreshes racing on one fact path — two scheduler
-    # dispatches, two threaded HTTP requests, or a batch refresh racing
-    # the streaming per-micro-batch merge — both read the same old
-    # fact and the loser's merged rows are silently erased by the
-    # winner's swap. Lease-guarded, the loser refuses loudly instead.
-    with table_lock(
-        spark, fact_path, "sync_refresh",
-        wait_s=lock_wait_s, ttl_sec=lock_ttl_s,
-    ):
-        fact = read_fact_or_empty(spark, fact_path, staging)
-        merged = merge_refresh(
-            fact, staging, refresh_window_pred(today_oslo, days), key="id"
-        )
-        obs = None
-        if expectations:
-            from hours_api_clickup_spark.operators.validate import (
-                observe_expectations,
-            )
-
-            merged, obs = observe_expectations(merged, expectations)
-        # stage-then-swap: a failed write leaves the old table live
-        storage.replace_table(merged, fact_path)
-        # footer-only count (parquet count() is satisfied from
-        # row-group metadata, no data pages)
-        rows = spark.read.parquet(fact_path).count()
-    metrics = None
-    if obs is not None:
-        from hours_api_clickup_spark.operators.validate import (
-            assert_observed_clean,
-        )
-
-        metrics = assert_observed_clean(obs)
+    window = refresh_window_pred(today_oslo, days)
+    rows, metrics = commit_table(
+        fact_path, "sync_refresh", staging,
+        lambda fact, st: merge_refresh(fact, st, window, key="id"),
+        lock_wait_s, lock_ttl_s, expectations,
+    )
     return SyncResult(
         table=fact_path, rows=rows, mode="refresh", metrics=metrics
-    )
-
-
-def table_lock(
-    spark: SparkSession,
-    path: str,
-    owner: str,
-    wait_s: float = 0.0,
-    ttl_sec: int | None = None,
-):
-    """Single-writer lease for a plain parquet table's read-modify-write
-    cycle, held in a ``{path}__lock`` SIBLING (the cycle swaps the table
-    directory itself, so a lease inside it would ride out with the
-    swap — the ``compact_small_files`` convention). Shared by the batch
-    syncs and the streaming refresh's foreachBatch, so any two of them
-    racing one table exclude each other loudly. ``wait_s`` bounds a
-    poll-and-retry before the refusal — the streaming side uses it so a
-    collision with the scheduled refresh stalls the batch instead of
-    killing the query."""
-    return storage.maintenance_lease(
-        spark,
-        f"{path}__lock",
-        owner,
-        ttl_sec=storage.LEASE_TTL_SEC if ttl_sec is None else ttl_sec,
-        wait_s=wait_s,
     )
 
 
@@ -217,15 +216,10 @@ def sync_full_reindex(
     staging = _stage_entries(raw_entries)
     if backup_path:
         csv_backup(staging, backup_path)
-    # table lock: see sync_refresh — a reindex racing any other writer
-    # on this fact path must refuse, not silently erase the loser
-    with table_lock(
-        spark, fact_path, "sync_full_reindex",
-        wait_s=lock_wait_s, ttl_sec=lock_ttl_s,
-    ):
-        fact = read_fact_or_empty(spark, fact_path, staging)
-        storage.replace_table(merge_full_reindex(fact, staging), fact_path)
-        rows = spark.read.parquet(fact_path).count()
+    rows, _ = commit_table(
+        fact_path, "sync_full_reindex", staging, merge_full_reindex,
+        lock_wait_s, lock_ttl_s,
+    )
     return SyncResult(table=fact_path, rows=rows, mode="full_reindex")
 
 
@@ -254,57 +248,39 @@ def read_fact_or_empty(
         raise
 
 
-def _snapshot_sync(
-    build,
-    raw: DataFrame,
+def sync_dim(
+    name: str,
+    raw_tasks: DataFrame,
     path: str,
-    mode: str,
     backup_path: str | None = None,
     lock_wait_s: float = 0.0,
     lock_ttl_s: int | None = None,
 ) -> SyncResult:
-    dim = build(raw)
+    """Full-replace load of one dimension (``name`` in ``DIMS``) from
+    the raw task feed (fetch_clickup_data.py:1449-1660). The reference
+    walks Space → Folder → List through the API; here the hierarchy
+    columns of the task feed carry the same facts (``select_raw_lists``),
+    accounts are the tasks of the account item type, and the tasks and
+    apps builders take the whole feed. WRITE_TRUNCATE parity through
+    ``commit_table``: the lock keeps two racing loads from swapping over
+    each other's staged directory, and a failed write leaves the
+    previous dimension readable."""
+    if name == "lists":
+        dim = build_dim_lists(select_raw_lists(raw_tasks))
+    elif name == "tasks":
+        dim = build_dim_tasks(raw_tasks)
+    elif name == "accounts":
+        dim = build_dim_accounts(
+            raw_tasks.filter(F.col("custom_item_id") == ACCOUNTS_CUSTOM_ITEM_ID)
+        )
+    elif name == "apps":
+        dim = build_dim_apps(raw_tasks)
+    else:
+        raise KeyError(f"unknown dimension {name!r}; one of {DIMS}")
     if backup_path:
         csv_backup(dim, backup_path)
-    # table lock: a snapshot load has no read-modify cycle, but two
-    # racing loads would swap over each other's staged directory.
-    # WRITE_TRUNCATE parity through stage-then-swap: a write that fails
-    # mid-job leaves the previous dimension readable, and swap_dir
-    # fences the commit against a lost lock
-    with table_lock(
-        dim.sparkSession, path, f"sync_{mode}",
-        wait_s=lock_wait_s, ttl_sec=lock_ttl_s,
-    ):
-        storage.replace_table(dim, path)
-        # count the materialized output — re-counting `dim` would re-run
-        # the whole build (and raw scan) a second time
-        rows = dim.sparkSession.read.parquet(path).count()
-    return SyncResult(table=path, rows=rows, mode=mode)
-
-
-def sync_lists(raw_lists: DataFrame, path: str, backup_path: str | None = None, **lock_kw):
-    """Full-replace snapshot (fetch_clickup_data.py:1449-1501)."""
-    return _snapshot_sync(
-        build_dim_lists, raw_lists, path, "lists", backup_path, **lock_kw
-    )
-
-
-def sync_tasks(raw_tasks: DataFrame, path: str, backup_path: str | None = None, **lock_kw):
-    return _snapshot_sync(
-        build_dim_tasks, raw_tasks, path, "tasks", backup_path, **lock_kw
-    )
-
-
-def sync_accounts(raw_accounts: DataFrame, path: str, backup_path: str | None = None, **lock_kw):
-    return _snapshot_sync(
-        build_dim_accounts, raw_accounts, path, "accounts", backup_path, **lock_kw
-    )
-
-
-def sync_apps(raw_tasks: DataFrame, path: str, backup_path: str | None = None, **lock_kw):
-    return _snapshot_sync(
-        build_dim_apps, raw_tasks, path, "apps", backup_path, **lock_kw
-    )
+    rows, _ = commit_table(path, f"sync_{name}", dim, None, lock_wait_s, lock_ttl_s)
+    return SyncResult(table=path, rows=rows, mode=name)
 
 
 def health(spark: SparkSession) -> dict:
@@ -735,7 +711,8 @@ def build_corpus(
         else:
             spark.conf.set(_ipn_key, _ipn_prev)
 
-    # atomic publish (the sinks/versioned.py pointer trick): a crashed
+    # atomic publish (tmp + os.replace, like sinks/versioned.py's
+    # manifest): a crashed
     # build leaves data dirs but never a manifest claiming completion
     tmp = os.path.join(out_dir, "manifest.json.tmp")
     with open(tmp, "w") as f:
@@ -758,8 +735,6 @@ def run_maintenance(spark: SparkSession, targets: list[str]) -> list[dict]:
     - ``docneardup=/path``    → ``doc_neardup_index_compact``
     - ``store=/path[:keep]``  → ``prune_months`` (keep_unreferenced,
       default 0) on a versioned month store
-    - ``snapshots=/path[:keep]`` → ``prune_snapshots`` (keep_last,
-      default 2)
 
     (IVFADC is deliberately absent: its compaction IS the two-tier
     rebuild, which needs the corpus and quantizers — run it through
@@ -780,10 +755,7 @@ def run_maintenance(spark: SparkSession, targets: list[str]) -> list[dict]:
     from hours_api_clickup_spark.datapipe.textindex import (
         inverted_index_compact,
     )
-    from hours_api_clickup_spark.sinks.versioned import (
-        prune_months,
-        prune_snapshots,
-    )
+    from hours_api_clickup_spark.sinks.versioned import prune_months
 
     # families whose spec accepts a ':'-suffix option; everything else
     # takes the WHOLE rest as the path — a ':'-suffix on a no-option
@@ -794,7 +766,7 @@ def run_maintenance(spark: SparkSession, targets: list[str]) -> list[dict]:
     import time as _time
 
     _log = logging.getLogger(__name__)
-    opt_families = {"ivf", "store", "snapshots"}
+    opt_families = {"ivf", "store"}
     results: list[dict] = []
     for spec in targets:
         _t0 = _time.perf_counter()
@@ -825,10 +797,6 @@ def run_maintenance(spark: SparkSession, targets: list[str]) -> list[dict]:
             elif family == "store":
                 out["removed"] = prune_months(
                     path, keep_unreferenced=int(opt or 0)
-                )
-            elif family == "snapshots":
-                out["removed"] = prune_snapshots(
-                    path, keep_last=int(opt or 2)
                 )
             else:
                 raise ValueError(f"unknown maintenance family {family!r}")

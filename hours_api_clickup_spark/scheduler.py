@@ -16,10 +16,13 @@ This module re-expresses that contract as a library: a 5-field cron
 parser (the POSIX subset Cloud Scheduler documents: ``*``, numbers,
 ranges, comma lists, ``*/step``), a timezone-correct ``next_fire``, and
 a catch-up ``due_jobs`` tick that a driver loop (or an external cron /
-Airflow / ``while true; sleep``) can call to dispatch through the same
-``server._dispatch_sync`` seam the HTTP routes use. Everything here is
-pure datetime logic — no Spark session is touched until a job actually
-dispatches — so cadence is unit-testable without a cluster.
+Airflow / ``while true; sleep``) can call. Like Cloud Scheduler, which
+only POSTs to the routes, a due job runs its route through
+``server.dispatch`` — the one route dispatcher the HTTP façade and the
+CLI's sync modes use too; nothing here calls ``pipelines`` directly.
+Everything else is pure datetime logic — no Spark session is touched
+until a job actually dispatches — so cadence is unit-testable without a
+cluster.
 
 Semantics mirrored from Cloud Scheduler's documented behavior:
 
@@ -268,18 +271,18 @@ def run_pending(
     jobs: tuple[Job, ...] = REFERENCE_JOBS,
     tz: ZoneInfo = OSLO,
 ) -> list[dict]:
-    """Dispatch every due job through the same seam the HTTP routes use
-    (``server._dispatch_sync``; reference main.py:22-207). Failure
+    """Run every due job's route through ``server.dispatch``, the
+    dispatcher the HTTP routes use (reference main.py:22-207). Failure
     isolation matches Cloud Scheduler's: each job is its own unit — a
     failed sync does NOT stop the other due jobs from running, its
     watermark is not advanced (so it alone retries next tick), and the
     failure is reported in the results instead of raised."""
-    from hours_api_clickup_spark.server import _dispatch_sync
+    from hours_api_clickup_spark import server
 
     results = []
     for job, fire in due_jobs(state, now, jobs, tz):
         try:
-            payload = _dispatch_sync(cfg, job.route, {})
+            payload = server.dispatch(cfg, job.route, {})
         except Exception as exc:  # noqa: BLE001 — per-job isolation
             results.append(
                 {

@@ -4,12 +4,12 @@ The reference serves 8 routes (``/root/reference/main.py:22-232``):
 POST /sync/refresh, /sync/full_reindex, /sync/lists, /sync/tasks,
 /sync/accounts, /sync/apps and GET /health, / — each a thin wrapper
 that invokes the pipeline and answers ``{'status': 'success', ...}`` /
-``{'status': 'error', 'error': ...}``. This module maps the same routes
+``{'status': 'error', 'error': ...}``. ``dispatch`` maps the same routes
 1:1 onto :mod:`hours_api_clickup_spark.pipelines` (the tested sync
-surface), using only the stdlib ``http.server`` — the runtime has no
-web framework, and the façade is deliberately free of any logic beyond
-routing + JSON envelopes so every behavior stays tested at the
-pipelines layer.
+surface), and the CLI's sync modes and the scheduler call it too. The
+façade uses only the stdlib ``http.server`` — the runtime has no web
+framework — and is deliberately free of any logic beyond routing +
+JSON envelopes so every behavior stays tested at the pipelines layer.
 
 Input sources are configured paths (REST-fed or fixture JSONL — the
 sandbox analog of the reference's env-configured ClickUp API client);
@@ -25,13 +25,8 @@ from dataclasses import dataclass
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 from hours_api_clickup_spark import pipelines
-from hours_api_clickup_spark.operators.hierarchy import (
-    ACCOUNTS_CUSTOM_ITEM_ID,
-    select_raw_lists,
-)
 from hours_api_clickup_spark.sources.readers import (
     read_raw_tasks,
     read_raw_time_entries,
@@ -95,6 +90,13 @@ SCHEDULE = {
 }
 
 
+#: the POST routes ``dispatch`` serves
+ROUTES = frozenset(
+    ["/maintain"]
+    + [f"/sync/{m}" for m in ("refresh", "full_reindex", *pipelines.DIMS)]
+)
+
+
 class BadRequest(ValueError):
     """A malformed request body: routes raise it to get a 400, not a 500.
 
@@ -125,6 +127,11 @@ class ServerConfig:
     #: function parameter.
     lock_wait_s: float = 0.0
     lease_ttl_s: int | None = None
+    #: CSV backup root (S9): when set, every sync route first writes its
+    #: staged batch (refresh, full_reindex) or built dimension as one
+    #: headered CSV under ``{backup_dir}/{mode}``, the reference's
+    #: per-sync backup (fetch_clickup_data.py:1780-1782)
+    backup_dir: str | None = None
 
 
 def _today(cfg: ServerConfig) -> dt.date:
@@ -135,30 +142,15 @@ def _today(cfg: ServerConfig) -> dt.date:
     return dt.datetime.now(ZoneInfo("Europe/Oslo")).date()
 
 
-def _dispatch_sync(cfg: ServerConfig, route: str, body: dict) -> dict:
-    """Run one sync route; returns the reference-shaped success payload."""
+def dispatch(cfg: ServerConfig, route: str, body: dict) -> dict:
+    """Run one ``/sync/*`` or ``/maintain`` route; returns the
+    reference-shaped success payload. The ONE route → pipelines map:
+    the HTTP handler, the CLI's direct modes and the scheduler all call
+    it (the reference's Flask routes set ``sys.argv`` and call the CLI
+    ``main()``, main.py:35-39 — one code path whatever the entry)."""
+    if route not in ROUTES:
+        raise KeyError(route)
     spark = cfg.spark
-    if route == "/sync/refresh":
-        days = int(body.get("days", cfg.refresh_days))
-        res = pipelines.sync_refresh(
-            spark,
-            read_raw_time_entries(spark, cfg.entries_path),
-            f"{cfg.warehouse}/fact_time_entries",
-            today_oslo=_today(cfg),
-            days=days,
-            lock_wait_s=cfg.lock_wait_s,
-            lock_ttl_s=cfg.lease_ttl_s,
-        )
-        return {"status": "success", "mode": "refresh", "days": days, "rows": res.rows}
-    if route == "/sync/full_reindex":
-        res = pipelines.sync_full_reindex(
-            spark,
-            read_raw_time_entries(spark, cfg.entries_path),
-            f"{cfg.warehouse}/fact_time_entries",
-            lock_wait_s=cfg.lock_wait_s,
-            lock_ttl_s=cfg.lease_ttl_s,
-        )
-        return {"status": "success", "mode": "full_reindex", "rows": res.rows}
     if route == "/maintain":
         # the compaction-cadence sweep (VERDICT r9 #6): per-target
         # defer/error isolation lives in pipelines.run_maintenance — a
@@ -196,34 +188,37 @@ def _dispatch_sync(cfg: ServerConfig, route: str, body: dict) -> dict:
             "errors": sum(1 for r in results if r["status"] == "error"),
             "results": results,
         }
-
-    raw_tasks = read_raw_tasks(spark, cfg.tasks_path)
-    lock_kw = {"lock_wait_s": cfg.lock_wait_s, "lock_ttl_s": cfg.lease_ttl_s}
-    if route == "/sync/lists":
-        # the reference walks Space → Folder → List via the API; the
-        # hierarchy columns of the task feed carry the same facts here
-        res = pipelines.sync_lists(
-            select_raw_lists(raw_tasks), f"{cfg.warehouse}/dim_lists",
-            **lock_kw,
+    mode = route.removeprefix("/sync/")
+    kw = {
+        "backup_path": f"{cfg.backup_dir}/{mode}" if cfg.backup_dir else None,
+        "lock_wait_s": cfg.lock_wait_s,
+        "lock_ttl_s": cfg.lease_ttl_s,
+    }
+    if mode == "refresh":
+        days = int(body.get("days", cfg.refresh_days))
+        res = pipelines.sync_refresh(
+            spark,
+            read_raw_time_entries(spark, cfg.entries_path),
+            f"{cfg.warehouse}/fact_time_entries",
+            today_oslo=_today(cfg),
+            days=days,
+            **kw,
         )
-    elif route == "/sync/tasks":
-        res = pipelines.sync_tasks(
-            raw_tasks, f"{cfg.warehouse}/dim_tasks", **lock_kw
-        )
-    elif route == "/sync/accounts":
-        res = pipelines.sync_accounts(
-            raw_tasks.filter(
-                F.col("custom_item_id") == ACCOUNTS_CUSTOM_ITEM_ID
-            ),
-            f"{cfg.warehouse}/dim_accounts",
-            **lock_kw,
-        )
-    elif route == "/sync/apps":
-        res = pipelines.sync_apps(
-            raw_tasks, f"{cfg.warehouse}/dim_apps", **lock_kw
+        return {"status": "success", "mode": "refresh", "days": days, "rows": res.rows}
+    if mode == "full_reindex":
+        res = pipelines.sync_full_reindex(
+            spark,
+            read_raw_time_entries(spark, cfg.entries_path),
+            f"{cfg.warehouse}/fact_time_entries",
+            **kw,
         )
     else:
-        raise KeyError(route)
+        res = pipelines.sync_dim(
+            mode,
+            read_raw_tasks(spark, cfg.tasks_path),
+            f"{cfg.warehouse}/dim_{mode}",
+            **kw,
+        )
     return {"status": "success", "mode": res.mode, "rows": res.rows}
 
 
@@ -276,11 +271,7 @@ def make_handler(cfg: ServerConfig) -> type[BaseHTTPRequestHandler]:
                     {"status": "error", "error": "body must be a JSON object"},
                 )
                 return
-            if self.path not in {
-                "/sync/refresh", "/sync/full_reindex", "/sync/lists",
-                "/sync/tasks", "/sync/accounts", "/sync/apps",
-                "/maintain",
-            }:
+            if self.path not in ROUTES:
                 self._json(404, {"status": "error", "error": "not found"})
                 return
             try:
@@ -292,7 +283,7 @@ def make_handler(cfg: ServerConfig) -> type[BaseHTTPRequestHandler]:
                 # (review r6). Threading still serves GET /health
                 # concurrently; only syncs serialize.
                 with _SYNC_LOCK:
-                    payload = _dispatch_sync(cfg, self.path, body)
+                    payload = dispatch(cfg, self.path, body)
             except BadRequest as exc:
                 # the request itself was malformed (e.g. /maintain targets
                 # not a list, or outside the configured set) — 400, same

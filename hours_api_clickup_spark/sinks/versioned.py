@@ -1,35 +1,23 @@
-"""Versioned snapshot store: atomic-publish time travel for managed
-tables.
+"""Manifest-committed month store — the at-scale form of the fact
+table (VERDICT r5 #4): a windowed refresh reads and rewrites only the
+window's months.
 
-The reference keeps timestamped CSV backups next to every sync
-(``fetch_clickup_data.py:1780-1782``) — its crude answer to "what did
-the table look like before this run?". The scale-correct form is
-immutable versioned snapshots with an atomically-published pointer
-(the idea behind Delta/Iceberg metadata, reduced to its parquet-only
-core):
+Every month rewrite lands in a fresh immutable ``month=M/v=N`` dir and
+ONE root manifest file — {month: version} — is the only mutable state,
+published by tmp write + ``os.replace``. A crash at ANY point before the
+publish leaves the old manifest intact: readers never see a half-written
+month, and a month the merge emptied cannot be resurrected (it simply
+leaves the manifest; its directory becomes unreferenced garbage for
+``prune_months``).
 
-- every write lands in a fresh ``{path}/v=N`` directory — existing
-  versions are never mutated, so concurrent readers of any version are
-  safe;
-- readers resolve the CURRENT version through ``_LATEST``, a one-line
-  pointer file written last — a crash mid-write leaves a dangling
-  ``v=N`` directory but never a corrupt table (publish is the pointer
-  rename, effectively atomic);
-- time travel = read an explicit older version;
-- ``prune_snapshots`` bounds storage (never removes the published
-  version).
-
-This intentionally does NOT implement multi-writer commit protocols
-(that is a table format's job); single-writer pipelines — this repo's
-sync model — get crash-safe snapshots and time travel with zero
-dependencies. The single writer is enforced, not assumed: every
-read-modify-publish cycle (snapshot write, atomic merge, bootstrap,
-both pruners) runs under ``storage.maintenance_lease`` on the store
-root, and the pointer and manifest replaces are fenced by
-``storage.verify_swap_ownership``. Without it, two maintainers would
-silently erase each other's months (both derive the new manifest from
-the same stale read), or GC a version an in-flight publish is about
-to reference; with it, the loser gets ``storage.MaintenanceLeaseHeld``.
+The single writer is enforced, not assumed: every read-modify-publish
+cycle (atomic merge, bootstrap, GC) runs under
+``storage.maintenance_lease`` on the store root, and the manifest and
+file-stats replaces are fenced by ``storage.verify_swap_ownership``.
+Without it, two maintainers would silently erase each other's months
+(both derive the new manifest from the same stale read), or GC a
+version an in-flight publish is about to reference; with it, the loser
+gets ``storage.MaintenanceLeaseHeld``.
 """
 
 from __future__ import annotations
@@ -41,8 +29,6 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 
 from hours_api_clickup_spark import storage
-
-_POINTER = "_LATEST"
 
 
 def _session() -> SparkSession:
@@ -97,81 +83,6 @@ def _taken_numbers(path: str) -> set[int]:
                 out.add(int(n))
     return out
 
-
-def latest_version(path: str) -> int | None:
-    """The PUBLISHED version (pointer file), or None for an empty store.
-    Dangling ``v=N`` dirs from interrupted writes are ignored."""
-    ptr = os.path.join(path, _POINTER)
-    if not os.path.exists(ptr):
-        return None
-    with open(ptr) as f:
-        return int(f.read().strip())
-
-
-def write_snapshot(df: DataFrame, path: str) -> int:
-    """Write ``df`` as the next immutable version and publish it.
-    Returns the new version number."""
-    spark = df.sparkSession
-    with storage.maintenance_lease(spark, path, "write_snapshot"):
-        current = latest_version(path)
-        next_v = 0 if current is None else current + 1
-        # skip over dangling unpublished dirs from interrupted writes
-        # AND any non-dir v=N debris whose name would fail the write
-        taken = _taken_numbers(path)
-        while next_v in taken:
-            next_v += 1
-        df.write.mode("errorifexists").parquet(
-            os.path.join(path, f"v={next_v}")
-        )
-        _replace(spark, path, _POINTER, str(next_v))  # atomic publish
-        return next_v
-
-
-def read_snapshot(
-    spark: SparkSession, path: str, version: int | None = None
-) -> DataFrame:
-    """Read the published version, or time-travel to an explicit one."""
-    v = latest_version(path) if version is None else version
-    if v is None:
-        raise FileNotFoundError(f"no published snapshot at {path}")
-    return spark.read.parquet(os.path.join(path, f"v={v}"))
-
-
-def prune_snapshots(path: str, keep_last: int = 2) -> list[int]:
-    """Drop all but the newest ``keep_last`` PUBLISHED-or-older
-    versions; the published version itself is always kept. Returns the
-    removed version numbers."""
-    with storage.maintenance_lease(_session(), path, "prune_snapshots"):
-        published = latest_version(path)
-        vers = _versions(path)
-        # dangling versions NEWER than the pointer are unpublished
-        # wrecks from interrupted writes — prune them outright and
-        # never let them consume the keep budget (review r6: a dangling
-        # v=6 above a published v=5 must not evict the time-travelable
-        # v=3)
-        dangling = [
-            v for v in vers if published is not None and v > published
-        ]
-        older = [v for v in vers if v != published and v not in dangling]
-        doomed = older[: max(0, len(older) - (keep_last - 1))] + dangling
-        for v in doomed:
-            shutil.rmtree(os.path.join(path, f"v={v}"))
-        return doomed
-
-
-# ---------------------------------------------------------------------------
-# Manifest-committed month store — the at-scale form of the fact table
-# (VERDICT r5 #4): a windowed refresh reads and rewrites only the
-# window's months.
-#
-# Every month rewrite lands in a fresh immutable ``month=M/v=N`` dir and
-# ONE root manifest file — {month: version} — is the only mutable state,
-# published with the same tmp+rename pointer trick as ``write_snapshot``.
-# A crash at ANY point before the publish leaves the old manifest intact:
-# readers never see a half-written month, and a month the merge emptied
-# cannot be resurrected (it simply leaves the manifest; its directory
-# becomes unreferenced garbage for ``prune_months``).
-# ---------------------------------------------------------------------------
 
 _MANIFEST = "_MANIFEST"
 
@@ -298,8 +209,8 @@ def prune_months(path: str, keep_unreferenced: int = 0) -> list[str]:
     references (older month versions, months emptied by a merge,
     debris from crashed writes). Never touches a referenced dir.
     ``keep_unreferenced`` retains that many NEWEST unreferenced
-    versions per month (the ``prune_snapshots(keep_last=…)`` analog:
-    a time-travel/rollback grace window before space is reclaimed)."""
+    versions per month: a time-travel/rollback grace window before
+    space is reclaimed."""
     removed: list[str] = []
     if not os.path.isdir(path):
         return removed
@@ -324,72 +235,3 @@ def prune_months(path: str, keep_unreferenced: int = 0) -> list[str]:
             if live is None and not os.listdir(mdir):
                 os.rmdir(mdir)
     return removed
-
-
-def snapshot_diff(
-    spark: SparkSession,
-    path: str,
-    key_cols: list[str],
-    from_version: int,
-    to_version: int | None = None,
-) -> DataFrame:
-    """What changed between two snapshot versions, per key: one row per
-    key present in either version with ``change`` in {added, removed,
-    changed, unchanged} -- the anti-entropy / audit answer the
-    reference's timestamped CSV backups can only give by manual diffing.
-
-    Change detection hashes each row's full non-key column set (sha2
-    over the concatenated, null-sentineled values -- computed
-    identically on both sides, so schema must match; a schema change IS
-    a full-table ``changed`` and should be, since every row's bytes
-    changed).
-
-    Plan shape: full outer join on the key -- co-keyed and
-    shuffle-partitioned on both sides, no broadcast assumption (both
-    versions are table-sized); the hash is a projection inside each
-    scan. Filter ``change <> 'unchanged'`` before collecting -- the
-    common case returns a tiny frame from two big scans.
-    """
-    from pyspark.sql import functions as F
-
-    def hashed(version: int) -> DataFrame:
-        df = read_snapshot(spark, path, version=version)
-        others = [c for c in df.columns if c not in key_cols]
-
-        # Unambiguous row encoding (review r6): a bare concat lets
-        # distinct rows collide — ('ab','c') and ('a','bc') concatenate
-        # identically, and a plain null sentinel is forgeable by data.
-        # Length-prefixing each value ("<len>:<value>") makes decoding
-        # unique (boundaries can't shift), and the null marker "N"
-        # cannot be confused with an encoded value, which always starts
-        # with a digit.
-        def enc(c: str):
-            s = F.col(c).cast("string")
-            return F.when(s.isNull(), F.lit("N")).otherwise(
-                F.concat(F.length(s).cast("string"), F.lit(":"), s)
-            )
-
-        row_hash = F.sha2(
-            F.concat_ws("", *[enc(c) for c in sorted(others)]), 256
-        )
-        return df.select(*key_cols, row_hash.alias("__h"))
-
-    if to_version is None:
-        to_version = latest_version(path)
-    a = hashed(from_version)
-    b = hashed(to_version)
-    on = [a[k].eqNullSafe(b[k]) for k in key_cols]
-    joined = a.alias("a").join(b.alias("b"), on, "full_outer")
-    change = (
-        F.when(F.col("a.__h").isNull(), F.lit("added"))
-        .when(F.col("b.__h").isNull(), F.lit("removed"))
-        .when(F.col("a.__h") != F.col("b.__h"), F.lit("changed"))
-        .otherwise(F.lit("unchanged"))
-    )
-    return joined.select(
-        *[
-            F.coalesce(F.col(f"a.{k}"), F.col(f"b.{k}")).alias(k)
-            for k in key_cols
-        ],
-        change.alias("change"),
-    )

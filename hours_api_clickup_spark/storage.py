@@ -15,7 +15,7 @@ one place to monkeypatch them in tests:
 - **Maintenance lease**: ``maintenance_lease`` is the single-maintainer
   marker file (``__maintenance_lease``) with a heartbeat, an exclusive
   claim, a claim token, dead-pid takeover and a fenced release. Index
-  maintenance, the table locks and the versioned stores
+  maintenance, the table locks and the month store
   (sinks/versioned.py) all hold it. ``verify_swap_ownership`` re-reads
   the token at each commit point, so a holder whose lease was taken
   over after a stall refuses to publish.
@@ -458,7 +458,7 @@ def verify_swap_ownership(spark, target: str) -> None:
     lease covering ``target``, re-read it and raise
     ``MaintenanceLeaseLost`` on a token mismatch. ``swap_dir`` calls it
     before its destructive rename; commits that swap no directory (the
-    versioned stores' pointer, manifest and file-stats replaces) call it
+    month store's manifest and file-stats replaces) call it
     directly. Unleased callers are not fenced."""
     held = covering_held_lease(target)
     if held is None:

@@ -33,7 +33,7 @@ from hours_api_clickup_spark import storage
 from hours_api_clickup_spark.operators.dedupe import dedupe_latest
 from hours_api_clickup_spark.operators.merge import merge_upsert
 from hours_api_clickup_spark.operators.transform import transform_time_entries
-from hours_api_clickup_spark.pipelines import refresh_window_pred
+from hours_api_clickup_spark.pipelines import commit_table, refresh_window_pred
 from hours_api_clickup_spark.schemas import RAW_TIME_ENTRY_SCHEMA
 
 
@@ -59,43 +59,32 @@ def streaming_refresh(
     flat = transform_time_entries(raw)
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from hours_api_clickup_spark.pipelines import (
-            table_lock,
-            read_fact_or_empty,
-        )
-
         # watermark-advancing no-data batches must not rewrite the fact
         # table (an O(fact) no-op pass through the commit path)
         if not batch_df.head(1):
             return
-        # table lock shared with the batch syncs (r9): the documented
-        # deployment runs this stream ALONGSIDE the scheduled batch
-        # refresh ("deletes reconcile in the scheduled batch refresh"),
-        # and an unguarded race between this read→merge→swap and that
-        # one silently erases whichever lands first. The batch WAITS a
-        # bounded time for the lock (the common collision is a
-        # seconds-long scheduled sync — a stall, not a stream kill);
-        # past the deadline it errors loudly and replays from the
-        # checkpoint on restart.
-        with table_lock(
-            spark,
-            fact_path,
-            f"streaming_refresh b{batch_id}",
-            wait_s=lock_wait_s,
-        ):
-            # reject edits outside the refresh window (the reference's
-            # MERGE source prefilter, fetch_clickup_data.py:1280-1282 —
-            # entries outside the window are locked history)
-            windowed = batch_df.filter(
-                refresh_window_pred(today_oslo, days)
-            )
-            staging = dedupe_latest(windowed, key="id", ts="at")
-            fact = read_fact_or_empty(spark, fact_path, staging)
-            # upsert WITHOUT the delete branch: a micro-batch is an
-            # incremental slice, not a window snapshot — deletes
-            # reconcile in the scheduled batch refresh (see merge_upsert
-            # docstring)
-            storage.replace_table(merge_upsert(fact, staging, key="id"), fact_path)
+        # reject edits outside the refresh window (the reference's
+        # MERGE source prefilter, fetch_clickup_data.py:1280-1282 —
+        # entries outside the window are locked history)
+        staging = dedupe_latest(
+            batch_df.filter(refresh_window_pred(today_oslo, days)),
+            key="id", ts="at",
+        )
+        # the batch syncs' leased commit (r9): the documented deployment
+        # runs this stream ALONGSIDE the scheduled batch refresh
+        # ("deletes reconcile in the scheduled batch refresh"), and an
+        # unguarded race between the two read→merge→swap cycles silently
+        # erases whichever lands first. The batch WAITS a bounded time
+        # for the lock (the common collision is a seconds-long scheduled
+        # sync — a stall, not a stream kill); past the deadline it
+        # errors loudly and replays from the checkpoint on restart.
+        # Upsert WITHOUT the delete branch: a micro-batch is an
+        # incremental slice, not a window snapshot (see merge_upsert)
+        commit_table(
+            fact_path, f"streaming_refresh b{batch_id}", staging,
+            lambda fact, st: merge_upsert(fact, st, key="id"),
+            lock_wait_s=lock_wait_s,
+        )
 
     return (
         flat.writeStream.foreachBatch(apply_batch)

@@ -50,18 +50,90 @@ def _out(capsys):
 
 
 def test_cli_full_reindex_and_refresh(cli, fixtures, tmp_path, capsys):
-    fact = str(tmp_path / "fact")
+    wh = str(tmp_path / "wh")
     rc = cli([
         "--mode", "full_reindex", "--entries", fixtures["entries"],
-        "--fact", fact,
+        "--out", wh,
     ])
     assert rc == 0 and _out(capsys)["rows"] == 2
     rc = cli([
         "--mode", "refresh", "--entries", fixtures["entries"],
-        "--fact", fact, "--days", "60", "--today-oslo", "2023-11-20",
+        "--out", wh, "--days", "60", "--today-oslo", "2023-11-20",
     ])
     out = _out(capsys)
     assert rc == 0 and out["mode"] == "refresh" and out["rows"] == 2
+    # the route's payload, as POST /sync/refresh answers it
+    assert out["status"] == "success" and out["days"] == 60
+
+
+def test_cli_refresh_waits_out_a_released_table_lock(
+    cli, fixtures, tmp_path, capsys, spark, monkeypatch
+):
+    """--lock-wait-s reaches the direct sync modes: a refresh that
+    collides with another owner's table lock waits for it (bounded)
+    and lands once the holder releases mid-wait, instead of refusing
+    at once."""
+    import os
+    import threading
+
+    monkeypatch.chdir(tmp_path)
+    fact = str(tmp_path / "wh" / "fact_time_entries")
+    storage.acquire_lease(spark, f"{fact}__lock", "scheduled-refresh")
+    released = threading.Event()
+
+    def release():
+        storage.release_lease(spark, f"{fact}__lock")
+        released.set()
+
+    releaser = threading.Timer(3.0, release)
+    releaser.start()
+    try:
+        rc = cli([
+            "--mode", "refresh", "--entries", fixtures["entries"],
+            "--out", str(tmp_path / "wh"), "--today-oslo", "2023-11-20",
+            "--lock-wait-s", "30",
+        ])
+    finally:
+        releaser.cancel()
+        storage.release_lease(spark, f"{fact}__lock")
+    # it waited for the release instead of refusing
+    assert released.is_set()
+    assert rc == 0 and _out(capsys)["rows"] == 2
+    assert spark.read.parquet(fact).count() == 2
+    assert not os.path.exists(f"{fact}__lock/{storage.LEASE_FILE}")
+
+
+def test_cli_sync_modes_and_scheduler_share_the_warehouse(
+    cli, fixtures, tmp_path, capsys, spark, monkeypatch
+):
+    """A direct --mode full_reindex and a scheduler refresh tick with
+    the same --out land in the same {out}/fact_time_entries: the tick's
+    refresh merges into the table the reindex wrote (its window holds
+    none of the entries, so its row count is the reindex's history)."""
+    import os
+
+    monkeypatch.chdir(tmp_path)
+    wh = str(tmp_path / "wh")
+    rc = cli([
+        "--mode", "full_reindex", "--entries", fixtures["entries"],
+        "--out", wh,
+    ])
+    assert rc == 0 and _out(capsys)["rows"] == 2
+    assert spark.read.parquet(f"{wh}/fact_time_entries").count() == 2
+    base = [
+        "--mode", "scheduler", "--entries", fixtures["entries"],
+        "--tasks", fixtures["tasks"], "--out", wh,
+        "--state", str(tmp_path / "state.json"), "--today-oslo", "2026-01-01",
+    ]
+    assert cli(base + ["--now", "2026-01-01T11:30:00+01:00"]) == 0
+    assert _out(capsys)["ran"] == []
+    # 12:00 refresh only: the dims fire at 03-06, the reindex quarterly
+    assert cli(base + ["--now", "2026-01-01T12:30:00+01:00"]) == 0
+    ran = _out(capsys)["ran"]
+    assert [(r["job"], r["status"]) for r in ran] == [("refresh-6h", "success")]
+    assert ran[0]["rows"] == 2
+    assert spark.read.parquet(f"{wh}/fact_time_entries").count() == 2
+    assert not os.path.exists(tmp_path / "fact_time_entries")
 
 
 @pytest.mark.parametrize(
@@ -547,7 +619,7 @@ def test_cli_maintain_sweeps_indexes_and_defers_on_lease(
 
     rc = cli(["--mode", "maintain", "--index", f"lsh={lsh}",
               "--index", f"text={txt}"])
-    out = _out(capsys)
+    out = _out(capsys)["results"]
     assert rc == 0
     assert [r["status"] for r in out] == ["ok", "ok"]
     assert not os.path.exists(f"{lsh}/log")
@@ -559,17 +631,18 @@ def test_cli_maintain_sweeps_indexes_and_defers_on_lease(
     try:
         rc = cli(["--mode", "maintain", "--index", f"lsh={lsh}",
                   "--index", f"text={txt}"])
-        out = _out(capsys)
+        payload = _out(capsys)
+        out = payload["results"]
     finally:
         storage.release_lease(spark, lsh)
-    assert rc == 0
+    assert rc == 0 and payload["deferred"] == 1
     assert [r["status"] for r in out] == ["deferred", "ok"]
     assert os.path.exists(f"{lsh}/log")  # untouched under the lease
 
     # malformed family: error status, nonzero exit, siblings unaffected
     rc = cli(["--mode", "maintain", "--index", "bogus=/nowhere",
               "--index", f"lsh={lsh}"])
-    out = _out(capsys)
+    out = _out(capsys)["results"]
     assert rc == 1
     assert [r["status"] for r in out] == ["error", "ok"]
     assert not os.path.exists(f"{lsh}/log")
@@ -584,7 +657,7 @@ def test_cli_maintain_sweeps_indexes_and_defers_on_lease(
     S.lsh_index_append(emb.limit(3), "embedding", "vec_id", lsh, dim=64)
     rc = cli(["--mode", "maintain", "--index", f"lsh=file:{lsh}",
               "--index", f"ivf=file:{ivfp}:vec_id"])
-    out = _out(capsys)
+    out = _out(capsys)["results"]
     assert rc == 0
     assert [r["status"] for r in out] == ["ok", "ok"]
     assert [r["path"] for r in out] == [f"file:{lsh}", f"file:{ivfp}"]

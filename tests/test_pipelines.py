@@ -373,11 +373,9 @@ def test_failed_dim_sync_keeps_previous_dim(spark, tmp_path, raw_tasks, monkeypa
     warehouse): the load is staged and swapped, never an in-place
     overwrite that truncates the live table first."""
     from hours_api_clickup_spark import pipelines
-    from hours_api_clickup_spark.operators.hierarchy import select_raw_lists
 
     path = str(tmp_path / "dim_lists")
-    raw = select_raw_lists(raw_tasks)
-    first = pipelines.sync_lists(raw, path)
+    first = pipelines.sync_dim("lists", raw_tasks, path)
     before = sorted(tuple(r) for r in spark.read.parquet(path).collect())
     assert first.rows == len(before) > 0
 
@@ -393,7 +391,7 @@ def test_failed_dim_sync_keeps_previous_dim(spark, tmp_path, raw_tasks, monkeypa
 
     monkeypatch.setattr(pipelines, "build_dim_lists", failing_build)
     with pytest.raises(Exception, match="injected write failure"):
-        pipelines.sync_lists(raw, path)
+        pipelines.sync_dim("lists", raw_tasks, path)
     after = sorted(tuple(r) for r in spark.read.parquet(path).collect())
     assert after == before
 
@@ -639,42 +637,6 @@ def test_fold_rollup_batch_redelivery_is_noop(spark, tmp_path):
         spark.read.parquet(state).drop("__last_batch_id"), "value"
     ).collect()
     assert (row.n, row.total_value) == (3, 10.0)
-
-
-def test_versioned_snapshots_time_travel_and_prune(spark, tmp_path):
-    from hours_api_clickup_spark.sinks.versioned import (
-        latest_version,
-        prune_snapshots,
-        read_snapshot,
-        write_snapshot,
-    )
-
-    path = str(tmp_path / "store")
-    v0 = write_snapshot(spark.range(3).withColumn("tag", F.lit("a")), path)
-    v1 = write_snapshot(spark.range(5).withColumn("tag", F.lit("b")), path)
-    v2 = write_snapshot(spark.range(7).withColumn("tag", F.lit("c")), path)
-    assert (v0, v1, v2) == (0, 1, 2)
-    assert latest_version(path) == 2
-
-    # current read sees the newest; time travel sees history unchanged
-    assert read_snapshot(spark, path).count() == 7
-    assert read_snapshot(spark, path, version=0).count() == 3
-    assert read_snapshot(spark, path, version=1).count() == 5
-
-    # a dangling unpublished dir (simulated crash) is skipped, never read
-    import os
-
-    os.makedirs(os.path.join(path, "v=3"))
-    assert latest_version(path) == 2
-    v3 = write_snapshot(spark.range(1).withColumn("tag", F.lit("d")), path)
-    assert v3 == 4  # skipped over the dangling v=3
-    assert read_snapshot(spark, path).count() == 1
-
-    # prune keeps the published version and the most recent history
-    removed = prune_snapshots(path, keep_last=2)
-    assert 4 not in removed
-    assert read_snapshot(spark, path).count() == 1
-    assert latest_version(path) == 4
 
 
 def test_streaming_lsh_ingest_equals_batch_index(spark, tmp_path):
@@ -1073,36 +1035,6 @@ def test_json_quarantine_routes_malformed_lines(spark, tmp_path):
     assert all(r["source_file"].endswith("in.ndjson") for r in qrows)
 
 
-def test_snapshot_diff_classifies_changes(spark, tmp_path):
-    from hours_api_clickup_spark.sinks.versioned import (
-        snapshot_diff,
-        write_snapshot,
-    )
-
-    path = str(tmp_path / "tbl")
-    v1_df = spark.createDataFrame(
-        [(1, "a", 10.0), (2, "b", 20.0), (3, "c", 30.0)],
-        "id long, s string, v double",
-    )
-    v1 = write_snapshot(v1_df, path)
-    v2_df = spark.createDataFrame(
-        [(2, "b", 20.0), (3, "c", 99.0), (4, "d", 40.0)],
-        "id long, s string, v double",
-    )
-    v2 = write_snapshot(v2_df, path)
-    diff = {
-        r["id"]: r["change"]
-        for r in snapshot_diff(spark, path, ["id"], v1, v2).collect()
-    }
-    assert diff == {1: "removed", 2: "unchanged", 3: "changed", 4: "added"}
-    # default to_version = latest
-    diff2 = {
-        r["id"]: r["change"]
-        for r in snapshot_diff(spark, path, ["id"], v1).collect()
-    }
-    assert diff2 == diff
-
-
 def test_streaming_text_index_ingest_equals_one_shot(spark, tmp_path):
     """Documents drained through the streaming inverted-index ingest:
     term probes against the accumulated index must equal probes against
@@ -1250,64 +1182,6 @@ def test_session_ids_survive_timeout_close():
     # later events open session 1; the flush sentinel closes it
     got = feed([(99_000, "a"), (99_100, "__flush__")])
     assert got == [1], got  # NOT a duplicate 0
-
-
-def test_snapshot_diff_no_boundary_or_null_sentinel_collisions(
-    spark, tmp_path
-):
-    """Review r6: ('ab','c') -> ('a','bc') must classify as changed
-    (bare concat collided), and NULL -> ' ' must be visible (the old
-    null sentinel WAS the one-space string)."""
-    from hours_api_clickup_spark.sinks.versioned import (
-        snapshot_diff,
-        write_snapshot,
-    )
-
-    path = str(tmp_path / "snap")
-    v0 = write_snapshot(
-        spark.createDataFrame(
-            [(1, "ab", "c"), (2, None, "z")], "id long, x string, y string"
-        ),
-        path,
-    )
-    v1 = write_snapshot(
-        spark.createDataFrame(
-            [(1, "a", "bc"), (2, " ", "z")], "id long, x string, y string"
-        ),
-        path,
-    )
-    got = {
-        r["id"]: r["change"]
-        for r in snapshot_diff(spark, path, ["id"], v0, v1).collect()
-    }
-    assert got == {1: "changed", 2: "changed"}, got
-
-
-def test_prune_snapshots_dangling_newer_does_not_evict_history(
-    spark, tmp_path
-):
-    """Review r6: an unpublished wreck NEWER than the pointer is pruned
-    outright and must not consume the keep budget."""
-    import os
-    import shutil
-
-    from hours_api_clickup_spark.sinks.versioned import (
-        prune_snapshots,
-        read_snapshot,
-        write_snapshot,
-    )
-
-    path = str(tmp_path / "snap")
-    df = spark.range(3)
-    for _ in range(3):
-        write_snapshot(df, path)  # v=0,1,2 published in turn
-    # fake a crashed write: v=3 directory exists, pointer still at 2
-    shutil.copytree(os.path.join(path, "v=2"), os.path.join(path, "v=3"))
-    removed = prune_snapshots(path, keep_last=3)
-    # wreck pruned, published v=2 and history v=0,1 all kept
-    assert removed == [3], removed
-    for v in (0, 1, 2):
-        assert read_snapshot(spark, path, version=v).count() == 3
 
 
 def test_select_raw_lists_normalizes_before_distinct(spark):

@@ -391,13 +391,17 @@ class TestLeaseHeartbeat:
         storage.release_lease(spark, p)
 
     def test_publish_lease_heartbeat(self, spark, tmp_path):
-        """A versioned store root is leased like an index: a publish
+        """A month store root is leased like an index: a publish
         outlasting the ttl is not stolen while its heartbeat runs, a
         store cycle refuses meanwhile, and goes through once released."""
+        import datetime as dt
         import time
 
         from hours_api_clickup_spark.sinks import versioned as V
 
+        rows = spark.createDataFrame(
+            [(1, dt.date(2024, 1, 5))], "id long, start_date_oslo date"
+        )
         p = str(tmp_path / "store")
         with storage.maintenance_lease(spark, p, "long-publish", ttl_sec=1):
             deadline = time.time() + 3.0
@@ -406,8 +410,8 @@ class TestLeaseHeartbeat:
                     storage.acquire_lease(spark, p, "racer", ttl_sec=1)
                 time.sleep(0.4)
             with pytest.raises(storage.MaintenanceLeaseHeld):
-                V.write_snapshot(spark.range(1), p)
-        assert V.write_snapshot(spark.range(1), p) == 0
+                V.bootstrap_months(rows, p)
+        assert V.bootstrap_months(rows, p) == {"2024-01": 0}
 
 
 def test_only_storage_owns_leases_and_hadoop_commits():
@@ -429,6 +433,26 @@ def test_only_storage_owns_leases_and_hadoop_commits():
             code = line.split("#", 1)[0]
             if lease_name.search(code) or hadoop_commit.search(code):
                 offenders.append(f"{f.relative_to(pkg)}:{n}: {line.strip()}")
+    assert not offenders, offenders
+
+
+def test_one_route_dispatcher():
+    """The CLI and the scheduler reach the sync and maintenance code
+    only through ``server.dispatch``, the dispatcher the HTTP routes
+    use: a second copy of the route → pipelines map is how the CLI came
+    to drop the lock flags, write the fact table elsewhere and alone
+    write backups."""
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(storage.__file__).parent
+    # any mention: a call, an import, or a getattr-built sync name
+    direct = re.compile(r"\b(sync_\w+|run_maintenance)\b|getattr\(pipelines")
+    offenders = []
+    for name in ("__main__.py", "scheduler.py"):
+        for n, line in enumerate((pkg / name).read_text().splitlines(), 1):
+            if direct.search(line.split("#", 1)[0]):
+                offenders.append(f"{name}:{n}: {line.strip()}")
     assert not offenders, offenders
 
 
@@ -682,9 +706,9 @@ class TestLeaseFencing:
         assert not os.path.exists(f"{p}/{storage.LEASE_FILE}")  # released
 
     def test_publish_lease_takeover(self, spark, tmp_path):
-        """The versioned store's commits are fenced by the same lease:
-        pointer/manifest swaps re-verify the claim token, and release
-        spares the successor's lease."""
+        """The month store's commits are fenced by the same lease:
+        manifest swaps re-verify the claim token, and release spares
+        the successor's lease."""
         import os
 
         import hours_api_clickup_spark.sinks.versioned as V

@@ -256,14 +256,14 @@ def test_run_pending_isolates_job_failures(spark, tmp_path, monkeypatch):
     import hours_api_clickup_spark.server as server_mod
     from hours_api_clickup_spark.server import ServerConfig
 
-    real = server_mod._dispatch_sync
+    real = server_mod.dispatch
 
     def flaky(cfg, route, body):
         if route == "/sync/refresh":
             raise RuntimeError("injected refresh failure")
         return {"status": "success", "mode": route.rsplit("/", 1)[1], "rows": 0}
 
-    monkeypatch.setattr(server_mod, "_dispatch_sync", flaky)
+    monkeypatch.setattr(server_mod, "dispatch", flaky)
     cfg = ServerConfig(
         spark=spark, entries_path="unused", tasks_path="unused",
         warehouse=str(tmp_path / "wh"),
@@ -278,7 +278,7 @@ def test_run_pending_isolates_job_failures(spark, tmp_path, monkeypatch):
     # only the failed job is due again at the same instant
     due = [j.name for j, _ in due_jobs(state, oslo(2026, 1, 1, 7, 0))]
     assert due == ["refresh-6h"]
-    monkeypatch.setattr(server_mod, "_dispatch_sync", real)
+    monkeypatch.setattr(server_mod, "dispatch", real)
 
 
 def test_step_on_star_fields_count_as_unrestricted():
@@ -414,7 +414,7 @@ def test_scheduler_multiday_rehearsal_matches_oneshot(
     raw_t = read_raw_tasks(spark, str(tasks))
     oneshot = str(tmp_path / "oneshot")
     pipelines.sync_full_reindex(spark, raw_e, f"{oneshot}/fact")
-    pipelines.sync_tasks(raw_t, f"{oneshot}/dim_tasks")
+    pipelines.sync_dim("tasks", raw_t, f"{oneshot}/dim_tasks")
 
     def rows(path):
         return sorted(
@@ -427,8 +427,8 @@ def test_scheduler_multiday_rehearsal_matches_oneshot(
 
 def test_maintenance_sweep_tick_end_to_end(spark, tmp_path):
     """VERDICT r9 #6: the weekly maintenance job drives
-    pipelines.run_maintenance through the same _dispatch_sync seam as
-    the sync routes — including one target DEFERRED because a live
+    pipelines.run_maintenance through server.dispatch, the dispatcher
+    of the sync routes — including one target DEFERRED because a live
     ingest holds its lease (retried next week's tick, job still
     succeeds) and one compacted for real."""
     import hours_api_clickup_spark.datapipe.similarity as S
@@ -494,14 +494,21 @@ def test_maintenance_sweep_tick_end_to_end(spark, tmp_path):
 
 def test_maintenance_route_rejects_unknown_family(spark, tmp_path):
     """Malformed targets report per-target errors, never crash the
-    sweep (per-target isolation, pipelines.run_maintenance)."""
+    sweep (per-target isolation, pipelines.run_maintenance). The
+    snapshot store is gone, so a ``snapshots=`` target is an unknown
+    family too."""
     from hours_api_clickup_spark.pipelines import run_maintenance
 
     out = run_maintenance(
-        spark, ["bogus=/nowhere", "lsh", f"snapshots={tmp_path / 'none'}"]
+        spark,
+        [
+            "bogus=/nowhere", "lsh", f"snapshots={tmp_path / 'none'}",
+            f"store={tmp_path / 'none'}",
+        ],
     )
-    assert [r["status"] for r in out] == ["error", "error", "ok"]
+    assert [r["status"] for r in out] == ["error", "error", "error", "ok"]
     assert "unknown maintenance family" in out[0]["error"]
+    assert "unknown maintenance family" in out[2]["error"]
 
 
 def test_maintenance_non_ok_targets_logged(spark, tmp_path, caplog):

@@ -129,6 +129,40 @@ def test_error_becomes_500_json(spark, tmp_path):
         srv.shutdown()
 
 
+def test_backup_dir_makes_every_sync_write_its_csv(spark, tmp_path):
+    """ServerConfig.backup_dir: the routes write the reference's per-sync
+    CSV backup (fetch_clickup_data.py:1780-1782, :1485-1487) — one
+    headered file per sync under {backup_dir}/{mode}."""
+    import glob
+
+    t0 = 1700000000000
+    entries = tmp_path / "entries.json"
+    entries.write_text(json.dumps(_entry("e1", start_ms=t0, at_ms=t0)) + "\n")
+    tasks = tmp_path / "tasks.json"
+    tasks.write_text(json.dumps(_task("t1")) + "\n")
+    backup = tmp_path / "backup"
+    cfg = ServerConfig(
+        spark=spark,
+        entries_path=str(entries),
+        tasks_path=str(tasks),
+        warehouse=str(tmp_path / "wh"),
+        today_oslo=dt.date(2023, 11, 20),
+        backup_dir=str(backup),
+    )
+    srv = start_server(cfg)
+    base = f"http://127.0.0.1:{srv.server_address[1]}"
+    try:
+        assert _post(f"{base}/sync/refresh")[1]["rows"] == 1
+        assert _post(f"{base}/sync/lists")[1]["rows"] == 1
+    finally:
+        srv.shutdown()
+    for mode, first_col in (("refresh", "id"), ("lists", "space_id")):
+        files = glob.glob(f"{backup}/{mode}/*.csv")
+        assert len(files) == 1, mode
+        with open(files[0]) as f:
+            assert f.readline().startswith(f"{first_col},"), mode
+
+
 def test_root_payload_parity(server):
     """Root payload mirrors the reference's service-info shape
     (main.py:225-280): service + version + endpoints keyed by path with
@@ -215,7 +249,7 @@ def test_maintain_route_restricted_to_configured_targets(spark, tmp_path):
         import urllib.error
 
         with pytest.raises(urllib.error.HTTPError) as ei:
-            _post(f"{base}/maintain", {"targets": [f"snapshots={victim}:0"]})
+            _post(f"{base}/maintain", {"targets": [f"store={victim}:0"]})
         # malformed REQUEST → 400, same as the non-object-body check;
         # 500 stays reserved for genuine sweep failures (ADVICE r10)
         assert ei.value.code == 400

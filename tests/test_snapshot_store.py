@@ -1,6 +1,27 @@
-"""Versioned snapshot/month-store GC edge cases (review r8)."""
+"""Month-store GC edge cases (review r8) and the store's lease."""
 
 from __future__ import annotations
+
+import datetime as dt
+
+MONTH = "2024-01"
+LO, HI = dt.date(2024, 1, 1), dt.date(2024, 1, 31)
+
+
+def _rows(spark):
+    return spark.createDataFrame(
+        [(1, dt.date(2024, 1, 5), "a")], "id long, start_date_oslo date, v string"
+    )
+
+
+def _merge(spark, store):
+    """One windowed refresh over MONTH: writes its next version and
+    publishes the manifest, under the store's lease."""
+    from hours_api_clickup_spark.operators.merge import (
+        merge_refresh_partitioned_atomic,
+    )
+
+    merge_refresh_partitioned_atomic(spark, store, _rows(spark), LO, HI)
 
 
 def test_prune_paths_survive_numeric_named_files(spark, tmp_path):
@@ -11,23 +32,22 @@ def test_prune_paths_survive_numeric_named_files(spark, tmp_path):
 
     from hours_api_clickup_spark.sinks import versioned as V
 
-    # snapshot store: published v=1, debris file v=0 alongside
-    store = str(tmp_path / "snap")
-    df = spark.range(3)
-    V.write_snapshot(df, store)
-    V.write_snapshot(df, store)
-    os.rename(
-        os.path.join(store, "v=0"), os.path.join(store, "v=0.realdir")
-    )
-    with open(os.path.join(store, "v=0"), "w") as f:
+    # merged store: published v=1, debris file v=0 alongside
+    store = str(tmp_path / "merged")
+    V.bootstrap_months(_rows(spark), store)
+    _merge(spark, store)
+    mdir = os.path.join(store, f"month={MONTH}")
+    os.rename(os.path.join(mdir, "v=0"), os.path.join(mdir, "v=0.realdir"))
+    with open(os.path.join(mdir, "v=0"), "w") as f:
         f.write("debris")
-    removed = V.prune_snapshots(store, keep_last=1)
-    assert os.path.exists(os.path.join(store, "v=0"))  # file untouched
-    assert V.latest_version(store) == 1
+    V.prune_months(store)
+    assert os.path.exists(os.path.join(mdir, "v=0"))  # file untouched
+    assert V.read_manifest(store) == {MONTH: 1}
 
-    # month store: debris file month=X and debris file v=9 in a month
+    # hand-built store: debris file month=X and debris file v=9 in a month
     mstore = str(tmp_path / "months")
     os.makedirs(mstore)
+    df = spark.range(3)
     V.write_month_version(df, mstore, "2024-01")
     V.publish_manifest(mstore, {"2024-01": 0})
     with open(os.path.join(mstore, "month=junk"), "w") as f:
@@ -65,14 +85,13 @@ def test_writers_skip_colliding_version_file_debris(spark, tmp_path):
         os.path.join(mstore, "month=2024-01", "v=2")
     ).count() == 3
 
-    # snapshot store: published v=0, debris FILE at exactly v=1
-    store = str(tmp_path / "snap")
-    V.write_snapshot(df, store)
-    with open(os.path.join(store, "v=1"), "w") as f:
+    # the merge's publish path: published v=0, debris FILE at exactly v=1
+    store = str(tmp_path / "merged")
+    V.bootstrap_months(_rows(spark), store)
+    with open(os.path.join(store, f"month={MONTH}", "v=1"), "w") as f:
         f.write("debris")
-    v = V.write_snapshot(df, store)
-    assert v == 2
-    assert V.latest_version(store) == 2
+    _merge(spark, store)
+    assert V.read_manifest(store) == {MONTH: 2}
 
 
 class TestPublishLease:
@@ -100,17 +119,17 @@ class TestPublishLease:
         from hours_api_clickup_spark import storage
         from hours_api_clickup_spark.sinks import versioned as V
 
-        df = spark.range(3)
-        store = str(tmp_path / "snap")
-        V.write_snapshot(df, store)
+        store = str(tmp_path / "months")
+        V.bootstrap_months(_rows(spark), store)
         self._hold(store)
         with pytest.raises(storage.MaintenanceLeaseHeld):
-            V.write_snapshot(df, store)
+            _merge(spark, store)
         with pytest.raises(storage.MaintenanceLeaseHeld):
-            V.prune_snapshots(store)
-        assert V.latest_version(store) == 0  # store untouched
+            V.prune_months(store)
+        assert V.read_manifest(store) == {MONTH: 0}  # store untouched
         os.unlink(os.path.join(store, storage.LEASE_FILE))
-        assert V.write_snapshot(df, store) == 1  # released: goes through
+        _merge(spark, store)  # released: goes through
+        assert V.read_manifest(store) == {MONTH: 1}
 
     def test_month_cycle_refuses_under_held_lease(self, spark, tmp_path):
         import datetime as dt
@@ -146,12 +165,11 @@ class TestPublishLease:
         from hours_api_clickup_spark import storage
         from hours_api_clickup_spark.sinks import versioned as V
 
-        df = spark.range(2)
-        store = str(tmp_path / "snap")
+        store = str(tmp_path / "months")
         self._hold(store)
         lease = os.path.join(store, storage.LEASE_FILE)
         os.utime(lease, (1, 1))  # ancient mtime: holder presumed dead
-        assert V.write_snapshot(df, store) == 0
+        assert V.bootstrap_months(_rows(spark), store) == {MONTH: 0}
         assert not os.path.exists(lease)  # and released afterwards
 
     def test_failed_cycle_releases_the_lease(self, spark, tmp_path):
@@ -200,15 +218,14 @@ class TestPublishLease:
         from hours_api_clickup_spark import storage
         from hours_api_clickup_spark.sinks import versioned as V
 
-        df = spark.range(2)
-        store = str(tmp_path / "snap")
+        store = str(tmp_path / "months")
         os.makedirs(store)
         proc = subprocess.Popen(["true"])
         proc.wait()
         with open(os.path.join(store, storage.LEASE_FILE), "w") as f:
             f.write(f"crashed host={socket.gethostname()} pid={proc.pid} t=0")
         # mtime is FRESH (inside the ttl) — only the dead pid proves it
-        assert V.write_snapshot(df, store) == 0
+        assert V.bootstrap_months(_rows(spark), store) == {MONTH: 0}
 
     def test_live_same_host_holder_still_refuses(self, spark, tmp_path):
         import os
@@ -219,12 +236,12 @@ class TestPublishLease:
         from hours_api_clickup_spark import storage
         from hours_api_clickup_spark.sinks import versioned as V
 
-        store = str(tmp_path / "snap")
+        store = str(tmp_path / "months")
         os.makedirs(store)
         with open(os.path.join(store, storage.LEASE_FILE), "w") as f:
             f.write(f"live host={socket.gethostname()} pid={os.getpid()} t=0")
         with pytest.raises(storage.MaintenanceLeaseHeld):
-            V.write_snapshot(spark.range(2), store)
+            V.bootstrap_months(_rows(spark), store)
 
     def test_foreign_host_holder_waits_out_the_ttl(self, spark, tmp_path):
         """pid liveness means nothing across hosts — a fresh lease from
@@ -238,11 +255,11 @@ class TestPublishLease:
         from hours_api_clickup_spark import storage
         from hours_api_clickup_spark.sinks import versioned as V
 
-        store = str(tmp_path / "snap")
+        store = str(tmp_path / "months")
         os.makedirs(store)
         proc = subprocess.Popen(["true"])
         proc.wait()
         with open(os.path.join(store, storage.LEASE_FILE), "w") as f:
             f.write(f"remote host=some-other-host pid={proc.pid} t=0")
         with pytest.raises(storage.MaintenanceLeaseHeld):
-            V.write_snapshot(spark.range(2), store)
+            V.bootstrap_months(_rows(spark), store)
