@@ -173,7 +173,9 @@ Once = Callable[["Fixtures", int], "float | dict[str, float]"]
 class Row:
     """One runner entry. ``once(fx, trial)`` returns its own timed
     seconds — or, for an entry whose one call records several rows,
-    a {name: seconds} dict over ``names``."""
+    a {name: seconds} dict over ``names``. ``inner`` > 1 marks a
+    ``once`` that already returns a median of that many timed calls, so
+    the row records ``trials × inner`` samples."""
 
     names: tuple[str, ...]
     once: Once
@@ -181,6 +183,7 @@ class Row:
     counted: bool = False
     warm: bool = False
     setup: Callable[["Fixtures"], object] | None = None
+    inner: int = 1
 
 
 def _timed(fn: Callable[[], object]) -> float:
@@ -303,6 +306,28 @@ class Fixtures:
         return textindex.inverted_index_read(self.spark, self.text_index)
 
     @cached_property
+    def zevents(self):
+        """The events table on the two z-dimensions, each in [0, 256)."""
+        hour = F.expr("unix_millis(ts) div 3600000")
+        return self.table("events").select(
+            "event_id",
+            F.pmod("user_id", F.lit(256)).alias("x"),
+            F.pmod(hour, F.lit(256)).alias("y"),
+        )
+
+    @cached_property
+    def zbox(self) -> dict[str, tuple[int, int]]:
+        """The probe box: the 32×32 Morton-aligned cell holding the
+        median x and, within that x strip, the median y. Both medians
+        are values of real rows, so the box holds rows at every scale
+        (a fixed box held none at sf0.001, whose x spans only 0-14)."""
+        ev = self.zevents
+        x0 = int(ev.approxQuantile("x", [0.5], 0.0)[0]) // 32 * 32
+        strip = ev.filter(F.col("x").between(x0, x0 + 31))
+        y0 = int(strip.approxQuantile("y", [0.5], 0.0)[0]) // 32 * 32
+        return {"x": (x0, x0 + 31), "y": (y0, y0 + 31)}
+
+    @cached_property
     def zorder(self) -> tuple[str, int, int]:
         """One z-ordered + manifested events layout, and the numFiles
         gate re-proven in-run: the manifest-pruned scan of the probe box
@@ -310,15 +335,9 @@ class Fixtures:
         the identical row count (the manifest only shrinks the file
         list; the real predicate stays). A failed gate raises. Returns
         (path, files planned pruned, files planned plain)."""
-        hour = F.expr("unix_millis(ts) div 3600000")
-        events = self.table("events").select(
-            "event_id",
-            F.pmod("user_id", F.lit(256)).alias("x"),
-            F.pmod(hour, F.lit(256)).alias("y"),
-        )
         path = self.scratch("bench_zorder_")
         zorder.zorder_write_manifested(
-            events, F.col("x"), F.col("y"), path, "x", "y", bits=8, n_files=64
+            self.zevents, F.col("x"), F.col("y"), path, "x", "y", bits=8, n_files=64
         )
         nf_pruned, nr_pruned = zorder.scan_stats(self.zread(path, pruned=True))
         nf_plain, nr_plain = zorder.scan_stats(self.zread(path, pruned=False))
@@ -330,11 +349,11 @@ class Fixtures:
         return path, nf_pruned, nf_plain
 
     def zread(self, path: str, pruned: bool):
-        box = F.col("x").between(96, 127) & F.col("y").between(64, 95)
+        (xlo, xhi), (ylo, yhi) = self.zbox["x"], self.zbox["y"]
+        box = F.col("x").between(xlo, xhi) & F.col("y").between(ylo, yhi)
         if not pruned:
             return self.spark.read.parquet(path).filter(box)
-        ranges = {"x": (96, 127), "y": (64, 95)}
-        return zorder.read_pruned(self.spark, path, ranges).filter(box)
+        return zorder.read_pruned(self.spark, path, self.zbox).filter(box)
 
 
 def _fresh_path(fx: Fixtures) -> None:
@@ -420,10 +439,13 @@ def _text_scan(fx: Fixtures, _i: int) -> float:
     return _timed(scan)
 
 
+PROBE_RUNS = 3  # timed probes per index inside one probe_scaling call
+
+
 def _probe_scaling(fx: Fixtures, _i: int) -> dict[str, float]:
     out = {}
     for rep, _nv, _nd, t_lsh, _t_ivf, t_txt in probe_scaling(
-        fx.spark, scales=(1, 8), n_runs=3, sf_dir=fx.sf_dir, include_ivf=False
+        fx.spark, scales=(1, 8), n_runs=PROBE_RUNS, sf_dir=fx.sf_dir, include_ivf=False
     ):
         out[f"scalecheck_lsh_probe_x{rep}"] = t_lsh
         out[f"scalecheck_text_probe_x{rep}"] = t_txt
@@ -501,6 +523,7 @@ ROWS: tuple[Row, ...] = REGISTRY_ROWS + (
         tuple(f"scalecheck_{k}_probe_x{r}" for r in (1, 8) for k in ("lsh", "text")),
         _probe_scaling,
         1,
+        inner=PROBE_RUNS,
     ),
     Row(SCALECHECK_NEARDUP, _delete_scaling, 1),
 )
@@ -531,8 +554,9 @@ def run_suite(
     rec.checkpoint("start", calibrate())
     for idx, row in enumerate(rows, 1):
         for name, sec in measure(row, fx).items():
-            rec.record(name, sec, trials=row.trials)
-            print(f"# {name}: median {sec:.3f}s of {row.trials}", file=sys.stderr)
+            n = row.trials * row.inner
+            rec.record(name, sec, trials=n)
+            print(f"# {name}: median {sec:.3f}s of {n}", file=sys.stderr)
         if idx % every == 0 and idx < len(rows):
             rec.checkpoint(f"e{idx:03d}", calibrate())
     rec.checkpoint("end", calibrate())

@@ -107,9 +107,8 @@ def main(argv: list[str] | None = None) -> int:
     )
     p.add_argument(
         "--index", action="append", default=[], metavar="FAMILY=PATH[:OPT]",
-        help="maintain: compaction/GC target, repeatable — "
-        "lsh=/p | ivf=/p[:id_col] | text=/p | docneardup=/p | "
-        "store=/p[:keep] (month-store GC). A target whose "
+        help="maintain: compaction target, repeatable — "
+        "lsh=/p | ivf=/p[:id_col] | text=/p | docneardup=/p. A target whose "
         "maintenance lease is held reports deferred (retry next sweep).",
     )
     args = p.parse_args(argv)
@@ -191,7 +190,7 @@ def main(argv: list[str] | None = None) -> int:
         def _persist_state() -> None:
             # atomic replace: a kill mid-write must never leave a
             # truncated state file (every later tick would crash in
-            # json.load — same tmp+rename pattern as publish_manifest)
+            # json.load — same tmp+rename pattern as publish_file_stats)
             tmp = args.state + ".tmp"
             with open(tmp, "w") as f:
                 json.dump(

@@ -9,15 +9,12 @@ full reindex) decompose exactly (SURVEY.md §4.3 case analysis) into:
 
 where W is the refresh-window predicate and S_w = staging.filter(W).
 
-Scale notes:
-- The anti-join shuffles both sides on the key; at 100 TB the fact side
-  dominates, so the at-scale form (``merge_refresh_partitioned_atomic``)
-  keeps the fact table as a manifest-committed month store and reads
-  only the window's months BEFORE the join (we filter fact to ¬W first,
-  which is equivalent: rows with W(t) are either replaced by staging or
-  deleted, never kept).
-- S_w is typically tiny relative to fact (a 60-day window) → Spark/AQE
-  broadcasts it, making the anti-join shuffle-free on the fact side.
+Scale note: M1 is a full-table merge matched ``ON T.id = S.id``, as
+the reference's MERGE is. A staged id whose old fact row lies outside
+the window still loses that row, so no date-sliced read of the fact
+table can stand in for the whole-table anti-join. S_w is typically tiny
+relative to fact (a 60-day window), so Spark/AQE broadcasts it and the
+anti-join never shuffles the fact side.
 """
 
 from __future__ import annotations
@@ -53,105 +50,6 @@ def merge_refresh(
         .join(s_w.select(key).distinct(), on=key, how="left_anti")
     )
     return s_w.unionByName(kept)
-
-
-def window_months(window_lo, window_hi) -> list[str]:
-    """The yyyy-MM partition labels a [lo, hi] date window touches."""
-    import datetime as dt
-
-    months = []
-    cur = dt.date(window_lo.year, window_lo.month, 1)
-    while cur <= window_hi:
-        months.append(f"{cur.year:04d}-{cur.month:02d}")
-        cur = (
-            dt.date(cur.year + 1, 1, 1)
-            if cur.month == 12
-            else dt.date(cur.year, cur.month + 1, 1)
-        )
-    return months
-
-
-def merge_refresh_partitioned_atomic(
-    spark,
-    fact_path: str,
-    staging: DataFrame,
-    window_lo,
-    window_hi,
-    key: str = "id",
-    date_col: str = "start_date_oslo",
-    _crash_before_publish=None,
-) -> list[str]:
-    """The 100 TB form of the windowed refresh (VERDICT r5 #4): rewrite
-    ONLY the months the window touches, with an atomic commit. The plain
-    ``merge_refresh`` rebuilds the whole fact output — fine for a
-    correctness oracle, ruinous at scale (every 6-hour refresh would
-    rewrite years of parquet). Here the same §4.3 algebra runs inside
-    the window months' slice (rows in those months but outside the
-    window dates, or with null dates, are preserved); month rewrites
-    land in immutable ``month=M/v=N`` dirs and the whole refresh becomes
-    visible via ONE manifest pointer swap
-    (sinks.versioned.publish_manifest — tmp write + rename).
-
-    Crash analysis (property-tested in tests/test_atomic_merge.py):
-    - crash during any month-version write → the manifest still points
-      at the old versions; the half-written dir is unreferenced debris
-      removed by ``prune_months``; a retry writes fresh v dirs.
-    - crash after all writes, before the publish → same: readers see
-      the complete OLD state, never a mix.
-    - a month the merge emptied just drops out of the new manifest —
-      there is no delete step to race with, so it can't resurrect.
-    - after the publish, old month versions are garbage, not state;
-      ``prune_months`` reclaims them at leisure.
-
-    This is the version-pointer pattern Delta/Iceberg implement with a
-    commit log, reduced to a single-writer parquet core; on an object
-    store with a managed table format, use ``replaceWhere`` instead.
-    Only window months are read (manifest-pruned before any listing)
-    and only window months are written; untouched history versions keep
-    their files. ``_crash_before_publish`` is a test hook. Returns the
-    rewritten month list.
-    """
-    from pyspark.sql import functions as F2
-
-    from hours_api_clickup_spark import storage
-    from hours_api_clickup_spark.sinks import versioned as V
-
-    months = window_months(window_lo, window_hi)
-    # the WHOLE read-manifest → write-versions → swap-pointer cycle
-    # runs under the store's lease (verdict r8 #8): a second refresh
-    # racing this one would derive its new manifest from the same stale
-    # read and silently erase these months at publish — lease-guarded,
-    # it refuses loudly instead
-    with storage.maintenance_lease(spark, fact_path, "merge_refresh_partitioned_atomic"):
-        manifest = V.read_manifest(fact_path)
-        w = F2.col(date_col).between(F2.lit(window_lo), F2.lit(window_hi))
-        s_w = staging.filter(w).withColumn(
-            "month", F2.date_format(F2.col(date_col), "yyyy-MM")
-        )
-        live = [m for m in months if m in manifest]
-        if live:
-            fact_slice = V.read_months(spark, fact_path, months=live)
-            merged_slice = merge_refresh(
-                fact_slice, s_w.select(*fact_slice.columns), w, key=key
-            )
-        else:
-            merged_slice = s_w
-        merged_slice = merged_slice.localCheckpoint(eager=True)
-
-        out_versions: dict[str, int] = {}
-        for m in sorted(
-            r["month"]
-            for r in merged_slice.select("month").distinct().collect()
-        ):
-            out_versions[m] = V.write_month_version(
-                merged_slice.filter(F2.col("month") == m), fact_path, m
-            )
-        if _crash_before_publish is not None:
-            _crash_before_publish()
-        new_manifest = {m: v for m, v in manifest.items() if m not in months}
-        new_manifest.update(out_versions)
-        V.publish_manifest(fact_path, new_manifest)
-    return months
 
 
 def merge_upsert(fact: DataFrame, staging: DataFrame, key: str = "id") -> DataFrame:

@@ -19,8 +19,13 @@ UDFs anywhere.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+import json
+import os
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from hours_api_clickup_spark import storage
 
 
 def z_value_sql(x: str, y: str, bits: int = 8, intdiv: str = "div") -> str:
@@ -132,6 +137,56 @@ def _stat_value(v, side: str):
     )
 
 
+def _session() -> SparkSession:
+    """The session the file-stats publish fences through (the publish
+    takes no DataFrame, so it takes no session either)."""
+    return SparkSession.getActiveSession() or SparkSession.builder.getOrCreate()
+
+
+def _replace(spark: SparkSession, path: str, name: str, content: str) -> None:
+    """Publish ``{path}/{name}`` by tmp write + ``os.replace`` (an
+    atomic replace, unlike ``storage.write_file_atomic``'s
+    delete-then-rename), fenced against a lost lease."""
+    tmp = os.path.join(path, name + ".tmp")
+    with open(tmp, "w") as f:
+        f.write(content)
+    storage.verify_swap_ownership(spark, path)  # fence: re-check before swap
+    os.replace(tmp, os.path.join(path, name))
+
+
+_FILE_STATS = "_file_stats.json"
+
+
+def publish_file_stats(path: str, stats: dict[str, dict[str, list]]) -> None:
+    """Publish per-file column min/max stats for a layout directory —
+    ``{file_name: {col: [min, max]}}`` — the manifest a table format
+    (Delta/Iceberg) keeps so scans can skip whole FILES at split
+    planning. Vanilla Spark's footer-stats pruning only skips row
+    groups INSIDE files the planner already scheduled; this layer
+    closes that gap without the dependency. Atomic
+    tmp + ``os.replace`` publish; the underscore name keeps Spark's
+    parquet reader from treating it as data."""
+    # ORDER-PRESERVING encoding is collect_file_stats' job
+    # (``_stat_value`` — isoformat for temporals, outward-widened
+    # floats for Decimals); default=str here is only the backstop that
+    # keeps a direct caller's exotic type from crashing the publish
+    # AFTER a successful O(corpus) write. A str() fallback does NOT
+    # promise lexicographic order — do not prune on a column that
+    # reached it.
+    content = json.dumps(dict(sorted(stats.items())), sort_keys=True, default=str)
+    _replace(_session(), path, _FILE_STATS, content)
+
+
+def read_file_stats(path: str) -> dict[str, dict[str, list]] | None:
+    """The published per-file stats manifest, or None when the layout
+    was written without one (readers must then scan every file)."""
+    p = os.path.join(path, _FILE_STATS)
+    if not os.path.exists(p):
+        return None
+    with open(p) as f:
+        return json.load(f)
+
+
 def zorder_write_manifested(
     df: DataFrame,
     x: Column,
@@ -144,7 +199,7 @@ def zorder_write_manifested(
     stat_cols: dict[str, Column | str] | None = None,
 ) -> None:
     """``zorder_write`` + a published per-file min/max manifest for the
-    two z-dimensions (``sinks/versioned.py::publish_file_stats``).
+    two z-dimensions (``publish_file_stats``).
     ``x_name``/``y_name`` name the manifest entries and, by default,
     the stored columns whose ranges are recorded; when the clustered
     values aren't stored columns, pass ``stat_cols`` mapping those
@@ -153,8 +208,6 @@ def zorder_write_manifested(
     unreachable). ``read_pruned`` then skips whole files at split
     planning — the Delta/Iceberg-grade layer on top of the row-group
     pruning the layout already buys."""
-    from hours_api_clickup_spark.sinks.versioned import publish_file_stats
-
     zorder_write(df, x, y, path, bits=bits, n_files=n_files)
     stats = collect_file_stats(
         df.sparkSession,
@@ -183,10 +236,6 @@ def read_pruned(
     Bound types must match the manifest's encoding (``_stat_value``):
     plain numbers for numeric columns, ``isoformat()`` strings for
     date/timestamp columns, floats for Decimal columns."""
-    import os
-
-    from hours_api_clickup_spark.sinks.versioned import read_file_stats
-
     stats = read_file_stats(path)
     if stats is None:
         return spark.read.parquet(path)

@@ -171,40 +171,6 @@ def sync_refresh(
     )
 
 
-def sync_refresh_manifest(
-    spark: SparkSession,
-    raw_entries: DataFrame,
-    fact_path: str,
-    today_oslo: dt.date,
-    days: int = DEFAULT_REFRESH_DAYS,
-    backup_path: str | None = None,
-) -> SyncResult:
-    """Windowed refresh against the manifest-committed month store —
-    the ATOMIC at-scale form (operators.merge.merge_refresh_partitioned_
-    atomic): month rewrites land in immutable version dirs and one
-    manifest pointer swap publishes the whole refresh, so a crash at
-    any point leaves readers on the complete old state. First run
-    bootstraps the store from the staged window."""
-    from hours_api_clickup_spark.operators.merge import (
-        merge_refresh_partitioned_atomic,
-    )
-    from hours_api_clickup_spark.sinks import versioned as V
-
-    staging = _stage_entries(raw_entries)
-    if backup_path:
-        csv_backup(staging, backup_path)
-    lo = today_oslo - dt.timedelta(days=days)
-    merge_refresh_partitioned_atomic(
-        spark, fact_path, staging, lo, today_oslo, key="id"
-    )
-    V.prune_months(fact_path)  # post-commit GC of unreferenced versions
-    try:
-        rows = V.read_months(spark, fact_path).count()
-    except FileNotFoundError:
-        rows = 0  # the window was empty on a first run
-    return SyncResult(table=fact_path, rows=rows, mode="refresh_manifest")
-
-
 def sync_full_reindex(
     spark: SparkSession,
     raw_entries: DataFrame,
@@ -711,9 +677,8 @@ def build_corpus(
         else:
             spark.conf.set(_ipn_key, _ipn_prev)
 
-    # atomic publish (tmp + os.replace, like sinks/versioned.py's
-    # manifest): a crashed
-    # build leaves data dirs but never a manifest claiming completion
+    # atomic publish (tmp + os.replace): a crashed build leaves data
+    # dirs but never a manifest claiming completion
     tmp = os.path.join(out_dir, "manifest.json.tmp")
     with open(tmp, "w") as f:
         json.dump(manifest, f, indent=2, sort_keys=True)
@@ -722,7 +687,7 @@ def build_corpus(
 
 
 def run_maintenance(spark: SparkSession, targets: list[str]) -> list[dict]:
-    """One maintenance sweep over persisted index/store targets — the
+    """One maintenance sweep over persisted index targets — the
     compaction-cadence glue the 100 TB ingest topology assumes
     ("streams append O(batch) files continuously; compact folds the
     log on a scheduled cadence"). Exposed as CLI ``--mode maintain``.
@@ -733,8 +698,6 @@ def run_maintenance(spark: SparkSession, targets: list[str]) -> list[dict]:
     - ``ivf=/path[:id_col]``  → ``ivf_index_compact`` (default vec_id)
     - ``text=/path``          → ``inverted_index_compact``
     - ``docneardup=/path``    → ``doc_neardup_index_compact``
-    - ``store=/path[:keep]``  → ``prune_months`` (keep_unreferenced,
-      default 0) on a versioned month store
 
     (IVFADC is deliberately absent: its compaction IS the two-tier
     rebuild, which needs the corpus and quantizers — run it through
@@ -755,8 +718,6 @@ def run_maintenance(spark: SparkSession, targets: list[str]) -> list[dict]:
     from hours_api_clickup_spark.datapipe.textindex import (
         inverted_index_compact,
     )
-    from hours_api_clickup_spark.sinks.versioned import prune_months
-
     # families whose spec accepts a ':'-suffix option; everything else
     # takes the WHOLE rest as the path — a ':'-suffix on a no-option
     # family is part of the path (authority-only URIs like
@@ -766,7 +727,7 @@ def run_maintenance(spark: SparkSession, targets: list[str]) -> list[dict]:
     import time as _time
 
     _log = logging.getLogger(__name__)
-    opt_families = {"ivf", "store"}
+    opt_families = {"ivf"}
     results: list[dict] = []
     for spec in targets:
         _t0 = _time.perf_counter()
@@ -794,10 +755,6 @@ def run_maintenance(spark: SparkSession, targets: list[str]) -> list[dict]:
                 inverted_index_compact(spark, path)
             elif family == "docneardup":
                 doc_neardup_index_compact(spark, path)
-            elif family == "store":
-                out["removed"] = prune_months(
-                    path, keep_unreferenced=int(opt or 0)
-                )
             else:
                 raise ValueError(f"unknown maintenance family {family!r}")
             out["status"] = "ok"

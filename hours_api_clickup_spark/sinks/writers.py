@@ -8,9 +8,9 @@
 
 The WRITE_TRUNCATE full-replace loads of the fact table and the dims
 (``fetch_clickup_data.py:976,1039,1109,1178``) go through
-``storage.replace_table`` (stage, then swap), and the at-scale
-month-partitioned fact table is the manifest-committed month store in
-``sinks/versioned.py``.
+``storage.replace_table`` (stage, then swap). The fact table has one
+layout: ``pipelines.commit_table`` commits the whole-table windowed
+merge that way too.
 
 The BigQuery side of S10/S11 is fully wired: ``sinks/warehouse.py``
 renders the reference's two BigQuery MERGE texts and executes their

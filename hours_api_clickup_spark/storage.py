@@ -15,10 +15,9 @@ one place to monkeypatch them in tests:
 - **Maintenance lease**: ``maintenance_lease`` is the single-maintainer
   marker file (``__maintenance_lease``) with a heartbeat, an exclusive
   claim, a claim token, dead-pid takeover and a fenced release. Index
-  maintenance, the table locks and the month store
-  (sinks/versioned.py) all hold it. ``verify_swap_ownership`` re-reads
-  the token at each commit point, so a holder whose lease was taken
-  over after a stall refuses to publish.
+  maintenance and the table locks hold it. ``verify_swap_ownership``
+  re-reads the token at each commit point, so a holder whose lease was
+  taken over after a stall refuses to publish.
 - **Recovery verdict cache**: per session, the paths whose recovery
   probe came back clean. Any lease claim on a path voids its verdict;
   ``read_with_recovery`` voids it on a failed read and retries once.
@@ -121,8 +120,8 @@ def drop_consumed(spark, dir_path: str, files: list[str]) -> None:
 def swap_dir(spark, live: str, staged: str) -> None:
     """Replace directory ``live`` with ``staged`` by two renames, the
     closest a directory swap gets to an atomic pointer flip (the
-    versioned stores in sinks/versioned.py publish through a one-file
-    pointer ``os.replace`` instead, which is atomic).
+    z-order file-stats manifest, one file, publishes through
+    ``os.replace`` instead, which is atomic).
 
     Between the renames only ``live__old`` exists; ``recover_swap``,
     called by every reader and writer first, rolls it back, so a crash
@@ -457,9 +456,9 @@ def verify_swap_ownership(spark, target: str) -> None:
     """The commit-point ownership fence: when the calling thread holds a
     lease covering ``target``, re-read it and raise
     ``MaintenanceLeaseLost`` on a token mismatch. ``swap_dir`` calls it
-    before its destructive rename; commits that swap no directory (the
-    month store's manifest and file-stats replaces) call it
-    directly. Unleased callers are not fenced."""
+    before its destructive rename; a commit that swaps no directory
+    (``operators.zorder.publish_file_stats``) calls it directly.
+    Unleased callers are not fenced."""
     held = covering_held_lease(target)
     if held is None:
         return

@@ -1,276 +1,154 @@
-"""Atomic manifest-committed partitioned merge (VERDICT r5 #4).
+"""The windowed refresh commits atomically through ``commit_table``.
 
-The done-bar: a merge killed at any point before the manifest publish
-never lets a reader observe a resurrected, half-written, or mixed-state
-month — the old manifest keeps serving the complete old state, and a
-retry converges to exactly the state a non-crashing run produces.
+The done-bar: a refresh killed before its swap never lets a reader
+observe a half-written, mixed or resurrected window — the live table
+keeps serving the complete old state, and a retry converges to exactly
+the state a non-crashing run produces. The merge is table-wide
+(``ON T.id = S.id``), so a staged id whose old row lies in an earlier
+month replaces that row instead of adding a second one.
 """
 
 from __future__ import annotations
 
+import contextlib
 import datetime as dt
+import os
 
 import pytest
 from pyspark.sql import functions as F
 
-from hours_api_clickup_spark.operators.merge import (
-    merge_refresh,
-    merge_refresh_partitioned_atomic,
-    window_months,
-)
-from hours_api_clickup_spark.sinks import versioned as V
+from hours_api_clickup_spark import storage
+from hours_api_clickup_spark.operators.merge import merge_refresh
+from hours_api_clickup_spark.pipelines import commit_table
 
 LO, HI = dt.date(2024, 5, 15), dt.date(2024, 6, 15)
+SCHEMA = "id string, start_date_oslo date, v double"
 
 
 def _fact(spark):
     rows = [
         ("h1", dt.date(2024, 1, 10), 1.0),  # history month, untouched
+        ("m", dt.date(2024, 1, 20), 1.0),  # re-sent with an in-window date
         ("a", dt.date(2024, 5, 20), 1.0),  # in window → replaced
         ("b", dt.date(2024, 5, 25), 1.0),  # in window, not in staging → deleted
         ("edge", dt.date(2024, 5, 5), 1.0),  # window MONTH but before lo → kept
-        ("n1", None, 1.0),  # null date → NULL_MONTH, untouched
+        ("n1", None, 1.0),  # null date: BETWEEN is not true → kept
     ]
-    return spark.createDataFrame(rows, "id string, start_date_oslo date, v double")
+    return spark.createDataFrame(rows, SCHEMA)
 
 
 def _staging(spark):
     rows = [
         ("a", dt.date(2024, 5, 20), 2.0),  # update
+        ("m", dt.date(2024, 6, 1), 5.0),  # moves from January into June
         ("c", dt.date(2024, 6, 10), 9.0),  # insert, June
         ("z", dt.date(2024, 3, 1), 9.0),  # outside window → ignored
     ]
-    return spark.createDataFrame(rows, "id string, start_date_oslo date, v double")
+    return spark.createDataFrame(rows, SCHEMA)
+
+
+def _window():
+    return F.col("start_date_oslo").between(F.lit(LO), F.lit(HI))
+
+
+def _seed(spark, path):
+    commit_table(path, "seed", _fact(spark))
+
+
+def _refresh(path, staging):
+    return commit_table(
+        path, "refresh", staging,
+        lambda fact, st: merge_refresh(fact, st, _window(), key="id"),
+    )
 
 
 def _state(spark, path):
     return sorted(
         (r["id"], r["start_date_oslo"], r["v"])
-        for r in V.read_months(spark, path).collect()
+        for r in spark.read.parquet(path).collect()
     )
 
 
 def _expected(spark):
-    w = F.col("start_date_oslo").between(F.lit(LO), F.lit(HI))
     return sorted(
         (r["id"], r["start_date_oslo"], r["v"])
-        for r in merge_refresh(_fact(spark), _staging(spark), w, key="id").collect()
+        for r in merge_refresh(
+            _fact(spark), _staging(spark), _window(), key="id"
+        ).collect()
     )
 
 
-def test_window_months():
-    assert window_months(LO, HI) == ["2024-05", "2024-06"]
-    assert window_months(dt.date(2023, 11, 2), dt.date(2024, 2, 1)) == [
-        "2023-11",
-        "2023-12",
-        "2024-01",
-        "2024-02",
-    ]
+@contextlib.contextmanager
+def _killed_before_swap():
+    """Kill the commit after the staged table is fully written, right
+    before the swap that publishes it."""
+    real_swap = storage.swap_dir
+
+    def boom(*_a, **_k):
+        raise RuntimeError("killed before swap")
+
+    storage.swap_dir = boom
+    try:
+        with pytest.raises(RuntimeError, match="killed before swap"):
+            yield
+    finally:
+        storage.swap_dir = real_swap
 
 
 def test_atomic_merge_equals_plain_merge(spark, tmp_path):
     path = str(tmp_path / "fact")
-    V.bootstrap_months(_fact(spark), path)
-    merge_refresh_partitioned_atomic(spark, path, _staging(spark), LO, HI)
+    _seed(spark, path)
+    rows, _ = _refresh(path, _staging(spark))
     got = _state(spark, path)
-    assert got == _expected(spark)
-    # null-dated + history months kept at their ORIGINAL versions (no
-    # rewrite outside the window)
-    manifest = V.read_manifest(path)
-    assert manifest["2024-01"] == 0 and manifest[V.NULL_MONTH] == 0
-    assert manifest["2024-05"] == 1  # rewritten over bootstrap v0
-    assert manifest["2024-06"] == 0  # born in this merge (no June at boot)
+    assert got == _expected(spark) and rows == len(got)
+    # the moved id is kept once, at its new date and value
+    assert [r for r in got if r[0] == "m"] == [("m", dt.date(2024, 6, 1), 5.0)]
 
 
 def test_crash_before_publish_preserves_old_state(spark, tmp_path):
     path = str(tmp_path / "fact")
-    V.bootstrap_months(_fact(spark), path)
+    _seed(spark, path)
     before = _state(spark, path)
-    manifest_before = V.read_manifest(path)
-
-    def boom():
-        raise RuntimeError("killed mid-merge")
-
-    with pytest.raises(RuntimeError):
-        merge_refresh_partitioned_atomic(
-            spark, path, _staging(spark), LO, HI, _crash_before_publish=boom
-        )
-    # readers see the complete OLD state — nothing half-written, nothing
-    # deleted, nothing resurrected
-    assert V.read_manifest(path) == manifest_before
+    with _killed_before_swap():
+        _refresh(path, _staging(spark))
+    # readers see the complete OLD state, and the table lock is released
     assert _state(spark, path) == before
+    assert not os.path.exists(f"{path}__lock/{storage.LEASE_FILE}")
 
-    # retry converges to the no-crash result; crashed-run debris is
-    # unreferenced and pruned away
-    merge_refresh_partitioned_atomic(spark, path, _staging(spark), LO, HI)
+    _refresh(path, _staging(spark))  # the retry converges
     assert _state(spark, path) == _expected(spark)
-    removed = V.prune_months(path)
-    assert any("2024-05" in r for r in removed)  # the crashed v1 dir
-    assert _state(spark, path) == _expected(spark)  # prune is invisible
 
 
 def test_emptied_month_never_resurrects(spark, tmp_path):
-    """A month whose every row the merge deletes drops out of the
-    manifest; a crash before publish leaves it fully intact (commit
-    never happened), never half-gone — and after a successful run it is
-    gone even though its directory still exists until prune."""
+    """A window month whose every in-window row the merge deletes keeps
+    them all after a crash (the commit never happened), loses them all
+    after a successful run, and a re-run does not bring them back."""
     path = str(tmp_path / "fact")
-    V.bootstrap_months(_fact(spark), path)
-    # staging with NO rows for May inside the window → May keeps only
-    # the pre-window 'edge' row; June gains c. Use staging lacking 'a':
-    staging = spark.createDataFrame(
-        [("c", dt.date(2024, 6, 10), 9.0)],
-        "id string, start_date_oslo date, v double",
-    )
+    _seed(spark, path)
+    staging = spark.createDataFrame([("c", dt.date(2024, 6, 10), 9.0)], SCHEMA)
 
-    with pytest.raises(RuntimeError):
-        merge_refresh_partitioned_atomic(
-            spark,
-            path,
-            staging,
-            LO,
-            HI,
-            _crash_before_publish=lambda: (_ for _ in ()).throw(
-                RuntimeError("kill")
-            ),
-        )
-    got = {r[0] for r in _state(spark, path)}
-    assert {"a", "b", "edge"} <= got  # May fully intact after crash
+    with _killed_before_swap():
+        _refresh(path, staging)
+    assert {"a", "b", "edge"} <= {r[0] for r in _state(spark, path)}
 
-    merge_refresh_partitioned_atomic(spark, path, staging, LO, HI)
-    got = {r[0] for r in _state(spark, path)}
-    assert got == {"h1", "edge", "n1", "c"}  # a,b deleted; May kept edge
-    V.prune_months(path)
-    assert {r[0] for r in _state(spark, path)} == {"h1", "edge", "n1", "c"}
-
-
-def test_fully_emptied_month_leaves_manifest(spark, tmp_path):
-    path = str(tmp_path / "fact")
-    fact = spark.createDataFrame(
-        [("only", dt.date(2024, 5, 20), 1.0)],
-        "id string, start_date_oslo date, v double",
-    )
-    V.bootstrap_months(fact, path)
-    empty_staging = fact.limit(0)
-    merge_refresh_partitioned_atomic(spark, path, empty_staging, LO, HI)
-    assert V.read_manifest(path) == {}
-    with pytest.raises(FileNotFoundError):
-        V.read_months(spark, path)
-    # the dir is debris, not state — prune reclaims it
-    removed = V.prune_months(path)
-    assert removed == ["2024-05/v=0"]
+    for _ in range(2):
+        _refresh(path, staging)
+        assert {r[0] for r in _state(spark, path)} == {"h1", "m", "edge", "n1", "c"}
 
 
 def test_first_run_bootstrap_through_merge(spark, tmp_path):
-    """Merging into an empty store behaves as a bootstrap of the
-    window slice (no manifest → staging-in-window becomes the state)."""
+    """Merging into a table that does not exist yet loads the staged
+    window (no fact → staging-in-window becomes the state)."""
     path = str(tmp_path / "fact")
-    merge_refresh_partitioned_atomic(spark, path, _staging(spark), LO, HI)
-    got = _state(spark, path)
-    assert [r[0] for r in got] == ["a", "c"]  # z outside window ignored
+    rows, _ = _refresh(path, _staging(spark))
+    assert rows == 3
+    assert [r[0] for r in _state(spark, path)] == ["a", "c", "m"]
 
 
 def test_idempotent_reapply(spark, tmp_path):
     path = str(tmp_path / "fact")
-    V.bootstrap_months(_fact(spark), path)
-    merge_refresh_partitioned_atomic(spark, path, _staging(spark), LO, HI)
+    _seed(spark, path)
+    _refresh(path, _staging(spark))
     once = _state(spark, path)
-    merge_refresh_partitioned_atomic(spark, path, _staging(spark), LO, HI)
+    _refresh(path, _staging(spark))
     assert _state(spark, path) == once
-
-
-def test_sync_refresh_manifest_end_to_end(spark, tmp_path):
-    """Pipeline wiring: raw ClickUp-shaped entries → stage → atomic
-    manifest merge; a second run with updated rows converges, and the
-    published state survives prune."""
-    import json as _json
-
-    from hours_api_clickup_spark.pipelines import sync_refresh_manifest
-    from hours_api_clickup_spark.sources.readers import read_raw_time_entries
-    from tests.test_domain_semantics import _entry
-
-    t0 = 1_717_200_000_000  # 2024-06-01 UTC
-    day = 86_400_000
-    p1 = tmp_path / "b1.json"
-    with open(p1, "w") as f:
-        for e in [
-            _entry("a", start_ms=t0, at_ms=t0, duration="3600000"),
-            _entry("b", start_ms=t0 + day, at_ms=t0, duration="1800000"),
-        ]:
-            f.write(_json.dumps(e) + "\n")
-    fact = str(tmp_path / "fact")
-    today = dt.date(2024, 6, 10)
-    r1 = sync_refresh_manifest(
-        spark, read_raw_time_entries(spark, str(p1)), fact, today, days=30
-    )
-    assert r1.rows == 2 and r1.mode == "refresh_manifest"
-
-    # second batch: update a, drop b (windowed delete), add c
-    p2 = tmp_path / "b2.json"
-    with open(p2, "w") as f:
-        for e in [
-            _entry("a", start_ms=t0, at_ms=t0 + 5, duration="7200000"),
-            _entry("c", start_ms=t0 + 2 * day, at_ms=t0, duration="3600000"),
-        ]:
-            f.write(_json.dumps(e) + "\n")
-    r2 = sync_refresh_manifest(
-        spark, read_raw_time_entries(spark, str(p2)), fact, today, days=30
-    )
-    assert r2.rows == 2
-    got = {
-        r["id"]: r["duration_hours"]
-        for r in V.read_months(spark, fact).collect()
-    }
-    assert got == {"a": 2.0, "c": 1.0}
-
-
-def test_prune_months_keep_unreferenced_grace_window(spark, tmp_path):
-    """Review r6: keep_unreferenced was declared but never read — it
-    must retain the N newest unreferenced versions per month (the
-    rollback grace window), pruning only older debris."""
-    path = str(tmp_path / "fact")
-    V.bootstrap_months(_fact(spark), path)
-    # two merges -> each touched month accumulates old versions
-    merge_refresh_partitioned_atomic(spark, path, _staging(spark), LO, HI)
-    merge_refresh_partitioned_atomic(spark, path, _staging(spark), LO, HI)
-    import os
-
-    def versions(month):
-        mdir = os.path.join(path, f"month={month}")
-        return sorted(
-            int(v.split("=", 1)[1])
-            for v in os.listdir(mdir)
-            if v.startswith("v=")
-        ) if os.path.isdir(mdir) else []
-
-    manifest = V.read_manifest(path)
-    month = next(m for m in manifest if len(versions(m)) >= 3)
-    all_v = versions(month)
-    live = manifest[month]
-
-    removed = V.prune_months(path, keep_unreferenced=1)
-    kept = versions(month)
-    dead_sorted = sorted((v for v in all_v if v != live), reverse=True)
-    assert kept == sorted([live, dead_sorted[0]])  # newest dead kept
-    assert f"{month}/v={dead_sorted[1]}" in removed
-    # state untouched either way
-    assert _state(spark, path) == _expected(spark)
-    # a second prune with the default drops the grace version too
-    V.prune_months(path)
-    assert versions(month) == [live]
-    assert _state(spark, path) == _expected(spark)
-
-
-def test_prune_months_tolerates_nonnumeric_debris(spark, tmp_path):
-    """Review r6: a stray non-numeric v= entry (operator debris) must
-    not crash GC — same isdigit guard as _versions."""
-    import os
-
-    path = str(tmp_path / "fact")
-    V.bootstrap_months(_fact(spark), path)
-    merge_refresh_partitioned_atomic(spark, path, _staging(spark), LO, HI)
-    month = next(iter(V.read_manifest(path)))
-    os.makedirs(os.path.join(path, f"month={month}", "v=3.bak"))
-    removed = V.prune_months(path)  # must not raise
-    assert all(".bak" not in r for r in removed)
-    assert _state(spark, path) == _expected(spark)

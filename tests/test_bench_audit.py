@@ -254,7 +254,7 @@ class TestBenchSmoke:
 
     def test_rows_run_prints_json_and_writes_no_detail(self):
         before = self._details()
-        rows = ["activity_streaks", "text_index_term_probe_100k"]
+        rows = ["activity_streaks", "text_index_term_probe_100k", "zorder_pruned_probe"]
         out = self._run("--rows", ",".join(rows))
         assert out.returncode == 0, out.stderr[-3000:]
         line = json.loads(out.stdout.strip().splitlines()[-1])
@@ -287,6 +287,14 @@ class TestBenchWiring:
         rec = SuiteRecorder()
         rec.record("r", 1.0)
         assert rec.row_window["r"] == 0
+
+    def test_inner_medians_count_as_trials(self):
+        # a once that is itself a median of 3 records 3 samples, not 1
+        row = bench.Row(("r",), lambda _fx, _i: 1.0, 1, inner=3)
+        rec, _, _ = bench.run_suite((row,), None, calibrate=lambda: 1.0)
+        assert rec.row_trials == {"r": 3}
+        probes = next(r for r in bench.ROWS if "scalecheck_lsh_probe_x1" in r.names)
+        assert probes.trials * probes.inner == 3
 
 
 class TestCpusParseAndDetailFile:

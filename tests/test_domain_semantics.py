@@ -203,6 +203,7 @@ def _fact_staging(spark):
             mk(3, (6, 2), 1),    # inside window, NOT in staging → deleted
             mk(4, (1, 11), 1),   # outside window, id also in staging-window? no
             ("id7", None, 1.0),  # NULL date: BETWEEN is not true → kept
+            mk(8, (1, 15), 1),   # outside window, re-sent inside it below
         ],
         "id string, start_date_oslo date, v double",
     )
@@ -211,6 +212,7 @@ def _fact_staging(spark):
             mk(2, (6, 1), 2),    # update
             mk(5, (6, 3), 9),    # insert (new in window)
             mk(6, (1, 12), 9),   # outside window → ignored by refresh
+            mk(8, (6, 5), 9),    # id moved into the window: replaces id8
         ],
         ["id", "start_date_oslo", "v"],
     )
@@ -225,16 +227,18 @@ def _window_pred():
 
 def test_merge_refresh_case_analysis(spark):
     fact, staging = _fact_staging(spark)
-    out = merge_refresh(fact, staging, _window_pred(), key="id")
-    got = {(r["id"], float(r["v"])) for r in out.collect()}
-    assert got == {
+    rows = merge_refresh(fact, staging, _window_pred(), key="id").collect()
+    # a list, not a set: each id appears exactly once (id8 too)
+    got = sorted((r["id"], float(r["v"])) for r in rows)
+    assert got == sorted([
         ("id1", 1.0),  # history preserved (the BUG_FIX regression)
         ("id4", 1.0),
         ("id2", 2.0),  # updated
         ("id5", 9.0),  # inserted
         ("id7", 1.0),  # NULL-date row survives (delete fires only on TRUE)
+        ("id8", 9.0),  # matched table-wide ON T.id = S.id: one row, new value
         # id3 deleted; id6 (staging outside window) not applied
-    }
+    ])
 
 
 def test_merge_refresh_idempotent(spark):

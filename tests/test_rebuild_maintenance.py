@@ -391,18 +391,14 @@ class TestLeaseHeartbeat:
         storage.release_lease(spark, p)
 
     def test_publish_lease_heartbeat(self, spark, tmp_path):
-        """A month store root is leased like an index: a publish
-        outlasting the ttl is not stolen while its heartbeat runs, a
-        store cycle refuses meanwhile, and goes through once released."""
-        import datetime as dt
+        """An index root's lease is held across a publish outlasting the
+        ttl: it is not stolen while its heartbeat runs, a tiered compact
+        refuses meanwhile, and goes through once released."""
         import time
 
-        from hours_api_clickup_spark.sinks import versioned as V
-
-        rows = spark.createDataFrame(
-            [(1, dt.date(2024, 1, 5))], "id long, start_date_oslo date"
-        )
-        p = str(tmp_path / "store")
+        p = str(tmp_path / "lsh")
+        S.lsh_index_write(_emb(spark), "embedding", "vec_id", p, dim=64)
+        S.lsh_index_delete(spark, p, [0])
         with storage.maintenance_lease(spark, p, "long-publish", ttl_sec=1):
             deadline = time.time() + 3.0
             while time.time() < deadline:
@@ -410,8 +406,10 @@ class TestLeaseHeartbeat:
                     storage.acquire_lease(spark, p, "racer", ttl_sec=1)
                 time.sleep(0.4)
             with pytest.raises(storage.MaintenanceLeaseHeld):
-                V.bootstrap_months(rows, p)
-        assert V.bootstrap_months(rows, p) == {"2024-01": 0}
+                S.lsh_index_compact(spark, p)
+        S.lsh_index_compact(spark, p)
+        assert not os.path.exists(f"{p}/tombstones")  # folded
+        assert not os.path.exists(f"{p}/{storage.LEASE_FILE}")
 
 
 def test_only_storage_owns_leases_and_hadoop_commits():
@@ -706,26 +704,40 @@ class TestLeaseFencing:
         assert not os.path.exists(f"{p}/{storage.LEASE_FILE}")  # released
 
     def test_publish_lease_takeover(self, spark, tmp_path):
-        """The month store's commits are fenced by the same lease:
-        manifest swaps re-verify the claim token, and release spares
-        the successor's lease."""
-        import os
+        """A commit that swaps no directory is fenced by the same lease:
+        the file-stats publish re-verifies the claim token, and release
+        spares the successor's lease."""
+        from hours_api_clickup_spark.operators.zorder import (
+            publish_file_stats,
+            read_file_stats,
+        )
 
-        import hours_api_clickup_spark.sinks.versioned as V
-
-        p = str(tmp_path / "store")
+        p = str(tmp_path / "layout")
+        stats = {"part-0.parquet": {"x": [0, 9]}}
         lease = os.path.join(p, storage.LEASE_FILE)
         with storage.maintenance_lease(spark, p, "old-holder"):
             with open(lease, "w") as f:
                 f.write("taker host=elsewhere pid=1 t=0 token=succtok")
             with pytest.raises(storage.MaintenanceLeaseLost, match="successor"):
-                V.publish_manifest(p, {"2024-01": 0})
-            assert not os.path.exists(os.path.join(p, V._MANIFEST))
+                publish_file_stats(p, stats)
+            assert read_file_stats(p) is None
         assert storage.read_lease_token(spark, p) == "succtok"  # spared
         os.unlink(lease)
         # unfenced again: the same publish goes through
-        V.publish_manifest(p, {"2024-01": 0})
-        assert V.read_manifest(p) == {"2024-01": 0}
+        publish_file_stats(p, stats)
+        assert read_file_stats(p) == stats
+
+    def test_failed_cycle_releases_the_lease(self, spark, tmp_path):
+        """A section that fails in-process (not a crash) releases its
+        lease on the way out, so the retry claims it at once."""
+        p = str(tmp_path / "idx")
+        with pytest.raises(RuntimeError, match="failed before commit"):
+            with storage.maintenance_lease(spark, p, "cycle"):
+                raise RuntimeError("failed before commit")
+        assert not os.path.exists(f"{p}/{storage.LEASE_FILE}")
+        assert p not in storage.held_leases()
+        with storage.maintenance_lease(spark, p, "retry"):
+            assert os.path.exists(f"{p}/{storage.LEASE_FILE}")
 
     def test_unleased_callers_are_not_fenced(self, spark, tmp_path):
         """The lease is opt-in: a bare storage.swap_dir with no held lease

@@ -86,70 +86,6 @@ def test_bucketed_join_no_shuffle(spark):
     assert joined.count() == li.count()
 
 
-def test_partitioned_fact_merge_prunes(spark, tmp_path):
-    """The at-scale windowed refresh (merge_refresh_partitioned_atomic)
-    must (a) read only window-month version dirs, (b) rewrite only
-    those months — untouched history files keep their identity, (c)
-    apply the full update/insert/delete semantics inside the window,
-    and (d) drop a window month whose rows were all deleted."""
-    import datetime as dt
-    import glob
-
-    from hours_api_clickup_spark.operators.merge import (
-        merge_refresh_partitioned_atomic,
-    )
-    from hours_api_clickup_spark.sinks import versioned as V
-
-    # fact: one row per month of 2024 (ids id1..id12), months 11-12 in window
-    fact = spark.createDataFrame(
-        [(f"id{m}", dt.date(2024, m, 5), float(m)) for m in range(1, 13)],
-        "id string, start_date_oslo date, v double",
-    )
-    path = str(tmp_path / "fact_part")
-    V.bootstrap_months(fact, path)
-    history_files = set(glob.glob(f"{path}/month=2024-0*/**/*.parquet", recursive=True))
-    assert history_files
-
-    # the window slice reads only its months' published version dirs
-    window = ["2024-11", "2024-12"]
-    read_dirs = {
-        f.split("/month=")[1].split("/")[0]
-        for f in V.read_months(spark, path, months=window).inputFiles()
-    }
-    assert read_dirs == set(window)
-
-    # staging: id11 updated; id13 new (Nov); December row absent → the
-    # whole 2024-12 month must disappear (full-month delete)
-    staging = spark.createDataFrame(
-        [
-            ("id11", dt.date(2024, 11, 10), 99.0),
-            ("id13", dt.date(2024, 11, 20), 77.0),
-        ],
-        "id string, start_date_oslo date, v double",
-    )
-    months = merge_refresh_partitioned_atomic(
-        spark,
-        path,
-        staging,
-        window_lo=dt.date(2024, 11, 1),
-        window_hi=dt.date(2024, 12, 31),
-        key="id",
-    )
-    assert months == window
-
-    rows = {r["id"]: r for r in V.read_months(spark, path).collect()}
-    assert set(rows) == {f"id{m}" for m in range(1, 11)} | {"id11", "id13"}
-    assert rows["id11"]["v"] == 99.0
-    assert rows["id13"]["v"] == 77.0
-    # history months were not rewritten (same physical files)
-    assert set(glob.glob(f"{path}/month=2024-0*/**/*.parquet", recursive=True)) == history_files
-    # the fully-deleted December month is gone: out of the manifest,
-    # and its directory reclaimed by GC
-    assert "2024-12" not in V.read_manifest(path)
-    V.prune_months(path)
-    assert not glob.glob(f"{path}/month=2024-12*")
-
-
 def test_distributed_chunk_fetch(spark):
     import datetime as dt
 
@@ -2620,7 +2556,7 @@ def test_read_pruned_nested_layout_and_typed_stats(spark, tmp_path):
         collect_file_stats,
         read_pruned,
     )
-    from hours_api_clickup_spark.sinks.versioned import (
+    from hours_api_clickup_spark.operators.zorder import (
         publish_file_stats,
         read_file_stats,
     )
@@ -2669,7 +2605,7 @@ def test_read_pruned_partition_cols_nulls_and_decimal_stats(spark, tmp_path):
         read_pruned,
         zorder_write,
     )
-    from hours_api_clickup_spark.sinks.versioned import publish_file_stats
+    from hours_api_clickup_spark.operators.zorder import publish_file_stats
 
     # (a) + (b): partitioned layout, one partition with all-null k
     df = spark.createDataFrame(

@@ -495,20 +495,20 @@ def test_maintenance_sweep_tick_end_to_end(spark, tmp_path):
 def test_maintenance_route_rejects_unknown_family(spark, tmp_path):
     """Malformed targets report per-target errors, never crash the
     sweep (per-target isolation, pipelines.run_maintenance). The
-    snapshot store is gone, so a ``snapshots=`` target is an unknown
-    family too."""
+    snapshot and month stores are gone, so ``snapshots=`` and
+    ``store=`` targets are unknown families too."""
     from hours_api_clickup_spark.pipelines import run_maintenance
 
     out = run_maintenance(
         spark,
         [
             "bogus=/nowhere", "lsh", f"snapshots={tmp_path / 'none'}",
-            f"store={tmp_path / 'none'}",
+            f"store={tmp_path / 'none'}:0",
         ],
     )
-    assert [r["status"] for r in out] == ["error", "error", "error", "ok"]
-    assert "unknown maintenance family" in out[0]["error"]
-    assert "unknown maintenance family" in out[2]["error"]
+    assert [r["status"] for r in out] == ["error"] * 4
+    for i in (0, 2, 3):
+        assert "unknown maintenance family" in out[i]["error"]
 
 
 def test_maintenance_non_ok_targets_logged(spark, tmp_path, caplog):

@@ -249,7 +249,7 @@ def test_maintain_route_restricted_to_configured_targets(spark, tmp_path):
         import urllib.error
 
         with pytest.raises(urllib.error.HTTPError) as ei:
-            _post(f"{base}/maintain", {"targets": [f"store={victim}:0"]})
+            _post(f"{base}/maintain", {"targets": [f"ivf={victim}:vec_id"]})
         # malformed REQUEST → 400, same as the non-object-body check;
         # 500 stays reserved for genuine sweep failures (ADVICE r10)
         assert ei.value.code == 400
