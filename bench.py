@@ -1,7 +1,8 @@
 #!/usr/bin/env python
 """Benchmark the registry query suite at $SPARK_GRAFT_SF_DIR (default
 sf0.1) on local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
-{"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
+{"metric": ..., "value": total_sec, "unit": "sec", "queries": {...},
+"counts": {...}, "sf": ...}
 
 Usage: python bench.py [--rows name,name,...]
 
@@ -175,7 +176,9 @@ class Row:
     seconds — or, for an entry whose one call records several rows,
     a {name: seconds} dict over ``names``. ``inner`` > 1 marks a
     ``once`` that already returns a median of that many timed calls, so
-    the row records ``trials × inner`` samples."""
+    the row records ``trials × inner`` samples. A ``unit`` other than
+    seconds marks a count: it is reported under ``counts``, never in
+    ``queries`` or ``value``."""
 
     names: tuple[str, ...]
     once: Once
@@ -184,6 +187,7 @@ class Row:
     warm: bool = False
     setup: Callable[["Fixtures"], object] | None = None
     inner: int = 1
+    unit: str = "s"
 
 
 def _timed(fn: Callable[[], object]) -> float:
@@ -496,7 +500,7 @@ ROWS: tuple[Row, ...] = REGISTRY_ROWS + (
     Row(("doc_index_append_batch",), _doc_append, INGEST_RUNS, setup=_doc_index_setup),
     # file-skip payoff: the same box probe through the manifest-pruned
     # read vs the plain read of the same files
-    Row(ZORDER_FILES, _zorder_files, 1),
+    Row(ZORDER_FILES, _zorder_files, 1, unit="files"),
     Row(("zorder_pruned_probe",), _zorder_probe(True), N_RUNS),
     Row(("zorder_plain_probe",), _zorder_probe(False), N_RUNS),
     # inverted text index on 100k docs: ingest grades, then the
@@ -556,7 +560,10 @@ def run_suite(
         for name, sec in measure(row, fx).items():
             n = row.trials * row.inner
             rec.record(name, sec, trials=n)
-            print(f"# {name}: median {sec:.3f}s of {n}", file=sys.stderr)
+            if row.unit == "s":
+                print(f"# {name}: median {sec:.3f}s of {n}", file=sys.stderr)
+            else:
+                print(f"# {name}: {sec:g} {row.unit}", file=sys.stderr)
         if idx % every == 0 and idx < len(rows):
             rec.checkpoint(f"e{idx:03d}", calibrate())
     rec.checkpoint("end", calibrate())
@@ -635,7 +642,9 @@ def main(argv: list[str] | None = None) -> None:
     rec, suspect, reruns = run_suite(
         rows, Fixtures(spark, SF_DIR), lambda: min(_calibrate_once(), _calibrate_once())
     )
-    timings = rec.timings
+    count_names = {n for row in rows if row.unit != "s" for n in row.names}
+    counts = {n: int(rec.timings[n]) for n in sorted(count_names)}
+    timings = {n: sec for n, sec in rec.timings.items() if n not in count_names}
     counted = [n for row in rows if row.counted for n in row.names]
     total = round(sum(timings[n] for n in counted), 3)
 
@@ -649,6 +658,7 @@ def main(argv: list[str] | None = None) -> None:
         detail = dict(
             summary,
             queries=timings,
+            counts=counts,
             calibration_profile=[
                 {"label": lbl, "sec": round(s, 3)} for lbl, s in rec.checkpoints
             ],
@@ -661,11 +671,10 @@ def main(argv: list[str] | None = None) -> None:
             json.dump(detail, f, indent=1, sort_keys=True)
 
     # The stdout line carries only the 12 slowest rows (the full record
-    # would overflow a tail-captured stdout); counts are not seconds.
-    secs = [kv for kv in timings.items() if not kv[0].startswith("zorder_files_")]
-    top = dict(sorted(secs, key=lambda kv: kv[1], reverse=True)[:12])
+    # would overflow a tail-captured stdout), and every count.
+    top = dict(sorted(timings.items(), key=lambda kv: kv[1], reverse=True)[:12])
     tail = dict(suspect_rows=len(suspect), rerun_rows=len(reruns), detail=detail_name)
-    print(json.dumps(dict(summary, queries=top, **tail)))
+    print(json.dumps(dict(summary, queries=top, counts=counts, **tail)))
     spark.stop()
 
 

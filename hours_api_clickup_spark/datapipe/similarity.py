@@ -336,6 +336,10 @@ def lsh_bucketed_topk(
 LSH_COARSE = 16
 
 # Signatures are the ``sig`` data column; ``(t, sb)`` the directories.
+# The vector rides on the table-0 row only (``v`` is null on t ≥ 1):
+# nulling it here too makes an index written with a vector on every
+# table's row read like one written without, and its next compaction
+# drops the copies.
 LSH_LAYOUT = tiered.Layout(
     key="vid",
     parts=("t", "sb"),
@@ -343,7 +347,7 @@ LSH_LAYOUT = tiered.Layout(
     fold=("t",),  # one row per (vid, table) of the newest version
     norm=lambda df: df.select(
         "vid",
-        "v",
+        F.when(F.col("t") == 0, F.col("v")).alias("v"),
         F.col("t").cast("int").alias("t"),
         F.col("sig").cast("long").alias("sig"),
         F.col("sb").cast("long").alias("sb"),
@@ -362,6 +366,8 @@ def _signature_rows(
 ) -> DataFrame:
     """(vid, v, t, sig, sb) rows for every table — ONE mapInPandas GEMM
     pass, fanned out to the ``tables`` rows per vector with an explode.
+    Only the t = 0 row carries the vector; the other ``tables - 1`` rows
+    hold ``v = NULL``, so each vector is stored once, not once per table.
     (The previous union-of-``tables``-selects duplicated the GEMM
     subtree per table: 6× the Python tasks for identical output.)"""
     sigs = add_lsh_signatures(df, vec_col, id_col, planes, tables, dim=dim)
@@ -381,7 +387,12 @@ def _signature_rows(
                 )
             ).alias("ts"),
         )
-        .select("vid", "v", F.col("ts.t").alias("t"), F.col("ts.sig").alias("sig"))
+        .select(
+            "vid",
+            F.when(F.col("ts.t") == 0, F.col("v")).alias("v"),
+            F.col("ts.t").alias("t"),
+            F.col("ts.sig").alias("sig"),
+        )
         .withColumn("sb", (F.col("sig") / F.lit(LSH_COARSE)).cast("long"))
     )
 
@@ -403,9 +414,12 @@ def lsh_index_write(
     Signatures are computed ONCE when the corpus lands (one mapInPandas
     GEMM pass), and every later query is a partition-pruned read of a
     handful of directories plus a row-group-pruned sig filter inside
-    them — never a full-corpus scan-and-sign. The vector is stored
-    alongside the signature so the exact re-rank needs no join back to
-    the corpus (a deliberate ×tables storage trade).
+    them — never a full-corpus scan-and-sign. The vector is stored once,
+    on the vector's table-0 row (``v`` is null on the other tables'
+    rows), so the index holds one copy of the corpus, not ``tables``;
+    the exact re-rank reads the candidates' vectors from those t = 0
+    rows of the same index (``lsh_probe_topk``), with no join back to
+    the corpus.
 
     The index is a ``datapipe.tiered`` index: ``base`` written here,
     ``log`` by ``lsh_index_append``, ``tombstones`` by
@@ -471,11 +485,12 @@ def lsh_index_append(
     file, not one per touched bucket. Bootstraps the index when no base
     is committed (``tiered.append``).
 
-    Probes keep the max-``seq`` row per vid among candidates.
+    Probes score every candidate with its newest (max-``seq``) vector.
     Consistency bound: if a RE-INGESTED vector's new value changes a
-    signature, the stale row in its old bucket can surface for probes
-    that hit only that bucket until ``lsh_index_compact`` folds the log.
-    Appending NEW ids is exact immediately."""
+    signature, the stale row in its old bucket can still make the vid a
+    candidate for probes that hit only that bucket, scored with its
+    newest vector, until ``lsh_index_compact`` folds the log. Appending
+    NEW ids is exact immediately."""
     tiered.append(
         df,
         path,
@@ -529,7 +544,14 @@ def lsh_probe_topk(
     directories driver-side before pruning can even run, which dominates
     probe latency when issuing many queries. Passing the cached reader
     amortizes that discovery (the in-session analog of a metastore's
-    partition catalog); pruning still happens per query at planning."""
+    partition catalog); pruning still happens per query at planning.
+
+    The candidate scan yields vids only. Their vectors come from the
+    t = 0 rows of the same view (the one table that stores them),
+    semi-joined to the broadcast candidate vids and resolved to each
+    vid's newest version, so tombstones apply on both sides and a
+    candidate surfaced by a stale bucket row of a re-ingested vid is
+    scored with its newest vector."""
     if probe_radius > 1:
         raise ValueError("probe enumeration implemented for radius <= 1")
     dim = len(query_vec)
@@ -552,13 +574,16 @@ def lsh_probe_topk(
         if isinstance(index_path, DataFrame)
         else lsh_index_read(spark, index_path)
     )
-    idx = reader.filter(cond)
-    if "seq" in idx.columns:
-        # merge-on-read resolution among the probed candidates (the
-        # candidate set is bucket-pruned and tiny, so the window is a
-        # few rows, not a corpus pass)
-        idx = tiered.newest(idx, "vid")
-    cand = idx.select("vid", "v").dropDuplicates(["vid"])
+    cand_vids = reader.filter(cond).select("vid")
+    vecs = reader.filter(F.col("t") == 0).join(
+        F.broadcast(cand_vids), "vid", "left_semi"
+    )
+    if "seq" in vecs.columns:
+        # merge-on-read resolution among the candidates' vector rows
+        # (the candidate set is bucket-pruned and tiny, so the window is
+        # a few rows, not a corpus pass)
+        vecs = tiered.newest(vecs, "vid")
+    cand = vecs.select("vid", "v").dropDuplicates(["vid"])
     q = F.array(*[F.lit(float(x)) for x in query_vec])
     scored = cand.select(
         F.col("vid").alias("nbr_id"), cosine_sim(F.col("v"), q).alias("score")

@@ -198,20 +198,17 @@ def read_fact_or_empty(
     Any other read failure (corrupt footer, permissions, storage hiccup)
     must propagate: swallowing it would make the subsequent merge treat
     years of history as empty and the overwrite would truncate the fact
-    table to the staging window.
+    table to the staging window. The absent path is checked, not read:
+    Spark logs a reader's ``FileNotFoundException`` at WARN with its
+    whole stack trace before raising ``PATH_NOT_FOUND``.
     """
-    from pyspark.errors.exceptions.captured import AnalysisException
-
     # roll back a crashed stage-then-swap overwrite first: mid-swap the
     # live dir is briefly absent and only {path}__old exists — without
     # recovery that window would read as first-run
     storage.recover_swap(spark, fact_path)
-    try:
-        return spark.read.parquet(fact_path)
-    except AnalysisException as exc:
-        if "PATH_NOT_FOUND" in str(exc):
-            return staging.limit(0)
-        raise
+    if not storage.exists(spark, fact_path):
+        return staging.limit(0)
+    return spark.read.parquet(fact_path)
 
 
 def sync_dim(

@@ -304,21 +304,16 @@ def fold_rollup_batch(
         partial_rollup,
     )
 
-    from pyspark.errors.exceptions.captured import AnalysisException
-
     delta = partial_rollup(batch_df, list(keys), val)
-    # PATH_NOT_FOUND alone means "first batch". Any OTHER read failure
+    # An absent path alone means "first batch". Any OTHER read failure
     # (corrupt footer, permissions, storage hiccup) must propagate —
     # swallowing it would make this batch the entire state and the
     # overwrite would silently destroy the accumulated rollup (the same
     # rule read_fact_or_empty pins; review r6).
     storage.recover_swap(spark, state_path)  # roll back a mid-swap crash
-    try:
-        prev = spark.read.parquet(state_path)
-    except AnalysisException as exc:
-        if "PATH_NOT_FOUND" not in str(exc):
-            raise
-        prev = None
+    prev = (
+        spark.read.parquet(state_path) if storage.exists(spark, state_path) else None
+    )
     if prev is not None:
         applied = prev.agg(F.max("__last_batch_id")).collect()[0][0]
         if applied is not None and batch_id <= applied:

@@ -255,13 +255,21 @@ class TestBenchSmoke:
     def test_rows_run_prints_json_and_writes_no_detail(self):
         before = self._details()
         rows = ["activity_streaks", "text_index_term_probe_100k", "zorder_pruned_probe"]
-        out = self._run("--rows", ",".join(rows))
+        files = "zorder_files_planned_pruned"
+        out = self._run("--rows", ",".join([*rows, files]))
         assert out.returncode == 0, out.stderr[-3000:]
         line = json.loads(out.stdout.strip().splitlines()[-1])
         assert all(line["queries"][r] > 0 for r in rows)
         assert line["n_queries"] == 1 and line["value"] == line["queries"][rows[0]]
         assert line["detail"] is None
         assert self._details() == before
+        # a file count is a count: under ``counts``, printed without a
+        # seconds unit, never in ``queries`` or ``value``
+        assert files not in line["queries"]
+        assert set(line["counts"]) == set(bench.ZORDER_FILES)
+        assert all(isinstance(n, int) and n > 0 for n in line["counts"].values())
+        assert f"# {files}: {line['counts'][files]} files" in out.stderr
+        assert f"# {files}: median" not in out.stderr
 
     def test_unknown_row_exits_2(self):
         out = self._run("--rows", "activity_streaks,no_such_row")

@@ -1219,6 +1219,33 @@ def test_read_fact_or_empty_recovers_mid_swap_crash(spark, tmp_path):
     assert got.count() == 5  # recovered, not treated as first run
 
 
+def test_read_fact_or_empty_never_reads_a_missing_fact(spark, tmp_path, monkeypatch):
+    """A first sync checks that the fact path exists instead of reading
+    it: a read of a missing path makes Spark log a whole
+    ``FileNotFoundException`` stack trace at WARN before it raises."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from hours_api_clickup_spark.pipelines import read_fact_or_empty
+
+    fact = str(tmp_path / "fact")
+    read = DataFrameReader.parquet
+    calls = []
+
+    def spy(self, *paths, **kw):
+        calls.append(paths)
+        return read(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", spy)
+    staging = spark.range(3).withColumnRenamed("id", "k")
+    got = read_fact_or_empty(spark, fact, staging)
+    assert calls == []
+    assert got.columns == ["k"] and got.count() == 0
+    # an existing fact is read
+    spark.range(5).write.parquet(fact)
+    assert read_fact_or_empty(spark, fact, staging).count() == 5
+    assert calls == [(fact,)]
+
+
 def test_streaming_doc_neardup_steady_state_never_scans_pairs_table(
     spark, tmp_path, monkeypatch
 ):

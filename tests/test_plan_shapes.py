@@ -153,12 +153,25 @@ def test_lsh_probe_scan_is_partition_pruned(spark, tmp_path):
     # of the persisted index (PartitionFilters on the scan), push the
     # exact-sig IN-list down to the parquet reader (PushedFilters →
     # row-group pruning via the sorted sig column's min/max stats), and
-    # never run a full-corpus mapInPandas signature pass.
+    # never run a full-corpus mapInPandas signature pass. The re-rank's
+    # vector scan is pruned to table 0 too: EVERY scan of the index has
+    # t in its PartitionFilters.
+    import re
+
     plan = _probe_index_plan(spark, tmp_path, "lsh")
-    pf = plan.split("PartitionFilters")[1].split("\n")[0]
-    assert "t#" in pf and "sb#" in pf, plan
-    pushed = plan.split("PushedFilters")[1].split("\n")[0]
-    assert "sig" in pushed, plan
+    scans = [
+        node for node in re.split(r"\n\(\d+\) ", plan) if node.startswith("Scan parquet")
+    ]
+    assert scans, plan
+
+    def line(node, key):
+        return node.split(f"{key}: ")[1].split("\n")[0] if f"{key}: " in node else ""
+
+    for node in scans:
+        assert "t#" in line(node, "PartitionFilters"), node
+    cand = [node for node in scans if "sb#" in line(node, "PartitionFilters")]
+    assert len(cand) == 1, plan
+    assert "sig" in line(cand[0], "PushedFilters"), plan
     assert "MapInPandas" not in plan, plan
 
 

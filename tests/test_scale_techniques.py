@@ -18,6 +18,12 @@ from hours_api_clickup_spark.sinks.writers import write_bucketed
 from tests.conftest import SF_DIR
 
 
+def _rounded(v):
+    """An index row's vector for comparison: None stays None (only a
+    vector's table-0 row stores it)."""
+    return None if v is None else tuple(round(float(x), 6) for x in v)
+
+
 def _skewed_df(spark):
     # 90% of rows share one hot key
     return spark.range(0, 20_000).select(
@@ -232,7 +238,7 @@ class TestLshIndexUpsert:
             from hours_api_clickup_spark.datapipe.similarity import lsh_index_read
 
             return sorted(
-                (r["t"], r["sig"], r["vid"], tuple(round(float(x), 6) for x in r["v"]))
+                (r["t"], r["sig"], r["vid"], _rounded(r["v"]))
                 for r in lsh_index_read(spark, path).collect()
             )
 
@@ -310,7 +316,7 @@ class TestLshIndexUpsert:
 
         def canon(path):
             return sorted(
-                (r["t"], r["sig"], r["vid"], tuple(round(float(x), 6) for x in r["v"]))
+                (r["t"], r["sig"], r["vid"], _rounded(r["v"]))
                 for r in lsh_index_read(spark, path).collect()
             )
 
@@ -356,6 +362,114 @@ class TestLshIndexUpsert:
             for r in lsh_index_read(spark, ref_path).collect()
         )
         assert got == want
+
+
+class TestLshVectorOnce:
+    """The LSH index stores each vector once, on its table-0 row; the
+    other tables' rows carry ``v = NULL``. An index written with the
+    vector on every table's row reads and probes the same, and one
+    compaction drops the copies."""
+
+    @staticmethod
+    def _raw(spark, path, tier):
+        # the files as written, not the normalized view
+        return spark.read.parquet(f"{path}/{tier}")
+
+    def _assert_vectors_on_table0_only(self, spark, path, tier):
+        raw = self._raw(spark, path, tier)
+        off = raw.filter((F.col("t") != 0) & F.col("v").isNotNull()).count()
+        missing = raw.filter((F.col("t") == 0) & F.col("v").isNull()).count()
+        assert (off, missing) == (0, 0), (tier, off, missing)
+        assert raw.filter(F.col("t") == 0).count() > 0
+
+    @staticmethod
+    def _reingest_batch(emb):
+        # new ids plus 10 re-ingested ids whose negated vectors move to
+        # other buckets
+        return emb.filter(
+            (F.col("vec_id") >= 400) | (F.col("vec_id") < 10)
+        ).withColumn(
+            "embedding",
+            F.when(F.col("vec_id") < 10, F.transform("embedding", lambda x: -x))
+            .otherwise(F.col("embedding"))
+            .cast("array<float>"),
+        )
+
+    def test_write_append_compact_store_vectors_on_table0_only(self, spark, tmp_path):
+        from hours_api_clickup_spark.datapipe.similarity import (
+            lsh_index_append,
+            lsh_index_compact,
+            lsh_index_write,
+        )
+
+        emb = load_table(spark, SF_DIR, "embeddings")
+        path = str(tmp_path / "idx")
+        lsh_index_write(emb.filter(F.col("vec_id") < 400), "embedding", "vec_id", path, dim=64)
+        self._assert_vectors_on_table0_only(spark, path, "base")
+        lsh_index_append(self._reingest_batch(emb), "embedding", "vec_id", path, dim=64)
+        self._assert_vectors_on_table0_only(spark, path, "log")
+        lsh_index_compact(spark, path)
+        self._assert_vectors_on_table0_only(spark, path, "base")
+        assert self._raw(spark, path, "base").select("vid").distinct().count() == 500
+
+    def test_old_form_index_probes_identically_and_compacts_to_new_form(
+        self, spark, tmp_path
+    ):
+        from hours_api_clickup_spark.datapipe.similarity import (
+            lsh_index_append,
+            lsh_index_compact,
+            lsh_index_delete,
+            lsh_index_read,
+            lsh_index_write,
+            lsh_probe_topk,
+        )
+
+        emb = load_table(spark, SF_DIR, "embeddings")
+        old_corpus = emb.filter(F.col("vec_id") < 400)
+        new_path, old_path = str(tmp_path / "new"), str(tmp_path / "old")
+        lsh_index_write(old_corpus, "embedding", "vec_id", new_path, dim=64)
+        # the old form: the same rows, each table's row carrying the vector
+        vecs = old_corpus.select(F.col("vec_id").alias("vid"), F.col("embedding").alias("v"))
+        self._raw(spark, new_path, "base").drop("v").join(vecs, "vid").write.partitionBy(
+            "t", "sb"
+        ).parquet(f"{old_path}/base")
+        raw_old = self._raw(spark, old_path, "base")
+        assert raw_old.filter(F.col("v").isNotNull()).count() == 6 * 400
+
+        batch = self._reingest_batch(emb)
+        for path in (new_path, old_path):
+            lsh_index_append(batch, "embedding", "vec_id", path, dim=64)
+            lsh_index_delete(spark, path, [401, 77])
+
+        def probes(path):
+            return [
+                [tuple(r) for r in lsh_probe_topk(spark, path, qv, k=10).collect()]
+                for qv in queries
+            ]
+
+        queries = [
+            [float(x) for x in r["embedding"]]
+            for r in batch.filter(F.col("vec_id").isin(3, 450)).orderBy("vec_id").collect()
+        ] + [
+            [float(x) for x in r["embedding"]]
+            for r in old_corpus.filter(F.col("vec_id").isin(3, 120)).orderBy("vec_id").collect()
+        ]
+        want = probes(new_path)
+        assert all(len(got) == 10 for got in want)
+        assert probes(old_path) == want
+
+        def canon(path):
+            return sorted(
+                (r["t"], r["sig"], r["vid"], r["seq"], _rounded(r["v"]))
+                for r in lsh_index_read(spark, path).collect()
+            )
+
+        assert canon(old_path) == canon(new_path)
+        lsh_index_compact(spark, old_path)
+        self._assert_vectors_on_table0_only(spark, old_path, "base")
+        lsh_index_compact(spark, new_path)
+        assert canon(old_path) == canon(new_path)
+        assert probes(old_path) == probes(new_path)
 
 
 class TestIvfIndexUpsert:
@@ -1902,10 +2016,16 @@ class TestIndexTombstones:
             .executedPlan()
             .toString()
         )
-        import re
-
-        m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
-        assert m and ("isin" in m.group(1) or "IN" in m.group(1)), plan[:2000]
+        # every base scan (the ones reading the partition columns, unlike
+        # the tombstone scans) stays partition-pruned: the candidate scan
+        # on its (t, sb) IN-list, the re-rank's vector scan on t = 0
+        filters = [
+            line.split("PartitionFilters: [")[1].split("PushedFilters")[0]
+            for line in plan.splitlines()
+            if "FileScan parquet" in line and "sb#" in line.split("]")[0]
+        ]
+        assert filters and all("t#" in f for f in filters), plan[:2000]
+        assert any("sb#" in f and ("isin" in f or "IN" in f) for f in filters), plan[:2000]
         assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
 
     def test_ivf_delete_probe_and_compact(self, spark, tmp_path):
