@@ -1235,11 +1235,29 @@ def duplicated_spans_oracle_sql(
 # ---------------------------------------------------------------------------
 
 
-#: the signature tiers in commit order: bands before sig, so "did in
-#: sig" implies a complete index entry (the streaming redelivery guard
-#: keys on sig dids)
+#: the signature tiers, partitioned by ``seq`` in the directory names:
+#: a rebuild writes ``seq=0``, each append overwrites its own ``seq=N``
 _DOC_TIERS = ("bands", "sig")
 doc_neardup_index_recover = functools.partial(tiered.recover_joint, tier_names=_DOC_TIERS)
+
+
+def _doc_seqs(spark, path: str) -> dict[str, set[int]]:
+    """Each tier's ``seq`` partitions, read from the directory names
+    with no Spark job. An index written before the tiers were
+    partitioned (files at the tier roots) is refused, never misread; a
+    tier missing after a foreign mid-swap crash is recovered, as a
+    failed read is (``storage.read_with_recovery``)."""
+
+    def listing() -> dict[str, set[int]]:
+        seqs = {
+            t: {int(v) for v in storage.partition_values(spark, f"{path}/{t}", "seq")}
+            for t in _DOC_TIERS
+        }
+        if any(not seqs[t] and storage.exists(spark, f"{path}/{t}__old") for t in _DOC_TIERS):
+            raise FileNotFoundError(f"{path}: a signature tier is mid-swap")
+        return seqs
+
+    return storage.read_with_recovery(spark, path, listing, doc_neardup_index_recover)
 
 
 def doc_neardup_index_write(
@@ -1251,12 +1269,14 @@ def doc_neardup_index_write(
     num_hashes: int = DEFAULT_NUM_HASHES,
     bands: int = DEFAULT_BANDS,
 ) -> None:
-    """Materialize the corpus signatures: ``{path}/sig`` holds
-    (did, sa minhash-array, gset gram-hash set) — everything candidate
-    prefilter + exact-Jaccard verification need, so the TEXT column is
-    never read again; ``{path}/bands`` holds the narrow
+    """Materialize the corpus signatures at ``seq=0``: ``{path}/sig``
+    holds (did, sa minhash-array, gset gram-hash set) — everything
+    candidate prefilter + exact-Jaccard verification need, so the TEXT
+    column is never read again; ``{path}/bands`` holds the narrow
     (did, band, bucket) rows the candidate join scans, sorted by
-    (band, bucket) for row-group pruning. One signing pass total.
+    (band, bucket) for row-group pruning. One signing pass total. Both
+    tiers are replaced whole, so a rebuild also turns an index written
+    before the tiers had a ``seq`` into the partitioned form.
 
     A rebuild is maintenance: it runs under the single-maintainer
     LEASE (a rebuild racing a compact or the streaming ingest refuses
@@ -1265,42 +1285,31 @@ def doc_neardup_index_write(
     tombstones are did-keyed takedown markers that DELIBERATELY
     survive rebuilds (takedown-wins until a compact consumes them; a
     post-compact re-ingest is the intentional resurrect path)."""
-    with storage.maintenance_lease(df.sparkSession, path, "doc_neardup_index_write"):
-        _doc_neardup_index_write_unlocked(df, id_col, text_col, path, k, num_hashes, bands)
-
-
-def _doc_neardup_index_write_unlocked(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    path: str,
-    k: int = DEFAULT_SHINGLE_K,
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    bands: int = DEFAULT_BANDS,
-) -> None:
-    """``doc_neardup_index_write`` body for callers already holding the
-    lease (the streaming ingest's bootstrap)."""
     spark = df.sparkSession
-    doc_neardup_index_recover(spark, path)
-    sig = _sig_frame(df, id_col, text_col, k, num_hashes).localCheckpoint()
-    sig_arr = sig.select(
-        "did",
-        F.array(*[F.col(f"m{s}") for s in range(num_hashes)]).alias("sa"),
-        "gset",
-    )
-    _commit_doc_tiers(spark, path, sig_arr, _band_frame(sig, num_hashes, bands), {})
+    with storage.maintenance_lease(spark, path, "doc_neardup_index_write"):
+        doc_neardup_index_recover(spark, path)
+        sig = _sig_frame(df, id_col, text_col, k, num_hashes).localCheckpoint()
+        sig_arr = sig.select(
+            "did",
+            F.array(*[F.col(f"m{s}") for s in range(num_hashes)]).alias("sa"),
+            "gset",
+            F.lit(0).alias("seq"),
+        )
+        band_rows = _band_frame(sig, num_hashes, bands).withColumn("seq", F.lit(0))
+        _commit_doc_tiers(spark, path, sig_arr, band_rows, {})
 
 
 def _commit_doc_tiers(spark, path: str, sig: DataFrame, bands: DataFrame, consumed: dict) -> None:
-    """Stage both tiers, then publish them as one transaction
-    (``storage.commit_tiers``): readers see the old generation or the
-    new one, never new bands over an old sig."""
-    sig.repartitionByRange(8, "did").sortWithinPartitions("did").write.mode(
+    """Stage both tiers, partitioned by their ``seq`` column, then
+    publish them as one transaction (``storage.commit_tiers``): readers
+    see the old generation or the new one, never new bands over an old
+    sig."""
+    sig.repartitionByRange(8, "seq", "did").sortWithinPartitions("seq", "did").write.mode(
         "overwrite"
-    ).parquet(f"{path}/sig__staged")
-    bands.sortWithinPartitions("band", "bucket").write.mode("overwrite").parquet(
-        f"{path}/bands__staged"
-    )
+    ).partitionBy("seq").parquet(f"{path}/sig__staged")
+    bands.sortWithinPartitions("seq", "band", "bucket").write.mode("overwrite").partitionBy(
+        "seq"
+    ).parquet(f"{path}/bands__staged")
     storage.commit_tiers(spark, path, tiered.REBUILD_MARKER, _DOC_TIERS, consumed)
 
 
@@ -1313,34 +1322,42 @@ def doc_neardup_index_append(
     num_hashes: int = DEFAULT_NUM_HASHES,
     bands: int = DEFAULT_BANDS,
     threshold: float = 0.7,
+    seq: int | None = None,
 ) -> DataFrame:
-    """Fold a batch of NEW documents into the persisted index and
-    return every near-dup pair the batch introduces — (batch × corpus)
-    and (batch × batch), exact-Jaccard verified, (id_a < id_b)
-    normalized. Corpus × corpus pairs are unchanged by construction, so
-    incremental-append pair sets sum to exactly the one-shot
-    ``minhash_lsh_pairs`` of the union (property-tested).
+    """Fold a batch of NEW documents into the persisted index at
+    ``seq`` and return every near-dup pair the batch introduces —
+    (batch × corpus) and (batch × batch), exact-Jaccard verified,
+    (id_a < id_b) normalized. Corpus × corpus pairs are unchanged by
+    construction, so incremental-append pair sets sum to exactly the
+    one-shot ``minhash_lsh_pairs`` of the union (property-tested).
+
+    The corpus is the index rows with a smaller ``seq`` (partition
+    pruning), and the batch's rows overwrite ``bands/seq=N`` and
+    ``sig/seq=N``: an append re-run at the same ``seq`` (a redelivered
+    stream batch) recomputes the same pairs and replaces its own rows,
+    and the returned lazy frame stays valid after the writes. ``seq``
+    defaults to one more than the largest on disk. Precondition: the
+    batch's ids are in no other ``seq``, and an existing ``seq=N``
+    holds only this batch's ids (its other rows are overwritten).
 
     Scale shape: only the BATCH is shingled (O(batch) text read); its
     band rows are BROADCAST against the persisted bands scan, so the
     corpus side never shuffles — and the corpus bytes touched are the
     narrow (did, band, bucket) rows plus sig/gset rows of candidate
-    dids only (semi-join pruned), never the corpus text. Precondition:
-    batch ids are new (the standard ingest contract; re-ingest goes
-    through a rebuild, as with the vector-index compaction cadence).
+    dids only (semi-join pruned), never the corpus text.
     """
     spark = batch.sparkSession
     # every entry point recovers first: mid-swap rollback, and a
     # crashed rebuild or compact rolled forward
     doc_neardup_index_recover(spark, path)
+    seqs = _doc_seqs(spark, path)
+    if seq is None:
+        seq = 1 + max(seqs["bands"] | seqs["sig"], default=-1)
     min_matches = _min_matches(threshold, num_hashes)
 
     bsig = _sig_frame(batch, id_col, text_col, k, num_hashes).localCheckpoint()
-    # bband / bsig_arr are cheap projections OF the bsig checkpoint —
-    # re-deriving them per consumer re-reads the checkpointed RDD, never
-    # the signer or the (growing) index files, so their own eager
-    # checkpoints bought nothing but two synchronous jobs per append
-    # (r13; the bench row is ~12 sequential job barriers at sf0.1).
+    # bband / bsig_arr are cheap projections OF the bsig checkpoint:
+    # each consumer re-reads the checkpointed RDD, never the signer
     bband = _band_frame(bsig, num_hashes, bands)
     bsig_arr = bsig.select(
         "did",
@@ -1348,13 +1365,16 @@ def doc_neardup_index_append(
         "gset",
     )
 
-    old_bands = tiered.read_tier(spark, path, "bands", doc_neardup_index_recover)
-    tomb = doc_neardup_tombstones(spark, path)
-    if tomb is not None:
-        # tombstoned documents stop producing candidates — the delete
-        # path's read-side contract (their band rows are still on disk
-        # until doc_neardup_index_compact folds them out)
-        old_bands = old_bands.join(F.broadcast(tomb), "did", "left_anti")
+    def corpus(tier: str, empty: DataFrame) -> DataFrame:
+        if not any(s < seq for s in seqs[tier]):
+            return empty
+        return tiered.read_tier(spark, path, tier, doc_neardup_index_recover).filter(
+            F.col("seq") < seq
+        )
+
+    # tombstoned documents stop producing candidates — the delete path's
+    # read-side contract (their band rows stay on disk until a compact)
+    old_bands = _minus_tombstones(corpus("bands", bband.limit(0)), path)
     # batch bands broadcast → the corpus bands scan stays map-side
     cross = (
         old_bands.join(
@@ -1384,44 +1404,35 @@ def doc_neardup_index_append(
     cand = cross.unionByName(self_pairs).dropDuplicates(["id_a", "id_b"])
 
     verified = _verify_candidate_pairs(
-        spark, path, cand, bsig_arr, min_matches, threshold
+        corpus("sig", bsig_arr.limit(0)), cand, bsig_arr, min_matches, threshold
     )
-    # Append order is load-bearing for crash recovery (review r6):
-    # bands FIRST, sig LAST, so "did present in {path}/sig" implies its
-    # append completed — the redelivery guard in
-    # streaming/ann_ingest.py keys on sig dids. A crash between the two
-    # leaves orphan band rows, which are harmless: bands feed candidate
-    # generation only, and candidates are dropDuplicates-ed.
-    bband.sortWithinPartitions("band", "bucket").write.mode("append").parquet(
-        f"{path}/bands"
+    bband.sortWithinPartitions("band", "bucket").write.mode("overwrite").parquet(
+        f"{path}/bands/seq={seq}"
     )
-    bsig_arr.write.mode("append").parquet(f"{path}/sig")
+    bsig_arr.write.mode("overwrite").parquet(f"{path}/sig/seq={seq}")
     return verified
 
 
 def _verify_candidate_pairs(
-    spark,
-    path: str,
+    sig: DataFrame,
     cand: DataFrame,
     extra: DataFrame | None,
     min_matches: int,
     threshold: float,
 ) -> DataFrame:
     """Two-stage verification of candidate (id_a, id_b) pairs against
-    the persisted signature index, same structure as the one-shot form —
-    bucket collisions on repetitive corpora yield tens of thousands of
-    candidates for a 10% batch, and fetching their gram sets directly
-    would stream the index's heavy bytes. Stage 1 joins only the narrow
-    ``sa`` arrays (column-pruned sig scan, 64 longs/row) and applies the
-    integer match-count prefilter; stage 2 fetches gram sets for the
-    surviving pairs ONLY, via a bounded IN pushdown onto the did-sorted
-    sig files (row-group pruned). ``extra`` carries (did, sa, gset)
-    rows not yet in the index (an arriving batch); None when every
-    candidate id is already indexed. Returns the verified pairs,
-    localCheckpointed (so the caller may grow the index files without
-    the plan re-reading them)."""
-    old_sig = tiered.read_tier(spark, path, "sig", doc_neardup_index_recover)
-    all_sa = old_sig.select("did", "sa")
+    the signature rows ``sig`` (did, sa, gset) of the persisted index,
+    same structure as the one-shot form — bucket collisions on
+    repetitive corpora yield tens of thousands of candidates for a 10%
+    batch, and fetching their gram sets directly would stream the
+    index's heavy bytes. Stage 1 joins only the narrow ``sa`` arrays
+    (column-pruned sig scan, 64 longs/row) and applies the integer
+    match-count prefilter; stage 2 fetches gram sets for the surviving
+    pairs ONLY, via a bounded IN pushdown onto the did-sorted sig files
+    (row-group pruned). ``extra`` carries (did, sa, gset) rows not yet
+    in the index (an arriving batch); None when every candidate id is
+    already indexed."""
+    all_sa = sig.select("did", "sa")
     if extra is not None:
         all_sa = all_sa.unionByName(extra.select("did", "sa"))
     matches = F.aggregate(
@@ -1448,21 +1459,14 @@ def _verify_candidate_pairs(
     # Gram fetch for surviving ids only. Normal corpora: the survivor-id
     # set is small (batch size x near-dup rate), so an IN list pushed
     # into the did-sorted sig files skips whole row groups of heavy gset
-    # bytes. The driver materialization is bounded BEFORE collecting
-    # (count first, cap 200k); an adversarial all-duplicates corpus
-    # falls back to a distributed semi-join — same semantics, no
-    # candidate-dependent collect on any path (VERDICT r3 #4).
+    # bytes. One bounded collect (limit(cap+1)) decides; over the cap,
+    # an adversarial all-duplicates corpus, the ids stay distributed
+    # in a semi-join recomputed from the survivors checkpoint.
     surv_id_df = (
         survivors.select(F.explode(F.array("id_a", "id_b")).alias("did"))
         .dropDuplicates()
     )
-    gsets = tiered.read_tier(spark, path, "sig", doc_neardup_index_recover).select(
-        "did", "gset"
-    )
-    # one bounded collect instead of count-then-collect (two jobs →
-    # one, r13): limit(cap+1) returns every row when under the cap, and
-    # the overflow fallback recomputes the id set from the survivors
-    # checkpoint (the rare adversarial all-duplicates path)
+    gsets = sig.select("did", "gset")
     surv_head = surv_id_df.limit(200_001).collect()
     if len(surv_head) <= 200_000:
         surv_ids = [r[0] for r in surv_head]
@@ -1486,7 +1490,6 @@ def _verify_candidate_pairs(
             jaccard_sim(F.col("gs_a"), F.col("gs_b")).alias("jaccard"),
         )
         .filter(F.col("jaccard") >= threshold)
-        .localCheckpoint()  # pin before the index files grow
     )
 
 
@@ -1500,18 +1503,19 @@ def doc_neardup_index_pairs_for_ids(
     """Every verified near-dup pair touching the given ALREADY-INDEXED
     ids, recomputed from the index alone (no document text needed):
     their band rows broadcast against the bands scan for candidates,
-    then the shared two-stage verification. This is the recovery path
-    for a crashed streaming ingest attempt — the batch's index append
-    completed (its dids are in ``{path}/sig``) but the pairs write did
-    not (review r6); see streaming/ann_ingest.py."""
+    then the shared two-stage verification. This is the index-only
+    pair query: what the index, minus its tombstones, pairs a set of
+    indexed ids with, at any ``seq``."""
     # roll back a crashed compact's swap / forward a crashed rebuild's
     # joint publish first (review r7, ADVICE r8)
     doc_neardup_index_recover(spark, path)
+    if not _doc_seqs(spark, path)["bands"]:
+        # a compact that folded every doc out leaves no partition to read
+        return spark.createDataFrame([], "id_a long, id_b long, jaccard double")
     min_matches = _min_matches(threshold, num_hashes)
-    bands = tiered.read_tier(spark, path, "bands", doc_neardup_index_recover)
-    tomb = doc_neardup_tombstones(spark, path)
-    if tomb is not None:
-        bands = bands.join(F.broadcast(tomb), "did", "left_anti")
+    bands = _minus_tombstones(
+        tiered.read_tier(spark, path, "bands", doc_neardup_index_recover), path
+    )
     mine = bands.join(
         F.broadcast(ids.select(F.col(ids.columns[0]).alias("did"))), "did"
     ).select(F.col("did").alias("bdid"), "band", "bucket")
@@ -1524,9 +1528,8 @@ def doc_neardup_index_pairs_for_ids(
         )
         .dropDuplicates(["id_a", "id_b"])
     )
-    return _verify_candidate_pairs(
-        spark, path, cand, None, min_matches, threshold
-    )
+    sig = tiered.read_tier(spark, path, "sig", doc_neardup_index_recover)
+    return _verify_candidate_pairs(sig, cand, None, min_matches, threshold)
 
 
 def doc_neardup_tombstones(spark, path: str):
@@ -1539,6 +1542,12 @@ def doc_neardup_tombstones(spark, path: str):
     return spark.read.parquet(tomb_path).select("did").dropDuplicates()
 
 
+def _minus_tombstones(df: DataFrame, path: str, col: str = "did") -> DataFrame:
+    """``df`` without the rows whose ``col`` is tombstoned in the index."""
+    tomb = doc_neardup_tombstones(df.sparkSession, path)
+    return df if tomb is None else df.join(F.broadcast(tomb), df[col] == tomb["did"], "left_anti")
+
+
 def doc_neardup_index_delete(spark, path: str, doc_ids) -> None:
     """Tombstone delete for the document near-dup signature index — the
     takedown path (a removed/retracted document must stop producing
@@ -1549,33 +1558,33 @@ def doc_neardup_index_delete(spark, path: str, doc_ids) -> None:
     anti-filter; ``doc_neardup_index_compact`` folds the deletes in
     physically and drops the marker dir.
 
-    Unlike the seq-versioned vector/text tombstones, sig rows carry no
-    version: re-ingest of a deleted id goes through a rebuild — the
-    index's standing re-ingest contract (``doc_neardup_index_append``
-    precondition) — so markers are plain did keys at seq 0, no LSM
-    resurrection semantics. ``doc_ids`` is a list/iterable or a
-    DataFrame of ids (distributed marker write, no driver collect)."""
+    Unlike the vector/text tombstones, these do not compete with row
+    versions: a marker is a plain did key (at seq 0) that hides the id
+    at every ``seq`` and keeps the stream from ingesting it, until a
+    compact consumes it; only a re-ingest after that compact brings the
+    id back. ``doc_ids`` is a list/iterable or a DataFrame of ids
+    (distributed marker write, no driver collect)."""
     tiered.delete(spark, path, "did", doc_ids, seq=0)
 
 
 def doc_neardup_index_compact(spark, path: str) -> None:
     """Fold tombstones physically: rewrite ``sig`` and ``bands`` minus
-    the tombstoned dids and publish both through the same joint commit
-    as a rebuild, which also drops exactly the marker FILES the rewrite
-    consumed — a delete landing while the O(corpus) rewrite runs
-    survives into the next compact. No tombstones (or an index that was
-    never written): no-op. After a compact, re-ingesting a previously
-    deleted id resurrects it — BEFORE a compact, markers persist across
-    rebuilds, so a takedown survives index maintenance.
+    the tombstoned dids, every row keeping its ``seq``, and publish
+    both through the same joint commit as a rebuild, which also drops
+    exactly the marker FILES the rewrite consumed — a delete landing
+    while the O(corpus) rewrite runs survives into the next compact. No
+    tombstones (or an index that was never written): no-op. After a
+    compact, re-ingesting a previously deleted id resurrects it —
+    BEFORE a compact, markers persist across rebuilds, so a takedown
+    survives index maintenance.
 
-    Single writer, lease-enforced: a compact racing an ingest batch that
-    crashed between its sig write and its done-marker could fold the
-    batch's dids out of sig and make the redelivery guard re-classify
-    them as fresh; the lease turns that race into a loud
-    ``MaintenanceLeaseHeld``."""
+    Single writer, lease-enforced: the compact swaps both tier
+    directories, so an append racing it would write its ``seq=N`` into
+    the directory the swap retires; the lease turns that race into a
+    loud ``MaintenanceLeaseHeld``."""
     with storage.maintenance_lease(spark, path, "doc_neardup_index_compact"):
         doc_neardup_index_recover(spark, path)
-        if not storage.exists(spark, f"{path}/sig"):
+        if not _doc_seqs(spark, path)["sig"]:
             return  # delete-before-build: markers stay until an index exists
         consumed = storage.snapshot_files(spark, f"{path}/tombstones")
         if not consumed:
@@ -1591,6 +1600,8 @@ def doc_neardup_index_compact(spark, path: str) -> None:
                 F.broadcast(tomb), "did", "left_anti"
             )
 
+        # range on (seq, did): a few files per seq, not one per input split
+        bands = live("bands").repartitionByRange(8, "seq", "did")
         _commit_doc_tiers(
-            spark, path, live("sig"), live("bands"), {f"{path}/tombstones": consumed}
+            spark, path, live("sig"), bands, {f"{path}/tombstones": consumed}
         )

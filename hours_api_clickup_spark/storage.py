@@ -11,7 +11,8 @@ one place to monkeypatch them in tests:
   (fact refresh and reindex, the dimension loads, the streaming refresh
   and the rollup state). A merge-on-read tier is consumed with
   ``snapshot_files`` before a fold and ``drop_consumed`` after it, so a
-  file landing mid-fold survives.
+  file landing mid-fold survives. ``partition_values`` lists a
+  partitioned table's directories without a Spark job.
 - **Maintenance lease**: ``maintenance_lease`` is the single-maintainer
   marker file (``__maintenance_lease``) with a heartbeat, an exclusive
   claim, a claim token, dead-pid takeover and a fenced release. Index
@@ -96,6 +97,31 @@ def snapshot_files(spark, dir_path: str) -> list[str]:
         for st in fs.listStatus(p)
         if st.isFile() and not st.getPath().getName().startswith("_")
     ]
+
+
+def partition_values(spark, dir_path: str, col: str) -> list[str]:
+    """The values of ``dir_path``'s ``{col}=value`` subdirectories;
+    ``[]`` when it is absent. Data files at its root are refused: Spark
+    reads a directory holding root files and partitions as one or the
+    other and drops the rest without an error."""
+    fs, p = filesystem(spark, dir_path)
+    if not fs.exists(p):
+        return []
+    values, stray = [], []
+    for st in fs.listStatus(p):
+        name = st.getPath().getName()
+        if st.isDirectory() and name.startswith(f"{col}="):
+            values.append(name[len(col) + 1 :])
+        elif st.isFile() and not name.startswith(("_", ".")):
+            stray.append(name)
+    if stray:
+        raise ValueError(
+            f"{dir_path} holds {len(stray)} data file(s) at its root, outside "
+            f"its {col}= partitions (e.g. {stray[0]}): it was written before "
+            f"the table was partitioned by {col}. Rebuild it, or move those "
+            f"files into {dir_path}/{col}=0/"
+        )
+    return values
 
 
 def drop_consumed(spark, dir_path: str, files: list[str]) -> None:

@@ -1,34 +1,45 @@
-"""Continuous vector ingestion into the persisted ANN indexes.
-
-The one incremental path of the tiered indexes (``lsh_index_append``'s
-O(batch) log, folded by ``lsh_index_compact``; ``lsh_index_write`` is
-the full rebuild) gets its streaming face here: a vector stream drains
-through ``foreachBatch`` and each micro-batch is signed (one O(batch)
-GEMM) and committed as ONE sorted log file with ``seq = batch_id``.
+"""Continuous ingestion into the persisted indexes: a stream drains
+through ``foreachBatch`` (``_leased_ingest``), and each micro-batch is
+one O(batch) append, at a ``seq`` derived from its ``batch_id``, under
+the index's maintenance lease.
 
 Exactly-once without a transaction log: foreachBatch is at-least-once —
-a crash between the log append and the checkpoint commit re-delivers
-the batch. Re-delivery re-appends the SAME rows at the SAME ``seq``
-(``batch_id`` is stable across restarts from the streaming checkpoint),
-and the index's merge-on-read resolution (max-seq per vid, duplicate
-(vid, t, seq) rows collapsed by ``lsh_index_compact`` /
-the probes' dropDuplicates) makes the duplicate file invisible — the
-same idempotence-by-key argument ``streaming_continuous_rollup`` makes
-for rollup state, here made by the storage format itself.
+a crash between the append and the checkpoint commit re-delivers the
+batch with the same ``batch_id`` (stable across restarts from the
+checkpoint) and the same rows.
+
+- LSH, IVF, IVFPQ and text: the redelivery re-appends the same rows at
+  the same ``seq``, and the index's max-seq merge-on-read (duplicate
+  rows collapsed by compaction and the probes' dropDuplicates) makes the
+  duplicate file invisible.
+- Doc near-dup: a batch's outputs overwrite its own ``seq=N``
+  directories, so the redelivery replaces them. One checkpoint drains
+  into an index: a second checkpoint reuses the first one's batch
+  numbers, and its batches fail loudly instead of overwriting.
 
 At 100 TB this is the ingest topology: streams append O(batch) files
-continuously; ``lsh_index_compact`` folds the log on a scheduled
-cadence; probes stay partition-pruned against ``base`` plus a bounded
-log scan throughout (no index downtime, no read-modify-write on the
-hot path).
+continuously; the compactions fold the logs on a scheduled cadence;
+probes stay partition-pruned against ``base`` plus a bounded log scan
+throughout (no index downtime, no read-modify-write on the hot path).
 """
 
 from __future__ import annotations
+
+import functools
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from hours_api_clickup_spark import storage
+from hours_api_clickup_spark.datapipe.dedup import (
+    DEFAULT_NUM_HASHES,
+    DEFAULT_SHINGLE_K,
+    _doc_seqs,
+    _minus_tombstones,
+    _sig_frame,
+    doc_neardup_index_append,
+    doc_neardup_index_recover,
+)
 from hours_api_clickup_spark.datapipe.similarity import (
     DEFAULT_PLANES,
     DEFAULT_TABLES,
@@ -171,201 +182,79 @@ def streaming_doc_neardup_ingest(
 ):
     """Continuous near-duplicate detection at document-ingest time: each
     micro-batch is shingled once (O(batch)), checked against the
-    persisted signature index (corpus text never re-read, corpus side
-    never shuffles — batch band rows broadcast), the new verified pairs
-    appended to ``pairs_path``, and the batch folded into the index.
+    persisted signature index (corpus text never re-read) and folded
+    into it at ``seq = batch_id + 1`` (``seq=0`` is the rebuilt corpus);
+    its verified pairs go to ``{pairs_path}/seq=N``, so the pair table
+    always equals the one-shot ``minhash_lsh_pairs`` over everything
+    ingested so far.
 
-    The running pair table therefore always equals the one-shot
-    ``minhash_lsh_pairs`` over everything ingested so far (the
-    incremental-≡-batch property of ``doc_neardup_index_append``,
-    property-tested), which makes downstream cluster resolution
-    (``datapipe/clusters``) runnable at any point without a corpus
-    rescan. Ordering note: micro-batches commit serially within the
-    query, which the fold requires — this is the single-writer contract
-    every index maintenance path here shares.
+    Redelivery: a batch's index rows and pairs depend only on its own
+    rows and the smaller seqs, and overwrite its own ``seq=N``
+    directories, so a redelivered batch replaces them; the pairs table
+    is never read. ONE checkpoint drains into an index: a batch whose
+    ``seq=N`` holds a did it does not carry fails loudly (another stream
+    or checkpoint is using its batch numbers). The batch then drops
+    tombstoned dids (takedown wins) and dids indexed at another ``seq``
+    with the same text (their pairs came with their own batch); changed
+    text fails the batch."""
 
-    First batch bootstraps the index (no pairs — a corpus of one batch
-    has only its self-pairs, which append computes from batch 2 on; the
-    bootstrap's internal pairs are emitted too, via an append against
-    the empty-initialized index).
-
-    Redelivery safety (review r6 — foreachBatch is at-least-once, and
-    the naive re-append would corrupt BOTH artifacts: the re-delivered
-    batch's band rows join their own first-delivery copies into
-    jaccard-1.0 self-pairs, and the sig table holds duplicate rows
-    forever): each batch commits a done-marker file LAST, so a marked
-    batch skips entirely; an unmarked redelivery anti-joins the batch
-    against the sig table's dids (the append writes sig last, so a did
-    in sig has a COMPLETE append) — fresh dids go through the normal
-    append, while dids a crashed attempt already appended get their
-    pairs recomputed from the index alone
-    (``doc_neardup_index_pairs_for_ids``); finally the pair rows are
-    anti-joined against the existing pair table so a crash after the
-    pairs write but before the marker cannot double-write pairs."""
-    from hours_api_clickup_spark.datapipe.dedup import (
-        _doc_neardup_index_write_unlocked,
-        doc_neardup_index_append,
-        doc_neardup_index_pairs_for_ids,
-    )
-
-    def _apply_locked(batch_df: DataFrame, batch_id: int) -> None:
+    def apply(batch_df: DataFrame, seq: int) -> None:
         spark = batch_df.sparkSession
-        jvm = spark._jvm
-        hconf = spark._jsc.hadoopConfiguration()
-        marker = jvm.org.apache.hadoop.fs.Path(
-            f"{index_path}/_applied/batch={int(batch_id)}"
-        )
-        fs = marker.getFileSystem(hconf)
-        if fs.exists(marker):
-            return  # fully applied by a previous attempt
-        # roll back a crashed compact's half-finished swap — and roll a
-        # crashed rebuild's joint sig+bands publish forward — BEFORE the
-        # existence probe: mid-swap, sig is briefly absent and a bare
-        # exists() would misread that as first-run — the bootstrap
-        # overwrite below would then silently replace the whole corpus
-        # index with an empty one (review r7, ADVICE r8)
-        from hours_api_clickup_spark.datapipe.dedup import (
-            doc_neardup_index_recover,
-            doc_neardup_tombstones,
-        )
-
+        # refuse a pairs table without seq partitions before any write
+        storage.partition_values(spark, pairs_path, "seq")
         doc_neardup_index_recover(spark, index_path)
-        # a takedown issued between this batch's publication and its
-        # arrival must win: drop tombstoned dids from the batch while
-        # the markers live (post-compact, a re-ingest is an intentional
-        # resurrection — the documented lifecycle)
-        tomb = doc_neardup_tombstones(spark, index_path)
-        if tomb is not None:
-            batch_df = batch_df.join(
-                F.broadcast(tomb),
-                batch_df[id_col] == tomb["did"],
-                "left_anti",
-            )
-            if not batch_df.head(1):
-                fs.mkdirs(marker)  # everything tombstoned: batch done
-                return
-        p = jvm.org.apache.hadoop.fs.Path(f"{index_path}/sig")
-        if not fs.exists(p):
-            # bootstrap with an EMPTY index so the first batch's own
-            # near-dup pairs are emitted by the same append path —
-            # UNLOCKED core: this batch already holds the lease
-            empty = batch_df.filter(F.lit(False))
-            _doc_neardup_index_write_unlocked(
-                empty, id_col, text_col, index_path
-            )
-        indexed = spark.read.parquet(f"{index_path}/sig").select("did")
-        bids = batch_df.select(F.col(id_col).alias("did")).dropDuplicates()
-        # ONE indexed-did scan per batch: stale is pinned once and
-        # fresh derives from it (the old form computed the identical
-        # semi-join twice — a redundant O(index) scan every batch;
-        # review r8)
-        stale = bids.join(indexed, "did", "semi").localCheckpoint()
-        has_stale = bool(stale.head(1))
-        fresh = batch_df.join(
-            F.broadcast(stale),
-            batch_df[id_col] == stale["did"],
-            "left_anti",
-        )
-        if has_stale:
-            # Redelivery or UPDATE? A crash redelivery carries the SAME
-            # text, so the batch's recomputed signature equals the
-            # stored one; a did arriving with CHANGED text is an update
-            # this append-only path cannot fold — the old signatures
-            # would silently keep serving and the pair table would
-            # diverge from the corpus (review r8). Distinguish the two
-            # exactly and fail loudly on updates, naming the
-            # remediation. Rare path: runs only when stale is
-            # non-empty, over the stale slice alone.
-            from hours_api_clickup_spark.datapipe.dedup import (
-                DEFAULT_NUM_HASHES,
-                DEFAULT_SHINGLE_K,
-                _sig_frame,
-            )
-
-            stale_docs = batch_df.join(
-                F.broadcast(stale),
-                batch_df[id_col] == stale["did"],
-                "left_semi",
-            )
-            resigned = _sig_frame(
-                stale_docs, id_col, text_col,
-                DEFAULT_SHINGLE_K, DEFAULT_NUM_HASHES,
-            ).select(
-                "did",
-                F.array(
-                    *[F.col(f"m{s}") for s in range(DEFAULT_NUM_HASHES)]
-                ).alias("sa_new"),
-            )
-            stored = spark.read.parquet(f"{index_path}/sig").select(
-                "did", "sa"
-            )
-            # LEFT join from the stale id set, not an inner join on the
-            # recomputed signatures: _sig_frame drops docs shorter than
-            # the shingle size, so an update to sub-k/empty text has NO
-            # resigned row — an inner join silently passed exactly the
-            # update it was built to catch (review r8)
-            n_changed = (
-                stale.join(resigned, "did", "left")
-                .join(stored, "did", "left")
-                .filter(
-                    F.col("sa_new").isNull()
-                    | (F.col("sa_new") != F.col("sa"))
-                )
-                .count()
-            )
-            if n_changed:
+        seqs = _doc_seqs(spark, index_path)
+        held = [
+            spark.read.parquet(*files).select("did")
+            for t in seqs
+            if seq in seqs[t]
+            and (files := storage.snapshot_files(spark, f"{index_path}/{t}/seq={seq}"))
+        ]
+        if held:
+            bids = batch_df.select(F.col(id_col).alias("did"))
+            foreign = functools.reduce(DataFrame.unionByName, held).join(bids, "did", "left_anti")
+            stray = [r.did for r in foreign.limit(5).collect()]
+            if stray:
                 raise ValueError(
-                    f"batch {int(batch_id)} re-ingests {n_changed} "
-                    "already-indexed doc id(s) with CHANGED text — this "
-                    "append-only index cannot fold updates: issue "
-                    "doc_neardup_index_delete for those ids, compact, "
-                    "then re-ingest (the takedown lifecycle), or rebuild"
+                    f"{index_path} seq={seq} holds doc id(s) {stray} that batch "
+                    f"{seq - 1} does not carry: another stream or checkpoint is "
+                    "writing this index's batch numbers"
                 )
-        parts = []
-        if fresh.head(1):
-            parts.append(
-                doc_neardup_index_append(
-                    fresh, index_path, id_col, text_col, threshold=threshold
-                )
+        batch_df = _minus_tombstones(batch_df, index_path, id_col)
+        if seqs["sig"] - {seq}:
+            stored = spark.read.parquet(f"{index_path}/sig").filter(F.col("seq") != seq)
+            known = batch_df.select(F.col(id_col).alias("did")).join(
+                stored.select("did"), "did", "semi"
             )
-        if has_stale:  # crashed attempt appended these already
-            parts.append(
-                doc_neardup_index_pairs_for_ids(
-                    spark, index_path, stale, threshold=threshold
+            if known.head(1):
+                # a redelivered doc has the same text, so the same signature;
+                # LEFT joins from ``known``: _sig_frame drops docs shorter
+                # than the shingle size, so a sub-k update has no new row
+                mine = batch_df.join(known, batch_df[id_col] == known["did"], "left_semi")
+                resigned = _sig_frame(mine, id_col, text_col, DEFAULT_SHINGLE_K, DEFAULT_NUM_HASHES)
+                sa_new = F.array(*[F.col(f"m{s}") for s in range(DEFAULT_NUM_HASHES)])
+                n_changed = (
+                    known.join(resigned.select("did", sa_new.alias("sa_new")), "did", "left")
+                    .join(stored.select("did", "sa"), "did", "left")
+                    .filter(F.col("sa_new").isNull() | (F.col("sa_new") != F.col("sa")))
+                    .count()
                 )
-            )
-        if parts:
-            pairs = parts[0]
-            for extra in parts[1:]:
-                pairs = pairs.unionByName(extra)
-            pairs = pairs.dropDuplicates(["id_a", "id_b"])
-            # Double-write of pair rows is only possible on the RECOVERY
-            # path: a crash after the pairs write but before the marker
-            # necessarily left this batch's dids in sig (sig commits
-            # before pairs), so stale is non-empty on the redelivery.
-            # Steady-state batches (stale empty) therefore skip this
-            # anti-join — the old unconditional form scanned the ENTIRE
-            # accumulated pairs table per batch, an O(pairs-table) cost
-            # that grew without bound over the stream's life (advice r6).
-            # derive the FS from the PAIRS path: index and pairs may
-            # live on different filesystems (s3a index, hdfs pairs),
-            # and the index-derived fs would throw Wrong FS on the
-            # recovery path (review r8)
-            pairs_p = jvm.org.apache.hadoop.fs.Path(pairs_path)
-            pairs_fs = pairs_p.getFileSystem(hconf)
-            if has_stale and pairs_fs.exists(pairs_p):
-                prev = spark.read.parquet(pairs_path).select("id_a", "id_b")
-                pairs = pairs.join(prev, ["id_a", "id_b"], "left_anti")
-            pairs.write.mode("append").parquet(pairs_path)
-        fs.mkdirs(marker)  # commit point: batch now invisible to retries
+                if n_changed:
+                    raise ValueError(
+                        f"batch {seq - 1} re-ingests {n_changed} already-indexed doc "
+                        "id(s) with CHANGED text — this append-only index cannot fold "
+                        "updates: issue doc_neardup_index_delete for those ids, "
+                        "compact, then re-ingest (the takedown lifecycle), or rebuild"
+                    )
+                batch_df = batch_df.join(known, batch_df[id_col] == known["did"], "left_anti")
+        if batch_df.head(1):
+            doc_neardup_index_append(
+                batch_df, index_path, id_col, text_col, threshold=threshold, seq=seq
+            ).write.mode("overwrite").parquet(f"{pairs_path}/seq={seq}")
 
-    # the lease is held across the whole batch mutation (VERDICT r8
-    # #2): the exact race it exists for is a compact folding sig
-    # between this batch's append and its done-marker — re-classifying
-    # its dids as fresh on redelivery
     return _leased_ingest(
         doc_stream, index_path, checkpoint_dir, "streaming_doc_neardup",
-        lock_wait_s, _apply_locked,
+        lock_wait_s, lambda batch_df, batch_id: apply(batch_df, batch_id + 1),
     )
 
 

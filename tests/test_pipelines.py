@@ -940,12 +940,10 @@ def test_doc_neardup_pairs_for_ids_matches_one_shot_subset(spark, tmp_path):
 
 def test_streaming_doc_neardup_full_redelivery_is_noop(spark, tmp_path):
     """Review r6: foreachBatch is at-least-once — replaying the ENTIRE
-    stream against the already-populated index (fresh checkpoint, done
-    markers wiped, so every batch takes the redelivery path) must leave
-    the sig table and the pair table bit-identical: no duplicate sig
-    rows, no jaccard-1.0 self-pairs, no double-written pairs."""
-    import shutil
-
+    stream against the already-populated index (a fresh checkpoint
+    redelivers every batch under its own batch number) must leave the
+    sig table and the pair table bit-identical: no duplicate sig rows,
+    no jaccard-1.0 self-pairs, no double-written pairs."""
     from pyspark.sql import functions as F
 
     from hours_api_clickup_spark.datapipe.dedup import minhash_lsh_pairs
@@ -981,29 +979,188 @@ def test_streaming_doc_neardup_full_redelivery_is_noop(spark, tmp_path):
     sig1 = sorted(
         (r.did,) for r in spark.read.parquet(f"{idx}/sig").select("did").collect()
     )
-    pairs1 = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in spark.read.parquet(pairs_path).collect()
-    }
-    full = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in minhash_lsh_pairs(docs, "doc_id", "text").collect()
-    }
-    assert pairs1 == full
+    pairs1 = _pair_rows(spark.read.parquet(pairs_path))
+    assert pairs1 == _pair_rows(minhash_lsh_pairs(docs, "doc_id", "text"))
 
-    # full redelivery: new checkpoint AND markers wiped -> every batch
-    # re-runs through the anti-join + recovery path
-    shutil.rmtree(f"{idx}/_applied")
+    # full redelivery: the new checkpoint replays every batch
     run("ckpt2")
     sig2 = sorted(
         (r.did,) for r in spark.read.parquet(f"{idx}/sig").select("did").collect()
     )
-    pairs2 = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in spark.read.parquet(pairs_path).collect()
-    }
+    pairs2 = _pair_rows(spark.read.parquet(pairs_path))
     assert sig2 == sig1  # no duplicate sig rows
     assert pairs2 == pairs1  # no self-pairs, no double-writes
+
+
+def _neardup_stream(spark, stage, idx, pairs_path, ckpt, schema):
+    """Drain ``stage`` through the streaming near-dup ingest, one file
+    per micro-batch, and wait for it."""
+    from hours_api_clickup_spark.streaming.ann_ingest import (
+        streaming_doc_neardup_ingest,
+    )
+
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(stage)
+    )
+    streaming_doc_neardup_ingest(stream, idx, pairs_path, ckpt).awaitTermination(300)
+
+
+def _pair_rows(df):
+    """Pair rows as a sorted list, not a dict: a double-written pair shows."""
+    return sorted(tuple(r) for r in df.select("id_a", "id_b", "jaccard").collect())
+
+
+def _tree(root):
+    """Every file under ``root`` with its size: a write shows as a change."""
+    import os
+
+    return sorted(
+        (os.path.relpath(os.path.join(d, f), root), os.path.getsize(os.path.join(d, f)))
+        for d, _, files in os.walk(root)
+        for f in files
+    )
+
+
+def test_streaming_doc_neardup_second_checkpoint_collides(spark, tmp_path):
+    """One checkpoint drains into an index. A second checkpoint's batch
+    0 reuses the first one's ``seq=1``: it must fail loudly and
+    overwrite nothing, not be skipped (new docs silently unindexed) or
+    replace the first stream's rows."""
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+
+    from hours_api_clickup_spark.plans.registry import load_table
+    from tests.conftest import SF_DIR
+
+    docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
+    idx, pairs_path = str(tmp_path / "idx"), str(tmp_path / "pairs")
+    first, second = str(tmp_path / "stage1"), str(tmp_path / "stage2")
+    docs.filter(F.col("doc_id") < 50).coalesce(1).write.parquet(first)
+    docs.filter(F.col("doc_id").between(100, 149)).coalesce(1).write.parquet(second)
+    _neardup_stream(spark, first, idx, pairs_path, str(tmp_path / "ckpt1"), docs.schema)
+    before = (_tree(idx), _tree(pairs_path))
+
+    with pytest.raises(StreamingQueryException, match="does not carry"):
+        _neardup_stream(
+            spark, second, idx, pairs_path, str(tmp_path / "ckpt2"), docs.schema
+        )
+    assert (_tree(idx), _tree(pairs_path)) == before
+    sig = {r.did for r in spark.read.parquet(f"{idx}/sig").select("did").collect()}
+    assert sig == set(range(50))
+
+
+def test_doc_neardup_unpartitioned_index_is_refused(spark, tmp_path):
+    """An index or pairs table written before the tiers were partitioned
+    by ``seq`` holds its files at the tier roots. Spark reads root files
+    beside ``seq=`` directories as one or the other, without an error,
+    so every entry point must refuse such a table before it writes
+    anything; a rebuild replaces it with the partitioned form."""
+    import os
+    import shutil
+
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+
+    from hours_api_clickup_spark.datapipe.dedup import (
+        doc_neardup_index_append,
+        doc_neardup_index_compact,
+        doc_neardup_index_pairs_for_ids,
+        doc_neardup_index_write,
+    )
+    from hours_api_clickup_spark.plans.registry import load_table
+    from tests.conftest import SF_DIR
+
+    docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
+    corpus = docs.filter(F.col("doc_id") < 200)
+    batch = docs.filter(F.col("doc_id").between(200, 249))
+    new = str(tmp_path / "new")
+    doc_neardup_index_write(corpus, "doc_id", "text", new)
+    old = str(tmp_path / "old")  # the same rows, at the tier roots
+    for tier in ("sig", "bands"):
+        spark.read.parquet(f"{new}/{tier}").drop("seq").write.parquet(f"{old}/{tier}")
+    before = _tree(old)
+
+    refused = "outside its seq= partitions"
+    with pytest.raises(ValueError, match=refused):
+        doc_neardup_index_append(batch, old, "doc_id", "text")
+    with pytest.raises(ValueError, match=refused):
+        doc_neardup_index_pairs_for_ids(spark, old, corpus.select("doc_id"))
+    with pytest.raises(ValueError, match=refused):
+        doc_neardup_index_compact(spark, old)
+    assert _tree(old) == before
+
+    # root files beside a seq= directory: refused, not half-read
+    shutil.copytree(f"{new}/sig/seq=0", f"{old}/sig/seq=3")
+    with pytest.raises(ValueError, match=refused):
+        doc_neardup_index_append(batch, old, "doc_id", "text")
+
+    # a stream whose pairs table has root files writes nothing at all
+    stage, pairs_path = str(tmp_path / "stage"), str(tmp_path / "pairs")
+    batch.coalesce(1).write.parquet(stage)
+    spark.createDataFrame([(1, 2, 0.9)], "id_a long, id_b long, jaccard double").write.parquet(
+        pairs_path
+    )
+    index_before, pairs_before = _tree(new), _tree(pairs_path)
+    with pytest.raises(StreamingQueryException, match=refused):
+        _neardup_stream(spark, stage, new, pairs_path, str(tmp_path / "ckpt"), docs.schema)
+    assert (_tree(new), _tree(pairs_path)) == (index_before, pairs_before)
+
+    # the rebuild is the way forward
+    doc_neardup_index_write(corpus, "doc_id", "text", old)
+    assert [n for n in sorted(os.listdir(f"{old}/sig")) if n[0] != "."] == ["_SUCCESS", "seq=0"]
+    got = doc_neardup_index_append(batch, old, "doc_id", "text")
+    assert {r.id_b for r in got.collect()} <= set(range(200, 250))
+
+
+@pytest.mark.parametrize("crashed_write", ["bands", "sig", "pairs"])
+def test_streaming_doc_neardup_crash_after_each_write_redelivers_clean(
+    spark, tmp_path, monkeypatch, crashed_write
+):
+    """A crash after any one of a batch's three ``seq=N`` writes (bands,
+    sig, pairs) redelivers the batch, which overwrites all three: the
+    result equals a clean run — one sig row per did and exactly the
+    one-shot pair rows, no duplicate (id_a, id_b)."""
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from hours_api_clickup_spark.datapipe.dedup import minhash_lsh_pairs
+    from hours_api_clickup_spark.plans.registry import load_table
+    from tests.conftest import SF_DIR
+
+    docs = load_table(spark, SF_DIR, "documents").filter(
+        F.col("doc_id") < 300
+    ).select("doc_id", "text")
+    stage = str(tmp_path / "stage")
+    for i in range(2):
+        docs.filter(F.col("doc_id") % 2 == i).coalesce(1).write.mode("append").parquet(stage)
+    idx, pairs_path = str(tmp_path / "idx"), str(tmp_path / "pairs")
+    ckpt = str(tmp_path / "ckpt")
+    target = {
+        "bands": f"{idx}/bands/seq=2", "sig": f"{idx}/sig/seq=2", "pairs": f"{pairs_path}/seq=2",
+    }[crashed_write]
+
+    real_parquet = DataFrameWriter.parquet
+    crashed = []
+
+    def crash_after(self, path, *args, **kwargs):
+        real_parquet(self, path, *args, **kwargs)
+        if path == target and not crashed:
+            crashed.append(path)
+            raise RuntimeError(f"injected crash after writing {path}")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", crash_after)
+    with pytest.raises(StreamingQueryException, match="injected crash"):
+        _neardup_stream(spark, stage, idx, pairs_path, ckpt, docs.schema)
+    assert crashed == [target]
+    _neardup_stream(spark, stage, idx, pairs_path, ckpt, docs.schema)  # redelivers batch 1
+    monkeypatch.setattr(DataFrameWriter, "parquet", real_parquet)
+
+    sig = [r.did for r in spark.read.parquet(f"{idx}/sig").select("did").collect()]
+    assert sorted(sig) == sorted(r.doc_id for r in docs.select("doc_id").collect())
+
+    got = _pair_rows(spark.read.parquet(pairs_path))
+    assert got == _pair_rows(minhash_lsh_pairs(docs, "doc_id", "text"))
+    assert len({(a, b) for a, b, _ in got}) == len(got) > 0
 
 
 def test_json_quarantine_routes_malformed_lines(spark, tmp_path):

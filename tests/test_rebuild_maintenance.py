@@ -434,6 +434,26 @@ def test_only_storage_owns_leases_and_hadoop_commits():
     assert not offenders, offenders
 
 
+def test_only_storage_builds_hadoop_paths():
+    """Filesystem access goes through storage.py: a module building its
+    own Hadoop ``Path`` or reading ``hadoopConfiguration()`` keeps
+    markers and existence probes that the storage layer's commit and
+    recovery rules never see."""
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(storage.__file__).parent
+    hadoop_fs = re.compile(r"hadoop\.fs\.Path|hadoopConfiguration\(\)")
+    offenders = [
+        f"{f.relative_to(pkg)}:{n}: {line.strip()}"
+        for f in sorted(pkg.rglob("*.py"))
+        if f != pathlib.Path(storage.__file__)
+        for n, line in enumerate(f.read_text().splitlines(), 1)
+        if hadoop_fs.search(line)
+    ]
+    assert not offenders, offenders
+
+
 def test_one_route_dispatcher():
     """The CLI and the scheduler reach the sync and maintenance code
     only through ``server.dispatch``, the dispatcher the HTTP routes
@@ -953,6 +973,30 @@ class TestRecoveryVerdictCache:
         assert got == want
         assert os.path.isdir(f"{path}/sig")
         assert not os.path.exists(f"{path}/sig__old")
+
+    def test_doc_append_self_heals_past_cached_verdict(self, spark, tmp_path):
+        """The append finds its corpus by listing the tiers' ``seq``
+        directories. A bands tier missing after a foreign mid-swap crash,
+        behind a cached clean verdict, must be recovered like a failed
+        read, not taken for an empty corpus (pairs silently lost)."""
+        import hours_api_clickup_spark.datapipe.dedup as D
+
+        docs = _docs(spark).filter(F.col("doc_id") < 300)
+        corpus, batch = docs.filter(F.col("doc_id") % 5 != 0), docs.filter(F.col("doc_id") % 5 == 0)
+        path, twin = str(tmp_path / "didx"), str(tmp_path / "twin")
+        for p in (path, twin):
+            D.doc_neardup_index_write(corpus, "doc_id", "text", p)
+        D.doc_neardup_index_pairs_for_ids(spark, path, corpus.select("doc_id").limit(5)).collect()
+        assert storage.recovery_verdict_cached(spark, path)
+        os.rename(f"{path}/bands", f"{path}/bands__old")  # foreign crash
+
+        def pairs(p):
+            return sorted((r.id_a, r.id_b) for r in D.doc_neardup_index_append(batch, p, "doc_id", "text").collect())
+
+        want = pairs(twin)
+        # a pair with a corpus member shows the corpus was read
+        assert pairs(path) == want and any(a % 5 or b % 5 for a, b in want)
+        assert os.path.isdir(f"{path}/bands") and not os.path.exists(f"{path}/bands__old")
 
 
 class TestAppendBootstrapLeased:

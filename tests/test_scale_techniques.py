@@ -2497,6 +2497,33 @@ class TestDocNeardupCompactCrashWindows:
         doc_neardup_index_compact(spark, path)  # must not raise
         assert os.path.isdir(f"{path}/tombstones")
 
+    def test_compact_of_every_doc_leaves_a_working_index(self, spark, tmp_path):
+        """A compact that folds every doc out leaves tiers with no ``seq``
+        partition: the pair probe returns no pairs, and a re-ingest after
+        it pairs against an empty corpus."""
+        from pyspark.sql import functions as F
+
+        from hours_api_clickup_spark.datapipe.dedup import (
+            doc_neardup_index_append,
+            doc_neardup_index_compact,
+            doc_neardup_index_delete,
+            doc_neardup_index_pairs_for_ids,
+            doc_neardup_index_write,
+            minhash_lsh_pairs,
+        )
+        from hours_api_clickup_spark.plans.registry import load_table
+        from tests.conftest import SF_DIR
+
+        docs = load_table(spark, SF_DIR, "documents").filter(F.col("doc_id") < 300)
+        path = str(tmp_path / "didx")
+        doc_neardup_index_write(docs, "doc_id", "text", path)
+        doc_neardup_index_delete(spark, path, docs.select("doc_id"))
+        doc_neardup_index_compact(spark, path)
+        assert doc_neardup_index_pairs_for_ids(spark, path, docs.select("doc_id")).count() == 0
+        got = {(r.id_a, r.id_b) for r in doc_neardup_index_append(docs, path, "doc_id", "text").collect()}
+        want = {(r.id_a, r.id_b) for r in minhash_lsh_pairs(docs, "doc_id", "text").collect()}
+        assert got == want and len(got) > 0
+
 
 class TestCompactConsumedSnapshot:
     """ADVICE r7: a compact must never erase a MOR-tier file it did not
