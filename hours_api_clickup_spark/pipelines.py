@@ -18,11 +18,17 @@ are deterministic and testable.
 from __future__ import annotations
 
 import datetime as dt
+import json
+import os
+import uuid
+from contextlib import contextmanager
 from dataclasses import dataclass
+from functools import reduce
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from hours_api_clickup_spark import storage
 from hours_api_clickup_spark.operators.dedupe import dedupe_latest
@@ -45,6 +51,10 @@ from hours_api_clickup_spark.operators.validate import (
     observe_expectations,
 )
 from hours_api_clickup_spark.sinks.writers import csv_backup
+
+#: a build_corpus stage's record, committed after its ids parquet:
+#: ``{"rows": survivor count, "schema": the ids schema as DDL}``
+STAGE_RECORD = "_record.json"
 
 DEFAULT_REFRESH_DAYS = 60  # deploy.sh:70 (REFRESH_DAYS=60, 6-hourly job)
 
@@ -255,6 +265,15 @@ def health(spark: SparkSession) -> dict:
     }
 
 
+def _write_stage_record(path: str, rows: int, schema: StructType) -> None:
+    """Commit a stage's record (tmp + ``os.replace``): present only
+    once its ids parquet is complete."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump({"rows": rows, "schema": schema.toDDL()}, f)
+    os.replace(tmp, path)
+
+
 def build_corpus(
     docs: DataFrame,
     out_dir: str,
@@ -299,10 +318,12 @@ def build_corpus(
           vector drops the doc; embedding-less docs pass; requires
           ``embeddings``)
       5.  deterministic train/val/test split (Knuth multiplicative hash)
-      6.  per-split sequence packing: whitespace token counts → global
-          prefix offsets → fixed ``chunk_size`` chunk spans
-      7.  shard write (one task per ``chunks_per_shard`` group) + curated
-          docs parquet + atomically-published JSON manifest
+      6.  sequence packing of every split in one pass: whitespace token
+          counts → prefix offsets restarting at 0 in each split → fixed
+          ``chunk_size`` chunk spans
+      7.  shard write (one task per ``chunks_per_shard`` group, one job
+          for all splits) + curated docs parquet + atomically-published
+          JSON manifest
 
     The embedding/media stages keep every scale invariant of the text
     stages (VERDICT r11 #3): SemDeDup is Σ|cluster|² via one
@@ -320,25 +341,34 @@ def build_corpus(
 
     Scale shape: every stage is the registry query's plan (digest-keyed
     shuffles, broadcast benchmark grams, banded LSH buckets — no
-    all-pairs, no collects); packing is one range exchange per split.
-    Each curation stage persists its survivor-id parquet under
-    ``{out_dir}/_stages/`` — that write is the stage boundary that
-    keeps the build O(stages), not O(stages²) (each stage reads the
-    input ⋈ the previous ids parquet, never the full upstream lineage),
-    AND it makes a crashed build restartable (verdict r8 #7): with
-    ``resume=True`` (CLI ``--resume``) every stage whose ids parquet
-    committed (``_SUCCESS`` marker) is reloaded instead of recomputed,
-    work restarts at the first incomplete stage, and the post-curation
-    writes (docs/shards) re-run in overwrite mode, so the resumed build
-    produces identical manifest counts. Resume refuses loudly when the
-    persisted run's parameters or input row count differ from the
-    current call — stage ids from a different configuration or corpus
-    would silently mis-filter.
-    """
-    import json
-    import os
+    all-pairs, no collects); packing is ONE range exchange for all
+    splits, keyed by (split, id). Each curation stage persists its
+    survivor-id parquet under ``{out_dir}/_stages/`` — that write is the
+    stage boundary that keeps the build O(stages), not O(stages²) (each
+    stage reads the input ⋈ the previous ids parquet, never the full
+    upstream lineage), AND it makes a crashed build restartable (verdict
+    r8 #7).
 
-    from hours_api_clickup_spark.datapipe.clusters import resolve_dup_clusters
+    Counts cost no job of their own: the input count and the resume
+    stamp's side-input counts are one job (an Observation on a no-op
+    write), each stage's survivor count rides its ids write, and the
+    split counts ride the docs write. The manifest's ``stage_jobs``
+    holds each stage's Spark job count ("prelude": the counting job),
+    read from a per-stage job tag that adds to the caller's job group.
+
+    Resume: once a stage's ids parquet has committed, its record
+    (``STAGE_RECORD``: the survivor count and the ids schema) is
+    committed next to it; with ``resume=True`` (CLI ``--resume``) every
+    stage with a record is reloaded instead of recomputed — its count
+    and schema from the record, no job — and work restarts at the first
+    stage without one (ids without a record are an unfinished stage).
+    The post-curation writes (docs/shards) re-run in overwrite mode, so
+    the resumed build produces identical manifest counts. Resume refuses
+    loudly when the persisted run's parameters or input row count differ
+    from the current call — stage ids from a different configuration or
+    corpus would silently mis-filter.
+    """
+    from hours_api_clickup_spark.datapipe.clusters import dup_survivors
     from hours_api_clickup_spark.datapipe.curation import (
         decontaminate,
         gopher_quality_filter,
@@ -401,10 +431,52 @@ def build_corpus(
         # scaling table reads these instead of re-instrumenting; a
         # resumed stage's wall is its parquet LOAD time, not a recompute
         "stage_walls": {},
+        # per-stage Spark job counts ("prelude" = the counting job), read
+        # from each stage's job tag once the build's last job has run
+        "stage_jobs": {},
     }
-    manifest["stages"]["input"] = docs.count()
-
     spark = docs.sparkSession
+    sc = spark.sparkContext
+    # every stage's Spark jobs carry a tag of their own, so the manifest
+    # reports per-stage job counts without a job of its own; a tag adds
+    # to whatever job group or tags the caller set, never replaces them
+    run_tag = f"build_corpus-{uuid.uuid4().hex[:12]}"
+    stage_tags: dict = {}
+
+    @contextmanager
+    def tagged(name: str):
+        stage_tags[name] = f"{run_tag}-{name}"
+        sc.addJobTag(stage_tags[name])
+        try:
+            yield
+        finally:
+            sc.removeJobTag(stage_tags[name])
+
+    # the input count and the resume stamp's side-input tripwires in ONE
+    # job: a no-op write of the tagged union, counted by an Observation
+    sides = {
+        "input": docs,
+        "benchmark_count": benchmark,
+        "embeddings_count": embeddings,
+        "benchmark_embeddings_count": benchmark_embeddings,
+        "media_count": media,
+    }
+    present = [k for k, df in sides.items() if df is not None]
+    with tagged("prelude"):
+        rows = reduce(
+            DataFrame.unionByName,
+            [sides[k].select(F.lit(i).alias("__side")) for i, k in enumerate(present)],
+        )
+        obs = Observation()
+        rows.observe(
+            obs,
+            *[
+                F.count(F.when(F.col("__side") == i, 1)).alias(k)
+                for i, k in enumerate(present)
+            ],
+        ).write.format("noop").mode("overwrite").save()
+        counts = obs.get
+    manifest["stages"]["input"] = counts["input"]
     # Volume-proportional shuffle granularity (r10 soak finding): with
     # a fixed shuffle.partitions, per-partition volume grows with the
     # corpus and crosses the executor spill threshold — the Gopher
@@ -431,16 +503,9 @@ def build_corpus(
             # eval set of the same presence: the count is a cheap drift
             # tripwire (eval suites are tiny; a same-count content swap
             # still slips through — a content digest would close that at
-            # the cost of hashing the benchmark text every build)
-            "benchmark_count": benchmark.count() if benchmark is not None else None,
-            # same drift tripwires for the embedding/media side inputs
-            "embeddings_count": embeddings.count()
-            if embeddings is not None
-            else None,
-            "benchmark_embeddings_count": benchmark_embeddings.count()
-            if benchmark_embeddings is not None
-            else None,
-            "media_count": media.count() if media is not None else None,
+            # the cost of hashing the benchmark text every build); the
+            # same tripwires guard the embedding/media side inputs
+            **{k: counts.get(k) for k in sides if k != "input"},
         }
         if resume and os.path.exists(run_path):
             with open(run_path) as f:
@@ -474,14 +539,27 @@ def build_corpus(
             ids parquet when resuming, else computing+persisting it. The
             parquet read-back is also the lineage pin (formerly a
             localCheckpoint): each stage plans input ⋈ ids, never the whole
-            upstream chain."""
+            upstream chain. The survivor count rides the ids write as an
+            Observation, and the read-back takes the schema just written
+            (stages cast ids differently, so the docs' id dtype is no
+            guide): neither costs a job. A resumed stage takes both from
+            its record, committed after its ids; ids without a record are
+            an unfinished stage and are recomputed."""
             t0 = _time.perf_counter()
             sdir = os.path.join(stages_dir, name)
-            if not (resume and os.path.exists(os.path.join(sdir, "_SUCCESS"))):
-                compute_ids().write.mode("overwrite").parquet(sdir)
-            ids = spark.read.parquet(sdir)
-            surv = input_docs.join(ids.select(id_col), id_col, "left_semi")
-            n = ids.count()
+            record = os.path.join(sdir, STAGE_RECORD)
+            with tagged(name):
+                if resume and os.path.exists(record):
+                    with open(record) as f:
+                        rec = json.load(f)
+                    n, schema = rec["rows"], rec["schema"]
+                else:
+                    ids, obs = observe_expectations(compute_ids(), [])
+                    ids.write.mode("overwrite").parquet(sdir)
+                    n, schema = obs.get[OBSERVED_ROWS], ids.schema
+                    _write_stage_record(record, n, schema)
+                ids = spark.read.schema(schema).parquet(sdir)
+                surv = input_docs.join(ids.select(id_col), id_col, "left_semi")
             manifest["stage_walls"][name] = round(_time.perf_counter() - t0, 3)
             return surv, n
 
@@ -542,8 +620,7 @@ def build_corpus(
                 # them for candidate docs only via one extra corpus scan
                 rejoin_grams=n >= NEAR_DEDUP_REJOIN_MIN_DOCS,
             ).select("id_a", "id_b")
-            clusters = resolve_dup_clusters(docs.select(id_col), pairs, id_col)
-            return clusters.filter(F.col("is_survivor")).select(id_col)
+            return dup_survivors(docs.select(id_col), pairs, id_col)
 
         docs, n = _stage("03_near_dedup", _near_dedup_ids)
         manifest["stages"]["after_near_dedup"] = n
@@ -632,37 +709,54 @@ def build_corpus(
             )
             manifest["stages"]["after_embedding_decontamination"] = n
 
-        # 5. deterministic split
+        # 5. deterministic split; the per-split counts ride the docs
+        # write, and the read-back takes the schema just written
         t5 = _time.perf_counter()
-        curated = docs.withColumn("split", assign_split(id_col, list(splits)))
-        curated.write.mode("overwrite").parquet(os.path.join(out_dir, "docs"))
-        curated = spark.read.parquet(os.path.join(out_dir, "docs"))
+        names = [name for name, _w in splits]
+        docs_dir = os.path.join(out_dir, "docs")
+        with tagged("05_split_write_docs"):
+            curated = docs.withColumn("split", assign_split(id_col, list(splits)))
+            obs = Observation()
+            curated.observe(
+                obs,
+                *[
+                    F.count(F.when(F.col("split") == name, 1)).alias(f"s{i}")
+                    for i, name in enumerate(names)
+                ],
+            ).write.mode("overwrite").parquet(docs_dir)
+            split_counts = {name: obs.get[f"s{i}"] for i, name in enumerate(names)}
+            curated = spark.read.schema(curated.schema).parquet(docs_dir)
         manifest["stage_walls"]["05_split_write_docs"] = round(
             _time.perf_counter() - t5, 3
         )
 
-        # 6+7. pack and shard each split independently (offsets must be
-        # contiguous WITHIN a split so no shard mixes train and eval data)
+        # 6+7. pack and shard every split in one pass: one range exchange
+        # keyed by (split, id), offsets contiguous WITHIN a split so no
+        # shard mixes train and eval data, and one shard write
         n_tokens = F.when(
             F.length(F.trim(F.col(text_col))) == 0, F.lit(0)
         ).otherwise(F.size(F.split(F.trim(F.col(text_col)), r"\s+")))
-        split_counts: dict = {}
-        for name, _w in splits:
-            part = curated.filter(F.col("split") == name).withColumn(
-                "n_tokens", n_tokens
-            )
-            split_counts[name] = part.count()
-            if split_counts[name] == 0:
-                continue
-            packed = pack_into_chunks(part, id_col, "n_tokens", chunk_size)
-            write_training_shards(
-                packed, os.path.join(out_dir, "shards", name), chunks_per_shard
-            )
+        with tagged("06_07_pack_shard"):
+            nonempty = [name for name in names if split_counts[name]]
+            if nonempty:
+                packed = pack_into_chunks(
+                    curated.withColumn("n_tokens", n_tokens),
+                    id_col, "n_tokens", chunk_size, group_col="split",
+                )
+                write_training_shards(
+                    packed, os.path.join(out_dir, "shards"), chunks_per_shard,
+                    splits=nonempty,
+                )
         manifest["stages"]["split_counts"] = split_counts
         manifest["stage_walls"]["06_07_pack_shard"] = round(
             _time.perf_counter() - t5
             - manifest["stage_walls"]["05_split_write_docs"], 3
         )
+        # read once every tagged block has ended: each tag then holds all
+        # of its stage's jobs
+        tracker = sc._jsc.sc().statusTracker()
+        for name, tag in stage_tags.items():
+            manifest["stage_jobs"][name] = len(tracker.getJobIdsForTag(tag))
 
     finally:
         # restore the caller's shuffle-granularity setting even on a

@@ -89,11 +89,7 @@ def _prep(spark, root: str, scale: int):
 
 
 def stage3_ab(scale: int, modes: tuple = ("shipped", "rejoin")) -> None:
-    from pyspark.sql import functions as F
-
-    from hours_api_clickup_spark.datapipe.clusters import (
-        resolve_dup_clusters,
-    )
+    from hours_api_clickup_spark.datapipe.clusters import dup_survivors
     from hours_api_clickup_spark.datapipe.dedup import minhash_lsh_pairs
 
     spark = get_spark(app_name="neardup-stage3-ab")
@@ -112,12 +108,9 @@ def stage3_ab(scale: int, modes: tuple = ("shipped", "rejoin")) -> None:
                 docs, "doc_id", "text", k=5, num_hashes=64, bands=16,
                 threshold=0.7, rejoin_grams=rejoin,
             ).select("id_a", "id_b")
-            clusters = resolve_dup_clusters(
-                docs.select("doc_id"), pairs, "doc_id"
-            )
-            clusters.filter(F.col("is_survivor")).select(
-                "doc_id"
-            ).write.mode("overwrite").parquet(out)
+            dup_survivors(docs.select("doc_id"), pairs, "doc_id").write.mode(
+                "overwrite"
+            ).parquet(out)
             wall = round(time.perf_counter() - t0, 1)
             n = spark.read.parquet(out).count()
             results[mode] = (wall, n)

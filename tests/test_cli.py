@@ -499,7 +499,7 @@ def test_build_corpus_crash_resume_matches_clean_build(spark, tmp_path):
         def boom(*a, **k):
             raise RuntimeError("injected kill in stage 3")
 
-        mp.setattr(clusters_mod, "resolve_dup_clusters", boom)
+        mp.setattr(clusters_mod, "dup_survivors", boom)
         with pytest.raises(RuntimeError, match="injected kill"):
             pipelines.build_corpus(
                 docs, out, chunk_size=64, chunks_per_shard=4
@@ -541,9 +541,12 @@ def test_build_corpus_crash_resume_matches_clean_build(spark, tmp_path):
             docs, out, chunk_size=64, chunks_per_shard=4, resume=True
         )
 
-    # identical CONTENT; stage walls are run metadata and always differ
+    # identical CONTENT; stage walls and job counts are run metadata
+    # (a resumed stage runs no job) and always differ
     def _no_walls(m: dict) -> dict:
-        return {k: v for k, v in m.items() if k != "stage_walls"}
+        return {
+            k: v for k, v in m.items() if k not in ("stage_walls", "stage_jobs")
+        }
 
     assert _no_walls(resumed) == _no_walls(clean)
     disk = _json.load(open(os.path.join(out, "manifest.json")))
@@ -556,6 +559,141 @@ def test_build_corpus_crash_resume_matches_clean_build(spark, tmp_path):
     stamp = _json.load(open(os.path.join(st, "run.json")))
     assert stamp["params"]["chunk_size"] == 32
     assert rebuilt["params"]["chunk_size"] == 32
+
+
+def test_build_corpus_crash_between_ids_and_record_resumes(spark, tmp_path):
+    """A kill after a stage's ids parquet committed but before its record
+    (the survivor count and ids schema): the ids alone are not a
+    finished stage, so the resume recomputes that stage and reloads the
+    earlier ones from their records, never counting with a job. The
+    records carry each stage's own id dtype: the doc ids are int here
+    and SemDeDup writes long ids, which a read at the docs' dtype would
+    refuse. The resumed manifest equals a clean build's."""
+    import json as _json
+    import os
+
+    import pytest
+    from pyspark.sql import functions as F
+
+    import hours_api_clickup_spark.datapipe.curation as curation_mod
+    import hours_api_clickup_spark.datapipe.dedup as dedup_mod
+    import hours_api_clickup_spark.datapipe.similarity as similarity_mod
+    from hours_api_clickup_spark import pipelines
+    from hours_api_clickup_spark.plans.registry import load_table
+    from tests.conftest import SF_DIR_SMOKE
+
+    docs_path = str(tmp_path / "docs_in")
+    load_table(spark, SF_DIR_SMOKE, "documents").withColumn(
+        "doc_id", F.col("doc_id").cast("int")
+    ).write.parquet(docs_path)
+    docs = spark.read.parquet(docs_path)
+    emb = docs.filter(F.col("doc_id") % 5 != 0).select(
+        "doc_id",
+        F.expr(
+            "transform(sequence(0, 7), j -> CASE WHEN j = "
+            "CAST(doc_id % 8 AS INT) THEN 1.0D ELSE 0.0D END)"
+        ).alias("embedding"),
+    )
+    kw = dict(
+        chunk_size=64, chunks_per_shard=4, embeddings=emb,
+        semantic_threshold=0.95,
+        benchmark=docs.filter(F.col("doc_id") % 97 == 0).select("text"),
+    )
+    clean = pipelines.build_corpus(docs, str(tmp_path / "clean"), **kw)
+
+    out = str(tmp_path / "resumable")
+    st = os.path.join(out, "_stages")
+    write_record = pipelines._write_stage_record
+    with pytest.MonkeyPatch.context() as mp:
+        def kill_at_04(path, rows, schema):
+            if "04_decontamination" in path:
+                raise RuntimeError("injected kill before the stage record")
+            write_record(path, rows, schema)
+
+        mp.setattr(pipelines, "_write_stage_record", kill_at_04)
+        with pytest.raises(RuntimeError, match="injected kill"):
+            pipelines.build_corpus(docs, out, **kw)
+    rec = os.path.join(st, "04_decontamination", pipelines.STAGE_RECORD)
+    assert os.path.exists(os.path.join(st, "04_decontamination", "_SUCCESS"))
+    assert not os.path.exists(rec)
+
+    def id_type(stage):
+        path = os.path.join(st, stage, pipelines.STAGE_RECORD)
+        with open(path) as f:
+            return _json.load(f)["schema"].split()[1]
+
+    assert id_type("02_quality_gate") == "INT"
+    assert id_type("03b_semantic_dedup") == "BIGINT"
+
+    recomputed = []
+    decontaminate = curation_mod.decontaminate
+    with pytest.MonkeyPatch.context() as mp:
+        def poisoned(*a, **k):
+            raise AssertionError("completed stage recomputed on resume")
+
+        def tracked(*a, **k):
+            recomputed.append("04")
+            return decontaminate(*a, **k)
+
+        for mod, name in (
+            (curation_mod, "normalized_exact_dedup"),
+            (curation_mod, "gopher_quality_filter"),
+            (dedup_mod, "minhash_lsh_pairs"),
+            (similarity_mod, "semantic_dedup"),
+        ):
+            mp.setattr(mod, name, poisoned)
+        mp.setattr(curation_mod, "decontaminate", tracked)
+        mp.setattr(
+            type(docs), "count",
+            lambda self: pytest.fail("a resumed stage counted with a job"),
+        )
+        resumed = pipelines.build_corpus(docs, out, resume=True, **kw)
+    assert recomputed == ["04"] and os.path.exists(rec)
+    assert resumed["stage_jobs"]["03b_semantic_dedup"] == 0
+
+    def content(m):
+        return {
+            k: v for k, v in m.items() if k not in ("stage_walls", "stage_jobs")
+        }
+
+    assert content(resumed) == content(clean)
+
+
+def test_build_corpus_job_budget(spark, tmp_path):
+    """The build's Spark jobs, counted under the caller's job group: at
+    most the 40 this build runs on the sf0.001 fixture (90 before the
+    stage counts rode the ids writes, the prelude counted in one job,
+    the splits packed in one pass and connected components built its
+    pair plan once). The per-stage tags that back the manifest's
+    ``stage_jobs`` add to the caller's group and leave it in place, and
+    account for every job. A fresh build never calls DataFrame.count."""
+    import pytest
+    from pyspark.sql import functions as F
+
+    from hours_api_clickup_spark import pipelines
+    from hours_api_clickup_spark.plans.registry import load_table
+    from tests.conftest import SF_DIR_SMOKE
+
+    docs = load_table(spark, SF_DIR_SMOKE, "documents")
+    sc = spark.sparkContext
+    sc.setJobGroup("build_corpus_budget", "job budget")
+    try:
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(
+                type(docs), "count",
+                lambda self: pytest.fail("build_corpus called DataFrame.count"),
+            )
+            manifest = pipelines.build_corpus(
+                docs, str(tmp_path / "c"), chunk_size=64, chunks_per_shard=4,
+                benchmark=docs.filter(F.col("doc_id") % 97 == 0).select("text"),
+            )
+        assert sc.getLocalProperty("spark.jobGroup.id") == "build_corpus_budget"
+        jobs = len(sc.statusTracker().getJobIdsForGroup("build_corpus_budget"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sum(manifest["stage_jobs"].values()) == jobs
+    assert jobs <= 40
+    assert set(manifest["stage_jobs"]) == {"prelude", *manifest["stage_walls"]}
 
 
 def test_build_corpus_resume_refuses_benchmark_drift(spark, tmp_path):

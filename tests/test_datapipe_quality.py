@@ -365,6 +365,72 @@ def test_training_shard_writer_roundtrip(spark, tmp_path):
     assert got == expected
 
 
+def test_one_pass_pack_equals_per_split_pack(spark, tmp_path):
+    """Packing every split in ONE range pass (offsets restart per split,
+    one shard write) equals packing and writing each split on its own:
+    the same rows in the same order in every {split}/shard_id=N. The
+    fixture has a listed split with no docs, a split whose docs all
+    have zero tokens, zero-token docs among the others, and 2 range
+    partitions over the splits, so one partition straddles two."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    from hours_api_clickup_spark.datapipe.packing import (
+        pack_into_chunks,
+        write_training_shards,
+    )
+
+    names = ["train", "val", "test", "zero"]  # no doc lands in "test"
+    rows = []
+    for i in range(160):
+        split = ("train", "train", "val", "zero")[i % 4]
+        n = 0 if split == "zero" or i % 7 == 0 else (i * 37) % 50 + 1
+        rows.append((i, split, n))
+    df = spark.createDataFrame(rows, "doc_id long, split string, n_tokens int")
+    ranged = (
+        df.filter("n_tokens > 0")
+        .repartitionByRange(2, "split", "doc_id")
+        .groupBy(F.spark_partition_id().alias("p"))
+        .agg(F.countDistinct("split").alias("k"))
+    )
+    assert max(r.k for r in ranged.collect()) == 2  # a straddling partition
+
+    nonempty = [s for s in names if any(r[1] == s for r in rows)]
+    one, per = str(tmp_path / "one"), str(tmp_path / "per")
+    packed = pack_into_chunks(
+        df, "doc_id", "n_tokens", 64, num_partitions=2, group_col="split"
+    )
+    write_training_shards(packed, one, 4, splits=nonempty)
+    for s in nonempty:
+        part = df.filter(F.col("split") == s)
+        write_training_shards(
+            pack_into_chunks(part, "doc_id", "n_tokens", 64, num_partitions=2),
+            os.path.join(per, s),
+            4,
+        )
+
+    def layout(root):
+        shards = {}
+        for d in sorted(glob.glob(f"{root}/*/shard_id=*")):
+            files = glob.glob(f"{d}/*.parquet")
+            assert len(files) == 1, d  # one task, one file per shard
+            shards[os.path.relpath(d, root)] = pq.read_table(files[0]).to_pylist()
+        splits = {
+            d: os.path.exists(os.path.join(root, d, "_SUCCESS"))
+            for d in os.listdir(root)
+            if not d.startswith(".")
+        }
+        return splits, shards
+
+    got, want = layout(one), layout(per)
+    assert got == want
+    assert got[0] == {"train": True, "val": True, "zero": True}
+    assert len([k for k in got[1] if k.startswith("train/")]) > 1
+    assert all(r["split"] == k.split("/")[0] for k, v in got[1].items() for r in v)
+
+
 def test_weighted_mix_epoch_replication(spark):
     from hours_api_clickup_spark.datapipe.sampling import weighted_mix
 

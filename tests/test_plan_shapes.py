@@ -238,23 +238,36 @@ def test_minhash_pair_generation_no_all_pairs_join(spark):
 
 def test_sequence_packing_range_partitioned_not_single_window(spark):
     # the global prefix sum must be the two-phase scan: per-__pid local
-    # cumsum windows over the range-partitioned rows, stitched by a
-    # BROADCAST offsets join — never one global-orderBy window that
-    # collapses the table into a single partition. The range exchange
-    # itself is pinned behind an eager localCheckpoint (packing.py's
-    # ReuseExchange fix), so it appears as the materialized LogicalRDD
-    # scan rather than a rangepartitioning node; the per-partition
-    # window spec and the broadcast stitch are the observable shape.
-    plan = _plan(spark, "sequence_packing", "extended")
-    assert "windowspecdefinition(__pid" in plan, plan
-    assert "LogicalRDD" in plan or "ExistingRDD" in plan, plan
-    assert "BroadcastHashJoin" in plan, plan
-    # the only empty-partitionBy window allowed is the P-row totals
-    # prefix (ordered by __pid); the data-sized windows all carry __pid
+    # cumsum windows over the range-partitioned rows — never one
+    # global-orderBy window that collapses the table into a single
+    # partition. The windows run once, behind an eager localCheckpoint
+    # (packing.py's ReuseExchange fix) whose job also observes the
+    # per-partition totals, so they are read from the plan that
+    # checkpoint executes; the query's own plan scans the materialized
+    # LogicalRDD and looks the offsets up without a join.
     import re
 
-    for spec in re.findall(r"windowspecdefinition\(([^)]*)\)", plan):
-        assert "__pid" in spec, (spec, plan)
+    import pytest
+
+    frame = type(spark.range(1))
+    local_checkpoint, checkpointed = frame.localCheckpoint, []
+
+    def capture(self, *a, **k):
+        checkpointed.append(self._jdf.queryExecution().toString())
+        return local_checkpoint(self, *a, **k)
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(frame, "localCheckpoint", capture)
+        plan = _plan(spark, "sequence_packing", "extended")
+    assert "LogicalRDD" in plan or "ExistingRDD" in plan, plan
+    assert "windowspecdefinition" not in plan, plan
+    assert len(checkpointed) == 1, checkpointed
+    ranged = checkpointed[0]
+    assert "rangepartitioning(doc_id" in ranged, ranged
+    assert "windowspecdefinition(__pid" in ranged, ranged
+    # every data-sized window carries __pid in its partitioning
+    for spec in re.findall(r"windowspecdefinition\(([^)]*)\)", ranged):
+        assert "__pid" in spec, (spec, ranged)
 
 
 def test_lsh_near_dup_pairs_no_all_pairs_join(spark):
