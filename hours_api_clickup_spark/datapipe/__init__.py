@@ -13,7 +13,6 @@ from hours_api_clickup_spark.datapipe.dedup import (
     exact_dedup,
     jaccard_sim,
     minhash_lsh_pairs,
-    minhash_signature,
     ngram_jaccard_pairs,
     simhash64,
     simhash_pairs,
@@ -35,7 +34,6 @@ __all__ = [
     "char_shingles",
     "jaccard_sim",
     "ngram_jaccard_pairs",
-    "minhash_signature",
     "minhash_lsh_pairs",
     "simhash64",
     "simhash_pairs",

@@ -62,12 +62,16 @@ def _free_checkpoint(df: DataFrame) -> None:
     """Best-effort release of a superseded localCheckpoint's cached
     blocks (standard Pregel-on-Spark discipline): without it each round
     pins another full label-set copy until context GC — up to max_iter
-    copies on the biggest inputs (review r8). Reaches the checkpointed
-    RDD through the analyzed LogicalRDD; swallows any reflection miss,
-    since retention is a memory-pressure concern, never a correctness
-    one."""
+    copies on the biggest inputs. Reaches the checkpointed RDD through
+    the analyzed LogicalRDD and drops its blocks with
+    ``SparkContext.unpersistRDD``: ``RDD.unpersist`` makes the same call
+    but first logs a WARN that a locally checkpointed RDD cannot be
+    recomputed, every round, for an RDD nothing reads again. Swallows
+    any reflection miss, since retention is a memory-pressure concern,
+    never a correctness one."""
     try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+        rdd_id = df._jdf.queryExecution().analyzed().rdd().id()
+        df.sparkSession.sparkContext._jsc.sc().unpersistRDD(rdd_id, False)
     except Exception:
         pass
 

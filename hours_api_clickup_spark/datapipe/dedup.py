@@ -26,8 +26,9 @@ grams, the first 32 bits of md5 for variable-length tokens, and affine
 literals baked into the plan). DuckDB reproduces the full pipeline
 bit-for-bit — the generated oracles live in ``minhash_lsh_oracle_sql``
 and ``simhash_oracle_sql``, so the driver's hash-match gate covers the
-LSH families end-to-end, not just rows-only. No UDFs; the bulk paths
-stay in whole-stage codegen.
+LSH families end-to-end, not just rows-only. The MinHash signer is the
+one Python pass (Arrow-batched numpy, the same integer algebra); the
+rest stays in whole-stage codegen.
 """
 
 from __future__ import annotations
@@ -76,19 +77,10 @@ def affine_constants(n: int, salt: int) -> list[tuple[int, int]]:
     return out
 
 
-def portable_gram_hash(txt: Column, i: Column, k: int) -> Column:
-    """Polynomial hash mod 2³¹ of the k characters of ``txt`` starting at
-    0-based offset ``i`` — unrolled (k is a plan literal), so the whole
-    thing is codegen'd builtins with no interpreted lambdas."""
-    h = F.lit(0).cast("long")
-    for j in range(k):
-        ch = F.ascii(F.substring(txt, i + F.lit(j + 1), F.lit(1)))
-        h = F.pmod(h * F.lit(GRAM_BASE) + ch, F.lit(M31))
-    return h
-
-
 def gram_hash_sql(text_expr: str, i_expr: str, k: int) -> str:
-    """DuckDB twin of ``portable_gram_hash`` (same unrolled arithmetic)."""
+    """Polynomial hash mod 2³¹ of the k characters of ``text_expr``
+    starting at 0-based offset ``i_expr``, as DuckDB SQL: the oracle
+    twin of the rolling hash in ``_sign_batches``."""
     h = "CAST(0 AS BIGINT)"
     for j in range(k):
         ch = f"ascii(substring({text_expr}, {i_expr} + {j + 1}, 1))"
@@ -99,10 +91,8 @@ def gram_hash_sql(text_expr: str, i_expr: str, k: int) -> str:
 def _min_matches(threshold: float, num_hashes: int) -> int:
     """The sketch prefilter's integer cutoff — matching minhash
     components ≥ ceil((threshold − margin)·K). ONE definition: the
-    Spark prefilter, the DuckDB oracle, and both persisted-index paths
-    must stay bit-identical or the hash-match gate / the
-    incremental-≡-batch property silently diverge (review r8: four
-    copies of this formula)."""
+    shared verifier (``_verified_pairs``) and the DuckDB oracle must
+    stay bit-identical or the hash-match gate silently diverges."""
     est_margin = 0.2
     return max(0, math.ceil((threshold - est_margin) * num_hashes - 1e-9))
 
@@ -196,82 +186,22 @@ def ngram_jaccard_pairs(
 # ---------------------------------------------------------------------------
 
 
-def portable_shingle_hash(sh: Column) -> Column:
-    """Polynomial hash mod 2³¹ of a standalone shingle STRING — exactly
-    ``portable_gram_hash`` evaluated over txt[i:i+k]'s characters, so a
-    per-row signature is component-comparable with the bulk path and
-    the persisted doc index. Interpreted HOF: per-row use only."""
-    return F.aggregate(
-        F.sequence(F.lit(1), F.length(sh)),
-        F.lit(0).cast("long"),
-        lambda h, j: F.pmod(
-            h * F.lit(GRAM_BASE) + F.ascii(F.substring(sh, j, F.lit(1))),
-            F.lit(M31),
-        ),
-    )
+def _sign_batches(k: int, num_hashes: int, cols: tuple[str, ...]):
+    """The Arrow-batched numpy MinHash signer behind ``_signatures``.
 
+    One flat segmented pass per Arrow batch: the code points of every
+    doc concatenate into one array, the k-pass rolling polynomial gram
+    hash (``gram_hash_sql``'s arithmetic) runs once over gather indices,
+    per-doc sorted-unique gram sets come from one lexsort + boundary
+    mask, and the K minhash mins are K ``np.minimum.reduceat`` passes
+    over the flat unique-gram array. The only per-doc work is the
+    utf-32 encode of each string. Output leaves as Arrow list arrays
+    built from flat values + offsets, never as per-row Python lists.
 
-def minhash_signature(
-    shingles: Column, num_hashes: int = DEFAULT_NUM_HASHES
-) -> Column:
-    """K-permutation MinHash signature as a single column expression:
-    per permutation s, min over shingles of
-    (a_s·portable_shingle_hash(sh)+b_s) mod 2³¹ — the SAME hash family
-    and constants as ``_sig_frame``, so these signatures are
-    component-comparable with ``minhash_lsh_pairs`` and the persisted
-    doc index (review r8: the md5_hash32 family this used before made
-    per-row signatures silently incomparable — ~0/64 components matched
-    even for identical text, killing the ≥min-matches prefilter;
-    parity is now pinned by test). Empty shingle sets get a
-    per-permutation sentinel (≥ 2³¹, outside the hash range) so they
-    only ever collide with other empties.
-
-    Note: higher-order functions evaluate interpreted (outside codegen);
-    fine for per-row use, but the bulk path in minhash_lsh_pairs uses the
-    explode+groupBy form below, which stays in whole-stage codegen."""
-    consts = affine_constants(num_hashes, MINHASH_SALT)
-    base = F.transform(shingles, lambda sh: portable_shingle_hash(sh))
-
-    def _perm_min(a: int, b: int) -> Column:
-        # factory closure, NOT default-arg capture: PySpark counts a
-        # lambda's defaults as HOF parameters, so the old
-        # ``lambda h, a=a, b=b`` form was an invalid 3-arg transform
-        # lambda — the function failed on FIRST USE (review r8: it had
-        # no internal caller and no test, so nothing caught it)
-        return F.array_min(
-            F.transform(base, lambda h: F.pmod(h * a + b, F.lit(M31)))
-        )
-
-    mins = [
-        F.coalesce(_perm_min(a, b), F.lit(M31 + s))
-        for s, (a, b) in enumerate(consts)
-    ]
-    return F.array(*mins)
-
-
-def _sign_batches(k: int, num_hashes: int, mode: str, vdim_cols):
-    """Factory for the Arrow-batched numpy signer shared by
-    ``_sig_frame`` / ``_sig_frame_thin`` / ``_gset_frame``.
-
-    Same integer algebra as the exploded-gram Catalyst form it replaced
-    (``portable_gram_hash`` + per-permutation pmod mins). r12 made it a
-    per-document numpy pass (29.7 s task time → ~1 s at sf0.1); r13
-    (VERDICT r12 #8, guide §4.2) folds the per-document Python loop
-    into ONE flat segmented pass per Arrow batch: code points of every
-    doc concatenate into one array, the k-pass rolling polynomial runs
-    once over gather indices, per-doc sorted-unique gram sets come from
-    one lexsort + boundary mask, and the K minhash mins are K
-    ``np.minimum.reduceat`` passes over the flat unique-gram array. The
-    only remaining per-doc work is the utf-32 encode of each string.
-    Output leaves as Arrow — the gset column is built directly from the
-    flat values + offsets (``pa.ListArray.from_arrays``), never as
-    per-row Python lists (the old ``tolist()`` materialized millions of
-    Python ints per batch).
-
-    ``mode``: 'full' → m0..m{K-1} + gset; 'thin' → mins only;
-    'gset' → gset only. Gram sets come out sorted-unique — every
-    consumer treats them as sets (array_intersect/union, the DuckDB
-    list-set oracle), exactly as with collect_set's arbitrary order.
+    Emits ``did`` and those of ``sa`` (the K minhashes) and ``gset``
+    (the sorted-unique gram hashes) that ``cols`` names. Every consumer
+    treats gram sets as sets (array_intersect/union, the DuckDB
+    list-set oracle).
     """
     import numpy as np
 
@@ -283,6 +213,11 @@ def _sign_batches(k: int, num_hashes: int, mode: str, vdim_cols):
         import numpy as np
         import pyarrow as pa
 
+        def lists(values, offsets):
+            return pa.ListArray.from_arrays(
+                pa.array(offsets, type=pa.int32()), pa.array(values, type=pa.int64())
+            )
+
         for rb in batches:
             dids = rb.column(rb.schema.get_field_index("did"))
             txts = rb.column(rb.schema.get_field_index("txt")).to_pylist()
@@ -290,8 +225,7 @@ def _sign_batches(k: int, num_hashes: int, mode: str, vdim_cols):
             keep_idx, code_chunks, n_grams = [], [], []
             for i, txt in enumerate(txts):
                 if txt is None or len(txt) < k:
-                    # same row-universe as the exploded form: docs with
-                    # no gram produce no signature row
+                    # a doc with no gram has no signature row
                     continue
                 keep_idx.append(i)
                 code_chunks.append(
@@ -300,6 +234,7 @@ def _sign_batches(k: int, num_hashes: int, mode: str, vdim_cols):
                 n_grams.append(len(txt) - k + 1)
             if not keep_idx:
                 continue
+            n_docs = len(keep_idx)
             codes = np.concatenate(code_chunks).astype(np.int64)
             n_grams = np.asarray(n_grams, dtype=np.int64)
             doc_code_starts = np.concatenate(
@@ -308,7 +243,7 @@ def _sign_batches(k: int, num_hashes: int, mode: str, vdim_cols):
             total = int(n_grams.sum())
             # flat gram positions: doc i contributes code offsets
             # [start_i, start_i + n_i)
-            gram_doc = np.repeat(np.arange(len(keep_idx)), n_grams)
+            gram_doc = np.repeat(np.arange(n_docs), n_grams)
             gram_starts = np.concatenate(([0], np.cumsum(n_grams)[:-1]))
             pos = (
                 np.arange(total, dtype=np.int64)
@@ -326,109 +261,194 @@ def _sign_batches(k: int, num_hashes: int, mode: str, vdim_cols):
             first[0] = True
             first[1:] = (hs[1:] != hs[:-1]) | (ds[1:] != ds[:-1])
             uniq = hs[first]
-            uniq_doc = ds[first]
-            uniq_counts = np.bincount(uniq_doc, minlength=len(keep_idx))
-            uniq_starts = np.concatenate(([0], np.cumsum(uniq_counts)[:-1]))
+            uniq_counts = np.bincount(ds[first], minlength=n_docs)
             out_cols: dict[str, pa.Array] = {
                 "did": dids.take(pa.array(keep_idx, type=pa.int32()))
             }
-            if mode != "gset":
+            if "sa" in cols:
+                uniq_starts = np.concatenate(([0], np.cumsum(uniq_counts)[:-1]))
+                sa = np.empty((n_docs, num_hashes), dtype=np.int64)
                 for s in range(num_hashes):
-                    v = (uniq * A[s] + B[s]) % M31
-                    out_cols[f"m{s}"] = pa.array(
-                        np.minimum.reduceat(v, uniq_starts), type=pa.int64()
-                    )
-            if mode != "thin":
-                offsets = np.concatenate(([0], np.cumsum(uniq_counts)))
-                out_cols["gset"] = pa.ListArray.from_arrays(
-                    pa.array(offsets, type=pa.int32()),
-                    pa.array(uniq, type=pa.int64()),
-                )
+                    sa[:, s] = np.minimum.reduceat((uniq * A[s] + B[s]) % M31, uniq_starts)
+                out_cols["sa"] = lists(sa.ravel(), np.arange(n_docs + 1) * num_hashes)
+            if "gset" in cols:
+                out_cols["gset"] = lists(uniq, np.concatenate(([0], np.cumsum(uniq_counts))))
             yield pa.RecordBatch.from_pydict(out_cols)
 
     return sign
 
 
-def _sign_schema(texts: DataFrame, num_hashes: int, mode: str):
-    from pyspark.sql.types import (
-        ArrayType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    fields = [StructField("did", texts.schema["did"].dataType)]
-    if mode != "gset":
-        fields += [StructField(f"m{s}", LongType()) for s in range(num_hashes)]
-    if mode != "thin":
-        fields += [StructField("gset", ArrayType(LongType()))]
-    return StructType(fields)
-
-
-def _sign_texts(
-    texts: DataFrame, k: int, num_hashes: int, mode: str
+def _signatures(
+    df: DataFrame, id_col: str, text_col: str, k: int, num_hashes: int, mode: str = "full"
 ) -> DataFrame:
-    """Run the vectorized signer over a prepared (did, txt) frame."""
-    return texts.mapInArrow(
-        _sign_batches(k, num_hashes, mode, None),
-        schema=_sign_schema(texts, num_hashes, mode),
-    )
+    """``(did, sa, gset)`` for every doc with at least one k-gram: ``sa``
+    is the ``array<long>`` of K minhashes, ``gset`` the distinct gram
+    hashes — the rows the persisted ``sig/`` tier stores. One
+    ``mapInArrow`` pass after a round-robin ``spread``; no gram explode
+    and no signing shuffle. ``mode`` 'sa' drops ``gset`` (K longs per
+    doc), 'gset' drops ``sa``.
 
+    A query that reads the signatures more than once pins them with a
+    lazy ``localCheckpoint(eager=False)``: its first job fills the pin,
+    where an eager pin runs one more job (counted on every pair query
+    and index append at sf0.1)."""
+    from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
-def _signed(
-    df: DataFrame, id_col: str, text_col: str, k: int, num_hashes: int, mode: str
-) -> DataFrame:
     texts = spread(df).select(_c(id_col).alias("did"), _c(text_col).alias("txt"))
-    return _sign_texts(texts, k, num_hashes, mode)
-
-
-def _sig_frame(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int,
-    num_hashes: int,
-) -> DataFrame:
-    """(did, m0..m{K-1}, gset): the shingle→minhash reduction shared by
-    the one-shot pair query and the persisted doc index — one Arrow-
-    batched numpy pass (``_sign_batches``), no gram explode, no signing
-    shuffle at all (the old exploded form needed the groupBy exchange)."""
-    return _signed(df, id_col, text_col, k, num_hashes, "full")
-
-
-def _sig_frame_thin(
-    df: DataFrame, id_col: str, text_col: str, k: int, num_hashes: int
-) -> DataFrame:
-    """``_sig_frame`` without the gram-set column — K longs per doc.
-    The rejoin verification path (``minhash_lsh_pairs(rejoin_grams=
-    True)``) uses this and re-derives gram sets for CANDIDATE docs
-    only."""
-    return _signed(df, id_col, text_col, k, num_hashes, "thin")
+    cols = ("sa", "gset") if mode == "full" else (mode,)
+    # every row has an ``sa``; a non-null one is the schema ``sig/`` stores
+    schema = StructType(
+        [StructField("did", texts.schema["did"].dataType)]
+        + [StructField(c, ArrayType(LongType()), nullable=c == "gset") for c in cols]
+    )
+    return texts.mapInArrow(_sign_batches(k, num_hashes, cols), schema=schema)
 
 
 def _band_frame(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
     """(did, band, bucket) rows from a signature frame: Horner fold of
-    each band's minhashes mod 2³¹ — portable integer algebra."""
+    each band's minhashes ``sa[j]`` mod 2³¹ — portable integer algebra."""
     rows_per_band = num_hashes // bands
 
-    def band_bucket(cols: list[Column]) -> Column:
+    def band_bucket(b: int) -> Column:
         acc = F.lit(0).cast("long")
-        for m in cols:
-            acc = F.pmod(acc * F.lit(KNUTH_A) + m, F.lit(M31))
+        for j in range(b * rows_per_band, (b + 1) * rows_per_band):
+            acc = F.pmod(acc * F.lit(KNUTH_A) + F.col("sa")[j], F.lit(M31))
         return acc
 
     band_structs = [
-        F.struct(
-            F.lit(b).alias("band"),
-            band_bucket(
-                [F.col(f"m{b * rows_per_band + j}") for j in range(rows_per_band)]
-            ).alias("bucket"),
-        )
+        F.struct(F.lit(b).alias("band"), band_bucket(b).alias("bucket"))
         for b in range(bands)
     ]
     return sig.select(
         "did", F.explode(F.array(*band_structs)).alias("bb")
     ).select("did", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
+
+
+def _bucket_pairs(a: DataFrame, b: DataFrame, ordered: bool = True) -> DataFrame:
+    """Distinct (id_a, id_b) candidates: band rows of ``a`` and ``b``
+    that share a (band, bucket). The join shuffles on the bucket, so
+    its cost is Σ bucket² rather than n². ``ordered`` keeps id_a < id_b
+    for a self-join; otherwise id_a is an ``a`` doc and id_b a ``b``
+    doc."""
+    a, b = a.alias("a"), b.alias("b")
+    on = (F.col("a.band") == F.col("b.band")) & (F.col("a.bucket") == F.col("b.bucket"))
+    if ordered:
+        on = on & (F.col("a.did") < F.col("b.did"))
+    return (
+        a.join(b, on)
+        .select(F.col("a.did").alias("id_a"), F.col("b.did").alias("id_b"))
+        .dropDuplicates(["id_a", "id_b"])
+    )
+
+
+def _probe_pairs(bands: DataFrame, probe: DataFrame) -> DataFrame:
+    """Distinct (id_a < id_b) candidates between the ``bands`` rows and
+    the (small, broadcast) ``probe`` band rows, so the ``bands`` scan
+    never shuffles. A doc is never its own candidate."""
+    return (
+        bands.join(
+            F.broadcast(probe.select(F.col("did").alias("bdid"), "band", "bucket")),
+            ["band", "bucket"],
+        )
+        .filter(F.col("did") != F.col("bdid"))
+        .select(
+            F.least(F.col("did"), F.col("bdid")).alias("id_a"),
+            F.greatest(F.col("did"), F.col("bdid")).alias("id_b"),
+        )
+        .dropDuplicates(["id_a", "id_b"])
+    )
+
+
+def _verified_pairs(
+    sig: DataFrame,
+    cand: DataFrame,
+    num_hashes: int,
+    threshold: float,
+    grams=None,
+) -> DataFrame:
+    """(id_a, id_b, jaccard) of the candidate pairs ``cand`` whose exact
+    gram-set Jaccard is ≥ ``threshold``: the two-stage verification
+    every MinHash pair query shares.
+
+    Stage 1 joins only the narrow ``sa`` arrays of ``sig`` (did, sa, …)
+    and keeps pairs with at least ``_min_matches`` equal minhash
+    components. The fraction of matching components is an unbiased
+    Jaccard estimator and the margin keeps true positives (K=64,
+    j ≥ 0.7: P(estimate < 0.5) < 3e-4), so the mass of low-j bucket
+    collisions is discarded without shipping a gram set. The cutoff is
+    an integer count, never a float compare, so the oracle reproduces
+    it exactly.
+
+    Stage 2 computes exact Jaccard over the ``gset`` rows of the
+    survivors. ``grams`` is where they come from: None reads them from
+    ``sig`` itself; otherwise ``grams(ids)`` returns the (did, gset)
+    rows for the distinct survivor ids, which are pinned because both
+    that lookup and the final join read them."""
+    min_matches = _min_matches(threshold, num_hashes)
+    matches = F.aggregate(
+        F.zip_with(
+            F.col("sa_a"), F.col("sa_b"), lambda x, y: F.when(x == y, 1).otherwise(0)
+        ),
+        F.lit(0),
+        lambda acc, x: acc + x,
+    )
+
+    def side(frame: DataFrame, col: str, s: str) -> DataFrame:
+        return frame.select(F.col("did").alias(f"id_{s}"), F.col(col).alias(f"{col}_{s}"))
+
+    survivors = (
+        cand.join(side(sig, "sa", "a"), "id_a")
+        .join(side(sig, "sa", "b"), "id_b")
+        .filter(matches >= F.lit(min_matches))
+        .select("id_a", "id_b")
+    )
+    if grams is None:
+        gsets = sig
+    else:
+        survivors = survivors.localCheckpoint(eager=False)
+        gsets = grams(
+            survivors.select(F.explode(F.array("id_a", "id_b")).alias("did")).dropDuplicates()
+        )
+    return (
+        survivors.join(side(gsets, "gset", "a"), "id_a")
+        .join(side(gsets, "gset", "b"), "id_b")
+        .select(
+            "id_a", "id_b", jaccard_sim(F.col("gset_a"), F.col("gset_b")).alias("jaccard")
+        )
+        .filter(F.col("jaccard") >= threshold)
+    )
+
+
+def _minhash_pairs(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    k: int,
+    num_hashes: int,
+    bands: int,
+    threshold: float,
+    rejoin_grams: bool,
+    bench_pred=None,
+) -> DataFrame:
+    """The one-shot MinHash pair query behind ``minhash_lsh_pairs``
+    (``bench_pred`` None: a band self-join) and
+    ``minhash_cross_corpus_pairs`` (a join of opposite sides)."""
+    sig = _signatures(
+        df, id_col, text_col, k, num_hashes, "sa" if rejoin_grams else "full"
+    ).localCheckpoint(eager=False)
+    banded = _band_frame(sig, num_hashes, bands)
+    if bench_pred is None:
+        cand = _bucket_pairs(banded, banded)
+    else:
+        bench = bench_pred(F.col("did"))
+        cand = _bucket_pairs(banded.filter(~bench), banded.filter(bench), ordered=False)
+    grams = None
+    if rejoin_grams:
+        def grams(ids: DataFrame) -> DataFrame:
+            cand_docs = df.join(ids.withColumnRenamed("did", id_col), id_col, "left_semi")
+            return _signatures(cand_docs, id_col, text_col, k, num_hashes, "gset")
+
+    return _verified_pairs(sig, cand, num_hashes, threshold, grams)
 
 
 def minhash_lsh_pairs(
@@ -443,175 +463,37 @@ def minhash_lsh_pairs(
 ) -> DataFrame:
     """Near-dup pairs via MinHash+LSH, verified with exact Jaccard.
 
-    Plan shape (the scale path — every stage codegen'd, no interpreted
-    higher-order functions in the bulk flow):
-      1. scan → shingles → explode → one polynomial gram hash per shingle
-      2. groupBy(doc) with K min-aggregates + collect_set of gram
-         hashes (map-side partial agg; the shuffle carries K longs plus
-         the distinct gram-hash set per doc — a measured trade, see the
-         inline comment below)
-      3. B band-bucket hashes → explode → self-join on (band, bucket):
+    Plan shape:
+      1. one ``mapInArrow`` pass signs every doc: K minhashes plus the
+         distinct gram-hash set (``_signatures``; no gram explode, no
+         signing shuffle), pinned once for the query
+      2. B band-bucket hashes → explode → self-join on (band, bucket):
          shuffle keyed on the bucket, so cost is Σ bucket² not n²
-      4. candidate pairs → join shingle sets back by id → exact-Jaccard
-         verification (precision 1.0 by construction)
+      3. candidate pairs → match-count prefilter on the minhashes →
+         exact Jaccard over the gram sets (``_verified_pairs``;
+         precision 1.0 by construction)
 
     Recall follows the LSH S-curve 1-(1-j^r)^b, r = num_hashes/bands.
     Docs with no shingles (len < k) never band — they have no near-dups
     above any sane threshold; exact dedup handles identical empties.
+    Jaccard over gram hashes equals Jaccard over the grams up to a
+    ~len²/2³¹ collision probability, and the oracle uses the same hashes.
+
+    The pinned signatures carry each doc's gram set (≈ doc length·8 B,
+    roughly the text itself), so verification needs no second pass over
+    the corpus. ``rejoin_grams=True`` pins only the K minhashes (~0.5 KB
+    per doc) and signs the docs of the prefilter survivors a second time
+    for their gram sets: one extra corpus scan semi-joined to the
+    candidate ids, for a pin that no longer grows with the text. Output
+    is identical; ``build_corpus`` switches to it past
+    ``NEAR_DEDUP_REJOIN_MIN_DOCS``.
 
     Hashing is the engine-portable int64 family (module header):
     ``minhash_lsh_oracle_sql`` generates a DuckDB query that reproduces
     this exact output, including the banding and the sketch prefilter.
     """
-    # ONE shuffle computes both the K-minhash signature and the distinct
-    # gram-hash set (_sig_frame: explode-offset grams + K min-aggregates,
-    # all codegen'd — array-lambda HOFs run interpreted and were ~5×
-    # slower here; duplicate grams are fine since min over a multiset ==
-    # min over its set). Shipping collect_set(h) through this shuffle is
-    # a measured trade (O(distinct-grams) longs per doc ≈ doc length·8 B
-    # — roughly the text itself): it funds exact-Jaccard verification
-    # without a second join back to the corpus, and compares long arrays
-    # JVM-side instead of rebuilding string shingles. Jaccard over gram
-    # hashes equals Jaccard over the grams up to a ~len²/2³¹ collision
-    # probability — and is the same in the oracle, which uses the same
-    # hashes. (Re-joining gram sets only for post-prefilter candidates
-    # would shrink this shuffle but re-scan + re-shingle the corpus; at
-    # sf0.1 the one-shuffle form benches faster.)
-    #
-    # ``rejoin_grams=True`` flips that trade for LARGE corpora (VERDICT
-    # r10 #4): the signing shuffle carries only the K minhash longs per
-    # doc (~0.5 KB vs the text-sized gram set — at the 1M-doc soak the
-    # shipped form pushed ≈25 GB of gram rows through one shuffle +
-    # checkpoint), and gram sets are re-derived by ONE extra corpus
-    # scan semi-joined to the post-prefilter candidate ids — O(corpus)
-    # scan but O(candidates) shuffle. Output is IDENTICAL (same gram
-    # hashes, same Jaccard, same oracle); only the physical plan moves.
-    # build_corpus flips it automatically past NEAR_DEDUP_REJOIN_MIN_DOCS.
-    if rejoin_grams:
-        sig = _sig_frame_thin(
-            df, id_col, text_col, k, num_hashes
-        ).localCheckpoint(eager=False)
-    else:
-        sig = _sig_frame(df, id_col, text_col, k, num_hashes).localCheckpoint(
-            eager=False
-        )
-    banded = _band_frame(sig, num_hashes, bands)
-
-    a = banded.alias("a")
-    b = banded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.did") < F.col("b.did")),
-        )
-        .select(F.col("a.did").alias("id_a"), F.col("b.did").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-
-    if not rejoin_grams:
-        return _verified_pairs(sig, cand, num_hashes, threshold)
-    return _rejoin_verified_pairs(
-        df, id_col, text_col, k, sig, cand, num_hashes, threshold
-    )
-
-
-def _rejoin_verified_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int,
-    sig: DataFrame,
-    cand: DataFrame,
-    num_hashes: int,
-    threshold: float,
-) -> DataFrame:
-    """The ``rejoin_grams`` verification tail shared by the one-corpus
-    and cross-corpus pair queries: sketch-prefilter on the thin
-    signature frame, then re-derive gram sets for candidate docs only
-    (one corpus scan semi-joined to the candidate ids)."""
-    # checkpoint the prefiltered pairs: consumed twice (candidate-id
-    # seed + the verify join) and cheap (two ids per row)
-    cand_est = _sketch_prefilter(sig, cand, num_hashes, threshold).localCheckpoint(
-        eager=False
-    )
-    cand_ids = (
-        cand_est.select(F.col("id_a").alias("did"))
-        .unionByName(cand_est.select(F.col("id_b").alias("did")))
-        .distinct()
-    )
-    texts = spread(df).select(
-        _c(id_col).alias("did"), _c(text_col).alias("txt")
-    )
-    gsets = _sign_texts(
-        texts.join(cand_ids, "did", "left_semi"), k, DEFAULT_NUM_HASHES, "gset"
-    )
-    return _jaccard_verify(cand_est, gsets, threshold)
-
-
-def _verified_pairs(
-    sig: DataFrame, cand: DataFrame, num_hashes: int, threshold: float
-) -> DataFrame:
-    """Sketch prefilter + exact-Jaccard verification of candidate
-    (id_a, id_b) pairs against the signature frame — shared by the
-    one-corpus and cross-corpus pair queries.
-
-    Sketch prefilter before the (heavier) exact verification: the
-    fraction of matching minhash components is an unbiased Jaccard
-    estimator; a generous margin keeps true-positives. With K=64 and
-    j ≥ 0.7, P(estimate < 0.5) < 3e-4 — while the mass of low-j bucket
-    collisions is discarded without ever shipping their gram sets.
-    The cutoff is an integer count of matching components (never a
-    float compare), so the oracle reproduces it exactly."""
-    return _jaccard_verify(
-        _sketch_prefilter(sig, cand, num_hashes, threshold),
-        sig.select("did", "gset"),
-        threshold,
-    )
-
-
-def _sketch_prefilter(
-    sig: DataFrame, cand: DataFrame, num_hashes: int, threshold: float
-) -> DataFrame:
-    """Minhash-component match-count prefilter over candidate pairs —
-    the first half of ``_verified_pairs`` (docstring there)."""
-    min_matches = _min_matches(threshold, num_hashes)
-    sig_arr = sig.select(
-        "did", F.array(*[F.col(f"m{s}") for s in range(num_hashes)]).alias("sa")
-    )
-    matches = F.aggregate(
-        F.zip_with(
-            F.col("sa_a"), F.col("sa_b"),
-            lambda x, y: F.when(x == y, 1).otherwise(0),
-        ),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    )
-    return (
-        cand.join(sig_arr.select(F.col("did").alias("id_a"), F.col("sa").alias("sa_a")), "id_a")
-        .join(sig_arr.select(F.col("did").alias("id_b"), F.col("sa").alias("sa_b")), "id_b")
-        .filter(matches >= F.lit(min_matches))
-        .select("id_a", "id_b")
-    )
-
-
-def _jaccard_verify(
-    cand_est: DataFrame, gset_frame: DataFrame, threshold: float
-) -> DataFrame:
-    """Exact-Jaccard verification of prefiltered pairs against a
-    (did, gset) frame — the second half of ``_verified_pairs``."""
-    gs_a = gset_frame.select(F.col("did").alias("id_a"), F.col("gset").alias("gs_a"))
-    gs_b = gset_frame.select(F.col("did").alias("id_b"), F.col("gset").alias("gs_b"))
-    return (
-        cand_est.join(gs_a, "id_a")
-        .join(gs_b, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            jaccard_sim(F.col("gs_a"), F.col("gs_b")).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
+    return _minhash_pairs(
+        df, id_col, text_col, k, num_hashes, bands, threshold, rejoin_grams
     )
 
 
@@ -633,42 +515,19 @@ def minhash_cross_corpus_pairs(
     predicate; output rows are (id_a = train doc, id_b = benchmark
     doc, jaccard ≥ threshold).
 
-    Same signature/banding machinery as ``minhash_lsh_pairs`` (one
-    shuffle signs both sides together), but the candidate join
-    requires OPPOSITE sides, so within-side bucket collisions — the
-    bulk of a self-joined corpus — never become candidates, never hit
-    the sketch prefilter, never fetch gram sets. At 100 TB train × a
-    fixed benchmark set this makes the pair join's probe side the
-    benchmark's banded rows (tiny), broadcastable by the planner.
+    The same pipeline as ``minhash_lsh_pairs`` (one signing pass over
+    both sides), but the candidate join requires OPPOSITE sides, so
+    within-side bucket collisions — the bulk of a self-joined corpus —
+    never become candidates, never hit the sketch prefilter, never
+    fetch gram sets. At 100 TB train × a fixed benchmark set this makes
+    the pair join's probe side the benchmark's banded rows (tiny),
+    broadcastable by the planner.
 
     ``rejoin_grams`` as on ``minhash_lsh_pairs`` — here the candidate
-    set is train×benchmark only, so the rejoined gram scan touches a
-    vanishing doc fraction while the signing shuffle drops from
-    corpus-sized to 64 longs/doc."""
-    if rejoin_grams:
-        sig = _sig_frame_thin(
-            df, id_col, text_col, k, num_hashes
-        ).localCheckpoint(eager=False)
-    else:
-        sig = _sig_frame(df, id_col, text_col, k, num_hashes).localCheckpoint(
-            eager=False
-        )
-    banded = _band_frame(sig, num_hashes, bands)
-    a = banded.filter(~bench_pred(F.col("did"))).alias("a")
-    b = banded.filter(bench_pred(F.col("did"))).alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket")),
-        )
-        .select(F.col("a.did").alias("id_a"), F.col("b.did").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    if not rejoin_grams:
-        return _verified_pairs(sig, cand, num_hashes, threshold)
-    return _rejoin_verified_pairs(
-        df, id_col, text_col, k, sig, cand, num_hashes, threshold
+    set is train×benchmark only, so the second signing pass touches a
+    vanishing doc fraction."""
+    return _minhash_pairs(
+        df, id_col, text_col, k, num_hashes, bands, threshold, rejoin_grams, bench_pred
     )
 
 
@@ -1288,15 +1147,9 @@ def doc_neardup_index_write(
     spark = df.sparkSession
     with storage.maintenance_lease(spark, path, "doc_neardup_index_write"):
         doc_neardup_index_recover(spark, path)
-        sig = _sig_frame(df, id_col, text_col, k, num_hashes).localCheckpoint()
-        sig_arr = sig.select(
-            "did",
-            F.array(*[F.col(f"m{s}") for s in range(num_hashes)]).alias("sa"),
-            "gset",
-            F.lit(0).alias("seq"),
-        )
+        sig = _signatures(df, id_col, text_col, k, num_hashes).localCheckpoint(eager=False)
         band_rows = _band_frame(sig, num_hashes, bands).withColumn("seq", F.lit(0))
-        _commit_doc_tiers(spark, path, sig_arr, band_rows, {})
+        _commit_doc_tiers(spark, path, sig.withColumn("seq", F.lit(0)), band_rows, {})
 
 
 def _commit_doc_tiers(spark, path: str, sig: DataFrame, bands: DataFrame, consumed: dict) -> None:
@@ -1343,8 +1196,9 @@ def doc_neardup_index_append(
     Scale shape: only the BATCH is shingled (O(batch) text read); its
     band rows are BROADCAST against the persisted bands scan, so the
     corpus side never shuffles — and the corpus bytes touched are the
-    narrow (did, band, bucket) rows plus sig/gset rows of candidate
-    dids only (semi-join pruned), never the corpus text.
+    narrow (did, band, bucket) rows, the ``sa`` column of the sig tier,
+    and the gram sets of the prefilter survivors only (``_index_grams``),
+    never the corpus text.
     """
     spark = batch.sparkSession
     # every entry point recovers first: mid-swap rollback, and a
@@ -1353,17 +1207,10 @@ def doc_neardup_index_append(
     seqs = _doc_seqs(spark, path)
     if seq is None:
         seq = 1 + max(seqs["bands"] | seqs["sig"], default=-1)
-    min_matches = _min_matches(threshold, num_hashes)
 
-    bsig = _sig_frame(batch, id_col, text_col, k, num_hashes).localCheckpoint()
-    # bband / bsig_arr are cheap projections OF the bsig checkpoint:
-    # each consumer re-reads the checkpointed RDD, never the signer
+    bsig = _signatures(batch, id_col, text_col, k, num_hashes).localCheckpoint(eager=False)
+    # the band rows are a projection of the pinned signatures
     bband = _band_frame(bsig, num_hashes, bands)
-    bsig_arr = bsig.select(
-        "did",
-        F.array(*[F.col(f"m{s}") for s in range(num_hashes)]).alias("sa"),
-        "gset",
-    )
 
     def corpus(tier: str, empty: DataFrame) -> DataFrame:
         if not any(s < seq for s in seqs[tier]):
@@ -1375,122 +1222,48 @@ def doc_neardup_index_append(
     # tombstoned documents stop producing candidates — the delete path's
     # read-side contract (their band rows stay on disk until a compact)
     old_bands = _minus_tombstones(corpus("bands", bband.limit(0)), path)
-    # batch bands broadcast → the corpus bands scan stays map-side
-    cross = (
-        old_bands.join(
-            F.broadcast(bband.select(
-                F.col("did").alias("bdid"), "band", "bucket"
-            )),
-            ["band", "bucket"],
-        )
-        .select(
-            F.least(F.col("did"), F.col("bdid")).alias("id_a"),
-            F.greatest(F.col("did"), F.col("bdid")).alias("id_b"),
-        )
+    cand = (
+        _probe_pairs(old_bands, bband)
+        .unionByName(_bucket_pairs(bband, bband))
         .dropDuplicates(["id_a", "id_b"])
     )
-    a = bband.alias("a")
-    b = bband.alias("b")
-    self_pairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.did") < F.col("b.did")),
-        )
-        .select(F.col("a.did").alias("id_a"), F.col("b.did").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    cand = cross.unionByName(self_pairs).dropDuplicates(["id_a", "id_b"])
-
-    verified = _verify_candidate_pairs(
-        corpus("sig", bsig_arr.limit(0)), cand, bsig_arr, min_matches, threshold
+    old_sig = corpus("sig", bsig.limit(0)).select("did", "sa", "gset")
+    verified = _verified_pairs(
+        old_sig.unionByName(bsig), cand, num_hashes, threshold, _index_grams(old_sig, bsig)
     )
     bband.sortWithinPartitions("band", "bucket").write.mode("overwrite").parquet(
         f"{path}/bands/seq={seq}"
     )
-    bsig_arr.write.mode("overwrite").parquet(f"{path}/sig/seq={seq}")
+    bsig.write.mode("overwrite").parquet(f"{path}/sig/seq={seq}")
     return verified
 
 
-def _verify_candidate_pairs(
-    sig: DataFrame,
-    cand: DataFrame,
-    extra: DataFrame | None,
-    min_matches: int,
-    threshold: float,
-) -> DataFrame:
-    """Two-stage verification of candidate (id_a, id_b) pairs against
-    the signature rows ``sig`` (did, sa, gset) of the persisted index,
-    same structure as the one-shot form — bucket collisions on
-    repetitive corpora yield tens of thousands of candidates for a 10%
-    batch, and fetching their gram sets directly would stream the
-    index's heavy bytes. Stage 1 joins only the narrow ``sa`` arrays
-    (column-pruned sig scan, 64 longs/row) and applies the integer
-    match-count prefilter; stage 2 fetches gram sets for the surviving
-    pairs ONLY, via a bounded IN pushdown onto the did-sorted sig files
-    (row-group pruned). ``extra`` carries (did, sa, gset) rows not yet
-    in the index (an arriving batch); None when every candidate id is
-    already indexed."""
-    all_sa = sig.select("did", "sa")
-    if extra is not None:
-        all_sa = all_sa.unionByName(extra.select("did", "sa"))
-    matches = F.aggregate(
-        F.zip_with(
-            F.col("sa_a"), F.col("sa_b"),
-            lambda x, y: F.when(x == y, 1).otherwise(0),
-        ),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    )
-    survivors = (
-        cand.join(
-            all_sa.select(F.col("did").alias("id_a"), F.col("sa").alias("sa_a")),
-            "id_a",
-        )
-        .join(
-            all_sa.select(F.col("did").alias("id_b"), F.col("sa").alias("sa_b")),
-            "id_b",
-        )
-        .filter(matches >= F.lit(min_matches))
-        .select("id_a", "id_b")
-        .localCheckpoint()
-    )
-    # Gram fetch for surviving ids only. Normal corpora: the survivor-id
-    # set is small (batch size x near-dup rate), so an IN list pushed
-    # into the did-sorted sig files skips whole row groups of heavy gset
-    # bytes. One bounded collect (limit(cap+1)) decides; over the cap,
-    # an adversarial all-duplicates corpus, the ids stay distributed
-    # in a semi-join recomputed from the survivors checkpoint.
-    surv_id_df = (
-        survivors.select(F.explode(F.array("id_a", "id_b")).alias("did"))
-        .dropDuplicates()
-    )
-    gsets = sig.select("did", "gset")
-    surv_head = surv_id_df.limit(200_001).collect()
-    if len(surv_head) <= 200_000:
-        surv_ids = [r[0] for r in surv_head]
-        gsets = gsets.filter(F.col("did").isin(surv_ids))
-    else:
-        gsets = gsets.join(surv_id_df, "did", "semi")
-    if extra is not None:
-        gsets = gsets.unionByName(extra.select("did", "gset"))
-    return (
-        survivors.join(
-            gsets.select(F.col("did").alias("id_a"), F.col("gset").alias("gs_a")),
-            "id_a",
-        )
-        .join(
-            gsets.select(F.col("did").alias("id_b"), F.col("gset").alias("gs_b")),
-            "id_b",
-        )
-        .select(
-            "id_a",
-            "id_b",
-            jaccard_sim(F.col("gs_a"), F.col("gs_b")).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
+#: the most survivor ids whose gram sets the index fetches through an IN
+#: list; past it they stay distributed in a semi-join
+IN_LIST_CAP = 200_000
+
+
+def _index_grams(sig: DataFrame, extra: DataFrame | None = None):
+    """The stage-2 gram source of ``_verified_pairs`` for the persisted
+    index: the ``gset`` rows of the survivor ids from the did-sorted
+    ``sig`` tier, plus the ``extra`` (did, gset) rows not yet in the
+    index (an arriving batch). Stage 1 read only the narrow ``sa``
+    column, so only the survivors' heavy gram sets are streamed: one
+    bounded collect (``limit(cap+1)``) turns a normal survivor set
+    (batch size × near-dup rate) into an IN list that the scan pushes
+    down to skip whole row groups; an adversarial all-duplicates corpus
+    past ``IN_LIST_CAP`` keeps the ids distributed in a semi-join."""
+
+    def grams(ids: DataFrame) -> DataFrame:
+        head = [r[0] for r in ids.limit(IN_LIST_CAP + 1).collect()]
+        gsets = sig.select("did", "gset")
+        if len(head) <= IN_LIST_CAP:
+            gsets = gsets.filter(F.col("did").isin(head))
+        else:
+            gsets = gsets.join(ids, "did", "semi")
+        return gsets if extra is None else gsets.unionByName(extra.select("did", "gset"))
+
+    return grams
 
 
 def doc_neardup_index_pairs_for_ids(
@@ -1507,29 +1280,19 @@ def doc_neardup_index_pairs_for_ids(
     pair query: what the index, minus its tombstones, pairs a set of
     indexed ids with, at any ``seq``."""
     # roll back a crashed compact's swap / forward a crashed rebuild's
-    # joint publish first (review r7, ADVICE r8)
+    # joint publish first
     doc_neardup_index_recover(spark, path)
     if not _doc_seqs(spark, path)["bands"]:
         # a compact that folded every doc out leaves no partition to read
         return spark.createDataFrame([], "id_a long, id_b long, jaccard double")
-    min_matches = _min_matches(threshold, num_hashes)
     bands = _minus_tombstones(
         tiered.read_tier(spark, path, "bands", doc_neardup_index_recover), path
     )
-    mine = bands.join(
-        F.broadcast(ids.select(F.col(ids.columns[0]).alias("did"))), "did"
-    ).select(F.col("did").alias("bdid"), "band", "bucket")
-    cand = (
-        bands.join(F.broadcast(mine), ["band", "bucket"])
-        .filter(F.col("did") != F.col("bdid"))
-        .select(
-            F.least(F.col("did"), F.col("bdid")).alias("id_a"),
-            F.greatest(F.col("did"), F.col("bdid")).alias("id_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    mine = bands.join(F.broadcast(ids.select(F.col(ids.columns[0]).alias("did"))), "did")
     sig = tiered.read_tier(spark, path, "sig", doc_neardup_index_recover)
-    return _verify_candidate_pairs(sig, cand, None, min_matches, threshold)
+    return _verified_pairs(
+        sig, _probe_pairs(bands, mine), num_hashes, threshold, _index_grams(sig)
+    )
 
 
 def doc_neardup_tombstones(spark, path: str):

@@ -61,14 +61,16 @@ DEFAULT_REFRESH_DAYS = 60  # deploy.sh:70 (REFRESH_DAYS=60, 6-hourly job)
 #: the dimension tables ``sync_dim`` loads, one per /sync/<name> route
 DIMS = ("lists", "tasks", "accounts", "apps")
 
-#: build_corpus stage-03 crossover (VERDICT r10 #4): at or above this
-#: many gate-surviving docs the near-dedup signing pass stops shipping
-#: text-sized gram sets through its shuffle and re-derives them for
-#: candidate docs only (``minhash_lsh_pairs(rejoin_grams=True)``).
-#: Measured A/B on the soak's replica mix (identical survivors at every
-#: point): 6.9k docs shipped 11.7s / rejoin 13.1s; 14.5k 15.1/14.3;
-#: 29.6k 21.7/21.6; 75k 48.0/39.5; 722k 494.0/429.2 — crossover in the
-#: 10-30k band, ≤1.4s apart below it (COVERAGE.md stage-03 A/B table).
+#: build_corpus stage-03 crossover: at or above this many gate-surviving
+#: docs the near-dedup query pins only the K minhashes per doc, not the
+#: text-sized gram sets, and signs the prefilter survivors' docs a
+#: second time for theirs (``minhash_lsh_pairs(rejoin_grams=True)``).
+#: Measured A/B on the soak's replica mix, when the gram sets still
+#: rode a signing shuffle (before the Arrow signer; identical survivors
+#: at every point): 6.9k docs shipped 11.7s / rejoin 13.1s; 14.5k
+#: 15.1/14.3; 29.6k 21.7/21.6; 75k 48.0/39.5; 722k 494.0/429.2 —
+#: crossover in the 10-30k band, ≤1.4s apart below it (COVERAGE.md
+#: stage-03 A/B table).
 NEAR_DEDUP_REJOIN_MIN_DOCS = 30_000
 
 
@@ -615,15 +617,24 @@ def build_corpus(
             pairs = minhash_lsh_pairs(
                 docs, id_col, text_col, k=5, num_hashes=64, bands=16,
                 threshold=minhash_threshold,
-                # past the crossover the signing shuffle must not carry
-                # text-sized gram sets (VERDICT r10 #4): rejoin derives
-                # them for candidate docs only via one extra corpus scan
+                # past the crossover the pinned signatures must not hold
+                # text-sized gram sets: rejoin signs the candidate docs
+                # again for theirs, one extra corpus scan
                 rejoin_grams=n >= NEAR_DEDUP_REJOIN_MIN_DOCS,
             ).select("id_a", "id_b")
             return dup_survivors(docs.select(id_col), pairs, id_col)
 
         docs, n = _stage("03_near_dedup", _near_dedup_ids)
         manifest["stages"]["after_near_dedup"] = n
+
+        def _embedded_keep(keep):
+            """The surviving ids ``keep`` passes, given the survivors'
+            embedding rows, plus every survivor without an embedding row
+            (no embedding test can drop it)."""
+            emb = embeddings.select(F.col(id_col).cast("long").alias(id_col), embedding_col)
+            mine = emb.join(docs.select(id_col), id_col, "left_semi")
+            no_emb = docs.select(id_col).join(emb.select(id_col), id_col, "left_anti")
+            return keep(mine).select(id_col).unionByName(no_emb)
 
         # 3b. SemDeDup semantic dedup (optional): cluster-scoped cosine
         # over the surviving docs' embeddings — Σ|cluster|² pairwise
@@ -634,30 +645,18 @@ def build_corpus(
                 semantic_dedup,
             )
 
-            def _semantic_ids():
-                mine = embeddings.select(
-                    F.col(id_col).cast("long").alias(id_col),
-                    embedding_col,
-                ).join(docs.select(id_col), id_col, "left_semi")
-                keep = (
-                    semantic_dedup(
+            docs, n = _stage(
+                "03b_semantic_dedup",
+                lambda: _embedded_keep(
+                    lambda mine: semantic_dedup(
                         mine,
                         embedding_col,
                         id_col,
                         n_clusters=semantic_clusters,
                         threshold=semantic_threshold,
-                    )
-                    .filter(~F.col("semantic_dup"))
-                    .select(id_col)
-                )
-                no_emb = docs.select(id_col).join(
-                    embeddings.select(F.col(id_col).cast("long").alias(id_col)),
-                    id_col,
-                    "left_anti",
-                )
-                return keep.unionByName(no_emb)
-
-            docs, n = _stage("03b_semantic_dedup", _semantic_ids)
+                    ).filter(~F.col("semantic_dup"))
+                ),
+            )
             manifest["stages"]["after_semantic_dedup"] = n
 
         # 4. benchmark decontamination (optional)
@@ -681,31 +680,17 @@ def build_corpus(
                 decontaminate_embeddings,
             )
 
-            def _embedding_decontam_ids():
-                mine = embeddings.select(
-                    F.col(id_col).cast("long").alias(id_col),
-                    embedding_col,
-                ).join(docs.select(id_col), id_col, "left_semi")
-                keep = (
-                    decontaminate_embeddings(
+            docs, n = _stage(
+                "04b_embedding_decontamination",
+                lambda: _embedded_keep(
+                    lambda mine: decontaminate_embeddings(
                         mine,
                         benchmark_embeddings,
                         embedding_col,
                         id_col,
                         threshold=embedding_decontam_threshold,
-                    )
-                    .filter(~F.col("contaminated"))
-                    .select(id_col)
-                )
-                no_emb = docs.select(id_col).join(
-                    embeddings.select(F.col(id_col).cast("long").alias(id_col)),
-                    id_col,
-                    "left_anti",
-                )
-                return keep.unionByName(no_emb)
-
-            docs, n = _stage(
-                "04b_embedding_decontamination", _embedding_decontam_ids
+                    ).filter(~F.col("contaminated"))
+                ),
             )
             manifest["stages"]["after_embedding_decontamination"] = n
 

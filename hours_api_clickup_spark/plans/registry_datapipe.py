@@ -2777,7 +2777,7 @@ def _cross_corpus_oracle() -> str:
     "decontaminate passes can't reach): training docs whose MinHash "
     "Jaccard ≥ 0.7 against any held-out doc (doc_id % 20 = 0 plays "
     "the benchmark) are dropped; the survivors are returned. One "
-    "shuffle signs both sides together; the candidate join requires "
+    "Arrow signing pass covers both sides; the candidate join requires "
     "OPPOSITE sides, so within-side bucket collisions — the bulk of a "
     "self-joined corpus — are never candidates (the benchmark's "
     "banded rows are the tiny probe side at 100 TB). Oracle replays "

@@ -36,7 +36,7 @@ from hours_api_clickup_spark.datapipe.dedup import (
     DEFAULT_SHINGLE_K,
     _doc_seqs,
     _minus_tombstones,
-    _sig_frame,
+    _signatures,
     doc_neardup_index_append,
     doc_neardup_index_recover,
 )
@@ -228,13 +228,14 @@ def streaming_doc_neardup_ingest(
             )
             if known.head(1):
                 # a redelivered doc has the same text, so the same signature;
-                # LEFT joins from ``known``: _sig_frame drops docs shorter
+                # LEFT joins from ``known``: _signatures drops docs shorter
                 # than the shingle size, so a sub-k update has no new row
                 mine = batch_df.join(known, batch_df[id_col] == known["did"], "left_semi")
-                resigned = _sig_frame(mine, id_col, text_col, DEFAULT_SHINGLE_K, DEFAULT_NUM_HASHES)
-                sa_new = F.array(*[F.col(f"m{s}") for s in range(DEFAULT_NUM_HASHES)])
+                resigned = _signatures(
+                    mine, id_col, text_col, DEFAULT_SHINGLE_K, DEFAULT_NUM_HASHES, "sa"
+                )
                 n_changed = (
-                    known.join(resigned.select("did", sa_new.alias("sa_new")), "did", "left")
+                    known.join(resigned.select("did", F.col("sa").alias("sa_new")), "did", "left")
                     .join(stored.select("did", "sa"), "did", "left")
                     .filter(F.col("sa_new").isNull() | (F.col("sa_new") != F.col("sa")))
                     .count()

@@ -281,6 +281,24 @@ def test_connected_components_long_chain_converges(spark):
     assert comp == {i: 0 for i in range(n)}
 
 
+def test_connected_components_frees_superseded_label_checkpoints(spark):
+    """Each round releases the label checkpoint it supersedes, and the
+    converged run releases its edge list: a 12-round run leaves only
+    its final labels persisted."""
+    from hours_api_clickup_spark.datapipe.clusters import connected_components
+
+    sc = spark.sparkContext
+    before = set(sc._jsc.getPersistentRDDs().keySet())
+    n = 12
+    nodes = spark.createDataFrame([(i,) for i in range(n)], "node long")
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
+    )
+    comp = connected_components(nodes, edges)
+    assert {r.component for r in comp.collect()} == {0}
+    assert len(set(sc._jsc.getPersistentRDDs().keySet()) - before) == 1
+
+
 def test_hash_split_deterministic_and_exhaustive(spark):
     from hours_api_clickup_spark.datapipe.sampling import assign_split
 

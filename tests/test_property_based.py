@@ -249,18 +249,16 @@ def test_md5_hash32_matches_python(spark, values):
     )
 )
 def test_portable_gram_hash_matches_python(spark, values):
-    from hours_api_clickup_spark.datapipe.dedup import portable_gram_hash
+    """The MinHash signer's gram-hash set of each doc is the set of
+    reference polynomial hashes of its k-grams."""
+    from hours_api_clickup_spark.datapipe.dedup import _signatures
 
     k = 5
-    df = spark.createDataFrame([(v,) for v in values], ["txt"])
-    grams = df.select(
-        "txt",
-        F.explode(F.sequence(F.lit(0), F.length("txt") - k)).alias("i"),
-    ).select(
-        "txt", "i", portable_gram_hash(F.col("txt"), F.col("i"), k).alias("h")
-    )
-    for r in grams.collect():
-        assert r["h"] == ref_gram_hash(r["txt"][r["i"] : r["i"] + k])
+    df = spark.createDataFrame(list(enumerate(values)), ["did", "txt"])
+    got = {r["did"]: r["gset"] for r in _signatures(df, "did", "txt", k, 64, "gset").collect()}
+    for did, txt in enumerate(values):
+        grams = sorted({ref_gram_hash(txt[i : i + k]) for i in range(len(txt) - k + 1)})
+        assert got[did] == grams, txt
 
 
 def test_affine_constants_are_valid_and_stable():
@@ -1273,3 +1271,65 @@ def test_connected_components_long_path_and_loud_guard(spark):
 
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(nodes_df, edges_df, "node", max_iter=3)
+
+
+@st.composite
+def _planted_corpus(draw):
+    """(doc_id, text, in_b) rows: random base docs, near-dup copies with
+    a few character edits, and a doc shorter than the shingle size, on
+    unique ids; ``in_b`` splits them into two non-empty halves."""
+    alphabet = "abcdefgh "
+    base = draw(st.lists(st.text(alphabet, min_size=30, max_size=90), min_size=2, max_size=6))
+    texts = list(base)
+    for _ in range(draw(st.integers(1, 6))):
+        t = list(draw(st.sampled_from(base)))
+        for _ in range(draw(st.integers(0, 3))):
+            t[draw(st.integers(0, len(t) - 1))] = draw(st.sampled_from(alphabet))
+        texts.append("".join(t))
+    texts.append(draw(st.text(alphabet, max_size=4)))
+    ids = draw(st.lists(st.integers(0, 10**6), min_size=len(texts), max_size=len(texts), unique=True))
+    in_b = [i % 2 == 1 for i in range(len(texts))]
+    in_b = draw(st.permutations(in_b))
+    return [(d, t, b) for d, t, b in zip(ids, texts, in_b)]
+
+
+@settings(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
+)
+@given(rows=_planted_corpus())
+def test_minhash_pair_producers_agree(spark, tmp_path, rows):
+    """The MinHash pair producers are one pipeline: on a corpus A ∪ B
+    with planted near-dups, the one-shot pairs of A ∪ B equal the
+    one-shot pairs of A plus what appending B to an index of A returns,
+    and the cross-corpus pairs equal the one-shot pairs that cross the
+    A/B boundary (as unordered (id, id, jaccard) sets)."""
+    import uuid
+
+    from hours_api_clickup_spark.datapipe.dedup import (
+        doc_neardup_index_append,
+        doc_neardup_index_write,
+        minhash_cross_corpus_pairs,
+        minhash_lsh_pairs,
+    )
+
+    df = spark.createDataFrame(rows, "doc_id long, text string, in_b boolean")
+    a, b = df.filter(~F.col("in_b")), df.filter(F.col("in_b"))
+    b_ids = [d for d, _t, in_b in rows if in_b]
+
+    def pairs(frame):
+        return {(min(r[0], r[1]), max(r[0], r[1]), r[2]) for r in frame.collect()}
+
+    one_shot = pairs(minhash_lsh_pairs(df, "doc_id", "text"))
+    path = str(tmp_path / uuid.uuid4().hex)
+    doc_neardup_index_write(a, "doc_id", "text", path)
+    incremental = pairs(minhash_lsh_pairs(a, "doc_id", "text")) | pairs(
+        doc_neardup_index_append(b, path, "doc_id", "text")
+    )
+    assert incremental == one_shot
+
+    cross = pairs(
+        minhash_cross_corpus_pairs(df, "doc_id", "text", lambda c: c.isin(b_ids))
+    )
+    assert cross == {p for p in one_shot if (p[0] in b_ids) != (p[1] in b_ids)}

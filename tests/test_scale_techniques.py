@@ -949,6 +949,67 @@ def test_doc_neardup_index_incremental_equals_one_shot(spark, tmp_path):
     assert inc == full
 
 
+def _explained(df) -> str:
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain()
+    return buf.getvalue()
+
+
+def test_doc_neardup_gram_fetch_over_cap_same_pairs(spark, tmp_path, monkeypatch):
+    """Past ``IN_LIST_CAP`` survivor ids, the index fetches gram sets
+    through a semi-join instead of an IN list; both branches return the
+    same pairs, for an append and for the index-only pair query."""
+    from hours_api_clickup_spark.datapipe import dedup
+
+    docs = load_table(spark, SF_DIR, "documents")
+    ids = docs.filter(F.col("doc_id") % 5 == 0).select("doc_id")
+
+    def run(name):
+        path = str(tmp_path / name)
+        dedup.doc_neardup_index_write(docs.filter(F.col("doc_id") % 3 == 0), "doc_id", "text", path)
+        appended = dedup.doc_neardup_index_append(
+            docs.filter(F.col("doc_id") % 3 == 1), path, "doc_id", "text"
+        )
+        for_ids = dedup.doc_neardup_index_pairs_for_ids(spark, path, ids)
+        plans = _explained(appended) + _explained(for_ids)
+        return sorted(map(tuple, appended.collect())), sorted(map(tuple, for_ids.collect())), plans
+
+    in_list = run("in_list")
+    monkeypatch.setattr(dedup, "IN_LIST_CAP", 0)
+    semi = run("semi")
+    assert "LeftSemi" not in in_list[2] and "LeftSemi" in semi[2]
+    assert in_list[0] and in_list[1]
+    assert semi[:2] == in_list[:2]
+
+
+def test_doc_neardup_append_job_budget(spark, tmp_path):
+    """The Spark jobs of one counted append to a fixture index, under
+    the caller's job group: 15 (17 before the pair queries shared one
+    verifier, when the batch signatures and the prefilter survivors
+    took eager pins)."""
+    from hours_api_clickup_spark.datapipe.dedup import (
+        doc_neardup_index_append,
+        doc_neardup_index_write,
+    )
+    from tests.conftest import SF_DIR_SMOKE
+
+    docs = load_table(spark, SF_DIR_SMOKE, "documents")
+    path = str(tmp_path / "idx")
+    doc_neardup_index_write(docs.filter(F.col("doc_id") % 3 == 0), "doc_id", "text", path)
+    sc = spark.sparkContext
+    sc.setJobGroup("doc_append_budget", "job budget")
+    try:
+        n = doc_neardup_index_append(
+            docs.filter(F.col("doc_id") % 3 == 1), path, "doc_id", "text"
+        ).count()
+        jobs = len(sc.statusTracker().getJobIdsForGroup("doc_append_budget"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert n > 0
+    assert jobs <= 15
+
+
 class TestMaintenanceLease:
     """VERDICT r8 #2: the single-maintainer contract every compactor
     documented is now a MECHANISM — a lease file checked by compacts
@@ -2986,43 +3047,6 @@ class TestThirdReviewPassRegressions:
 
 class TestFourthReviewPassRegressions:
     """Review r8 fourth pass (dedup/clusters surface)."""
-
-    def test_minhash_signature_matches_bulk_path(self, spark):
-        """The per-row signature must be component-identical to the
-        bulk path's (_sig_frame) — it used a different hash family, so
-        per-row signatures silently never matched the persisted index
-        (review r8)."""
-        from pyspark.sql import functions as F
-
-        from hours_api_clickup_spark.datapipe.dedup import (
-            DEFAULT_NUM_HASHES,
-            DEFAULT_SHINGLE_K,
-            _sig_frame,
-            char_shingles,
-            minhash_signature,
-        )
-        from hours_api_clickup_spark.plans.registry import load_table
-        from tests.conftest import SF_DIR
-
-        docs = load_table(spark, SF_DIR, "documents").filter(
-            F.col("doc_id") < 40
-        )
-        per_row = {
-            r["did"]: list(r["sig"])
-            for r in docs.select(
-                F.col("doc_id").alias("did"),
-                minhash_signature(
-                    char_shingles("text", DEFAULT_SHINGLE_K)
-                ).alias("sig"),
-            ).collect()
-        }
-        bulk = {
-            r["did"]: [r[f"m{s}"] for s in range(DEFAULT_NUM_HASHES)]
-            for r in _sig_frame(
-                docs, "doc_id", "text", DEFAULT_SHINGLE_K, DEFAULT_NUM_HASHES
-            ).collect()
-        }
-        assert bulk and all(per_row[d] == sig for d, sig in bulk.items())
 
     def test_doc_neardup_rebuild_crash_keeps_live_index(
         self, spark, tmp_path, monkeypatch
